@@ -16,4 +16,9 @@ Subpackages
 - ``checkpoint`` — per-stage per-partition lineage + resume
 """
 
+from . import zipcache as _zipcache
+
 __version__ = "0.1.0"
+
+# Python UDF tasks unpickle package functions, so this runs in every worker
+_zipcache.install()

@@ -349,6 +349,7 @@ def connected_components(
     the consumers that actually reach such depths."""
     import shutil
     import tempfile
+    import uuid
 
     e = (
         edges.selectExpr(f"{edges.columns[0]} AS src", f"{edges.columns[1]} AS dst")
@@ -411,7 +412,11 @@ def connected_components(
             if local_tmp:
                 base = tempfile.mkdtemp(prefix="cc_epoch_")
             else:
-                base = f"{reset_dir.rstrip('/')}/cc_epoch_{id(e)}_{iters}"
+                # unique across driver processes sharing reset_dir: a
+                # collision would let another job overwrite this epoch
+                # between its write and its re-read
+                run = f"{spark.sparkContext.applicationId}_{uuid.uuid4().hex}"
+                base = f"{reset_dir.rstrip('/')}/cc_epoch_{run}_{iters}"
             path = f"{base}/labels"
             labels.write.mode("overwrite").parquet(path)
             fresh = spark.read.parquet(path).localCheckpoint(eager=True)

@@ -436,6 +436,11 @@ def phash_knn(images: DataFrame, k: int = PHKNN_K, qmod: int = PHKNN_QMOD) -> Da
     per batch; ONE window exchange then merges the Q x k x n_batches
     partials. Only (id, phash) project out of the scan — image bytes are
     never read (ReadSchema-pruned like phash_neardup).
+
+    Caching contract (as ``pip_join``): the result (Q x k rows) is
+    materialized and returned persisted, so the query broadcast leaves
+    the executors before the call returns; callers that loop for a
+    session lifetime unpersist the result when consumed.
     """
     from pyspark.sql import Window
 
@@ -491,11 +496,17 @@ def phash_knn(images: DataFrame, k: int = PHKNN_K, qmod: int = PHKNN_QMOD) -> Da
 
     part = ph.mapInPandas(partials, schema)
     w = Window.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc("neighbor_id"))
-    return (
+    out = (
         part.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", F.col("rank").cast("int").alias("rank"), "neighbor_id", "hamming")
+        .persist()
     )
+    out.count()
+    # executors drop their copies of the query batch; the driver keeps it,
+    # so a recompute of ``out`` (lost block, caller unpersist) still works
+    bc.unpersist(blocking=False)
+    return out
 
 
 def phash_knn_oracle_sql(fix: str, k: int = PHKNN_K, qmod: int = PHKNN_QMOD) -> str:

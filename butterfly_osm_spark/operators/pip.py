@@ -277,6 +277,10 @@ def pip_join(
     out = full_hits.unionByName(refined).persist()
     out.count()
     cover.unpersist()
+    if cover_rows <= BROADCAST_MAX_ROWS:
+        # drop the executor copies of the edge map; the driver keeps it,
+        # so a recompute of ``out`` (lost block, caller unpersist) still works
+        bc.unpersist(blocking=False)
     return out
 
 

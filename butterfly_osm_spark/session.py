@@ -13,7 +13,9 @@ import os
 from pyspark.sql import SparkSession
 
 # Shuffle partition count: on a real cluster this is ~2-3x total cores and
-# AQE coalesces down; locally we match the driver's 32 threads.
+# AQE coalesces down. Locally 32 is not matched to the cores: AQE
+# coalesces JVM stages to their bytes, and Python-group gathers cap their
+# width at 2x the cores (partitioning.py).
 _DEFAULT_SHUFFLE_PARTITIONS = "32"
 
 

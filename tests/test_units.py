@@ -239,6 +239,42 @@ def test_pip_broadcast_gate_fallback_parity(spark, fix001, monkeypatch):
     assert got == want
 
 
+def test_repeated_calls_unpersist_their_broadcasts(spark, fix001, monkeypatch):
+    """pip_join (edge map) and phash_knn (query batch) unpersist the
+    broadcast they ship once their result is materialized, so three calls
+    pin no more executor copies than one, and a released result still
+    recomputes (the driver keeps its copy). Watched by spying: under
+    local[*] the driver's block manager is the only one, and unpersist
+    never drops the driver's copy, so block counts cannot show it here."""
+    from pyspark.core.broadcast import Broadcast
+
+    from butterfly_osm_spark.operators.images import phash_knn
+    from butterfly_osm_spark.operators.pip import pip_join
+
+    from .conftest import persistent_rdd_ids
+
+    sc = spark.sparkContext
+    shipped, released = [], []
+    ship, unpersist = sc.broadcast, Broadcast.unpersist
+    monkeypatch.setattr(sc, "broadcast", lambda value: shipped.append(ship(value)) or shipped[-1])
+    monkeypatch.setattr(
+        Broadcast, "unpersist", lambda self, blocking=False: released.append(self) or unpersist(self, blocking)
+    )
+    points = spark.read.parquet(fix001 + "/image_geo.parquet")
+    polygons = spark.read.parquet(fix001 + "/polygons.parquet")
+    images = spark.read.parquet(fix001 + "/images.parquet")
+    before = persistent_rdd_ids(spark)
+    for _ in range(3):
+        for out in (pip_join(points, polygons), phash_knn(images)):
+            n = out.count()
+            assert n > 0
+            out.unpersist()
+            assert out.count() == n
+    assert len(shipped) == 6
+    assert {id(b) for b in shipped} <= {id(b) for b in released}
+    assert not (persistent_rdd_ids(spark) - before), "a released result stayed cached"
+
+
 def test_knn_releases_phase_caches(spark, fix001):
     """knn_join must not leak per-phase persisted partials into the session:
     after the call, at most the (bounded) result frame itself is newly
@@ -291,6 +327,32 @@ def test_connected_components_releases_iteration_checkpoints(spark):
     assert len(new_cached) <= 1, f"{new_cached} cached after CC (expected only the result)"
     release_checkpoint(labels)
     assert not (persistent_ids() - before), "CC leaked iteration checkpoints"
+
+
+def test_connected_components_epoch_dirs_unique_per_run(spark, tmp_path, monkeypatch):
+    """Epoch resets into a shared reset_dir are named by application id
+    plus a fresh uuid, so two drivers sharing the dir never overwrite each
+    other's epoch, and each epoch dir is deleted after its re-read."""
+    import re
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from butterfly_osm_spark.operators.dedup import connected_components, release_checkpoint
+
+    written = []
+    parquet = DataFrameWriter.parquet
+    monkeypatch.setattr(
+        DataFrameWriter, "parquet", lambda self, path, *a, **k: written.append(path) or parquet(self, path, *a, **k)
+    )
+    edges = spark.createDataFrame([(i, i + 1) for i in range(63)], "a long, b long")
+    nodes = spark.range(64).withColumnRenamed("id", "node_id")
+    labels, iters = connected_components(edges, nodes, reset_dir=str(tmp_path), reset_every=1)
+    assert labels.where("lab != 0").count() == 0
+    release_checkpoint(labels)
+    assert len(written) == iters - 1 >= 2  # a reset after every round but the converged one
+    name = rf"{re.escape(str(tmp_path))}/cc_epoch_{re.escape(spark.sparkContext.applicationId)}_[0-9a-f]{{32}}_\d+/labels"
+    assert all(re.fullmatch(name, p) for p in written), written
+    assert not list(tmp_path.iterdir()), "epoch dirs left behind"
 
 
 def test_knn_res_invariance_fine_res_offsets(spark, fix001):
