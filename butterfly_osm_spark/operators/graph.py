@@ -551,18 +551,15 @@ def _car_adjacency(edges: DataFrame, way_attrs: DataFrame) -> DataFrame:
         F.col("access_car")
     )
     # w >= 1 is the invariant the route_paths pred-tree acyclicity and the
-    # oracle's recursive CTE termination rest on (ADVICE r5). build_edges'
-    # length_mm >= 1000 clamp already guarantees it for any car speed
-    # (w = round(3.6e3/kmh) >= 1 for kmh <= 3600), so the greatest() is an
-    # identity on real data — it makes the invariant explicit rather than
-    # implicit in an upstream clamp.
+    # oracles' recursive CTE termination rest on. build_edges' length_mm
+    # >= 1000 clamp guarantees it for any car speed up to 3600 km/h, so w
+    # needs no floor and stays the expression both oracles compute
+    # (asserted by test_car_arc_weights_positive_from_edge_length_floor).
     ew = edges.join(wa, "way_id").select(
         "u_node",
         "v_node",
         "oneway",
-        F.greatest(
-            F.round(F.col("length_mm") * 3.6 / F.col("speed_car_kmh")).cast("long"), F.lit(1)
-        ).alias("w"),
+        F.round(F.col("length_mm") * 3.6 / F.col("speed_car_kmh")).cast("long").alias("w"),
     )
     fwd = ew.select(F.col("u_node").alias("s"), F.col("v_node").alias("d"), "w")
     bwd = ew.filter(~F.col("oneway")).select(

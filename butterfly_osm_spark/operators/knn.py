@@ -1,5 +1,5 @@
 """kNN snap via k-ring expansion join (J5) with adaptive resolution and
-iterative ring widening.
+either one full-cutoff phase or iterative ring widening.
 
 Reference semantics: concentric cell rings around the query cell with an
 early exit once the accepted k-th best distance beats the next ring's
@@ -15,10 +15,20 @@ Spark-first shape (SURVEY.md §7.1 step 5):
 - resolution: the COARSEST grid level whose p95 cell occupancy stays
   under ``OCC_TARGET`` — computed in one pass (res-13 counts rolled up
   to every parent level, two shuffles, tiny distinct-cell input).
-- phase loop with STATIC bounds: rectangles of Chebyshev radius
-  R = 1, 4, 16, ... until R provably covers the cutoff. Which queries
+- plan: that p95 prices one phase over the whole cutoff rectangle at
+  ``n_queries x (2rx_max+1)(2ry_max+1) x p95`` candidates, with no extra
+  counting job. At or under ``BROADCAST_MAX_ROWS`` the batch is answered
+  in ONE lazy phase: no persist, no k-th-distance aggregation, no
+  open-set count. Every fixture scale lands at res 11 (425 rectangle
+  cells): sf0.01 estimates 3.2 M and takes the single phase (warm,
+  local[4]: 2.9-3.1 s vs 6.5-8.9 s ring loop); sf0.1 estimates 102 M and
+  keeps the ring loop (12.8-16.3 s vs 27.7-29.3 s single phase). An
+  explicit ``res`` has no occupancy figure and takes the ring loop.
+- ring loop: rectangles of Chebyshev radius R = RING_R0, RING_R0 *
+  RING_GROWTH, ... (2, 16, ...) until R covers the cutoff. Which queries
   continue is decided inside the plan (anti-joins on the ring-bound
-  test) — no data-dependent driver loop.
+  test); the driver only counts the open set after each widening phase,
+  which sizes the next phase's join.
 - ring-bound contract: after covering ±R cells, any unexplored point is
   at least R * min_edge metres away; a query is DONE when its k-th
   candidate beats that bound (or the rect covers the whole cutoff).
@@ -53,12 +63,13 @@ CUTOFF_M = 5_000.0  # reference SNAP_CUTOFF (spatial.rs:9)
 # measured winner at both scales.
 OCC_TARGET = 64
 RES_FLOOR, RES_CEIL = 7, 13
-# phase schedule: R = R0, R0*G, ... — measured at sf0.1/local[32]:
+# ring schedule: R = R0, R0*G, ... — measured at sf0.1/local[32]:
 # (R0=2, G=8) resolves ~all queries in phase 1 (25-cell rect at p95
 # occupancy 64) and finishes in ONE more covering phase, 1.8x faster than
 # (1, 4)'s three phases; a single full-rect phase (R0=rx_max) is 2.8x
-# slower — candidate volume dominates. Stage-count x candidate-volume
-# trade, not a correctness knob (results hash-identical across schedules).
+# slower there — hence knn_join's single-phase gate on candidate volume.
+# Stage-count x candidate-volume trade, not a correctness knob (results
+# hash-identical across schedules).
 RING_R0 = 2
 RING_GROWTH = 8
 
@@ -68,8 +79,9 @@ def _edge_m(res: int) -> tuple[float, float]:
     return deg * M_PER_DEG_LON, deg * M_PER_DEG_LAT
 
 
-def adaptive_res(targets: DataFrame, occ_target: int = OCC_TARGET) -> int:
-    """Coarsest res in [7, 13] with p95 cell occupancy <= occ_target.
+def adaptive_res(targets: DataFrame, occ_target: int = OCC_TARGET) -> tuple[int, dict[int, int]]:
+    """Coarsest res in [7, 13] with p95 cell occupancy <= occ_target, and
+    the p95 cell occupancy of every level (res -> p95).
 
     One fine-grained count, then every parent level derived from the
     distinct-cell table in a single stacked aggregation.
@@ -101,15 +113,16 @@ def adaptive_res(targets: DataFrame, occ_target: int = OCC_TARGET) -> int:
     p95 = {r["res"]: r["p95"] for r in occ}
     for r in range(RES_FLOOR, RES_CEIL + 1):  # coarsest acceptable wins
         if p95.get(r, 0) <= occ_target:
-            return r
-    return RES_CEIL
+            return r, p95
+    return RES_CEIL, p95
 
 
 # broadcast the exploded query-cell side only below this row count: ~4M
 # rows x ~40 B is a few hundred MB of driver assembly — beyond it the
 # "bounded request batch" assumption no longer holds and the plan must
 # fall back to a shuffle join (measured: an unconditional hint OOM-killed
-# the sf4/local[2] scaling level at 24M exploded rows)
+# the sf4/local[2] scaling level at 24M exploded rows). The same bound
+# caps the estimated candidate volume of the single-phase plan.
 BROADCAST_MAX_ROWS = 4_000_000
 
 
@@ -121,7 +134,7 @@ def _candidates(
     ry: int,
     prev_rx: int = -1,
     prev_ry: int = -1,
-    join_mode: str = "broadcast",
+    broadcast: bool = True,
 ) -> DataFrame:
     """Explode queries by the (2rx+1)x(2ry+1) cell rectangle — MINUS the
     previously-covered (2prev_rx+1)x(2prev_ry+1) rectangle (ring-shell
@@ -171,24 +184,16 @@ def _candidates(
     # semantics) — broadcast the exploded query-cell side so the target
     # table streams through a broadcast join with NO shuffle by cell; the
     # only full shuffle left in a phase is the candidate->query_id rank.
-    # join_mode (decided per phase by knn_join from EXACT open-set counts):
-    #   "broadcast"     — exploded side provably small; hint it.
-    #   "shuffle_merge" — phase frames are persisted and the exploded side
-    #     exceeds the gate: a cached subtree is compiled from STATIC stats
-    #     (no AQE re-plan inside the cache build), and Catalyst's anti-join
-    #     selectivity estimate makes the shell-exploded side look
-    #     broadcastable — the cache build then dies at scale on Spark's
-    #     8 GiB broadcast cap (observed at sf4/res-13: "Cannot broadcast
-    #     the table that is larger than 8.0 GiB: 10.0 GiB" inside
-    #     CachedRDDBuilder.buildBuffers). Pin the decision structurally.
-    #   "auto"          — lazy (non-persisted) path over the gate: no hint,
-    #     AQE plans the join from runtime stats as before.
-    if join_mode == "broadcast":
-        qj = F.broadcast(q)
-    elif join_mode == "shuffle_merge":
-        qj = q.hint("shuffle_merge")
-    else:
-        qj = q
+    # Over the gate (broadcast=False, decided by knn_join from EXACT
+    # open-set counts) the join is pinned to shuffle_merge: the ring
+    # loop's phase frames are persisted, and a cached subtree is compiled
+    # from STATIC stats (no AQE re-plan inside the cache build), where
+    # Catalyst's anti-join selectivity estimate makes the shell-exploded
+    # side look broadcastable — the cache build then dies at scale on
+    # Spark's 8 GiB broadcast cap (observed at sf4/res-13: "Cannot
+    # broadcast the table that is larger than 8.0 GiB: 10.0 GiB" inside
+    # CachedRDDBuilder.buildBuffers). Pin the decision structurally.
+    qj = F.broadcast(q) if broadcast else q.hint("shuffle_merge")
     j = targets_cells.join(qj, "cell_id", "inner")
     return j.select(
         "query_id",
@@ -225,9 +230,6 @@ def knn_join(
     res: int | None = None,
     cutoff_m: float = CUTOFF_M,
     target_id: str = "id",
-    r0: int = RING_R0,
-    ring_growth: int = RING_GROWTH,
-    materialize_remaining: bool = True,
 ) -> DataFrame:
     """Top-k nearest targets per query point under the snap cutoff.
 
@@ -235,24 +237,28 @@ def knn_join(
     (d2, node_id); dist_m rounded to mm. Queries with no target inside
     the cutoff produce no rows (reference empty-snap semantics).
 
-    Caching contract: the multi-phase path returns a PERSISTED frame
-    (bounded: <= sum(k) rows) — the per-phase partials are materialized
-    through it and released before returning. A caller looping over many
-    knn_join calls in one session should unpersist the returned frame
-    once consumed (or clearCache between iterations, as bench.py does).
+    Caching contract: the single-phase path returns a LAZY frame and
+    caches nothing — the sink evaluates the plan exactly once. The ring
+    loop returns a PERSISTED frame (bounded: <= sum(k) rows) — the
+    per-phase partials are materialized through it and released before
+    returning. A caller looping over many knn_join calls in one session
+    should unpersist the returned frame once consumed (a no-op on the
+    lazy frame), or clearCache between iterations, as bench.py does.
     """
+    p95_occ = None  # p95 cell occupancy at res, when res is picked here
     if res is None:
-        res = adaptive_res(targets)
+        res, p95 = adaptive_res(targets)
         # covering refinement: go finer (4x less candidate volume per
         # level) while the R0*growth phase-2 rectangle still covers the
         # cutoff — past that point open queries meet 1000+-cell shells
         # (measured res-13 cliff at sf1, ~490 s vs 87 s at res 12)
         while res < RES_CEIL:
             nlon, nlat = _edge_m(res + 1)
-            if max(int(cutoff_m / nlon) + 1, int(cutoff_m / nlat) + 1) <= r0 * ring_growth:
+            if max(int(cutoff_m / nlon) + 1, int(cutoff_m / nlat) + 1) <= RING_R0 * RING_GROWTH:
                 res += 1
             else:
                 break
+        p95_occ = p95.get(res, 0)
     tc = targets.select(
         F.col(target_id).alias("node_id"),
         F.col("lon_e7").alias("nlon"),
@@ -291,29 +297,29 @@ def knn_join(
         .distinct()
     )
 
-    # Data-driven broadcast decision, PER PHASE: the exploded query-cell
-    # side is exactly n_open x shell_cells rows, and both factors are known
-    # before the phase runs (materialize_remaining already pays for an
-    # exact open-set count each phase; phase 1 uses the batch count).
-    # On the LAZY path (materialize_remaining=False) n_open keeps the
-    # initial full-batch value — a conservative OVERestimate that can only
-    # suppress a broadcast, never unsafely enable one; the per-phase
-    # broadcast win is deliberately forfeited there rather than paying a
-    # count() on an unmaterialized anti-join chain (ADVICE r4).
+    n_queries = queries.count()
+    # single phase when its estimated candidate volume fits the gate; its
+    # exploded query side (n_queries x rect cells) is no larger, so it is
+    # always broadcast
+    rect_cells = (2 * rx_max + 1) * (2 * ry_max + 1)
+    if p95_occ is not None and n_queries * rect_cells * p95_occ <= BROADCAST_MAX_ROWS:
+        return _output(_rank_topk(_candidates(q_live, tc, res, rx_max, ry_max), cutoff_m))
+
+    # Ring loop, broadcast decided PER PHASE: the exploded query-cell side
+    # is exactly n_open x shell_cells rows, both known before the phase
+    # runs (the batch count, then the persisted open set's count).
     # A one-shot gate on the WIDEST phase (round-3's rule) was doubly
     # wrong: it disabled the broadcast for the tiny early phases — where
     # most queries resolve — and, combined with the shuffle_merge pin,
     # cost ~4x on the sf0.1 headline (measured 37.9 s vs 8.8 s); while
     # per-phase exact counts still reject the genuinely unbounded sf4
     # res-13 shells that killed the cached-plan broadcast.
-    n_queries = queries.count()
     n_open = n_queries
-
     remaining = q_live
     carried: DataFrame | None = None  # top-k-so-far of still-open queries
     parts: list[DataFrame] = []
     phase_frames: list[DataFrame] = []  # persisted partials, released below
-    R = r0
+    R = RING_R0
     prev_rx = prev_ry = -1
     while True:
         covers_cutoff = R >= rx_max and R >= ry_max
@@ -321,16 +327,11 @@ def knn_join(
         shell_cells = (2 * rx + 1) * (2 * ry + 1) - (
             (2 * prev_rx + 1) * (2 * prev_ry + 1) if prev_rx >= 0 else 0
         )
-        if n_open * shell_cells <= BROADCAST_MAX_ROWS:
-            join_mode = "broadcast"
-        elif materialize_remaining:
-            join_mode = "shuffle_merge"  # persisted subtree: never trust static stats
-        else:
-            join_mode = "auto"  # lazy path: AQE re-plans from runtime stats
         # only the NEW shell of cells is scanned this phase; the inner
         # rectangle's contribution is the carried top-k partial (any point
         # outside a query's inner top-k can never enter the global top-k)
-        cand = _candidates(remaining, tc, res, rx, ry, prev_rx, prev_ry, join_mode=join_mode)
+        bc = n_open * shell_cells <= BROADCAST_MAX_ROWS
+        cand = _candidates(remaining, tc, res, rx, ry, prev_rx, prev_ry, broadcast=bc)
         if carried is not None:
             cand = cand.unionByName(carried)
         ranked = _rank_topk(cand, cutoff_m)
@@ -348,36 +349,24 @@ def knn_join(
         ).select("query_id")
         parts.append(ranked.join(done_q, "query_id", "left_semi"))
         # queries with zero candidates so far are absent from ranked and
-        # must keep widening — hence anti-join on the done set
-        remaining = remaining.join(done_q, "query_id", "left_anti")
-        if materialize_remaining:
-            # measured lever (round-4): cache the pruned query set so the
-            # next phase's shell explode plans over a materialized table
-            # instead of re-planning the anti-join under the explode.
-            # A/B (scripts/measure_knn_prune.py, sf0.1/local[32], two
-            # independent min-of-3 rounds): 7.21/8.49 s lazy vs 6.72/7.90 s
-            # materialized — +7 % both rounds and tighter pass-to-pass
-            # spread; results hash-identical (asserted in the script).
-            # The cost is one bounded persist + count of the (small,
-            # query-side-only) open set per widening phase.
-            remaining = remaining.persist()
-            n_open = remaining.count()
-            phase_frames.append(remaining)
+        # must keep widening — hence anti-join on the done set. The open
+        # set is persisted so the next shell explode plans over a table,
+        # not the re-planned anti-join: sf0.1/local[32], two min-of-3
+        # rounds, 7.21/8.49 s lazy vs 6.72/7.90 s persisted, results
+        # hash-identical; the cost is one small persist + count per phase.
+        remaining = remaining.join(done_q, "query_id", "left_anti").persist()
+        n_open = remaining.count()
+        phase_frames.append(remaining)
         carried = ranked.join(done_q, "query_id", "left_anti").select(
             "query_id", "k", "node_id", "d2"
         )
         prev_rx, prev_ry = rx, ry
-        R *= ring_growth
+        R *= RING_GROWTH
 
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    out = out.select(
-        "query_id",
-        F.col("rank").cast("int").alias("rank"),
-        "node_id",
-        F.round(F.sqrt("d2"), 3).alias("dist_m"),
-    )
+    out = _output(out)
     if phase_frames:
         # materialize the (bounded: <= sum(k) rows) result once, then
         # release every per-phase partial — previously the partials stayed
@@ -388,6 +377,15 @@ def knn_join(
         for f in phase_frames:
             f.unpersist()
     return out
+
+
+def _output(ranked: DataFrame) -> DataFrame:
+    return ranked.select(
+        "query_id",
+        F.col("rank").cast("int").alias("rank"),
+        "node_id",
+        F.round(F.sqrt("d2"), 3).alias("dist_m"),
+    )
 
 
 def knn_oracle_sql(fix: str, cutoff_m: float = CUTOFF_M) -> str:

@@ -275,25 +275,70 @@ def test_repeated_calls_unpersist_their_broadcasts(spark, fix001, monkeypatch):
     assert not (persistent_rdd_ids(spark) - before), "a released result stayed cached"
 
 
-def test_knn_releases_phase_caches(spark, fix001):
-    """knn_join must not leak per-phase persisted partials into the session:
-    after the call, at most the (bounded) result frame itself is newly
-    cached. Measured as a DELTA because earlier tests in the shared
-    session may legitimately hold their own bounded result frames (e.g.
-    a CC query's final label checkpoint), which clearCache() does not
-    reach."""
-    from butterfly_osm_spark.operators.knn import knn_join
+def _knn_phase_res(knn, monkeypatch):
+    """Spy on knn_join's candidate phases: the returned list gets the
+    working res of every phase (one entry on the single-phase path, one
+    per ring on the ring loop)."""
+    phases = []
+    candidates = knn._candidates
 
+    def spy(*a, **kw):
+        phases.append(a[2])
+        return candidates(*a, **kw)
+
+    monkeypatch.setattr(knn, "_candidates", spy)
+    return phases
+
+
+def test_knn_releases_phase_caches(spark, fix001, monkeypatch):
+    """knn_join must not leak per-phase persisted partials into the session:
+    the single-phase path caches nothing, and after the ring loop at most
+    the (bounded) result frame itself is newly cached. Measured as a set
+    DELTA because earlier tests in the shared session may legitimately
+    hold their own bounded result frames (e.g. a CC query's final label
+    checkpoint), which clearCache() does not reach."""
+    from butterfly_osm_spark.operators import knn
+
+    from .conftest import persistent_rdd_ids
+
+    q = spark.read.parquet(fix001 + "/query_points.parquet")
+    n = spark.read.parquet(fix001 + "/osm_nodes.parquet")
+    phases = _knn_phase_res(knn, monkeypatch)
     spark.catalog.clearCache()
-    before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    df = knn_join(
-        spark.read.parquet(fix001 + "/query_points.parquet"),
-        spark.read.parquet(fix001 + "/osm_nodes.parquet"),
-    )
-    df.count()
-    cached = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    assert cached - before <= 1, f"{cached - before} new RDDs cached after knn_join"
+    before = persistent_rdd_ids(spark)
+    knn.knn_join(q, n).count()
+    assert len(phases) == 1, "expected the single-phase path"
+    assert not (persistent_rdd_ids(spark) - before), "the single-phase path cached an RDD"
+    knn.knn_join(q, n, res=phases[0]).count()
+    assert len(phases) >= 3, "expected the ring loop"
+    new = persistent_rdd_ids(spark) - before
+    assert len(new) <= 1, f"{len(new)} new RDDs cached after the ring loop"
     spark.catalog.clearCache()
+
+
+def test_knn_single_phase_matches_ring_loop_and_oracle(spark, fix001, monkeypatch):
+    """A small batch at the res adaptive_res picks is answered in one
+    full-cutoff phase; an explicit res takes the ring loop. At the same
+    res both plans give identical rows, and both match the DuckDB oracle,
+    on a fixture with k in {1, 8, 64} and queries beyond the cutoff."""
+    import duckdb
+
+    from butterfly_osm_spark.operators import knn
+
+    q = spark.read.parquet(fix001 + "/query_points.parquet")
+    n = spark.read.parquet(fix001 + "/osm_nodes.parquet")
+    assert {r.k for r in q.select("k").distinct().collect()} >= {1, 8, 64}
+    phases = _knn_phase_res(knn, monkeypatch)
+    single = sorted(map(tuple, knn.knn_join(q, n).collect()))
+    assert len(phases) == 1, "expected the single-phase path"
+    res = phases.pop()
+    ring_df = knn.knn_join(q, n, res=res)
+    ring = sorted(map(tuple, ring_df.collect()))
+    ring_df.unpersist()
+    assert len(phases) >= 2 and set(phases) == {res}, "expected the ring loop at the same res"
+    want = sorted(map(tuple, duckdb.sql(knn.knn_oracle_sql(fix001)).fetchall()))
+    assert single == ring == want
+    assert len({r[0] for r in want}) < q.count(), "no query lies beyond the cutoff"
 
 
 def test_connected_components_releases_iteration_checkpoints(spark):
@@ -381,17 +426,20 @@ def test_registry_contract_consistency():
 
 
 def test_knn_join_mode_gate_parity(spark, fix001, monkeypatch):
-    """The per-phase join-mode gate (broadcast under 4M exploded rows,
-    shuffle_merge pin over it when phase frames are persisted) is a plan
-    choice, never a semantics choice: forcing the gate shut must produce
-    the identical ranked result set."""
+    """The gate (single phase under 4M estimated candidates; per ring
+    phase, broadcast under 4M exploded rows and a shuffle_merge pin over
+    it) is a plan choice, never a semantics choice: forcing the gate shut
+    (ring loop, every phase pinned) must produce the identical ranked
+    result set."""
     from butterfly_osm_spark.operators import knn
 
     q = spark.read.parquet(fix001 + "/query_points.parquet")
     n = spark.read.parquet(fix001 + "/osm_nodes.parquet")
     want = sorted(map(tuple, knn.knn_join(q, n).collect()))
-    monkeypatch.setattr(knn, "BROADCAST_MAX_ROWS", 0)  # every phase pinned
+    monkeypatch.setattr(knn, "BROADCAST_MAX_ROWS", 0)
+    phases = _knn_phase_res(knn, monkeypatch)
     got = sorted(map(tuple, knn.knn_join(q, n).collect()))
+    assert len(phases) >= 2, "expected the ring loop"
     assert got == want
     spark.catalog.clearCache()
 
@@ -950,6 +998,32 @@ def test_cell_regions_partition(spark, fix001):
     out.unpersist()
     release_checkpoint(out)
     assert not (persistent_rdd_ids(spark) - before), "cell_regions leaked caches"
+
+
+def test_car_arc_weights_positive_from_edge_length_floor(spark, fix001):
+    """Every edge is at least 1 m long (build_edges saturates length_mm at
+    1000), so every car arc weight round(length_mm * 3.6 / speed_car_kmh)
+    is >= 1 ms without a floor of its own. route_paths' pred-tree
+    acyclicity and the oracles' recursive CTE termination rest on it, and
+    Spark and both oracles compute the same unfloored expression."""
+    from pyspark.sql import functions as F
+
+    from butterfly_osm_spark.functions.model import compile_way_attrs
+    from butterfly_osm_spark.operators.extract import build_edges
+
+    ways = spark.read.parquet(fix001 + "/osm_ways.parquet")
+    edges = build_edges(
+        ways,
+        spark.read.parquet(fix001 + "/way_nodes.parquet"),
+        spark.read.parquet(fix001 + "/osm_nodes.parquet"),
+    )
+    n_edges, min_len = edges.agg(F.count(F.lit(1)), F.min("length_mm")).first()
+    assert n_edges > 0 and min_len >= 1000
+    car = edges.join(compile_way_attrs(ways).filter(F.col("access_car")), "way_id")
+    n_arcs, min_w = car.agg(
+        F.count(F.lit(1)), F.min(F.round(F.col("length_mm") * 3.6 / F.col("speed_car_kmh")))
+    ).first()
+    assert n_arcs > 0 and min_w >= 1
 
 
 def test_route_paths_are_valid_shortest_paths(spark, fix001):
