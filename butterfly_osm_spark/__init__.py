@@ -13,7 +13,7 @@ Subpackages
 - ``codecs``     — minimal PNG (lossless) + QNT (lossy) image codecs, PSNR
 - ``fixtures``   — deterministic synthetic spatial fixtures (seed 42)
 - ``operators``  — extraction joins, PIP, kNN, tiling, raster, dedup, ANN, text
-- ``checkpoint`` — per-stage per-partition lineage + resume
+- ``checkpoint`` — per-stage per-file lineage + resume
 """
 
 from . import zipcache as _zipcache

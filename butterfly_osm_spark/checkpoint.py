@@ -1,4 +1,4 @@
-"""Checkpointed, resumable multi-stage builds with per-partition lineage.
+"""Checkpointed, resumable multi-stage builds with per-file lineage.
 
 Mirrors the reference's lock-file protocol: every build step writes
 ``stepN.lock.json`` with input SHA-256s + row counts + bbox, and a failed
@@ -11,14 +11,27 @@ Spark shape (SURVEY.md §7.1 step 7 / C5):
   ``build_dir/<stage>`` (atomic tmp -> rename commit, the same
   write-then-publish discipline as the reference's .tmp lock files);
 - the checkpoint "table" is ``build_dir/_checkpoint/<stage>.json`` with
-  the stage fingerprint (chained over upstream fingerprints + stage
-  version — the lock-file input-SHA chain), total row count, and
-  PER-PARTITION row counts (the north rule's per-partition lineage);
+  the stage fingerprint, the total row count and ``files``: every
+  published part file with the row count its parquet footer holds
+  (per-file lineage, the Iceberg manifest analog). The counts are read
+  from the footers once the write has committed to ``.tmp``, so recording
+  them runs no Spark job;
+- a fingerprint chains the stage version, raw-input names + sizes and each
+  upstream stage's fingerprint + file map (the lock-file input-SHA chain),
+  so a stage that recomputes (new part-file names) invalidates everything
+  downstream of it, in this run or a later one;
 - resume = skip stages whose fingerprint matches AND whose published
-  output row count re-verifies (the lazy-verify analog). Any mismatch
-  (missing dir, corrupted/truncated parquet, changed upstream) recomputes
-  that stage and everything downstream of it through the fingerprint
-  chain.
+  directory still holds exactly the recorded files with the recorded
+  footer counts (the lazy-verify analog). The check reads footers only and
+  runs no Spark job. Any mismatch (missing dir, missing, extra or renamed
+  part file, unreadable footer, changed count, changed upstream)
+  recomputes that stage and everything downstream of it.
+
+Every parquet read here goes through ``session.read_parquet``, which takes
+the schema from the first footer instead of running Spark's inference job:
+raw stage inputs, non-bucketed stage outputs and ``ResultCache`` entries.
+Bucketed stage outputs resolve through the catalog with the schema
+recorded at write time, which runs no job either.
 
 On a cluster the same protocol lands on an Iceberg checkpoint table
 (snapshot ids instead of fingerprints); parquet-dir commits keep the
@@ -35,10 +48,14 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-ENGINE_VERSION = "0.1.0"  # bump to invalidate all checkpoints (schema change)
+from .session import part_files, read_parquet
+
+ENGINE_VERSION = "0.2.0"  # bump to invalidate all checkpoints (schema change)
 
 
 @dataclass
@@ -79,15 +96,21 @@ def _raw_fingerprint(path: str) -> str:
     return h.hexdigest()
 
 
-def _partition_counts(df: DataFrame) -> list[int]:
-    rows = (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    out: dict[int, int] = {r["_pid"]: r["n"] for r in rows}
-    return [out.get(i, 0) for i in range(max(out) + 1)] if out else []
+def _footer_counts(table_dir: str) -> dict[str, int]:
+    """``{part file name: row count}`` of a parquet table directory, read
+    from the file footers (no Spark job). Raises OSError or ArrowException
+    on an unreadable footer."""
+    return {
+        f: pq.read_metadata(os.path.join(table_dir, f)).num_rows for f in part_files(table_dir)
+    }
+
+
+def _lineage_id(meta: dict) -> str:
+    """Identity of a published stage output: its fingerprint and file map.
+    Part-file names are unique per write, so a recomputed stage gets a new
+    id even when its rows are the same."""
+    blob = json.dumps([meta["fingerprint"], meta["files"]], sort_keys=True)
+    return hashlib.sha256(blob.encode()).hexdigest()
 
 
 class Build:
@@ -97,7 +120,8 @@ class Build:
         self.spark = spark
         self.build_dir = build_dir
         os.makedirs(_ckpt_dir(build_dir), exist_ok=True)
-        self._fingerprints: dict[str, str] = {}
+        # stage -> lineage id of its published output this run
+        self._lineage: dict[str, str] = {}
         self.stats: list[dict] = []
 
     def _stage_fingerprint(self, stage: Stage) -> str:
@@ -109,7 +133,7 @@ class Build:
             if inp.startswith("raw:"):
                 h.update(_raw_fingerprint(inp[4:]).encode())
             else:
-                h.update(self._fingerprints[inp].encode())
+                h.update(self._lineage[inp].encode())
         return h.hexdigest()
 
     def _out_path(self, stage: str) -> str:
@@ -125,7 +149,8 @@ class Build:
         metadata before reading."""
         cpath = _ckpt_path(self.build_dir, stage)
         if os.path.exists(cpath):
-            meta = json.load(open(cpath))
+            with open(cpath) as f:
+                meta = json.load(f)
             if meta.get("bucket"):
                 tbl = self._table_name(stage)
                 if not self.spark.catalog.tableExists(tbl):
@@ -136,27 +161,28 @@ class Build:
                         f"LOCATION '{self._out_path(stage)}'"
                     )
                 return self.spark.table(tbl)
-        return self.spark.read.parquet(self._out_path(stage))
+        return read_parquet(self.spark, self._out_path(stage))
 
     def _verify_published(self, stage: Stage, meta: dict) -> bool:
-        """Lazy-verify analog: re-count the published table on resume."""
+        """Lazy-verify analog: the published directory's footer file map
+        must equal the recorded one. Reads footers only, no Spark job."""
         out = self._out_path(stage.name)
         if not os.path.isdir(out):
             return False
         try:
-            n = self.spark.read.parquet(out).count()
-        except Exception:
+            return _footer_counts(out) == meta["files"]
+        except (OSError, pa.ArrowException):
             return False
-        return n == meta["row_count"]
 
     def run_stage(self, stage: Stage) -> dict:
         fp = self._stage_fingerprint(stage)
-        self._fingerprints[stage.name] = fp
         cpath = _ckpt_path(self.build_dir, stage.name)
         if os.path.exists(cpath):
-            meta = json.load(open(cpath))
+            with open(cpath) as f:
+                meta = json.load(f)
             if meta["fingerprint"] == fp and self._verify_published(stage, meta):
                 meta["resumed"] = True
+                self._lineage[stage.name] = _lineage_id(meta)
                 self.stats.append(meta)
                 return meta
 
@@ -164,9 +190,8 @@ class Build:
         resolved = {}
         for inp in stage.inputs:
             if inp.startswith("raw:"):
-                resolved[os.path.splitext(os.path.basename(inp[4:]))[0]] = self.spark.read.parquet(
-                    inp[4:]
-                )
+                name = os.path.splitext(os.path.basename(inp[4:]))[0]
+                resolved[name] = read_parquet(self.spark, inp[4:])
             else:
                 resolved[inp] = self.output(inp)
         df = stage.fn(self.spark, resolved)
@@ -192,9 +217,9 @@ class Build:
                 .mode("overwrite")
                 .saveAsTable(tmp_tbl)
             )
-            staged = self.spark.table(tmp_tbl)
-            schema_ddl = staged._jdf.schema().toDDL()
-            parts = _partition_counts(staged)
+            # catalog lookup, no job
+            schema_ddl = self.spark.table(tmp_tbl)._jdf.schema().toDDL()
+            files = _footer_counts(tmp)
             # commit: drop tmp metadata (external table — data stays),
             # swap dirs, re-point the catalog at the published location
             self.spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
@@ -212,8 +237,7 @@ class Build:
             if os.path.exists(tmp):
                 shutil.rmtree(tmp)
             df.write.mode("overwrite").parquet(tmp)
-            published = self.spark.read.parquet(tmp)
-            parts = _partition_counts(published)
+            files = _footer_counts(tmp)
             if os.path.exists(out):
                 shutil.rmtree(out)
             os.rename(tmp, out)
@@ -221,9 +245,8 @@ class Build:
         meta = {
             "stage": stage.name,
             "fingerprint": fp,
-            "row_count": int(sum(parts)),
-            "partition_rows": parts,
-            "n_partitions": len(parts),
+            "row_count": sum(files.values()),
+            "files": files,
             "wall_s": round(time.time() - t0, 3),
             "engine_version": ENGINE_VERSION,
             "resumed": False,
@@ -233,6 +256,7 @@ class Build:
         with open(cpath + ".tmp", "w") as f:
             json.dump(meta, f)
         os.rename(cpath + ".tmp", cpath)
+        self._lineage[stage.name] = _lineage_id(meta)
         self.stats.append(meta)
         return meta
 
@@ -403,7 +427,7 @@ class ResultCache:
         path = os.path.join(self.cache_dir, key)
         t0 = time.time()
         if os.path.exists(os.path.join(path, "_SUCCESS")):
-            df = self.spark.read.parquet(path)
+            df = read_parquet(self.spark, path)
             os.utime(path)  # refresh LRU recency
             self._record(key, True, t0)
             return df
@@ -418,7 +442,7 @@ class ResultCache:
         os.rename(tmp, path)
         self._record(key, False, t0)
         self._evict_lru()
-        return self.spark.read.parquet(path)
+        return read_parquet(self.spark, path)
 
 
 def polyset_key(polygons: DataFrame) -> str:

@@ -156,4 +156,6 @@ def incremental_pip(
             spark.createDataFrame([], "point_id STRING, polygon_id STRING, cell_p BIGINT"),
             info,
         )
+    # not session.read_parquet: the cell_p column comes from partition
+    # discovery over the cell_p=<n> directories, which a footer lacks
     return spark.read.parquet(data_dir), info

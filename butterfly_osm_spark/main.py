@@ -37,7 +37,13 @@ def main() -> None:
         json.dumps(
             {
                 "stages": [
-                    {k: m[k] for k in ("stage", "row_count", "n_partitions", "resumed", "wall_s")}
+                    {
+                        "stage": m["stage"],
+                        "row_count": m["row_count"],
+                        "n_files": len(m["files"]),
+                        "resumed": m["resumed"],
+                        "wall_s": m["wall_s"],
+                    }
                     for m in stats
                 ],
                 "pip_pairs": pip_rows,

@@ -419,6 +419,8 @@ def connected_components(
                 base = f"{reset_dir.rstrip('/')}/cc_epoch_{run}_{iters}"
             path = f"{base}/labels"
             labels.write.mode("overwrite").parquet(path)
+            # not session.read_parquet: path may be on shared non-local
+            # storage, where the driver cannot open a footer itself
             fresh = spark.read.parquet(path).localCheckpoint(eager=True)
             release_checkpoint(labels)
             labels = fresh

@@ -25,6 +25,7 @@ from . import cells
 from .fixtures.generate import ensure_fixtures, fixture_dir
 from .functions.model import compile_way_attrs, way_attrs_oracle_sql
 from .operators.extract import build_edges, edges_oracle_sql
+from .session import read_parquet
 
 # Oracle SQL is only executed at sf0.01 (driver contract).
 ORACLE_SF = "0.01"
@@ -42,7 +43,7 @@ def _oracle_fix(sf: str = ORACLE_SF) -> str:
 
 
 def _read(spark: SparkSession, fix: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(fix, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(fix, f"{name}.parquet"))
 
 
 # ---------------------------------------------------------------------------
@@ -407,11 +408,11 @@ JACCARD_T = 0.5
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
 
 
 def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, "embeddings.parquet"))
 
 
 def q_token_stats(spark, sf_dir):
@@ -1309,7 +1310,7 @@ def q_asof_purchases(spark, sf_dir):
     window plan — one exchange, zero joins."""
     from .operators.asof import asof_purchases
 
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    events = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     return asof_purchases(events)
 
 

@@ -8,9 +8,13 @@ config ships via spark-submit --py-files unchanged.
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 # Shuffle partition count: on a real cluster this is ~2-3x total cores and
 # AQE coalesces down. Locally 32 is not matched to the cores: AQE
@@ -61,3 +65,56 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+# the key under which Spark serializes its own schema into the parquet
+# footers it writes; Spark's schema inference prefers it to the parquet
+# types when present
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def part_files(table_dir: str) -> list[str]:
+    """Sorted names of the ``part-*.parquet`` data files of a table
+    directory written by Spark (markers, checksums and hidden files are
+    not data)."""
+    return sorted(
+        f for f in os.listdir(table_dir) if f.startswith("part-") and f.endswith(".parquet")
+    )
+
+
+def _first_footer(path: str) -> str | None:
+    """The local parquet file whose footer Spark's non-merging schema
+    inference would read: ``path`` itself, or the first part file of a
+    table directory. None when there is none (empty directory, non-local
+    URI)."""
+    if os.path.isfile(path):
+        return path
+    if os.path.isdir(path) and (parts := part_files(path)):
+        return os.path.join(path, parts[0])
+    return None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job.
+
+    The schema comes from one footer read on the driver, by the rule
+    Spark's own inference uses without ``mergeSchema``: the first data
+    file's footer, Spark's serialized schema if the file carries one,
+    else the parquet types (timestamps without a time zone read as
+    TIMESTAMP_NTZ when ``spark.sql.parquet.inferTimestampNTZ.enabled``,
+    as Spark infers them). Paths with no local footer, and footers with
+    types the Arrow conversion lacks, fall back to the plain read."""
+    first = _first_footer(path)
+    if first is None:
+        return spark.read.parquet(path)
+    arrow = pq.read_schema(first)
+    serialized = (arrow.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if serialized:
+        schema = StructType.fromJson(json.loads(serialized))
+    else:
+        ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true") == "true"
+        try:
+            schema = from_arrow_schema(arrow, prefer_timestamp_ntz=ntz)
+        except TypeError:  # a type Arrow conversion lacks (unsigned ints): let Spark infer
+            return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)

@@ -1,11 +1,21 @@
 """Resume semantics: rerun skips, corruption re-runs stage + downstream,
 outputs identical (the reference's lock-file + lazy-CRC contract)."""
 
+import ast
+import datetime
 import json
 import os
 import shutil
+import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+import butterfly_osm_spark
 from butterfly_osm_spark.checkpoint import Build, reference_pipeline
+from butterfly_osm_spark.session import part_files, read_parquet
 
 
 def _run(spark, fix, build_dir):
@@ -14,32 +24,106 @@ def _run(spark, fix, build_dir):
     return b, stats
 
 
-def test_resume_skips_everything(spark, fix001, tmp_path):
+@pytest.fixture(scope="module")
+def built(spark, fix001, tmp_path_factory):
+    """One finished build shared read-only by this module's tests: its dir,
+    its stage stats and its final pip pairs. Tests that resume or corrupt
+    a build work on a copy (``_copy``)."""
+    bd = str(tmp_path_factory.mktemp("ckpt") / "build")
+    b, stats = _run(spark, fix001, bd)
+    pairs = sorted(map(tuple, b.output("pip_pairs").collect()))
+    return bd, stats, pairs
+
+
+def _copy(built, tmp_path):
     bd = str(tmp_path / "build")
-    _, s1 = _run(spark, fix001, bd)
+    shutil.copytree(built[0], bd)
+    return bd
+
+
+def _group_job_ids(sc, group, timeout_s=30.0):
+    """Job ids of a job group, once the listener bus has caught up: a
+    one-job fence in a second group is seen only after every job started
+    before it."""
+    fence = f"{group}-fence"
+    sc.setJobGroup(fence, "fence")
+    sc.parallelize([0], 1).count()
+    deadline = time.time() + timeout_s
+    while not sc.statusTracker().getJobIdsForGroup(fence):
+        assert time.time() < deadline, "fence job never reached the status tracker"
+        time.sleep(0.05)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_resume_skips_everything(spark, fix001, built, tmp_path):
+    """A resume over a finished build skips every stage with identical
+    counts and launches no Spark job: counts and schemas come from the
+    recorded metadata and the parquet footers."""
+    bd = _copy(built, tmp_path)
+    s1 = built[1]
     assert all(not m["resumed"] for m in s1)
-    _, s2 = _run(spark, fix001, bd)
+    sc = spark.sparkContext
+    group = f"resume-{os.getpid()}-{time.time_ns()}"
+    sc.setJobGroup(group, "resume pass")
+    try:
+        _, s2 = _run(spark, fix001, bd)
+        jobs = _group_job_ids(sc, group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     assert all(m["resumed"] for m in s2)
     assert [m["row_count"] for m in s1] == [m["row_count"] for m in s2]
+    assert list(jobs) == [], f"resume launched Spark jobs {list(jobs)}"
 
 
-def test_corruption_recomputes_stage(spark, fix001, tmp_path):
-    bd = str(tmp_path / "build")
-    b1, s1 = _run(spark, fix001, bd)
-    final1 = sorted(map(tuple, b1.output("pip_pairs").collect()))
-    # corrupt: truncate the edges output (lazy-verify must catch it)
-    shutil.rmtree(os.path.join(bd, "edges"))
+def _remove_dir(d):
+    shutil.rmtree(d)
+
+
+def _truncate_part(d):
+    p = os.path.join(d, part_files(d)[0])
+    with open(p, "r+b") as f:
+        f.truncate(os.path.getsize(p) // 2)
+
+
+def _delete_part(d):
+    os.remove(os.path.join(d, part_files(d)[0]))
+
+
+def _add_stray_part(d):
+    stray = os.path.join(d, "part-99999-stray.c000.parquet")
+    shutil.copy(os.path.join(d, part_files(d)[0]), stray)
+
+
+@pytest.mark.parametrize(
+    "stage,corrupt,downstream",
+    [
+        ("edges", _remove_dir, []),
+        ("image_cells", _truncate_part, ["pip_pairs"]),
+        ("image_cells", _delete_part, ["pip_pairs"]),
+        ("image_cells", _add_stray_part, ["pip_pairs"]),
+    ],
+    ids=[
+        "edges-dir-removed",
+        "image_cells-part-truncated",
+        "image_cells-part-deleted",
+        "image_cells-stray-part",
+    ],
+)
+def test_corruption_recomputes_stage(spark, fix001, built, tmp_path, stage, corrupt, downstream):
+    """Lazy verify must catch a damaged published table, recompute it and
+    everything downstream of it, and reproduce the same final pairs."""
+    bd = _copy(built, tmp_path)
+    corrupt(os.path.join(bd, stage))
     b2, s2 = _run(spark, fix001, bd)
-    by = {m["stage"]: m for m in s2}
-    assert not by["edges"]["resumed"]
-    assert by["nodes_sorted"]["resumed"] and by["image_cells"]["resumed"]
+    redone = {m["stage"] for m in s2 if not m["resumed"]}
+    assert redone == {stage, *downstream}
     final2 = sorted(map(tuple, b2.output("pip_pairs").collect()))
-    assert final1 == final2
+    assert built[2] == final2
 
 
-def test_version_bump_invalidates_downstream(spark, fix001, tmp_path):
-    bd = str(tmp_path / "build")
-    _run(spark, fix001, bd)
+def test_version_bump_invalidates_downstream(spark, fix001, built, tmp_path):
+    bd = _copy(built, tmp_path)
     stages = reference_pipeline(fix001)
     for s in stages:
         if s.name == "nodes_sorted":
@@ -52,13 +136,72 @@ def test_version_bump_invalidates_downstream(spark, fix001, tmp_path):
     assert by["way_attrs"]["resumed"] and by["image_cells"]["resumed"]
 
 
-def test_per_partition_lineage_recorded(spark, fix001, tmp_path):
-    bd = str(tmp_path / "build")
-    _, stats = _run(spark, fix001, bd)
+def test_per_partition_lineage_recorded(spark, built):
+    """The recorded per-file lineage (footer counts) agrees with Spark's
+    own count of each published table, total and per file."""
+    bd, stats, _ = built
     for m in stats:
-        assert m["row_count"] == sum(m["partition_rows"])
-        meta = json.load(open(os.path.join(bd, "_checkpoint", f"{m['stage']}.json")))
-        assert meta["fingerprint"] == m["fingerprint"]
+        d = os.path.join(bd, m["stage"])
+        assert sorted(m["files"]) == sorted(
+            os.path.basename(u) for u in spark.read.parquet(d).inputFiles()
+        )
+        assert m["row_count"] == sum(m["files"].values())
+        assert m["row_count"] == spark.read.parquet(d).count()
+        per_file = (
+            spark.read.parquet(d).groupBy(F.input_file_name().alias("f")).count().collect()
+        )
+        assert {os.path.basename(r["f"]): r["count"] for r in per_file} == {
+            f: n for f, n in m["files"].items() if n
+        }
+        with open(os.path.join(bd, "_checkpoint", f"{m['stage']}.json")) as f:
+            meta = json.load(f)
+        assert meta["fingerprint"] == m["fingerprint"] and meta["files"] == m["files"]
+
+
+def test_read_parquet_schema_matches_spark_inference(spark, fix001, built, tmp_path):
+    """``read_parquet`` (schema from the first footer, no job) gives the
+    schema Spark's inference gives: every sf0.001 fixture table, every
+    published stage, and a table with zoned and zone-less timestamps and
+    an unsigned int written by pyarrow and by Spark."""
+    ts = datetime.datetime(2020, 1, 2, 3, 4, 5)
+    pq.write_table(
+        pa.table(
+            {
+                "naive": pa.array([ts], pa.timestamp("us")),
+                "zoned": pa.array([ts], pa.timestamp("us", tz="UTC")),
+                "tags": pa.array([["a"]], pa.list_(pa.string())),
+                "n": pa.array([1], pa.uint32()),
+            }
+        ),
+        str(tmp_path / "arrow_ts.parquet"),
+    )
+    spark.read.parquet(str(tmp_path / "arrow_ts.parquet")).write.parquet(str(tmp_path / "spark_ts"))
+    paths = [os.path.join(fix001, f) for f in sorted(os.listdir(fix001)) if f.endswith(".parquet")]
+    paths += [os.path.join(built[0], m["stage"]) for m in built[1]]
+    paths += [str(tmp_path / "arrow_ts.parquet"), str(tmp_path / "spark_ts")]
+    assert len(paths) > 30
+    for p in paths:
+        assert read_parquet(spark, p).schema == spark.read.parquet(p).schema, p
+
+
+def test_package_reads_go_through_read_parquet():
+    """The checkpoint layer and the query readers never call
+    ``<spark>.read.parquet(...)`` directly, whose schema inference costs a
+    Spark job per read; they use ``session.read_parquet``."""
+    pkg = os.path.dirname(butterfly_osm_spark.__file__)
+    for mod in ("checkpoint.py", "queries.py"):
+        with open(os.path.join(pkg, mod)) as f:
+            tree = ast.parse(f.read())
+        direct = [
+            n.lineno
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "parquet"
+            and isinstance(n.func.value, ast.Attribute)
+            and n.func.value.attr == "read"
+        ]
+        assert direct == [], f"{mod} reads parquet without read_parquet at lines {direct}"
 
 
 def test_result_cache_warm_hit_skips_compute(spark, fix001, tmp_path):
