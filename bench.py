@@ -3,7 +3,8 @@
 
 Default mode (what the round driver runs): executes the headline queries
 at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` (default 32) and prints ONE JSON line:
+``local[N]``, N = ``session.default_cpus()`` (``$SPARK_GRAFT_CPUS``, else
+the usable cores), and prints ONE JSON line:
 
     {"metric": "headline_total_sec", "value": <sec>, "unit": "sec",
      "queries": {"pip_images": sec, ...}, "sf": 0.1,
@@ -259,8 +260,9 @@ def main() -> None:
         levels = [int(x) for x in sys.argv[2].split(",")]
         result = run_scaling(sf_dir, levels)
     else:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        result = run_once(sf_dir, cpus)
+        from butterfly_osm_spark.session import default_cpus
+
+        result = run_once(sf_dir, default_cpus())
     print(json.dumps(result))
 
 

@@ -10,7 +10,8 @@ Usage:
   python bench_extra.py explain --tag after <query> [...]
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
-(default 32), SPARK_GRAFT_PLAN_TAG (default "before").
+(default: the usable cores, session.default_cpus), SPARK_GRAFT_PLAN_TAG
+(default "before").
 """
 
 from __future__ import annotations
@@ -37,11 +38,11 @@ def main() -> None:
     names = args
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
     from butterfly_osm_spark.fixtures.generate import ensure_fixtures
     from butterfly_osm_spark.queries import QUERIES
-    from butterfly_osm_spark.session import get_spark
+    from butterfly_osm_spark.session import default_cpus, get_spark
+
+    cpus = default_cpus()
 
     sf = os.path.basename(os.path.normpath(sf_dir)).removeprefix("sf")
     ensure_fixtures(sf)

@@ -4,6 +4,41 @@ Defaults mirror what we would ship on a 1000-executor cluster: AQE on
 (runtime re-plan, skew-join split, partition coalescing), Arrow-backed
 pandas UDFs, zstd parquet. On the sandbox we run local[N]; the same
 config ships via spark-submit --py-files unchanged.
+
+Resources come from the host, not from constants: ``local[N]`` takes N
+from the cores this process may run on (``os.sched_getaffinity``) and
+the driver heap is half the physical RAM, at most 48 GB.
+``$SPARK_GRAFT_CPUS`` and ``$SPARK_GRAFT_DRIVER_MEM`` override them.
+
+JIT thresholds. Every build and benchmark pass is a cold driver JVM,
+and HotSpot's C2 compiler spent about half of such a job's CPU
+recompiling Spark's own per-job machinery, not per-row code. A JFR
+``jdk.Compilation`` recording of one ``snap_build`` run (perfbench,
+4-core x86-64 VM, JDK 17) showed 44.4 s of C2 time over 3,726 compiles:
+JDK serialization, class loading and lambdas 17.2 s, Janino (which
+compiles the generated code) 9.9 s, Scala and Catalyst 6.7 s, py4j and
+pickling about 2 s. ``JIT_OPTIONS`` raises the four tier-4 (C2) compile
+thresholds to 10x the JDK 17 defaults, so code that runs only a few
+thousand times per job stays at C1 while per-row code still reaches C2
+early in a pass. In one ``snap_build`` run's driver JVM (per-thread CPU
+from ``/proc/<pid>/task``) the C2 threads then used 7.0 s instead of
+20.0 s, and the whole JVM 26.7 s instead of 37.8 s.
+Two other settings were measured and rejected on the ``bench.py`` sf0.1
+headline (local[4], min of 3 passes): 30x the defaults cut C2 time
+further but slowed the headline from a median of 15.3 s to 19.8 s
+(knn_nodes 6.8 -> 9.5 s, image_tiles 0.19 -> 0.53 s: per-row code
+reached C2 too late), and stopping at C1 (``-XX:TieredStopAtLevel=1``)
+slowed it from 37-40 s to 54-61 s.
+
+The options are set as ``spark.{driver,executor}.defaultJavaOptions``,
+which Spark puts in front of ``extraJavaOptions``; HotSpot takes the
+last value of a repeated flag, so a caller overrides a threshold (or
+restores a JDK default) by naming it in ``extraJavaOptions``, e.g.
+``-XX:Tier4InvocationThreshold=5000``. Driver options only reach a JVM
+that ``get_spark`` starts itself: under ``spark-submit`` the driver is
+running before it is called, so ``scripts/submit.sh`` passes
+``launch_conf()`` on the command line (``python -m
+butterfly_osm_spark.session`` prints those arguments).
 """
 
 from __future__ import annotations
@@ -22,6 +57,41 @@ from pyspark.sql.types import StructType
 # width at 2x the cores (partitioning.py).
 _DEFAULT_SHUFFLE_PARTITIONS = "32"
 
+# tier-4 (C2) compile thresholds: 10x the JDK 17 defaults (5000, 600,
+# 15000, 40000); see the module docstring
+JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
+
+
+def default_cpus() -> int:
+    """Cores for ``local[N]``: ``$SPARK_GRAFT_CPUS``, else the cores this
+    process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_memory() -> str:
+    """Driver heap: ``$SPARK_GRAFT_DRIVER_MEM``, else half the host's
+    physical RAM, at most 48 GB. In local mode the heap shares the RAM
+    with one Python worker per core and the page cache the scans read
+    through; a heap sized past the RAM grows until the kernel kills it."""
+    if mem := os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return mem
+    ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(48 << 10, ram_mb // 2)}m"
+
+
+def launch_conf() -> dict[str, str]:
+    """The settings a JVM takes at launch: the driver heap and the JIT
+    options. They take effect only where the JVM is started after they
+    are set (see the module docstring for ``spark-submit``)."""
+    return {
+        "spark.driver.memory": default_driver_memory(),
+        "spark.driver.defaultJavaOptions": JIT_OPTIONS,
+        "spark.executor.defaultJavaOptions": JIT_OPTIONS,
+    }
+
 
 def get_spark(
     app_name: str = "butterfly-osm-spark",
@@ -31,14 +101,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[default_cpus()]``.
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
     b = (
         SparkSession.builder.appName(app_name)
-        .master(master)
+        .master(master or f"local[{default_cpus()}]")
         # AQE: runtime partition coalescing + skew-join split — the Spark
         # analog of the reference's hand-tuned tile sizing and dense-cell
         # skew fixes (reference docs/architecture.md:381-386, #525).
@@ -59,9 +126,10 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", os.environ.get("SPARK_GRAFT_MAX_PART", "4m"))
         # Deterministic timezone-free behavior.
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
     )
+    for k, v in launch_conf().items():
+        b = b.config(k, v)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
@@ -118,3 +186,11 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
         except TypeError:  # a type Arrow conversion lacks (unsigned ints): let Spark infer
             return spark.read.parquet(path)
     return spark.read.schema(schema).parquet(path)
+
+
+if __name__ == "__main__":
+    # spark-submit arguments for the session defaults, one per line
+    # (scripts/submit.sh)
+    print("--master", f"local[{default_cpus()}]", sep="\n")
+    for k, v in launch_conf().items():
+        print("--conf", f"{k}={v}", sep="\n")

@@ -89,7 +89,7 @@ def main() -> None:
         cosine_topk_lsh,
         lsh_candidates,
     )
-    from butterfly_osm_spark.session import get_spark
+    from butterfly_osm_spark.session import default_cpus, get_spark
 
     path = f"/tmp/ann_corpus_{n}.parquet"
     if not os.path.exists(path):
@@ -103,7 +103,7 @@ def main() -> None:
     sample = np.sort(rng.choice(n, size=n_q, replace=False)).astype(np.int64)
     truth = exact_topk(x, sample, k)
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     spark = get_spark(
         app_name="ann-recall-1m",
         master=f"local[{cpus}]",

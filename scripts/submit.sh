@@ -15,5 +15,9 @@ with zipfile.ZipFile("/tmp/butterfly_osm_spark.zip", "w") as z:
             if f.endswith(".py"):
                 z.write(os.path.join(root, f))
 EOF
-exec spark-submit --master "local[${SPARK_GRAFT_CPUS:-32}]" \
+# the session's master, driver heap and JVM options: spark-submit starts
+# the driver JVM before get_spark runs, so they must be on its command line
+session_args=$(python -m butterfly_osm_spark.session)
+mapfile -t SESSION_ARGS <<<"$session_args"
+exec spark-submit "${SESSION_ARGS[@]}" \
     --py-files "$ZIP" butterfly_osm_spark/main.py "$@"

@@ -1066,3 +1066,53 @@ def test_route_paths_are_valid_shortest_paths(spark, fix001):
             assert (a, b) in arcs, f"hop {a}->{b} is not a car arc"
             cost += arcs[(a, b)]
         assert cost == cells_t[(src, dst)], f"path cost != matrix cell for {(src, dst)}"
+
+
+def test_session_jvm_takes_raised_c2_thresholds(spark):
+    """The session's driver JVM runs with session.JIT_OPTIONS: the four
+    tier-4 (C2) compile thresholds at 10x the JDK 17 defaults."""
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    want = {
+        "Tier4InvocationThreshold": "50000",
+        "Tier4MinInvocationThreshold": "6000",
+        "Tier4CompileThreshold": "150000",
+        "Tier4BackEdgeThreshold": "400000",
+    }
+    assert {name: bean.getVMOption(name).getValue() for name in want} == want
+
+
+def test_session_defaults_follow_the_host(monkeypatch):
+    """Without overrides, local[N] takes N from the usable cores and the
+    driver heap fits in physical RAM; $SPARK_GRAFT_CPUS and
+    $SPARK_GRAFT_DRIVER_MEM win when set, also in the spark-submit
+    arguments scripts/submit.sh takes from the session module."""
+    import os
+    import subprocess
+    import sys
+
+    from butterfly_osm_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert session.default_cpus() == len(os.sched_getaffinity(0))
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    mem = session.default_driver_memory()
+    assert mem.endswith("m") and 0 < int(mem[:-1]) * 1024 <= total_kb
+    assert session.launch_conf()["spark.driver.memory"] == mem
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "5g")
+    assert session.default_cpus() == 3
+    assert session.default_driver_memory() == "5g"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    args = subprocess.run(
+        [sys.executable, "-m", "butterfly_osm_spark.session"],
+        cwd=root, capture_output=True, text=True, check=True,
+    ).stdout.splitlines()
+    assert args[:2] == ["--master", "local[3]"]
+    assert "spark.driver.memory=5g" in args
+    assert f"spark.driver.defaultJavaOptions={session.JIT_OPTIONS}" in args
