@@ -60,11 +60,11 @@ def run_once(sf_dir: str, cpus: int) -> dict:
     sf = os.path.basename(os.path.normpath(sf_dir)).removeprefix("sf")
     ensure_fixtures(sf)  # outside the timed region
 
-    # shuffle partitions scale with parallelism, like executor count would
+    # the session default scales shuffle partitions with the cores (cpus is
+    # default_cpus()), as executor count would
     spark = get_spark(
         app_name=f"butterfly-osm-bench-{cpus}",
         master=f"local[{cpus}]",
-        shuffle_partitions=str(max(32, 2 * cpus)),
     )
     # Engine warm-up, outside the timed region (the stated methodology
     # excludes session startup): one generic shuffle job + a 1-row parquet
@@ -174,7 +174,6 @@ def run_scaling_level(sf_dir: str, cpus: int) -> dict:
     spark = get_spark(
         app_name=f"butterfly-osm-scaling-{cpus}",
         master=f"local[{cpus}]",
-        shuffle_partitions=str(max(32, 2 * cpus)),
         extra_conf={"spark.scheduler.mode": "FAIR"},
     )
     try:

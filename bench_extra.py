@@ -49,7 +49,6 @@ def main() -> None:
     spark = get_spark(
         app_name=f"butterfly-osm-extra-{cpus}",
         master=f"local[{cpus}]",
-        shuffle_partitions=str(max(32, 2 * cpus)),
     )
     from pyspark.sql import functions as F
 

@@ -45,23 +45,6 @@ SIZE_E7 = tuple(
     1_000_000 * 2 ** (7 - r) if r <= 7 else 1_000_000 // 2 ** (r - 7) for r in range(RES_MAX + 1)
 )
 
-# Approx metres per cell edge at the fixture latitude band (~50.5N), using
-# the reference's equirectangular constants (route/src/server/spatial.rs:226-230):
-# 111_000 m per deg lat, 71_400 m per deg lon.
-M_PER_DEG_LAT = 111_000.0
-M_PER_DEG_LON = 71_400.0
-
-
-def size_e7(res: int) -> int:
-    if not RES_MIN <= res <= RES_MAX:
-        raise ValueError(f"resolution {res} out of [{RES_MIN},{RES_MAX}]")
-    return SIZE_E7[res]
-
-
-def cell_edge_m(res: int) -> float:
-    """Conservative (smaller) metric edge of a cell at ``res`` — the lon edge."""
-    return SIZE_E7[res] / E7 * M_PER_DEG_LON
-
 
 # ---------------------------------------------------------------------------
 # numpy kernels (used inside pandas UDFs and fixture generation)
@@ -168,24 +151,6 @@ def parent_col(cell: Column | str, cell_res: int, parent_res: int) -> Column:
         + F.shiftright(y, dr) * F.lit(1 << Y_SHIFT)
         + F.shiftright(x, dr)
     ).cast("long")
-
-
-def kring_offsets(k: int) -> list[tuple[int, int]]:
-    """Chebyshev k-ring offsets (square rings — the reference's ring shape,
-    snap_index.rs:833-904 iterate_rings)."""
-    return [(dx, dy) for dx in range(-k, k + 1) for dy in range(-k, k + 1)]
-
-
-def ring_offsets(ring: int) -> list[tuple[int, int]]:
-    """Offsets of EXACTLY ring ``ring`` (Chebyshev shell)."""
-    if ring == 0:
-        return [(0, 0)]
-    out = []
-    for dx in range(-ring, ring + 1):
-        for dy in range(-ring, ring + 1):
-            if max(abs(dx), abs(dy)) == ring:
-                out.append((dx, dy))
-    return out
 
 
 def neighbor_col(cell: Column | str, dx: int, dy: int) -> Column:

@@ -81,17 +81,6 @@ def haversine_m_col(lon1: Column | str, lat1: Column | str, lon2: Column | str, 
     return F.lit(2.0 * EARTH_R_M) * F.asin(F.sqrt(a))
 
 
-def haversine_m_np(lon1, lat1, lon2, lat2) -> np.ndarray:
-    rlat1 = np.radians(np.asarray(lat1, dtype=np.float64) / E7)
-    rlat2 = np.radians(np.asarray(lat2, dtype=np.float64) / E7)
-    dlat = rlat2 - rlat1
-    dlon = np.radians(
-        (np.asarray(lon2).astype(np.int64) - np.asarray(lon1).astype(np.int64)).astype(np.float64) / E7
-    )
-    a = np.sin(dlat / 2) ** 2 + np.cos(rlat1) * np.cos(rlat2) * np.sin(dlon / 2) ** 2
-    return 2.0 * EARTH_R_M * np.arcsin(np.sqrt(a))
-
-
 def haversine_m_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
     """Same formula as SQL text; valid in Spark SQL and DuckDB."""
     rl1 = f"radians(CAST({lat1} AS DOUBLE) / {E7!r})"
@@ -138,9 +127,3 @@ def mercator_np(lon_e7: np.ndarray, lat_e7: np.ndarray) -> tuple[np.ndarray, np.
     mx = MERC_R * np.radians(lon)
     my = MERC_R * np.log(np.tan(np.pi / 4 + np.radians(lat) / 2))
     return mx, my
-
-
-def inv_mercator_np(mx: np.ndarray, my: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    lon = np.degrees(np.asarray(mx, dtype=np.float64) / MERC_R)
-    lat = np.degrees(2 * np.arctan(np.exp(np.asarray(my, dtype=np.float64) / MERC_R)) - np.pi / 2)
-    return lon, lat

@@ -39,23 +39,67 @@ that ``get_spark`` starts itself: under ``spark-submit`` the driver is
 running before it is called, so ``scripts/submit.sh`` passes
 ``launch_conf()`` on the command line (``python -m
 butterfly_osm_spark.session`` prints those arguments).
+
+Class-data sharing. A cold driver JVM also loads, parses and verifies
+the same ~15,000 Spark, Scala and Hadoop classes on every start:
+perfbench's ``setup_s`` was still about 21 s of scaled CPU per run with
+the JIT options. ``cds_archive`` keeps one dynamic AppCDS archive per
+(JDK ``release`` file, Spark jars' names, sizes and mtimes,
+compressed-oops mode) key, and a driver JVM that ``get_spark`` starts
+maps it with ``-XX:SharedArchiveFile`` instead of parsing the classes
+again. Over 10 alternating perfbench pairs (4-core x86-64 VM, JDK 17,
+Spark 4.1.2, ``--seconds 1``) ``snap_build`` ``setup_s`` fell from a
+median of 21.3 to 14.7 and ``cpu_s`` from 45.6 to 42.9; a traced run's
+driver took 14,928 classes from the archive and 1,350 from jars. The
+archive is written once per key, about 177 MB, by a child process that
+runs a short fixed workload (``_training_run``, 35-40 s) with
+``-XX:ArchiveClassesAtExit``; training inside a user's run instead
+made that run's set-up 30 s. The archives live in
+``$XDG_CACHE_HOME/butterfly_osm_spark`` (else
+``~/.cache/butterfly_osm_spark``); delete that directory to retrain.
+Three catches:
+
+- HotSpot neither dumps nor maps an archive when a non-empty directory
+  is on the classpath, and Spark puts ``$SPARK_CONF_DIR`` (default
+  ``$SPARK_HOME/conf``, which ships only ``*.template`` files) first.
+  The driver then runs with an empty package-owned conf dir, but only
+  when no configuration is lost by it; a caller's ``$SPARK_CONF_DIR``
+  turns class-data sharing off.
+- An archive only serves a JVM in the compressed-oops mode it was
+  dumped in, and HotSpot drops compressed oops for heaps of 32 GB and
+  more: an archive trained at 8 GB was silently unused at 40 GB. The
+  mode is part of the key; heaps under 32 GB share one archive.
+- Janino's JARs are signed, and HotSpot does not archive classes from
+  signed JARs (779 of the 1,350 above); the training log
+  (``<key>.log``) lists them.
+
+Only the driver maps the archive: executor JVMs on a cluster do not
+have the file. A missing, locked, failed (``<key>.failed``) or damaged
+archive starts the driver as before. HotSpot rejects an archive with a
+bad header itself, but dies (SIGBUS) mapping a truncated one, so
+training records the archive's size (``<key>.size``) and only a file
+of that size is mapped. HotSpot's own CDS warnings go to stderr, since
+a run's stdout may be its result.
 """
 
 from __future__ import annotations
 
+import fcntl
+import hashlib
 import json
 import os
+import re
+import shutil
+import signal
+import subprocess
+import sys
+import tempfile
 
 import pyarrow.parquet as pq
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
-
-# Shuffle partition count: on a real cluster this is ~2-3x total cores and
-# AQE coalesces down. Locally 32 is not matched to the cores: AQE
-# coalesces JVM stages to their bytes, and Python-group gathers cap their
-# width at 2x the cores (partitioning.py).
-_DEFAULT_SHUFFLE_PARTITIONS = "32"
 
 # tier-4 (C2) compile thresholds: 10x the JDK 17 defaults (5000, 600,
 # 15000, 40000); see the module docstring
@@ -82,15 +126,246 @@ def default_driver_memory() -> str:
     return f"{min(48 << 10, ram_mb // 2)}m"
 
 
-def launch_conf() -> dict[str, str]:
-    """The settings a JVM takes at launch: the driver heap and the JIT
-    options. They take effect only where the JVM is started after they
-    are set (see the module docstring for ``spark-submit``)."""
+def default_shuffle_partitions() -> int:
+    """Shuffle partition count: twice ``default_cpus()``, at least 32. On
+    a real cluster this is ~2-3x the total cores and AQE coalesces down;
+    locally AQE coalesces JVM stages to their bytes, and Python-group
+    gathers cap their width at 2x the cores (partitioning.py)."""
+    return max(32, 2 * default_cpus())
+
+
+def launch_conf(archive: str | None = None) -> dict[str, str]:
+    """The settings a JVM takes at launch: the driver heap, the JIT
+    options and, when given, the class-data archive the driver maps
+    (``cds_archive``). They take effect only where the JVM is started
+    after they are set (see the module docstring for ``spark-submit``)."""
+    driver = JIT_OPTIONS if archive is None else f"{JIT_OPTIONS} -XX:SharedArchiveFile={archive} {_CDS_LOG}"
     return {
         "spark.driver.memory": default_driver_memory(),
-        "spark.driver.defaultJavaOptions": JIT_OPTIONS,
+        "spark.driver.defaultJavaOptions": driver,
         "spark.executor.defaultJavaOptions": JIT_OPTIONS,
     }
+
+
+# -- class-data sharing (see the module docstring) -----------------------------
+
+# the first four bytes of a dynamic (top-layer) CDS archive, HotSpot's
+# CDS_DYNAMIC_ARCHIVE_MAGIC in native byte order
+_ARCHIVE_MAGIC = (0xF00BABA8).to_bytes(4, sys.byteorder)
+# HotSpot logs CDS warnings to stdout by default; a session's stdout can be
+# a program's result (bench.py's and perfbench's last JSON line)
+_CDS_LOG = "-Xlog:cds*=off:stdout -Xlog:cds*=warning:stderr"
+# directories Spark's launcher also puts on the driver classpath; the
+# archive key does not cover what they hold
+_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+_TRAIN_TIMEOUT_S = 900
+
+
+def cache_dir() -> str:
+    """Where the archives live: ``$XDG_CACHE_HOME/butterfly_osm_spark``,
+    else ``~/.cache/butterfly_osm_spark``."""
+    root = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    return os.path.join(root, "butterfly_osm_spark")
+
+
+def _spark_home() -> str:
+    from pyspark.find_spark_home import _find_spark_home  # what launch_gateway runs
+
+    return _find_spark_home()
+
+
+def _java_home() -> str | None:
+    """The JDK Spark's launcher runs the driver on: ``$JAVA_HOME``, else
+    the one of ``java`` on the PATH."""
+    if home := os.environ.get("JAVA_HOME"):
+        return home
+    java = shutil.which("java")
+    return os.path.dirname(os.path.dirname(os.path.realpath(java))) if java else None
+
+
+def _heap_bytes(mem: str) -> int:
+    """Bytes of a ``spark.driver.memory`` value (a bare number is MiB)."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", mem.strip().lower())
+    if m is None:
+        raise ValueError(f"not a memory size: {mem!r}")
+    return int(m[1]) << {"k": 10, "m": 20, "g": 30, "t": 40}[m[2] or "m"]
+
+
+def archive_path(heap: str) -> str | None:
+    """The archive file for this JDK, Spark classpath and driver heap:
+    its name digests the JDK's ``release`` file, the (name, size, mtime)
+    of every Spark jar and the compressed-oops mode, which HotSpot drops
+    for heaps of 32 GB and more and which an archive must match. None
+    when the JDK has no ``release`` file."""
+    jdk = _java_home()
+    if jdk is None:
+        return None
+    try:
+        with open(os.path.join(jdk, "release"), "rb") as f:
+            release = f.read()
+    except OSError:
+        return None
+    jars = sorted(
+        (e.name, e.stat().st_size, e.stat().st_mtime_ns)
+        for e in os.scandir(os.path.join(_spark_home(), "jars"))
+        if e.name.endswith(".jar")
+    )
+    coops = _heap_bytes(heap) < 32 << 30
+    key = hashlib.sha256(repr((release, jars, coops)).encode()).hexdigest()[:20]
+    return os.path.join(cache_dir(), f"{key}.jsa")
+
+
+def _cds_conf_dir() -> str | None:
+    """The empty directory to run the driver with as ``$SPARK_CONF_DIR``:
+    Spark puts the conf dir first on the classpath, and HotSpot neither
+    dumps nor maps an archive with a non-empty directory there. None when
+    swapping it would drop configuration: the caller set
+    ``$SPARK_CONF_DIR`` (or another classpath directory), or Spark's
+    default conf dir holds more than ``*.template`` files."""
+    empty = os.path.join(cache_dir(), "conf")
+    given = os.environ.get("SPARK_CONF_DIR")
+    if given and os.path.abspath(given) != empty or any(os.environ.get(v) for v in _CLASSPATH_ENV):
+        return None
+    default = os.path.join(_spark_home(), "conf")
+    if not given and os.path.isdir(default) and any(not f.endswith(".template") for f in os.listdir(default)):
+        return None
+    os.makedirs(empty, exist_ok=True)
+    return None if os.listdir(empty) else empty
+
+
+def _is_archive(path: str, size: int | None = None) -> bool:
+    """Whether ``path`` starts as a dynamic archive does and, when given,
+    holds ``size`` bytes. HotSpot checks an archive's header, but a file
+    cut short crashes the JVM (SIGBUS) as it maps the missing pages."""
+    try:
+        with open(path, "rb") as f:
+            return f.read(4) == _ARCHIVE_MAGIC and (size is None or os.fstat(f.fileno()).st_size == size)
+    except OSError:
+        return False
+
+
+def _recorded_size(stem: str) -> int | None:
+    """The byte count ``_train`` recorded for ``<stem>.jsa``."""
+    try:
+        with open(stem + ".size") as f:
+            return int(f.read())
+    except (OSError, ValueError):
+        return None
+
+
+def cds_archive(heap: str) -> str | None:
+    """The archive a driver JVM with ``heap`` should map, trained first if
+    it is missing. When one is returned, ``$SPARK_CONF_DIR`` is set to the
+    empty conf dir it needs. None (the driver starts without an archive)
+    when the conf dir cannot be swapped, another process holds the
+    training lock, training failed once (``<key>.failed``), or the file
+    is not the whole archive training wrote."""
+    try:
+        conf_dir = _cds_conf_dir()
+        path = conf_dir and archive_path(heap)
+        # the option value is split on whitespace and quotes
+        if not path or re.search(r"[\s'\"\\]", path):
+            return None
+        stem = path.removesuffix(".jsa")
+        if not os.path.exists(path) and not os.path.exists(stem + ".failed"):
+            _train(stem, heap, conf_dir)
+    except (OSError, ValueError):
+        return None
+    size = _recorded_size(stem)
+    if size is None or not _is_archive(path, size):
+        return None
+    os.environ["SPARK_CONF_DIR"] = conf_dir
+    return path
+
+
+def _train(stem: str, heap: str, conf_dir: str) -> None:
+    """Write ``<stem>.jsa`` from a child process running ``_training_run``
+    under an exclusive lock; a process that finds the lock held returns
+    at once. A failed run leaves ``<stem>.failed`` with the reason, the
+    child's output (the JVM's CDS warnings among it) is ``<stem>.log``."""
+    with open(stem + ".lock", "w") as lock:
+        try:
+            fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            return
+        if os.path.exists(stem + ".jsa") or os.path.exists(stem + ".failed"):
+            return  # finished by another process since the caller looked
+        tmp = f"{stem}.{os.getpid()}.tmp"
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        env = {
+            **os.environ,
+            "SPARK_CONF_DIR": conf_dir,
+            "PYTHONPATH": os.pathsep.join(p for p in (root, os.environ.get("PYTHONPATH")) if p),
+        }
+        code = f"from butterfly_osm_spark.session import _training_run; _training_run({tmp!r}, {heap!r})"
+        with open(stem + ".log", "w") as log:
+            # its own process group, so a timeout also stops the JVM
+            child = subprocess.Popen(
+                [sys.executable, "-c", code], env=env, stdin=subprocess.DEVNULL,
+                stdout=log, stderr=subprocess.STDOUT, start_new_session=True,
+            )
+            try:
+                rc = child.wait(_TRAIN_TIMEOUT_S)
+            except subprocess.TimeoutExpired:
+                os.killpg(child.pid, signal.SIGKILL)
+                rc = f"killed after {_TRAIN_TIMEOUT_S} s"
+        if rc == 0 and _is_archive(tmp):
+            # the size first: a .jsa on disk is then always a whole one
+            with open(stem + ".size", "w") as f:
+                f.write(str(os.path.getsize(tmp)))
+            os.replace(tmp, stem + ".jsa")
+            return
+        with open(stem + ".failed", "w") as f:
+            f.write(f"training run exit status {rc}, archive written: {_is_archive(tmp)}; see {stem}.log\n")
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
+def _training_run(dump: str, heap: str) -> None:
+    """The fixed workload whose classes the archive holds, run by the
+    child process ``_train`` starts: session start, the benchmarks'
+    warm-up, a parquet write and read, shuffle and broadcast joins, a
+    window rank, a bucketed table, pandas map/group/collect, all on
+    in-memory data. The driver JVM writes ``dump`` as it exits."""
+    import pandas as pd
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    work = tempfile.mkdtemp(prefix="cds-training-")
+    try:
+        spark = get_spark(
+            app_name="butterfly-osm-spark-cds-training",
+            extra_conf={
+                "spark.driver.memory": heap,
+                "spark.driver.defaultJavaOptions": f"{JIT_OPTIONS} -XX:ArchiveClassesAtExit={dump}",
+                "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
+            },
+        )
+        n = spark.sparkContext.defaultParallelism
+        spark.range(100_000).select(F.sum(F.hash("id"))).collect()
+        spark.range(n, numPartitions=n).groupBy("id").applyInPandas(lambda pdf: pdf, "id long").count()
+
+        spark.range(20_000).select("id", (F.col("id") % 97).alias("k"), F.rand(1).alias("v")).write.parquet(
+            os.path.join(work, "t")
+        )
+        t = read_parquet(spark, os.path.join(work, "t"))
+        dim = spark.createDataFrame(pd.DataFrame({"k": range(97), "name": [str(i) for i in range(97)]}))
+        t.join(dim.hint("merge"), "k").count()
+        rn = F.row_number().over(Window.partitionBy("k").orderBy("v", "id"))
+        ranked = t.join(F.broadcast(dim), "k").withColumn("rn", rn).where("rn <= 3")
+        ranked.write.bucketBy(8, "k").sortBy("k").saveAsTable("cds_training")
+        spark.table("cds_training").groupBy("k").count().collect()
+        t.mapInPandas(lambda it: (pdf[pdf.v > 0.5] for pdf in it), t.schema).count()
+        t.groupBy("k").applyInPandas(lambda pdf: pdf.head(1), t.schema).count()
+        ranked.toPandas()
+
+        # the JVM exits, writing the archive, when its stdin closes
+        jvm = SparkContext._gateway.proc
+        spark.stop()
+        jvm.stdin.close()
+        jvm.wait()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def get_spark(
@@ -101,8 +376,18 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[default_cpus()]``.
+    ``master`` defaults to ``local[default_cpus()]``. A driver JVM this
+    call starts maps the class-data archive (``cds_archive``) unless
+    ``extra_conf`` sets ``spark.driver.defaultJavaOptions``.
     """
+    extra_conf = extra_conf or {}
+    archive = None
+    if (
+        SparkContext._gateway is None  # no JVM in this process yet
+        and "PYSPARK_GATEWAY_PORT" not in os.environ  # nor one started by spark-submit
+        and "spark.driver.defaultJavaOptions" not in extra_conf
+    ):
+        archive = cds_archive(extra_conf.get("spark.driver.memory") or default_driver_memory())
     b = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{default_cpus()}]")
@@ -112,7 +397,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", shuffle_partitions or _DEFAULT_SHUFFLE_PARTITIONS)
+        .config("spark.sql.shuffle.partitions", shuffle_partitions or str(default_shuffle_partitions()))
         # Arrow for pandas UDF exchange (reference streams Arrow IPC tiles,
         # route/src/matrix/arrow_stream.rs — Arrow is our native exchange too).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -128,9 +413,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in launch_conf().items():
-        b = b.config(k, v)
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**launch_conf(archive), **extra_conf}.items():
         b = b.config(k, v)
     return b.getOrCreate()
 
@@ -189,8 +472,12 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 
 if __name__ == "__main__":
-    # spark-submit arguments for the session defaults, one per line
-    # (scripts/submit.sh)
+    # spark-submit arguments for the session defaults, one per line, then
+    # SPARK_CONF_DIR=<dir> when the driver maps the class-data archive
+    # (trained here if missing) and needs that conf dir (scripts/submit.sh)
+    archive = cds_archive(default_driver_memory())
     print("--master", f"local[{default_cpus()}]", sep="\n")
-    for k, v in launch_conf().items():
+    for k, v in launch_conf(archive).items():
         print("--conf", f"{k}={v}", sep="\n")
+    if archive:
+        print(f"SPARK_CONF_DIR={os.environ['SPARK_CONF_DIR']}")

@@ -107,7 +107,6 @@ def main() -> None:
     spark = get_spark(
         app_name="ann-recall-1m",
         master=f"local[{cpus}]",
-        shuffle_partitions=str(max(32, 2 * cpus)),
     )
     emb = spark.read.parquet(path)
     qdf = spark.createDataFrame([(int(i),) for i in sample], "vec_id BIGINT")

@@ -4,10 +4,11 @@ import sys
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-# The package defaults to a 48 GB driver heap. Over a full suite run the
-# driver JVM grows its heap toward that until the kernel kills it on a
-# 16 GB host, and every later Spark test fails. The tests need a few GB;
-# the subprocess sessions some tests start inherit the setting.
+# The package's default driver heap is half the host's RAM, at most 48 GB
+# (session.default_driver_memory). Over a full suite run the driver JVM
+# grows its heap toward that, which leaves little RAM for the Python
+# workers and the subprocess sessions some tests start. The tests need a
+# few GB; those subprocess sessions inherit the setting.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
 from butterfly_osm_spark.session import get_spark  # noqa: E402

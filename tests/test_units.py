@@ -1084,7 +1084,7 @@ def test_session_jvm_takes_raised_c2_thresholds(spark):
     assert {name: bean.getVMOption(name).getValue() for name in want} == want
 
 
-def test_session_defaults_follow_the_host(monkeypatch):
+def test_session_defaults_follow_the_host(monkeypatch, tmp_path):
     """Without overrides, local[N] takes N from the usable cores and the
     driver heap fits in physical RAM; $SPARK_GRAFT_CPUS and
     $SPARK_GRAFT_DRIVER_MEM win when set, also in the spark-submit
@@ -1106,6 +1106,10 @@ def test_session_defaults_follow_the_host(monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "5g")
+    # a conf dir of the caller's turns the class-data archive off (its
+    # arguments are checked in tests/test_session.py)
+    (tmp_path / "spark-defaults.conf").write_text("")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
     assert session.default_cpus() == 3
     assert session.default_driver_memory() == "5g"
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
