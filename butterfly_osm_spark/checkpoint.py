@@ -105,6 +105,14 @@ def _footer_counts(table_dir: str) -> dict[str, int]:
     }
 
 
+def _publish(tmp: str, out: str) -> None:
+    """Commit a stage write: swap the finished ``.tmp`` dir into the
+    published location."""
+    if os.path.exists(out):
+        shutil.rmtree(out)
+    os.rename(tmp, out)
+
+
 def _lineage_id(meta: dict) -> str:
     """Identity of a published stage output: its fingerprint and file map.
     Part-file names are unique per write, so a recomputed stage gets a new
@@ -154,14 +162,19 @@ class Build:
             if meta.get("bucket"):
                 tbl = self._table_name(stage)
                 if not self.spark.catalog.tableExists(tbl):
-                    n, key = meta["bucket"]
-                    self.spark.sql(
-                        f"CREATE TABLE {tbl} ({meta['schema_ddl']}) USING PARQUET "
-                        f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n} BUCKETS "
-                        f"LOCATION '{self._out_path(stage)}'"
-                    )
+                    self._register_bucketed(stage, meta["schema_ddl"], meta["bucket"])
                 return self.spark.table(tbl)
         return read_parquet(self.spark, self._out_path(stage))
+
+    def _register_bucketed(self, stage: str, schema_ddl: str, bucket: tuple[int, str]) -> None:
+        """Point the catalog's bucketed table for ``stage`` at its published
+        directory (external table: dropping it later leaves the data)."""
+        n, key = bucket
+        self.spark.sql(
+            f"CREATE TABLE {self._table_name(stage)} ({schema_ddl}) USING PARQUET "
+            f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n} BUCKETS "
+            f"LOCATION '{self._out_path(stage)}'"
+        )
 
     def _verify_published(self, stage: Stage, meta: dict) -> bool:
         """Lazy-verify analog: the published directory's footer file map
@@ -224,23 +237,15 @@ class Build:
             # swap dirs, re-point the catalog at the published location
             self.spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
             self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            if os.path.exists(out):
-                shutil.rmtree(out)
-            os.rename(tmp, out)
-            self.spark.sql(
-                f"CREATE TABLE {tbl} ({schema_ddl}) USING PARQUET "
-                f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n_buckets} BUCKETS "
-                f"LOCATION '{out}'"
-            )
+            _publish(tmp, out)
+            self._register_bucketed(stage.name, schema_ddl, stage.bucket)
         else:
             tmp = out + ".tmp"
             if os.path.exists(tmp):
                 shutil.rmtree(tmp)
             df.write.mode("overwrite").parquet(tmp)
             files = _footer_counts(tmp)
-            if os.path.exists(out):
-                shutil.rmtree(out)
-            os.rename(tmp, out)
+            _publish(tmp, out)
 
         meta = {
             "stage": stage.name,

@@ -104,7 +104,10 @@ def incremental_pip(
     os.makedirs(out_dir, exist_ok=True)
 
     new_fp = {str(r["cell_p"]): str(r["fp"]) for r in cell_fingerprints(polygons).collect()}
-    old_fp = json.load(open(fp_path)) if os.path.exists(fp_path) else None
+    old_fp = None
+    if os.path.exists(fp_path):
+        with open(fp_path) as f:
+            old_fp = json.load(f)
     pts = points.withColumn("cell_p", cells.cell_col("lon_e7", "lat_e7", COARSE_RES))
     pt_cells = pts.select(F.col(id_col).alias("point_id"), "cell_p")
 

@@ -145,22 +145,7 @@ def isochrone_ms(
 
     Returns one persisted O(reachable) frame; caller releases it.
     """
-    wa = way_attrs.select("way_id", "speed_car_kmh", "access_car", "oneway").filter(
-        F.col("access_car")
-    )
-    ew = edges.join(wa, "way_id").select(
-        "u_node",
-        "v_node",
-        "oneway",
-        F.round(F.col("length_mm") * 3.6 / F.col("speed_car_kmh"))
-        .cast("long")
-        .alias("w"),
-    )
-    fwd = ew.select(F.col("u_node").alias("s"), F.col("v_node").alias("d"), "w")
-    bwd = ew.filter(~F.col("oneway")).select(
-        F.col("v_node").alias("s"), F.col("u_node").alias("d"), "w"
-    )
-    adj = fwd.unionByName(bwd).persist()
+    adj = _car_adjacency(edges, way_attrs)
     dist = (
         adj.select(F.col("s").alias("node_id"))
         .distinct()
@@ -218,16 +203,7 @@ def isochrone_oracle_sql(
     weighted graph derivation (positive weights + the budget prune bound
     the recursion; UNION dedups (node, t) states)."""
     return f"""
-WITH RECURSIVE e AS ({edges_sql}),
-wa AS ({way_attrs_sql}),
-dir AS (
-  SELECT u_node AS s, v_node AS d,
-         CAST(round(length_mm * 3.6 / speed_car_kmh) AS BIGINT) AS w
-  FROM e JOIN wa USING (way_id) WHERE access_car
-  UNION ALL
-  SELECT v_node, u_node, CAST(round(length_mm * 3.6 / speed_car_kmh) AS BIGINT)
-  FROM e JOIN wa USING (way_id) WHERE access_car AND NOT oneway
-),
+{_car_arcs_sql(edges_sql, way_attrs_sql)},
 walk(node_id, t) AS (
   SELECT DISTINCT s AS node_id, CAST(0 AS BIGINT) AS t FROM dir WHERE s % {seed_mod} = 0
   UNION
@@ -568,6 +544,22 @@ def _car_adjacency(edges: DataFrame, way_attrs: DataFrame) -> DataFrame:
     return fwd.unionByName(bwd).persist()
 
 
+def _car_arcs_sql(edges_sql: str, way_attrs_sql: str) -> str:
+    """The oracles' ``e``/``wa``/``dir`` CTE prefix: the directed weighted
+    car arcs ``dir(s, d, w)`` of :func:`_car_adjacency`, in SQL."""
+    w = "CAST(round(length_mm * 3.6 / speed_car_kmh) AS BIGINT)"
+    return f"""WITH RECURSIVE e AS ({edges_sql}),
+wa AS ({way_attrs_sql}),
+dir AS (
+  SELECT u_node AS s, v_node AS d,
+         {w} AS w
+  FROM e JOIN wa USING (way_id) WHERE access_car
+  UNION ALL
+  SELECT v_node, u_node, {w}
+  FROM e JOIN wa USING (way_id) WHERE access_car AND NOT oneway
+)"""
+
+
 def _relax_from_sources(
     adj: DataFrame, src_mod: int, budget_ms: int, max_iters: int
 ) -> DataFrame:
@@ -721,16 +713,7 @@ def route_paths_oracle_sql(
     """Recursive replay: dist walk -> canonical pred tree (row_number
     over (t, u)) -> simultaneous backward path walk."""
     return f"""
-WITH RECURSIVE e AS ({edges_sql}),
-wa AS ({way_attrs_sql}),
-dir AS (
-  SELECT u_node AS s, v_node AS d,
-         CAST(round(length_mm * 3.6 / speed_car_kmh) AS BIGINT) AS w
-  FROM e JOIN wa USING (way_id) WHERE access_car
-  UNION ALL
-  SELECT v_node, u_node, CAST(round(length_mm * 3.6 / speed_car_kmh) AS BIGINT)
-  FROM e JOIN wa USING (way_id) WHERE access_car AND NOT oneway
-),
+{_car_arcs_sql(edges_sql, way_attrs_sql)},
 walk(src, node_id, t) AS (
   SELECT DISTINCT s AS src, s AS node_id, CAST(0 AS BIGINT) AS t
   FROM dir WHERE s % {src_mod} = 0
@@ -770,16 +753,7 @@ def time_matrix_oracle_sql(
 ) -> str:
     """Budget-bounded recursive-CTE replay keyed by (src, node)."""
     return f"""
-WITH RECURSIVE e AS ({edges_sql}),
-wa AS ({way_attrs_sql}),
-dir AS (
-  SELECT u_node AS s, v_node AS d,
-         CAST(round(length_mm * 3.6 / speed_car_kmh) AS BIGINT) AS w
-  FROM e JOIN wa USING (way_id) WHERE access_car
-  UNION ALL
-  SELECT v_node, u_node, CAST(round(length_mm * 3.6 / speed_car_kmh) AS BIGINT)
-  FROM e JOIN wa USING (way_id) WHERE access_car AND NOT oneway
-),
+{_car_arcs_sql(edges_sql, way_attrs_sql)},
 walk(src, node_id, t) AS (
   SELECT DISTINCT s AS src, s AS node_id, CAST(0 AS BIGINT) AS t
   FROM dir WHERE s % {src_mod} = 0

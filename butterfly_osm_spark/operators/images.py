@@ -410,6 +410,8 @@ WHERE NOT EXISTS (
 
 PHKNN_K = 5
 PHKNN_QMOD = 16  # ~1/16 of images form the deterministic query batch
+# largest query batch phash_knn collects to the driver and broadcasts
+PHKNN_MAX_QUERIES = 4_000_000
 
 _POPCNT8 = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(axis=1)
 
@@ -428,10 +430,10 @@ def phash_knn(images: DataFrame, k: int = PHKNN_K, qmod: int = PHKNN_QMOD) -> Da
 
     Scale shape (10^12 images): the GALLERY NEVER SHUFFLES — the query
     batch (|corpus|/qmod rows x (id string + 8-byte hash) — the id
-    strings, not the hashes, dominate driver memory; a 4M-row guard
-    enforces the request-batch assumption) broadcasts into a
-    mapInPandas partial top-k over each
-    gallery Arrow batch (vectorized uint8-LUT popcount, queries chunked
+    strings, not the hashes, dominate driver memory; the
+    ``PHKNN_MAX_QUERIES`` guard enforces the request-batch assumption)
+    broadcasts into a mapInPandas partial top-k over each gallery Arrow
+    batch (vectorized uint8-LUT popcount, queries chunked
     256 at a time to bound the XOR matrix), emitting k rows per query
     per batch; ONE window exchange then merges the Q x k x n_batches
     partials. Only (id, phash) project out of the scan — image bytes are
@@ -448,22 +450,21 @@ def phash_knn(images: DataFrame, k: int = PHKNN_K, qmod: int = PHKNN_QMOD) -> Da
         "bigint"
     )
     ph = images.select("image_id", "phash")
-    queries = [
-        (r.image_id, r.phash) for r in ph.filter(key % qmod == 0).collect()
-    ]
     # the query batch is ~|corpus|/qmod rows of (string id + 8-byte hash)
     # — id strings dominate the footprint, not the hashes. Guard the
-    # request-batch assumption explicitly, and ship the arrays as ONE
-    # torrent broadcast instead of re-serializing them into every task
-    # closure (ADVICE r5).
-    if len(queries) > 4_000_000:
+    # request-batch assumption before the batch reaches the driver: collect
+    # at most one row past the bound. The arrays then ship as ONE torrent
+    # broadcast instead of being re-serialized into every task closure
+    # (ADVICE r5).
+    queries = ph.filter(key % qmod == 0).limit(PHKNN_MAX_QUERIES + 1).collect()
+    if len(queries) > PHKNN_MAX_QUERIES:
         raise ValueError(
-            f"phash_knn: query batch {len(queries)} rows exceeds the "
-            "broadcast guard (4M) — raise qmod so the batch stays "
+            f"phash_knn: query batch exceeds the broadcast guard "
+            f"({PHKNN_MAX_QUERIES} rows) — raise qmod so the batch stays "
             "request-sized, or shard the query set"
         )
-    q_ids_l = np.array([q[0] for q in queries])
-    q_ph_l = np.array([q[1] for q in queries], dtype=np.int64).view(np.uint64)
+    q_ids_l = np.array([q.image_id for q in queries])
+    q_ph_l = np.array([q.phash for q in queries], dtype=np.int64).view(np.uint64)
     bc = images.sparkSession.sparkContext.broadcast((q_ids_l, q_ph_l))
 
     schema = "query_id string, neighbor_id string, hamming int"

@@ -15,7 +15,7 @@ same key the vertex join already shuffles on, so the UDF adds no
 exchange). The identical kernel function runs single-threaded at
 fixture-generation time to produce ``simplify_truth`` — the driver
 oracle verifies the distributed run reproduces it row-for-row
-(the tsp_trips plumbing-parity discipline, queries.py sql_tsp_trips).
+(the tsp_trips plumbing-parity discipline, its queries.py entry).
 
 Distances are planar in e7 grid units (lon/lat isotropic — documented:
 this is grid-space thinning for tile rendering, not geodesic

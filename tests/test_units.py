@@ -425,6 +425,33 @@ def test_registry_contract_consistency():
         assert name in QUERIES, name
 
 
+def test_registry_import_is_cheap():
+    """Importing the registry loads no operator module but ``extract``
+    (the others load when their query or oracle is called) and starts no
+    JVM. Runs in a fresh interpreter: the test session has imported both."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    script = """
+import json, sys
+import butterfly_osm_spark.queries
+from pyspark import SparkContext
+print(json.dumps({
+    "operators": sorted(m for m in sys.modules if m.startswith("butterfly_osm_spark.operators.")),
+    "jvm": SparkContext._gateway is not None or SparkContext._active_spark_context is not None,
+}))
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=root, capture_output=True, text=True, timeout=120
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got == {"operators": ["butterfly_osm_spark.operators.extract"], "jvm": False}
+
+
 def test_knn_join_mode_gate_parity(spark, fix001, monkeypatch):
     """The gate (single phase under 4M estimated candidates; per ring
     phase, broadcast under 4M exploded rows and a shuffle_merge pin over
@@ -912,6 +939,28 @@ def test_phash_knn_contract(spark, fix001):
         assert len(rs) <= PHKNN_K
         hams = [r.hamming for r in rs]
         assert hams == sorted(hams)
+
+
+def test_phash_knn_query_batch_guard(spark, fix001, monkeypatch):
+    """A query batch over ``PHKNN_MAX_QUERIES`` rows (139 at sf0.001)
+    raises, and at most one row past the bound reaches the driver."""
+    from butterfly_osm_spark.operators import images as img
+
+    images = spark.read.parquet(fix001 + "/images.parquet")
+    frame = type(images)
+    collect = frame.collect
+    collected = []
+
+    def counting_collect(df):
+        rows = collect(df)
+        collected.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(img, "PHKNN_MAX_QUERIES", 100)
+    monkeypatch.setattr(frame, "collect", counting_collect)
+    with pytest.raises(ValueError, match="broadcast guard"):
+        img.phash_knn(images)
+    assert collected == [101]
 
 
 def test_osm_diff_strata(spark, fix001):
