@@ -34,7 +34,7 @@ def entry(spark: SparkSession) -> DataFrame:
         return spark.read.parquet(os.path.join(fix, f"{name}.parquet"))
 
     geo = read("image_geo")
-    hits = pip_join(geo, read("polygons")).withColumnRenamed("point_id", "image_id")
+    hits = pip_join(geo, read("polygons"), out_id="image_id")
 
     knn_q = geo.select(F.col("image_id").alias("query_id"), "lon_e7", "lat_e7", F.lit(1).alias("k"))
     nearest = knn_join(knn_q, read("osm_nodes")).select(

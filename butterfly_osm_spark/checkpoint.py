@@ -222,8 +222,12 @@ class Build:
             self.spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
             if os.path.exists(tmp):
                 shutil.rmtree(tmp)
+            # hash-partitioned on the bucket key (the bucket hash is the
+            # same pmod-murmur3), so each task writes exactly one bucket;
+            # the writer sorts within it
             (
-                df.write.bucketBy(n_buckets, key)
+                df.repartition(n_buckets, key)
+                .write.bucketBy(n_buckets, key)
                 .sortBy(key)
                 .option("path", tmp)
                 .format("parquet")
@@ -247,6 +251,7 @@ class Build:
             files = _footer_counts(tmp)
             _publish(tmp, out)
 
+        df.unpersist()  # the write has committed; no-op on an uncached frame
         meta = {
             "stage": stage.name,
             "fingerprint": fp,
@@ -282,14 +287,14 @@ def reference_pipeline(fix: str) -> list[Stage]:
     from .operators.extract import build_edges
     from .operators.pip import pip_join
 
+    # id-ordered layout (ingest/mod.rs:201-207): published bucketed by id
+    # + sorted within buckets (run_stage), so the J2 coordinate join
+    # against the co-bucketed way_nodes stage plans with zero exchange
     def nodes_sorted(spark, ins):
-        # id-ordered layout (ingest/mod.rs:201-207): published bucketed by
-        # id + sorted within buckets, so the J2 coordinate join against the
-        # co-bucketed way_nodes stage plans with zero exchange
-        return ins["osm_nodes"].orderBy("id", "lat_e7", "lon_e7")
+        return ins["osm_nodes"]
 
     def way_nodes_sorted(spark, ins):
-        return ins["way_nodes"].orderBy("node_id", "way_id", "seq")
+        return ins["way_nodes"]
 
     def way_attrs(spark, ins):
         return compile_way_attrs(ins["osm_ways"])
@@ -317,9 +322,7 @@ def reference_pipeline(fix: str) -> list[Stage]:
         )
 
     def pip_pairs(spark, ins):
-        return pip_join(ins["image_cells"], ins["polygons"]).withColumnRenamed(
-            "point_id", "image_id"
-        )
+        return pip_join(ins["image_cells"], ins["polygons"], out_id="image_id")
 
     def restriction_arcs_stage(spark, ins):
         # S3: turn-restriction rules sorted by relation id (the reference's
@@ -335,14 +338,14 @@ def reference_pipeline(fix: str) -> list[Stage]:
             "nodes_sorted",
             nodes_sorted,
             [f"raw:{fix}/osm_nodes.parquet"],
-            version="2",
+            version="3",
             bucket=(8, "id"),
         ),
         Stage(
             "way_nodes_sorted",
             way_nodes_sorted,
             [f"raw:{fix}/way_nodes.parquet"],
-            version="2",
+            version="3",
             bucket=(8, "node_id"),
         ),
         Stage("way_attrs", way_attrs, [f"raw:{fix}/osm_ways.parquet"]),

@@ -1445,8 +1445,10 @@ def ensure_fixtures(sf: str) -> str:
     A dir generated by an older FIXTURE_VERSION is regenerated."""
     d = fixture_dir(sf)
     marker = os.path.join(d, "_SUCCESS")
-    if os.path.exists(marker) and open(marker).read() == FIXTURE_VERSION:
-        return d
+    if os.path.exists(marker):
+        with open(marker) as f:
+            if f.read() == FIXTURE_VERSION:
+                return d
     tmp = f"{d}.tmp-{os.getpid()}"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)

@@ -1,5 +1,7 @@
-"""kNN snap via k-ring expansion join (J5) with adaptive resolution and
-either one full-cutoff phase or iterative ring widening.
+"""kNN snap (J5): request-sized target tables are answered from a
+driver-built packed grid in one shuffle-free Arrow kernel; larger ones
+(and an explicit ``res``) by iterative ring widening over a candidate
+join.
 
 Reference semantics: concentric cell rings around the query cell with an
 early exit once the accepted k-th best distance beats the next ring's
@@ -13,29 +15,39 @@ before this fix).
 
 Spark-first shape (SURVEY.md §7.1 step 5):
 - resolution: the COARSEST grid level whose p95 cell occupancy stays
-  under ``OCC_TARGET`` — computed in one pass (res-13 counts rolled up
-  to every parent level, two shuffles, tiny distinct-cell input).
-- plan: that p95 prices one phase over the whole cutoff rectangle at
-  ``n_queries x (2rx_max+1)(2ry_max+1) x p95`` candidates, with no extra
-  counting job. At or under ``BROADCAST_MAX_ROWS`` the batch is answered
-  in ONE lazy phase: no persist, no k-th-distance aggregation, no
-  open-set count. Every fixture scale lands at res 11 (425 rectangle
-  cells): sf0.01 estimates 3.2 M and takes the single phase (warm,
-  local[4]: 2.9-3.1 s vs 6.5-8.9 s ring loop); sf0.1 estimates 102 M and
-  keeps the ring loop (12.8-16.3 s vs 27.7-29.3 s single phase). An
-  explicit ``res`` has no occupancy figure and takes the ring loop.
-- ring loop: rectangles of Chebyshev radius R = RING_R0, RING_R0 *
-  RING_GROWTH, ... (2, 16, ...) until R covers the cutoff. Which queries
-  continue is decided inside the plan (anti-joins on the ring-bound
-  test); the driver only counts the open set after each widening phase,
-  which sizes the next phase's join.
-- ring-bound contract: after covering ±R cells, any unexplored point is
-  at least R * min_edge metres away; a query is DONE when its k-th
-  candidate beats that bound (or the rect covers the whole cutoff).
-- final rank: ``row_number() OVER (PARTITION BY query ORDER BY d2, id)``
-  (W1 deterministic ties); the query side of the candidate join is
+  under ``OCC_TARGET``, refined finer while the ring-2 rectangle still
+  covers the cutoff (``_occupancy_res``). The grid path counts cells
+  with ``np.unique`` on the collected targets; the ring loop runs
+  ``adaptive_res`` (res-13 counts rolled up to every parent level, two
+  shuffles). Every fixture scale lands at res 11 (425 rectangle cells).
+- grid (``res`` not given, target table within ``BROADCAST_MAX_ROWS``):
+  the targets are collected once as Arrow — at most one row past the
+  bound, so an oversized table never reaches the driver — and sorted by
+  ``(cell, node_id)`` into numpy arrays, the reference's cell-sorted
+  in-memory snap grid. The queries stream through ONE ``mapInArrow``
+  kernel (``_grid_topk``): each rectangle row is one contiguous key
+  range of the sorted cells (``np.searchsorted``), and a query retires
+  under the ring loop's own contract below. No join, no exchange, no
+  persist: the arrays ride in the kernel's closure, which PySpark ships
+  as a broadcast for the plan's lifetime once it passes 1 MB, so the
+  result stays lazy with nothing to release.
+- ring loop (explicit ``res``, or a target table past the bound):
+  rectangles of Chebyshev radius R = RING_R0, RING_R0 * RING_GROWTH, ...
+  (2, 16, ...) until R covers the cutoff. Which queries continue is
+  decided inside the plan (anti-joins on the ring-bound test); the
+  driver only counts the open set after each widening phase, which
+  sizes the next phase's join. The query side of the candidate join is
   broadcast (bounded request batch), so the target table never shuffles
   by cell — the only full shuffle per phase is candidates -> query_id.
+- ring-bound contract: after covering ±R cells, any unexplored point is
+  at least R * min_edge metres away; a query is DONE when it holds k
+  candidates and its k-th beats that bound (or the rect covers the whole
+  cutoff).
+- final rank: ``(d2, node_id)`` (W1 deterministic ties) — a
+  ``row_number()`` window on the ring loop, an ``np.lexsort`` in the
+  grid kernel. Both hand ``(query_id, rank, node_id, d2)`` to
+  ``_output``, so ``dist_m`` is always Spark's half-up ``round`` (numpy
+  rounds half-even).
 
 Ranking uses the reference's equirectangular metric with FIXED constants
 (spatial.rs:226-230) — pure arithmetic on fixed-point ints, bit-identical
@@ -44,16 +56,27 @@ across Spark / numpy / DuckDB, so ranks match the SQL oracle exactly.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from .. import cells
-from ..geo import M_PER_DEG_LAT, M_PER_DEG_LON, equirect_d2_col, equirect_d2_sql
+from ..geo import (
+    M_PER_DEG_LAT,
+    M_PER_DEG_LON,
+    equirect_d2_col,
+    equirect_d2_np,
+    equirect_d2_sql,
+)
 
 CUTOFF_M = 5_000.0  # reference SNAP_CUTOFF (spatial.rs:9)
 # p95 cell occupancy ceiling (reference warns >8192/cell). The density
 # pick is then refined finer while the phase-2 ring still covers the
-# cutoff — see knn_join. Measured (honest repeats, results identical):
+# cutoff — see _occupancy_res. Measured (honest repeats, results identical):
 #   sf0.1: res 11 5.3-9.1 s < res 10 9.6-84 s < res 9 18-27 s
 #   sf1:   res 12 87 s      < res 11 220 s    < res 13 ~490 s
 # i.e. finer wins (candidate volume dominates) EXCEPT when the finer
@@ -67,7 +90,7 @@ RES_FLOOR, RES_CEIL = 7, 13
 # (R0=2, G=8) resolves ~all queries in phase 1 (25-cell rect at p95
 # occupancy 64) and finishes in ONE more covering phase, 1.8x faster than
 # (1, 4)'s three phases; a single full-rect phase (R0=rx_max) is 2.8x
-# slower there — hence knn_join's single-phase gate on candidate volume.
+# slower there. The grid kernel walks the same schedule.
 # Stage-count x candidate-volume trade, not a correctness knob (results
 # hash-identical across schedules).
 RING_R0 = 2
@@ -79,9 +102,29 @@ def _edge_m(res: int) -> tuple[float, float]:
     return deg * M_PER_DEG_LON, deg * M_PER_DEG_LAT
 
 
-def adaptive_res(targets: DataFrame, occ_target: int = OCC_TARGET) -> tuple[int, dict[int, int]]:
-    """Coarsest res in [7, 13] with p95 cell occupancy <= occ_target, and
-    the p95 cell occupancy of every level (res -> p95).
+def _occupancy_res(p95: dict[int, int], cutoff_m: float, occ_target: int = OCC_TARGET) -> int:
+    """Working res from the p95 cell occupancy of every level: the
+    coarsest level in [7, 13] at or under ``occ_target``, then finer (4x
+    less candidate volume per level) while the R0*growth phase-2
+    rectangle still covers the cutoff — past that point open queries meet
+    1000+-cell shells (measured res-13 cliff at sf1, ~490 s vs 87 s at
+    res 12)."""
+    res = next(
+        (r for r in range(RES_FLOOR, RES_CEIL + 1) if p95.get(r, 0) <= occ_target), RES_CEIL
+    )
+    while res < RES_CEIL:
+        nlon, nlat = _edge_m(res + 1)
+        if max(int(cutoff_m / nlon) + 1, int(cutoff_m / nlat) + 1) > RING_R0 * RING_GROWTH:
+            break
+        res += 1
+    return res
+
+
+def adaptive_res(
+    targets: DataFrame, cutoff_m: float = CUTOFF_M, occ_target: int = OCC_TARGET
+) -> tuple[int, dict[int, int]]:
+    """Working res (``_occupancy_res``) and the p95 cell occupancy of
+    every level (res -> p95), counted in Spark.
 
     One fine-grained count, then every parent level derived from the
     distinct-cell table in a single stacked aggregation.
@@ -111,10 +154,21 @@ def adaptive_res(targets: DataFrame, occ_target: int = OCC_TARGET) -> tuple[int,
         .collect()
     )
     p95 = {r["res"]: r["p95"] for r in occ}
-    for r in range(RES_FLOOR, RES_CEIL + 1):  # coarsest acceptable wins
-        if p95.get(r, 0) <= occ_target:
-            return r, p95
-    return RES_CEIL, p95
+    return _occupancy_res(p95, cutoff_m, occ_target), p95
+
+
+def _p95_np(lon_e7: np.ndarray, lat_e7: np.ndarray) -> dict[int, int]:
+    """``adaptive_res``'s occupancy rollup over driver-side arrays:
+    res-13 ``np.unique`` counts summed into every parent level, p95 as the
+    smallest occupancy that at least 95 % of cells do not exceed
+    (percentile_approx's definition)."""
+    c13, n = np.unique(cells.cell_np(lon_e7, lat_e7, RES_CEIL), return_counts=True)
+    p95 = {}
+    for r in range(RES_FLOOR, RES_CEIL + 1):
+        _, inv = np.unique(cells.parent_np(c13, r), return_inverse=True)
+        occ = np.bincount(inv, weights=n)
+        p95[r] = int(np.quantile(occ, 0.95, method="inverted_cdf")) if occ.size else 0
+    return p95
 
 
 # broadcast the exploded query-cell side only below this row count: ~4M
@@ -122,7 +176,8 @@ def adaptive_res(targets: DataFrame, occ_target: int = OCC_TARGET) -> tuple[int,
 # "bounded request batch" assumption no longer holds and the plan must
 # fall back to a shuffle join (measured: an unconditional hint OOM-killed
 # the sf4/local[2] scaling level at 24M exploded rows). The same bound
-# caps the estimated candidate volume of the single-phase plan.
+# caps the target rows the grid path collects, and the candidates one
+# grid-kernel step holds in memory.
 BROADCAST_MAX_ROWS = 4_000_000
 
 
@@ -224,6 +279,129 @@ def _rank_topk(cand: DataFrame, cutoff_m: float) -> DataFrame:
     )
 
 
+class _Grid(NamedTuple):
+    """Target rows sorted by ``(cell, node_id)`` at ``res``: the packed
+    cell, the coordinates, ``key`` (node_id's dense rank, the tie-break)
+    and the ids themselves (an Arrow array of node_id's type)."""
+
+    res: int
+    cell: np.ndarray
+    lon: np.ndarray
+    lat: np.ndarray
+    key: np.ndarray
+    ids: pa.Array
+
+
+def _grid(targets: pa.Table, cutoff_m: float) -> _Grid:
+    """``(node_id, lon_e7, lat_e7)`` rows as a ``_Grid`` at the res the
+    occupancy rule picks (any res gives the same rows)."""
+    lon = targets.column("lon_e7").to_numpy()
+    lat = targets.column("lat_e7").to_numpy()
+    ids = targets.column("node_id").combine_chunks()
+    res = _occupancy_res(_p95_np(lon, lat), cutoff_m)
+    cell = cells.cell_np(lon, lat, res)
+    key = np.unique(ids.to_numpy(zero_copy_only=False), return_inverse=True)[1]
+    order = np.lexsort((key, cell))
+    return _Grid(res, cell[order], lon[order], lat[order], key[order], ids.take(order))
+
+
+def _topk_ranges(
+    g: _Grid, qlon, qlat, qk, rows_q: np.ndarray, lo: np.ndarray, n: np.ndarray, cut2: float
+):
+    """Exact top-k per query over grid rows ``[lo, lo + n)`` of its
+    rectangle rows (``rows_q`` names each row's query), inside the cutoff
+    and ranked by ``(d2, node_id)``: (query, 0-based rank, grid row, d2)
+    sorted by query then rank."""
+    q = np.repeat(rows_q, n)
+    gi = np.repeat(lo - (np.cumsum(n) - n), n) + np.arange(n.sum())
+    d2 = equirect_d2_np(qlon[q], qlat[q], g.lon[gi], g.lat[gi])
+    inside = d2 <= cut2
+    q, gi, d2 = q[inside], gi[inside], d2[inside]
+    order = np.lexsort((g.key[gi], d2, q))
+    q, gi, d2 = q[order], gi[order], d2[order]
+    rank = np.arange(q.size) - np.searchsorted(q, q)
+    top = rank < qk[q]
+    return q[top], rank[top], gi[top], d2[top]
+
+
+def _grid_topk(g: _Grid, qlon, qlat, qk, cutoff_m: float):
+    """The ring loop over a ``_Grid``, for one batch of queries:
+    (query index, 0-based rank, grid row, d2) of every answer row.
+
+    Each rectangle row ``y`` spans cells ``(x0..x1, y)``, whose packed ids
+    are consecutive, so it is one ``searchsorted`` key range of the sorted
+    cells. Open queries are ranked in groups of at most about
+    ``BROADCAST_MAX_ROWS`` candidates."""
+    edge_lon_m, edge_lat_m = _edge_m(g.res)
+    min_edge = min(edge_lon_m, edge_lat_m)
+    rx_max = int(cutoff_m / edge_lon_m) + 1
+    ry_max = int(cutoff_m / edge_lat_m) + 1
+    qx, qy = cells.xy_np(qlon, qlat, g.res)
+    out = [(np.zeros(0, np.int64),) * 3 + (np.zeros(0),)]
+    open_q = np.flatnonzero(qk > 0)
+    R = RING_R0
+    while open_q.size:
+        rx, ry = min(R, rx_max), min(R, ry_max)
+        covers_cutoff = R >= rx_max and R >= ry_max
+        bound_m = min(R * min_edge, cutoff_m)
+        h = 2 * ry + 1
+        rows_q = np.repeat(open_q, h)
+        rows_y = (qy[open_q, None] + np.arange(-ry, ry + 1)).ravel()
+        lo = np.searchsorted(g.cell, cells.pack_np(np.maximum(qx[rows_q] - rx, 0), rows_y, g.res))
+        hi = np.searchsorted(g.cell, cells.pack_np(qx[rows_q] + rx, rows_y, g.res), side="right")
+        n = hi - lo
+        per_q = n.reshape(-1, h).sum(axis=1)
+        group = (np.cumsum(per_q) - per_q) // max(BROADCAST_MAX_ROWS, 1)
+        still_open = []
+        for gid in np.unique(group):
+            qs = open_q[group == gid]
+            sel = np.repeat(group == gid, h)
+            q, rank, gi, d2 = _topk_ranges(g, qlon, qlat, qk, rows_q[sel], lo[sel], n[sel], cutoff_m**2)
+            found = np.bincount(q, minlength=len(qk))[qs]
+            kth = np.zeros(len(qk))
+            last = np.flatnonzero(np.diff(q, append=-1))  # each query's k-th (last) row
+            kth[q[last]] = d2[last]
+            done = covers_cutoff | ((found >= qk[qs]) & (kth[qs] < bound_m**2))
+            retired = np.zeros(len(qk), dtype=bool)
+            retired[qs[done]] = True
+            keep = retired[q]
+            out.append((q[keep], rank[keep], gi[keep], d2[keep]))
+            still_open.append(qs[~done])
+        open_q = np.concatenate(still_open)
+        R *= RING_GROWTH
+    return tuple(np.concatenate(c) for c in zip(*out))
+
+
+def _grid_join(queries: DataFrame, targets: pa.Table, id_type, cutoff_m: float) -> DataFrame:
+    """The grid path: one ``mapInArrow`` over the queries, no join.
+    ``id_type`` is node_id's Spark type."""
+    g = _grid(targets, cutoff_m)
+    schema = StructType(
+        [
+            queries.schema["query_id"],
+            StructField("rank", IntegerType()),
+            StructField("node_id", id_type),
+            StructField("d2", DoubleType()),
+        ]
+    )
+
+    def answer(batches):
+        for b in batches:
+            q, rank, gi, d2 = _grid_topk(
+                g,
+                b.column("lon_e7").to_numpy(zero_copy_only=False),
+                b.column("lat_e7").to_numpy(zero_copy_only=False),
+                b.column("k").to_numpy(zero_copy_only=False),
+                cutoff_m,
+            )
+            yield pa.RecordBatch.from_arrays(
+                [b.column("query_id").take(q), pa.array((rank + 1).astype(np.int32)), g.ids.take(gi), pa.array(d2)],
+                names=["query_id", "rank", "node_id", "d2"],
+            )
+
+    return _output(queries.select("query_id", "lon_e7", "lat_e7", "k").mapInArrow(answer, schema))
+
+
 def knn_join(
     queries: DataFrame,
     targets: DataFrame,
@@ -237,28 +415,24 @@ def knn_join(
     (d2, node_id); dist_m rounded to mm. Queries with no target inside
     the cutoff produce no rows (reference empty-snap semantics).
 
-    Caching contract: the single-phase path returns a LAZY frame and
-    caches nothing — the sink evaluates the plan exactly once. The ring
-    loop returns a PERSISTED frame (bounded: <= sum(k) rows) — the
-    per-phase partials are materialized through it and released before
-    returning. A caller looping over many knn_join calls in one session
-    should unpersist the returned frame once consumed (a no-op on the
-    lazy frame), or clearCache between iterations, as bench.py does.
+    Caching contract: the grid path returns a LAZY frame and caches
+    nothing — the sink evaluates the plan exactly once. The ring loop
+    returns a PERSISTED frame (bounded: <= sum(k) rows) — the per-phase
+    partials are materialized through it and released before returning.
+    A caller looping over many knn_join calls in one session should
+    unpersist the returned frame once consumed (a no-op on the lazy
+    frame), or clearCache between iterations, as bench.py does.
     """
-    p95_occ = None  # p95 cell occupancy at res, when res is picked here
     if res is None:
-        res, p95 = adaptive_res(targets)
-        # covering refinement: go finer (4x less candidate volume per
-        # level) while the R0*growth phase-2 rectangle still covers the
-        # cutoff — past that point open queries meet 1000+-cell shells
-        # (measured res-13 cliff at sf1, ~490 s vs 87 s at res 12)
-        while res < RES_CEIL:
-            nlon, nlat = _edge_m(res + 1)
-            if max(int(cutoff_m / nlon) + 1, int(cutoff_m / nlat) + 1) <= RING_R0 * RING_GROWTH:
-                res += 1
-            else:
-                break
-        p95_occ = p95.get(res, 0)
+        # the phash_knn guard: at most one row past the bound reaches the driver
+        grid_rows = (
+            targets.select(F.col(target_id).alias("node_id"), "lon_e7", "lat_e7")
+            .limit(BROADCAST_MAX_ROWS + 1)
+            .toArrow()
+        )
+        if grid_rows.num_rows <= BROADCAST_MAX_ROWS:
+            return _grid_join(queries, grid_rows, targets.schema[target_id].dataType, cutoff_m)
+        res = adaptive_res(targets, cutoff_m)[0]
     tc = targets.select(
         F.col(target_id).alias("node_id"),
         F.col("lon_e7").alias("nlon"),
@@ -297,14 +471,6 @@ def knn_join(
         .distinct()
     )
 
-    n_queries = queries.count()
-    # single phase when its estimated candidate volume fits the gate; its
-    # exploded query side (n_queries x rect cells) is no larger, so it is
-    # always broadcast
-    rect_cells = (2 * rx_max + 1) * (2 * ry_max + 1)
-    if p95_occ is not None and n_queries * rect_cells * p95_occ <= BROADCAST_MAX_ROWS:
-        return _output(_rank_topk(_candidates(q_live, tc, res, rx_max, ry_max), cutoff_m))
-
     # Ring loop, broadcast decided PER PHASE: the exploded query-cell side
     # is exactly n_open x shell_cells rows, both known before the phase
     # runs (the batch count, then the persisted open set's count).
@@ -314,7 +480,7 @@ def knn_join(
     # cost ~4x on the sf0.1 headline (measured 37.9 s vs 8.8 s); while
     # per-phase exact counts still reject the genuinely unbounded sf4
     # res-13 shells that killed the cached-plan broadcast.
-    n_open = n_queries
+    n_open = queries.count()
     remaining = q_live
     carried: DataFrame | None = None  # top-k-so-far of still-open queries
     parts: list[DataFrame] = []

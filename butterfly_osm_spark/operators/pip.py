@@ -14,22 +14,27 @@ Spark-first design (SURVEY.md §7.1 step 4):
    or ``partial``. The classifier is conservative — anything not provably
    full is partial, so correctness never depends on it, only the amount
    of ray-casting work.
-2. points join cover cells on cell_id (res is packed inside the id) — a
-   broadcast equi-join (cover set is tiny vs the point table), or a
-   shuffle join past the ``BROADCAST_MAX_ROWS`` cover-row gate.
+2. points join cover cells on cell_id (res is packed inside the id).
 3. ``full``-cell candidates pass with ZERO per-point work (the big win at
-   scale); ``partial``-cell candidates are ray-cast. The same gate picks
-   the refine path:
-   - at or under it (request-sized polygon sets, the default path): the
-     polygons' closed edge arrays are collected once and shipped as one
-     broadcast, and a vectorized numpy kernel in ``mapInPandas``
-     ray-casts the candidate stream in place — no extra exchange;
-   - past it (unbounded polygon sets, nothing may be collected to the
-     driver): the candidates shuffle-join per-polygon edge arrays and the
-     even-odd parity (``size(filter(edges, crossing)) % 2``) is a JVM
-     higher-order expression — no Python boundary, but evaluated per
-     element, so slower where both can run (OPTIMIZATION_r06: min 5.44 s
-     vs 3.68 s for the numpy refine on pip_images).
+   scale); ``partial``-cell candidates are ray-cast.
+
+One aggregate over the polygons (row count and ``sum(size(ring))``)
+picks one of two paths before anything is collected, against
+``BROADCAST_MAX_ROWS``:
+- request-sized polygon sets (the default): the rings are collected once
+  as Arrow; the cover is computed on the driver with the same numpy math
+  and joined as a local broadcast relation (no repartition, no
+  ``applyInPandas`` gather, no cover persist); the closed edge arrays
+  ship as one broadcast, and a vectorized numpy kernel in
+  ``mapInPandas`` ray-casts the candidate stream in place — no exchange;
+- unbounded polygon sets (nothing may be collected to the driver): the
+  cover is computed per polygon in an ``applyInPandas`` gather, the
+  cover join shuffles on cell_id, the candidates shuffle-join
+  per-polygon edge arrays and the even-odd parity
+  (``size(filter(edges, crossing)) % 2``) is a JVM higher-order
+  expression — no Python boundary, but evaluated per element, so slower
+  where both can run (OPTIMIZATION_r06: min 5.44 s vs 3.68 s for the
+  numpy refine on pip_images).
 
 The ray-cast uses the exact expression ``px < (x2-x1)*(py-y1)/(y2-y1)+x1``
 in float64 so the DuckDB oracle (same expression in SQL) matches
@@ -40,6 +45,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -94,11 +100,10 @@ def _pick_res(min_x: int, max_x: int, min_y: int, max_y: int) -> int:
     return MIN_RES
 
 
-def _cover_one(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("seq")
-    pid = pdf["polygon_id"].iloc[0]
-    vx = pdf["x"].to_numpy(np.int64)
-    vy = pdf["y"].to_numpy(np.int64)
+def _cover_ring(vx: np.ndarray, vy: np.ndarray) -> tuple[int, np.ndarray, np.ndarray]:
+    """Cover of one closed ring (int64 vertex coordinates in ring order):
+    its res, the packed ids of the cells kept and whether each is
+    ``partial`` (an edge bbox touches it) rather than ``full``."""
     ex1, ey1 = vx, vy
     ex2, ey2 = np.roll(vx, -1), np.roll(vy, -1)
     res = _pick_res(int(vx.min()), int(vx.max()), int(vy.min()), int(vy.max()))
@@ -120,14 +125,52 @@ def _cover_one(pdf: pd.DataFrame) -> pd.DataFrame:
         cx, cy, ex1.astype(np.float64), ey1.astype(np.float64), ex2.astype(np.float64), ey2.astype(np.float64)
     )
     keep = touch | inside
+    return res, cells.pack_np(gx, gy, res)[keep], touch[keep]
+
+
+def _cover_one(pdf: pd.DataFrame) -> pd.DataFrame:
+    pdf = pdf.sort_values("seq")
+    res, cell_id, partial = _cover_ring(pdf["x"].to_numpy(np.int64), pdf["y"].to_numpy(np.int64))
     return pd.DataFrame(
         {
-            "polygon_id": pid,
-            "res": np.full(int(keep.sum()), res, dtype=np.int32),
-            "cell_id": cells.pack_np(gx, gy, res)[keep],
-            "coverage": np.where(touch[keep], "partial", "full"),
+            "polygon_id": pdf["polygon_id"].iloc[0],
+            "res": np.full(len(cell_id), res, dtype=np.int32),
+            "cell_id": cell_id,
+            "coverage": np.where(partial, "partial", "full"),
         }
     )
+
+
+def _driver_cover(rings: pa.Table) -> tuple[pa.Table, dict]:
+    """``polygon_cover_cells`` rows of collected ``(polygon_id, ring)``
+    rows, computed on the driver with the same numpy math, and each
+    polygon's closed float64 edge arrays ``(x1, y1, x2, y2)`` for the
+    refine kernel."""
+    ring = rings.column("ring").combine_chunks()
+    offs = ring.offsets.to_numpy()
+    xs = ring.values.field("lon_e7").to_numpy().astype(np.int64)
+    ys = ring.values.field("lat_e7").to_numpy().astype(np.int64)
+    pids = rings.column("polygon_id").combine_chunks()
+    owner, res, cell_id, partial = ([np.zeros(0, t)] for t in (np.int64, np.int32, np.int64, bool))
+    edge_map = {}
+    for i, pid in enumerate(pids.to_pylist()):
+        vx, vy = xs[offs[i] : offs[i + 1]], ys[offs[i] : offs[i + 1]]
+        r, c, p = _cover_ring(vx, vy)
+        owner.append(np.full(len(c), i))
+        res.append(np.full(len(c), r, dtype=np.int32))
+        cell_id.append(c)
+        partial.append(p)
+        fx, fy = vx.astype(np.float64), vy.astype(np.float64)
+        edge_map[pid] = (fx, fy, np.roll(fx, -1), np.roll(fy, -1))
+    cover = pa.table(
+        {
+            "polygon_id": pids.take(np.concatenate(owner)),
+            "res": np.concatenate(res),
+            "cell_id": np.concatenate(cell_id),
+            "coverage": np.where(np.concatenate(partial), "partial", "full"),
+        }
+    )
+    return cover, edge_map
 
 
 def polygon_cover_cells(polygons: DataFrame) -> DataFrame:
@@ -166,31 +209,46 @@ def pip_join(
     id_col: str = "image_id",
     lon_col: str = "lon_e7",
     lat_col: str = "lat_e7",
+    out_id: str = "point_id",
 ) -> DataFrame:
-    """(point_id, polygon_id) pairs where the point is inside the polygon
+    """(out_id, polygon_id) pairs where the point is inside the polygon
     (even-odd). Points exactly on edges follow the raycast convention.
 
-    Round-6 refine: the former cogrouped applyInPandas (2 exchanges +
-    2 sorts + REFINE_SALTS skew machinery) is replaced by a shuffle-free
-    ``mapInPandas`` over the candidate stream with the polygon edge
-    arrays shipped once per executor via ``sc.broadcast`` — same
-    vectorized numpy kernel, zero added exchanges. Beyond the broadcast
-    gate (unbounded polygon sets, nothing may be collected) the refine
-    instead joins per-polygon edge arrays and evaluates the even-odd
+    One aggregate over the polygons (row count and ring vertices) picks
+    the path before anything is collected. Under ``BROADCAST_MAX_ROWS``
+    (request-sized polygon sets) the rings are collected once as Arrow,
+    the cover is computed on the driver (``_driver_cover``) and joined as
+    a local broadcast relation, and a shuffle-free ``mapInPandas`` refines
+    the candidate stream with the polygon edge arrays shipped once per
+    executor via ``sc.broadcast``. Past it (unbounded polygon sets,
+    nothing may be collected) the cover is computed distributed
+    (``polygon_cover_cells``), the cover join shuffles on cell_id and the
+    refine joins per-polygon edge arrays and evaluates the even-odd
     parity as a JVM higher-order expression. Both paths use the exact
     float64 op order of the SQL oracle (``(x2-x1)*(py-y1)/(y2-y1)+x1``),
     so results stay bit-exact (parity pytest covers the fallback)."""
-    cover = polygon_cover_cells(polygons).persist()
-    # one cached-scan aggregate serves both driver decisions: the
-    # resolutions present (point explode fan-out) and the total row count
-    # (broadcast gate — cover is bounded per polygon by MAX_COVER_CELLS
-    # but NOT in polygon count, so past the gate the cover join falls
-    # back to a shuffle join on cell_id)
-    res_counts = cover.groupBy("res").count().collect()
-    res_list = sorted(r["res"] for r in res_counts)
-    cover_rows = sum(r["count"] for r in res_counts)
+    n_polygons, n_vertices = polygons.select(
+        F.count(F.lit(1)), F.coalesce(F.sum(F.size("ring")), F.lit(0))
+    ).first()
+    # what the driver would hold: cover rows (at most MAX_COVER_CELLS per
+    # polygon above the res-7 floor) and one edge per ring vertex — a few
+    # polygons with huge rings must not pass on their polygon count
+    local = max(n_polygons * MAX_COVER_CELLS, n_vertices) <= BROADCAST_MAX_ROWS
+    if local:
+        cover_tbl, edge_map = _driver_cover(polygons.select("polygon_id", "ring").toArrow())
+        res_list = sorted(set(cover_tbl.column("res").to_pylist()))
+        cov_sel = F.broadcast(
+            points.sparkSession.createDataFrame(cover_tbl.select(["cell_id", "polygon_id", "coverage"]))
+        )
+    else:
+        # unbounded polygon set: distributed cover, shuffle join on cell_id
+        # (cover is bounded per polygon by MAX_COVER_CELLS but NOT in
+        # polygon count)
+        cover = polygon_cover_cells(polygons).persist()
+        res_list = sorted(r["res"] for r in cover.select("res").distinct().collect())
+        cov_sel = cover.select("cell_id", "polygon_id", "coverage")
 
-    # ONE point scan + ONE broadcast join: each point emits its cell id at
+    # ONE point scan + ONE cover join: each point emits its cell id at
     # every resolution present in the cover (res is packed inside the id,
     # so distinct resolutions can never collide on the join key). Fan-out
     # is |res_list| <= 7, vs the previous per-res scan+join+union chain.
@@ -202,9 +260,6 @@ def pip_join(
             F.array(*[cells.cell_col(lon_col, lat_col, res) for res in res_list])
         ).alias("cell_id"),
     )
-    cov_sel = cover.select("cell_id", "polygon_id", "coverage")
-    if cover_rows <= BROADCAST_MAX_ROWS:
-        cov_sel = F.broadcast(cov_sel)
     cand = pts.join(cov_sel, "cell_id", "inner").select(
         "point_id", "px", "py", "polygon_id", "coverage"
     )
@@ -214,19 +269,13 @@ def pip_join(
         "point_id", "px", "py", "polygon_id"
     )
 
-    if cover_rows <= BROADCAST_MAX_ROWS:
+    if local:
         # request-sized polygon set: ship the closed edge arrays to every
         # task as ONE torrent broadcast (not a per-task closure) and
         # ray-cast the candidate stream in-place with the vectorized
         # numpy kernel — mapInPandas directly over the broadcast cover
         # join output, so the refine path adds ZERO exchanges and no
         # per-polygon task skew (any task refines any polygon's rows).
-        rows = polygons.select("polygon_id", "ring").collect()
-        edge_map = {}
-        for r in rows:
-            vx = np.array([v["lon_e7"] for v in r["ring"]], dtype=np.float64)
-            vy = np.array([v["lat_e7"] for v in r["ring"]], dtype=np.float64)
-            edge_map[r["polygon_id"]] = (vx, vy, np.roll(vx, -1), np.roll(vy, -1))
         bc = points.sparkSession.sparkContext.broadcast(edge_map)
 
         def refine_stream(batches):
@@ -277,19 +326,21 @@ def pip_join(
             .filter(F.size(F.filter("edges", _crossing)) % 2 == 1)
             .select("point_id", "polygon_id")
         )
-    # materialize the pair result once (cached), then release the cover —
-    # repeated pip_join callers (warm-cache misses, incremental refreshes)
-    # previously pinned one cover RDD per call for the session lifetime,
-    # the same leak class the knn phase partials had. The returned frame
-    # stays cached (bounded: one row per (point, polygon) hit); callers
-    # that loop for a session lifetime should unpersist it when consumed.
-    out = full_hits.unionByName(refined).persist()
+    # materialize the pair result once (cached), then release the edge-map
+    # broadcast or the distributed cover — repeated pip_join callers
+    # (warm-cache misses, incremental refreshes) previously pinned one
+    # cover RDD per call for the session lifetime, the same leak class the
+    # knn phase partials had. The returned frame stays cached (bounded:
+    # one row per (point, polygon) hit); callers that loop for a session
+    # lifetime should unpersist it when consumed.
+    out = full_hits.unionByName(refined).withColumnRenamed("point_id", out_id).persist()
     out.count()
-    cover.unpersist()
-    if cover_rows <= BROADCAST_MAX_ROWS:
+    if local:
         # drop the executor copies of the edge map; the driver keeps it,
         # so a recompute of ``out`` (lost block, caller unpersist) still works
         bc.unpersist(blocking=False)
+    else:
+        cover.unpersist()
     return out
 
 

@@ -428,8 +428,7 @@ REGISTRY: dict[str, Query] = {
         "operators.pip",
         ("pip_join", "image_geo", "polygons"),
         ("pip_oracle_sql", "{fix}"),
-        oracle_kw={"out_id": "image_id"},
-        post=lambda df: df.withColumnsRenamed({"point_id": "image_id"}),
+        params={"out_id": "image_id"},
     ),
     "knn_nodes": Query(
         "operators.knn", ("knn_join", "query_points", "osm_nodes"), ("knn_oracle_sql", "{fix}")

@@ -95,6 +95,17 @@ def _add_stray_part(d):
     shutil.copy(os.path.join(d, part_files(d)[0]), stray)
 
 
+def test_build_releases_stage_results(spark, fix001, tmp_path):
+    """A build leaves no newly persisted RDD behind: ``pip_pairs`` returns
+    pip_join's own cached frame, and ``run_stage`` unpersists every stage
+    result once its write commits."""
+    from .conftest import persistent_rdd_ids
+
+    before = persistent_rdd_ids(spark)
+    _run(spark, fix001, str(tmp_path / "build"))
+    assert not (persistent_rdd_ids(spark) - before), "a stage result stayed cached"
+
+
 @pytest.mark.parametrize(
     "stage,corrupt,downstream",
     [

@@ -239,6 +239,74 @@ def test_pip_broadcast_gate_fallback_parity(spark, fix001, monkeypatch):
     assert got == want
 
 
+def test_pip_driver_cover_equals_distributed_cover(spark, fix001):
+    """The cover pip_join builds on the driver under the gate holds exactly
+    the rows of the distributed ``polygon_cover_cells``."""
+    from butterfly_osm_spark.operators import pip
+
+    polygons = spark.read.parquet(fix001 + "/polygons.parquet")
+    cover, edge_map = pip._driver_cover(polygons.select("polygon_id", "ring").toArrow())
+    cols = ["polygon_id", "res", "cell_id", "coverage"]
+    got = sorted(zip(*(cover.column(c).to_pylist() for c in cols)))
+    want = sorted(map(tuple, pip.polygon_cover_cells(polygons).select(*cols).collect()))
+    assert got == want
+    assert {r[3] for r in got} == {"full", "partial"}
+    assert set(edge_map) == {r.polygon_id for r in polygons.select("polygon_id").collect()}
+
+
+def test_pip_huge_rings_take_the_fallback(spark, monkeypatch):
+    """A few polygons whose rings hold more vertices than the gate allows
+    take the distributed path even though their cover rows would fit, and
+    both paths give the brute-force even-odd pairs."""
+    from butterfly_osm_spark.operators import pip
+
+    n_vertices = 3000
+    angles = 2 * np.pi * np.arange(n_vertices) / n_vertices
+    centers = [(130_000_000, 450_000_000), (130_500_000, 450_000_000), (130_250_000, 450_300_000)]
+    rings = {
+        f"circle{i}": list(
+            zip(
+                (cx + 200_000 * np.cos(angles)).astype(int).tolist(),
+                (cy + 200_000 * np.sin(angles)).astype(int).tolist(),
+            )
+        )
+        for i, (cx, cy) in enumerate(centers)
+    }
+    polygons = spark.createDataFrame(
+        [(pid, [{"lon_e7": x, "lat_e7": y} for x, y in ring]) for pid, ring in rings.items()],
+        "polygon_id string, ring array<struct<lon_e7:int, lat_e7:int>>",
+    )
+    xs = np.arange(129_700_000, 130_800_000, 23_000)
+    ys = np.arange(449_700_000, 450_600_000, 23_000)
+    pts = [(f"p{x}_{y}", int(x), int(y)) for x in xs for y in ys]
+    points = spark.createDataFrame(pts, "image_id string, lon_e7 int, lat_e7 int")
+    px = np.array([p[1] for p in pts], dtype=np.float64)
+    py = np.array([p[2] for p in pts], dtype=np.float64)
+    want = set()
+    for pid, ring in rings.items():
+        vx, vy = (np.array(c, dtype=np.float64) for c in zip(*ring))
+        inside = pip._raycast_np(px, py, vx, vy, np.roll(vx, -1), np.roll(vy, -1))
+        want |= {(pts[i][0], pid) for i in np.flatnonzero(inside)}
+
+    distributed = []
+    cover_cells = pip.polygon_cover_cells
+    monkeypatch.setattr(
+        pip, "polygon_cover_cells", lambda df: distributed.append(1) or cover_cells(df)
+    )
+    driver = pip.pip_join(points, polygons)
+    assert not distributed, "expected the driver path under the default gate"
+    assert {tuple(r) for r in driver.collect()} == want
+    driver.unpersist()
+    # the cover-row term (3 polygons x MAX_COVER_CELLS) fits, the ring
+    # vertices do not
+    monkeypatch.setattr(pip, "BROADCAST_MAX_ROWS", 4 * pip.MAX_COVER_CELLS)
+    fallback = pip.pip_join(points, polygons)
+    assert distributed, "expected the distributed path"
+    assert {tuple(r) for r in fallback.collect()} == want
+    fallback.unpersist()
+    assert len(want) > 100
+
+
 def test_repeated_calls_unpersist_their_broadcasts(spark, fix001, monkeypatch):
     """pip_join (edge map) and phash_knn (query batch) unpersist the
     broadcast they ship once their result is materialized, so three calls
@@ -275,25 +343,31 @@ def test_repeated_calls_unpersist_their_broadcasts(spark, fix001, monkeypatch):
     assert not (persistent_rdd_ids(spark) - before), "a released result stayed cached"
 
 
-def _knn_phase_res(knn, monkeypatch):
-    """Spy on knn_join's candidate phases: the returned list gets the
-    working res of every phase (one entry on the single-phase path, one
-    per ring on the ring loop)."""
-    phases = []
-    candidates = knn._candidates
+def _knn_paths(knn, monkeypatch):
+    """Spy on knn_join's two paths: the returned list gets ``("grid",
+    res)`` for every grid built and the working res of every ring-loop
+    phase."""
+    paths = []
+    grid, candidates = knn._grid, knn._candidates
 
-    def spy(*a, **kw):
-        phases.append(a[2])
+    def grid_spy(*a, **kw):
+        g = grid(*a, **kw)
+        paths.append(("grid", g.res))
+        return g
+
+    def candidates_spy(*a, **kw):
+        paths.append(a[2])
         return candidates(*a, **kw)
 
-    monkeypatch.setattr(knn, "_candidates", spy)
-    return phases
+    monkeypatch.setattr(knn, "_grid", grid_spy)
+    monkeypatch.setattr(knn, "_candidates", candidates_spy)
+    return paths
 
 
 def test_knn_releases_phase_caches(spark, fix001, monkeypatch):
     """knn_join must not leak per-phase persisted partials into the session:
-    the single-phase path caches nothing, and after the ring loop at most
-    the (bounded) result frame itself is newly cached. Measured as a set
+    the grid path caches nothing, and after the ring loop at most the
+    (bounded) result frame itself is newly cached. Measured as a set
     DELTA because earlier tests in the shared session may legitimately
     hold their own bounded result frames (e.g. a CC query's final label
     checkpoint), which clearCache() does not reach."""
@@ -303,42 +377,108 @@ def test_knn_releases_phase_caches(spark, fix001, monkeypatch):
 
     q = spark.read.parquet(fix001 + "/query_points.parquet")
     n = spark.read.parquet(fix001 + "/osm_nodes.parquet")
-    phases = _knn_phase_res(knn, monkeypatch)
+    paths = _knn_paths(knn, monkeypatch)
     spark.catalog.clearCache()
     before = persistent_rdd_ids(spark)
     knn.knn_join(q, n).count()
-    assert len(phases) == 1, "expected the single-phase path"
-    assert not (persistent_rdd_ids(spark) - before), "the single-phase path cached an RDD"
-    knn.knn_join(q, n, res=phases[0]).count()
-    assert len(phases) >= 3, "expected the ring loop"
+    assert paths == [("grid", 11)], "expected the grid path"
+    assert not (persistent_rdd_ids(spark) - before), "the grid path cached an RDD"
+    knn.knn_join(q, n, res=11).count()
+    assert len(paths) >= 3, "expected the ring loop"
     new = persistent_rdd_ids(spark) - before
     assert len(new) <= 1, f"{len(new)} new RDDs cached after the ring loop"
     spark.catalog.clearCache()
 
 
-def test_knn_single_phase_matches_ring_loop_and_oracle(spark, fix001, monkeypatch):
-    """A small batch at the res adaptive_res picks is answered in one
-    full-cutoff phase; an explicit res takes the ring loop. At the same
-    res both plans give identical rows, and both match the DuckDB oracle,
-    on a fixture with k in {1, 8, 64} and queries beyond the cutoff."""
+@pytest.mark.parametrize("sf", ["0.001", "0.01"])
+def test_knn_grid_matches_ring_loop_and_oracle(spark, sf, monkeypatch):
+    """Without ``res`` a request-sized target table is answered by the
+    grid kernel; an explicit res takes the ring loop. At the same res both
+    plans give identical rows, and both match the DuckDB oracle, on a
+    fixture with k in {1, 8, 64} and queries beyond the cutoff."""
     import duckdb
 
+    from butterfly_osm_spark.fixtures.generate import ensure_fixtures
+    from butterfly_osm_spark.operators import knn
+
+    fix = ensure_fixtures(sf)
+    q = spark.read.parquet(fix + "/query_points.parquet")
+    n = spark.read.parquet(fix + "/osm_nodes.parquet")
+    assert {r.k for r in q.select("k").distinct().collect()} >= {1, 8, 64}
+    paths = _knn_paths(knn, monkeypatch)
+    grid = sorted(map(tuple, knn.knn_join(q, n).collect()))
+    assert len(paths) == 1 and paths[0][0] == "grid", "expected the grid path"
+    res = paths.pop()[1]
+    ring_df = knn.knn_join(q, n, res=res)
+    ring = sorted(map(tuple, ring_df.collect()))
+    ring_df.unpersist()
+    assert len(paths) >= 2 and set(paths) == {res}, "expected the ring loop at the same res"
+    want = sorted(map(tuple, duckdb.sql(knn.knn_oracle_sql(fix)).fetchall()))
+    assert grid == ring == want
+    assert len({r[0] for r in want}) < q.count(), "no query lies beyond the cutoff"
+
+
+def _knn_both_paths(knn, q, n):
+    """Sorted rows of the grid path and of the ring loop at res 11."""
+    grid = sorted(map(tuple, knn.knn_join(q, n).collect()))
+    ring_df = knn.knn_join(q, n, res=11)
+    ring = sorted(map(tuple, ring_df.collect()))
+    ring_df.unpersist()
+    return grid, ring
+
+
+def test_knn_edge_cases_agree_on_both_paths(spark):
+    """Hand-checked answers on a tiny table, identical on both paths:
+    equal-d2 ties between duplicate-coordinate nodes rank by node_id, k
+    larger than the reachable nodes returns every node inside the cutoff,
+    and queries beyond the cutoff or with k = 0 return no rows."""
+    from butterfly_osm_spark.operators import knn
+
+    lon, lat = 130_000_000, 450_000_000  # 13.0 E, 45.0 N
+    n = spark.createDataFrame(
+        [
+            (30, lon, lat),
+            (10, lon, lat),
+            (20, lon, lat),
+            (7, lon + 100_000, lat),  # 714 m east
+            (8, lon, lat + 100_000),  # 1110 m north
+            (9, lon + 800_000, lat),  # 5712 m east: beyond the cutoff
+        ],
+        "id long, lon_e7 int, lat_e7 int",
+    )
+    q = spark.createDataFrame(
+        [
+            ("tie", lon, lat, 2),
+            ("all", lon, lat, 100),
+            ("far", lon, lat + 1_000_000, 8),  # 11.1 km from every node
+            ("none", lon, lat, 0),
+        ],
+        "query_id string, lon_e7 int, lat_e7 int, k int",
+    )
+    grid, ring = _knn_both_paths(knn, q, n)
+    want = sorted(
+        [
+            ("tie", 1, 10, 0.0),
+            ("tie", 2, 20, 0.0),
+            ("all", 1, 10, 0.0),
+            ("all", 2, 20, 0.0),
+            ("all", 3, 30, 0.0),
+            ("all", 4, 7, 714.0),
+            ("all", 5, 8, 1110.0),
+        ]
+    )
+    assert grid == ring == want
+
+
+def test_knn_empty_tables(spark, fix001):
+    """An empty query table or an empty target table gives no rows on
+    either path."""
     from butterfly_osm_spark.operators import knn
 
     q = spark.read.parquet(fix001 + "/query_points.parquet")
     n = spark.read.parquet(fix001 + "/osm_nodes.parquet")
-    assert {r.k for r in q.select("k").distinct().collect()} >= {1, 8, 64}
-    phases = _knn_phase_res(knn, monkeypatch)
-    single = sorted(map(tuple, knn.knn_join(q, n).collect()))
-    assert len(phases) == 1, "expected the single-phase path"
-    res = phases.pop()
-    ring_df = knn.knn_join(q, n, res=res)
-    ring = sorted(map(tuple, ring_df.collect()))
-    ring_df.unpersist()
-    assert len(phases) >= 2 and set(phases) == {res}, "expected the ring loop at the same res"
-    want = sorted(map(tuple, duckdb.sql(knn.knn_oracle_sql(fix001)).fetchall()))
-    assert single == ring == want
-    assert len({r[0] for r in want}) < q.count(), "no query lies beyond the cutoff"
+    assert _knn_both_paths(knn, q.limit(0), n) == ([], [])
+    assert _knn_both_paths(knn, q, n.limit(0)) == ([], [])
 
 
 def test_connected_components_releases_iteration_checkpoints(spark):
@@ -453,20 +593,20 @@ print(json.dumps({
 
 
 def test_knn_join_mode_gate_parity(spark, fix001, monkeypatch):
-    """The gate (single phase under 4M estimated candidates; per ring
+    """The gate (grid under BROADCAST_MAX_ROWS target rows; per ring
     phase, broadcast under 4M exploded rows and a shuffle_merge pin over
     it) is a plan choice, never a semantics choice: forcing the gate shut
-    (ring loop, every phase pinned) must produce the identical ranked
-    result set."""
+    (ring loop at the adaptive res, every phase pinned) must produce the
+    identical ranked result set."""
     from butterfly_osm_spark.operators import knn
 
     q = spark.read.parquet(fix001 + "/query_points.parquet")
     n = spark.read.parquet(fix001 + "/osm_nodes.parquet")
     want = sorted(map(tuple, knn.knn_join(q, n).collect()))
     monkeypatch.setattr(knn, "BROADCAST_MAX_ROWS", 0)
-    phases = _knn_phase_res(knn, monkeypatch)
+    paths = _knn_paths(knn, monkeypatch)
     got = sorted(map(tuple, knn.knn_join(q, n).collect()))
-    assert len(phases) >= 2, "expected the ring loop"
+    assert len(paths) >= 2 and all(isinstance(p, int) for p in paths), "expected the ring loop"
     assert got == want
     spark.catalog.clearCache()
 
