@@ -25,8 +25,9 @@ picks one of two paths before anything is collected, against
   as Arrow; the cover is computed on the driver with the same numpy math
   and joined as a local broadcast relation (no repartition, no
   ``applyInPandas`` gather, no cover persist); the closed edge arrays
-  ship as one broadcast, and a vectorized numpy kernel in
-  ``mapInPandas`` ray-casts the candidate stream in place — no exchange;
+  ship as one broadcast, and one vectorized numpy kernel in
+  ``mapInPandas`` over the single cover join passes ``full`` candidates
+  and ray-casts ``partial`` ones in place — no exchange;
 - unbounded polygon sets (nothing may be collected to the driver): the
   cover is computed per polygon in an ``applyInPandas`` gather, the
   cover join shuffles on cell_id, the candidates shuffle-join
@@ -264,18 +265,17 @@ def pip_join(
         "point_id", "px", "py", "polygon_id", "coverage"
     )
 
-    full_hits = cand.filter(F.col("coverage") == "full").select("point_id", "polygon_id")
-    partial = cand.filter(F.col("coverage") == "partial").select(
-        "point_id", "px", "py", "polygon_id"
-    )
-
     if local:
         # request-sized polygon set: ship the closed edge arrays to every
         # task as ONE torrent broadcast (not a per-task closure) and
-        # ray-cast the candidate stream in-place with the vectorized
-        # numpy kernel — mapInPandas directly over the broadcast cover
-        # join output, so the refine path adds ZERO exchanges and no
-        # per-polygon task skew (any task refines any polygon's rows).
+        # refine the candidate stream in-place — mapInPandas directly over
+        # the broadcast cover join output, so the refine path adds ZERO
+        # exchanges and no per-polygon task skew (any task refines any
+        # polygon's rows). ``full`` rows pass as they are and only
+        # ``partial`` rows are ray-cast, in the same kernel: splitting the
+        # stream by coverage in the plan instead makes the optimizer push
+        # each filter into the local cover relation and broadcast it twice
+        # (two jobs).
         bc = points.sparkSession.sparkContext.broadcast(edge_map)
 
         def refine_stream(batches):
@@ -283,18 +283,21 @@ def pip_join(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                hits = []
-                for pid, g in pdf.groupby("polygon_id", sort=False):
-                    x1, y1, x2, y2 = em[pid]
-                    inside = _raycast_np(
-                        g["px"].to_numpy(np.float64), g["py"].to_numpy(np.float64), x1, y1, x2, y2
-                    )
-                    if inside.any():
-                        hits.append(g.loc[inside, ["point_id", "polygon_id"]])
-                if hits:
-                    yield pd.concat(hits, ignore_index=True)
+                keep = (pdf["coverage"] == "full").to_numpy()
+                part = np.flatnonzero(~keep)
+                # partial rows grouped by polygon with numpy index slices:
+                # a pandas groupby per batch cost more than the ray-casts
+                codes, pids = pd.factorize(pdf["polygon_id"].to_numpy()[part])
+                rows = part[np.argsort(codes, kind="stable")]
+                bounds = np.searchsorted(np.sort(codes), np.arange(len(pids) + 1))
+                px = pdf["px"].to_numpy(np.float64)[rows]
+                py = pdf["py"].to_numpy(np.float64)[rows]
+                for k, pid in enumerate(pids):
+                    g = slice(bounds[k], bounds[k + 1])
+                    keep[rows[g]] = _raycast_np(px[g], py[g], *em[pid])
+                yield pdf.loc[keep, ["point_id", "polygon_id"]]
 
-        refined = partial.mapInPandas(refine_stream, schema="point_id string, polygon_id string")
+        pairs = cand.mapInPandas(refine_stream, schema="point_id string, polygon_id string")
     else:
         # unbounded polygon set: no driver-side collect — shuffle-join the
         # candidates to per-polygon edge arrays (built by ``transform``
@@ -303,6 +306,10 @@ def pip_join(
         # numpy kernel/oracle; NaN/Inf from a horizontal edge (y2 == y1)
         # is neutralized by the conjunction exactly as in numpy (cond is
         # false whenever y1 == y2).
+        full_hits = cand.filter(F.col("coverage") == "full").select("point_id", "polygon_id")
+        partial = cand.filter(F.col("coverage") == "partial").select(
+            "point_id", "px", "py", "polygon_id"
+        )
         n_ring = F.size("ring")
         nxt = lambda i: ((i + F.lit(1)) % n_ring) + F.lit(1)  # noqa: E731
         edges_arr = F.transform(
@@ -326,6 +333,7 @@ def pip_join(
             .filter(F.size(F.filter("edges", _crossing)) % 2 == 1)
             .select("point_id", "polygon_id")
         )
+        pairs = full_hits.unionByName(refined)
     # materialize the pair result once (cached), then release the edge-map
     # broadcast or the distributed cover — repeated pip_join callers
     # (warm-cache misses, incremental refreshes) previously pinned one
@@ -333,7 +341,7 @@ def pip_join(
     # knn phase partials had. The returned frame stays cached (bounded:
     # one row per (point, polygon) hit); callers that loop for a session
     # lifetime should unpersist it when consumed.
-    out = full_hits.unionByName(refined).withColumnRenamed("point_id", out_id).persist()
+    out = pairs.withColumnRenamed("point_id", out_id).persist()
     out.count()
     if local:
         # drop the executor copies of the edge map; the driver keeps it,

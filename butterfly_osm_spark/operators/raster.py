@@ -17,10 +17,23 @@ Re-expresses the reference's SparseTileMap contour machinery
   bit_and with a contribution-count==9 guard (missing neighbor == zero).
   Balanced closing = same number of dilate and erode rounds (#431,
   :466-475).
-- Moore-neighbour boundary trace (:823-895, :934-1130): per-region
-  sequential walk in applyInPandas (regions gather a small closed tile
-  set; a per-group size guard enforces it), deterministic sorted starts.
-- Douglas-Peucker simplify (:1131-1186): numpy, in the same UDF.
+- Moore-neighbour boundary trace (:823-895, :934-1130): per-region walk
+  in applyInPandas (regions gather a small closed tile set; a per-group
+  size guard enforces it), deterministic sorted starts. The walk is
+  table-driven: numpy computes every boundary pixel's 8-neighbour mask
+  and, through a fixed 256x8 first-set-direction table, the next
+  (pixel, backtrack) state of every state, so the sequential part only
+  follows integers in a list instead of probing pixels one by one.
+- Douglas-Peucker simplify (:1131-1186): numpy, in the same UDF, with the
+  2-D cross product written out (``np.cross``'s per-call overhead
+  dominated on the many tiny slices).
+
+Over the 200 sf0.001 region grids of ``raster_contour`` (384 rings,
+548,108 ring pixels), single-threaded on a 4-core x86-64 VM, the trace
+went from 1.4-1.8 s pixel by pixel to 0.4-0.5 s table-driven and
+Douglas-Peucker from 1.4-1.5 s to 0.5-0.6 s, with identical rings and
+vertices (``tests/test_raster.py`` keeps the per-pixel versions as the
+reference).
 """
 
 from __future__ import annotations
@@ -32,6 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -64,8 +78,6 @@ RING_SCHEMA = StructType(
     ]
 )
 
-from pyspark.sql.types import BooleanType  # noqa: E402
-
 ANCHORED_RING_SCHEMA = StructType(RING_SCHEMA.fields + [StructField("anchored", BooleanType())])
 
 
@@ -94,7 +106,6 @@ def _bresenham_cells(x0, y0, x1, y1) -> tuple[np.ndarray, np.ndarray]:
     total = int(n.sum())
     if total == 0:
         return np.empty(0, np.int64), np.empty(0, np.int64)
-    seg = np.repeat(np.arange(len(x0)), n)
     t = np.arange(total) - np.repeat(np.concatenate([[0], np.cumsum(n)[:-1]]), n)
     st = np.repeat(steps, n)
     safe = np.maximum(st, 1)
@@ -108,7 +119,6 @@ def _bresenham_cells(x0, y0, x1, y1) -> tuple[np.ndarray, np.ndarray]:
 
     cx = np.repeat(x0, n) + interp(dx)
     cy = np.repeat(y0, n) + interp(dy)
-    del seg
     return cx, cy
 
 
@@ -267,63 +277,97 @@ GROUP BY region_id, (cx >> 6), (cy >> 6), (cy & 63)
 
 # ---------------------------------------------------------------------------
 # Moore-neighbour boundary trace + Douglas-Peucker (per-region applyInPandas)
+#
+# A walk state is (pixel, backtrack direction), encoded as pixel * 8 + b;
+# the backtrack is the background cell the clockwise scan starts from.
+# Both kernels keep the reference's exact semantics (start order, step
+# guard, float operations), so contour_truth does not change.
 # ---------------------------------------------------------------------------
 
 MAX_GRID = 4096  # per-group size guard (sequential algorithm, keep it small)
 
 _MOORE = [(-1, 0), (-1, 1), (0, 1), (1, 1), (1, 0), (1, -1), (0, -1), (-1, -1)]
+_DY = np.array([d[0] for d in _MOORE], dtype=np.int64)
+_DX = np.array([d[1] for d in _MOORE], dtype=np.int64)
+# _FIRST[mask, b]: the first direction clockwise after backtrack direction
+# b (b+1, ..., b+8 mod 8) whose bit is set in the 8-neighbour mask, -1
+# for an isolated pixel (mask 0)
+_FIRST = np.full((256, 8), -1, dtype=np.int64)
+for _m in range(1, 256):
+    for _b in range(8):
+        _FIRST[_m, _b] = next((_b + k) % 8 for k in range(1, 9) if _m >> ((_b + k) % 8) & 1)
+# moving to direction d leaves the backtrack on the cell scanned just
+# before it, p + _MOORE[d-1]; seen from the new pixel that is the
+# direction _MOORE[d-1] - _MOORE[d]
+_BACK = np.array(
+    [_MOORE.index((_MOORE[d - 1][0] - _MOORE[d][0], _MOORE[d - 1][1] - _MOORE[d][1])) for d in range(8)],
+    dtype=np.int64,
+)
+_W = _MOORE.index((0, -1))
 
 
 def _trace_one(grid: np.ndarray) -> list[np.ndarray]:
     """Boundary rings of all 8-connected components: Moore-neighbour walk
     with (position, backtrack)-state termination, deterministic row-major
     sorted starts (the #431 determinism fix). Returns rings as (y, x)
-    vertex arrays; duplicate starts on already-traced rings are skipped."""
+    vertex arrays; duplicate starts on already-traced rings are skipped.
+
+    Table-driven: one numpy pass gives every pixel its 8-neighbour bit
+    mask, and ``_FIRST``/``_BACK`` turn each (pixel, backtrack) state into
+    the next state, so the walk itself only follows integers in a list.
+    Only pixels with a background neighbour get a state: the backtrack
+    cell is always background, so every pixel the walk enters has one."""
     h, w = grid.shape
     padded = np.zeros((h + 2, w + 2), dtype=bool)
     padded[1:-1, 1:-1] = grid
+    ys, xs = np.nonzero(padded)  # row-major order
+    max_steps = 4 * len(ys) + 8
+    mask = np.zeros(len(ys), dtype=np.int64)
+    for d in range(8):
+        mask |= padded[ys + _DY[d], xs + _DX[d]].astype(np.int64) << d
+    edge = mask != 255
+    ys, xs, m = ys[edge], xs[edge], mask[edge]
+    if len(ys) == 0:
+        return []
+    lin = ys * (w + 2) + xs  # sorted, so a neighbour's state is a searchsorted away
+    d = _FIRST[m]  # (n, 8): direction taken from each backtrack direction
+    dd = np.maximum(d, 0)
+    tl = lin[:, None] + (_DY * (w + 2) + _DX)[dd]
+    tgt = np.minimum(np.searchsorted(lin, tl), len(lin) - 1)
+    nxt = np.where((d >= 0) & (lin[tgt] == tl), tgt * 8 + _BACK[dd], -1).ravel().tolist()
+    on_ring = np.zeros(len(ys), dtype=bool)
     rings: list[np.ndarray] = []
-    on_ring = np.zeros_like(padded, dtype=bool)
-    ys, xs = np.nonzero(padded)
-    order = np.lexsort((xs, ys))  # row-major: sorted deterministic starts
-    for idx in order:
-        sy, sx = int(ys[idx]), int(xs[idx])
-        if padded[sy, sx - 1] or on_ring[sy, sx]:
-            continue  # not a left-boundary start, or already traced
+    # starts: left-boundary pixels (background to the west), entered from
+    # the west
+    for i in np.flatnonzero((m >> _W & 1) == 0).tolist():
+        if on_ring[i]:
+            continue  # already traced
+        s0 = s = i * 8 + _W
         ring = []
-        p = (sy, sx)
-        b = (sy, sx - 1)  # backtrack (empty), entered from the left
-        state0 = (p, b)
-        max_steps = 4 * int(padded.sum()) + 8
         steps = 0
         while True:
-            ring.append(p)
-            on_ring[p] = True
-            # clockwise Moore scan starting at the backtrack cell
-            bdir = _MOORE.index((b[0] - p[0], b[1] - p[1]))
-            nxt = None
-            for k in range(1, 9):
-                d = (bdir + k) % 8
-                ny, nx = p[0] + _MOORE[d][0], p[1] + _MOORE[d][1]
-                if padded[ny, nx]:
-                    nxt = (ny, nx)
-                    b = (p[0] + _MOORE[(bdir + k - 1) % 8][0], p[1] + _MOORE[(bdir + k - 1) % 8][1])
-                    break
-            if nxt is None:
+            ring.append(s >> 3)
+            s = nxt[s]
+            if s < 0:
                 break  # isolated single cell
-            p = nxt
             steps += 1
-            if (p, b) == state0 or steps > max_steps:
+            if s == s0 or steps > max_steps:
                 break
-        rings.append(np.array(ring, dtype=np.int64) - 1)  # un-pad
+        on_ring[ring] = True
+        rings.append(np.stack([ys[ring], xs[ring]], axis=1) - 1)  # un-pad
     return rings
 
 
 def _dp_simplify(pts: np.ndarray, tol: float) -> np.ndarray:
-    """Iterative Douglas-Peucker on a closed ring (keeps first point)."""
+    """Iterative Douglas-Peucker on a closed ring (keeps first point).
+    The 2-D cross product is written out (``ab0*v1 - ab1*v0``, the float
+    operations ``np.cross`` performs) so a tiny slice pays no per-call
+    overhead."""
     n = len(pts)
     if n <= 3:
         return pts
+    f = pts.astype(np.float64)
+    f0, f1 = f[:, 0], f[:, 1]
     keep = np.zeros(n, dtype=bool)
     keep[0] = keep[n - 1] = True
     stack = [(0, n - 1)]
@@ -331,14 +375,15 @@ def _dp_simplify(pts: np.ndarray, tol: float) -> np.ndarray:
         i, j = stack.pop()
         if j <= i + 1:
             continue
-        a, b = pts[i].astype(np.float64), pts[j].astype(np.float64)
-        ab = b - a
-        L = np.hypot(*ab)
-        seg = pts[i + 1 : j].astype(np.float64)
+        a0, a1 = f0[i], f1[i]
+        ab0, ab1 = f0[j] - a0, f1[j] - a1
+        L = np.hypot(ab0, ab1)
+        v0 = f0[i + 1 : j] - a0
+        v1 = f1[i + 1 : j] - a1
         if L == 0:
-            d = np.hypot(seg[:, 0] - a[0], seg[:, 1] - a[1])
+            d = np.hypot(v0, v1)
         else:
-            d = np.abs(np.cross(ab, seg - a)) / L
+            d = np.abs(ab0 * v1 - ab1 * v0) / L
         m = int(np.argmax(d))
         if d[m] > tol:
             k = i + 1 + m
@@ -422,11 +467,10 @@ def trace_contours(
         if W > MAX_GRID or H > MAX_GRID:
             raise ValueError(f"region {key[0]}: grid {W}x{H} exceeds guard {MAX_GRID}")
         grid = np.zeros((H, W), dtype=bool)
-        rows = (ty - y0t) * T + wi + pad
         bits = ((w[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & np.uint64(1)).astype(bool)
-        for r, xt, brow in zip(rows, tx, bits):
-            c0 = (xt - x0t) * T + pad
-            grid[r, c0 : c0 + T] |= brow
+        word, col = np.nonzero(bits)
+        # setting only the set bits is an OR even if a word repeated
+        grid[(ty - y0t)[word] * T + wi[word] + pad, (tx - x0t)[word] * T + col + pad] = True
         for _ in range(close_rounds):
             grid = _dilate3_np(grid)
         for _ in range(close_rounds):

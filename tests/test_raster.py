@@ -2,9 +2,12 @@
 stamp/close/trace determinism, bbox consistency, origin containment."""
 
 import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 
 from butterfly_osm_spark.geo import mercator_np
+from butterfly_osm_spark.operators import raster
 from butterfly_osm_spark.operators.raster import close_regions, stamp_segments, trace_contours
 
 
@@ -136,3 +139,141 @@ def test_dem_sample_matches_numpy_oracle(spark, fix001):
             want = (np.floor(bilinear_np(data, t.samples_per_side, fx, fy) * 1000.0 + 0.5) / 1000.0)[0]
         g = got[r.query_id]
         assert (np.isnan(want) and (g is None or np.isnan(g))) or g == want
+
+
+# ---------------------------------------------------------------------------
+# Reference kernels: the per-pixel Moore walk and the np.cross
+# Douglas-Peucker that the table-driven kernels replaced, kept verbatim
+# (renamed) so the fast kernels are held to identical rings and vertices.
+# ---------------------------------------------------------------------------
+
+_MOORE = [(-1, 0), (-1, 1), (0, 1), (1, 1), (1, 0), (1, -1), (0, -1), (-1, -1)]
+
+
+def _trace_one_ref(grid: np.ndarray) -> list[np.ndarray]:
+    """Boundary rings of all 8-connected components: Moore-neighbour walk
+    with (position, backtrack)-state termination, deterministic row-major
+    sorted starts (the #431 determinism fix). Returns rings as (y, x)
+    vertex arrays; duplicate starts on already-traced rings are skipped."""
+    h, w = grid.shape
+    padded = np.zeros((h + 2, w + 2), dtype=bool)
+    padded[1:-1, 1:-1] = grid
+    rings: list[np.ndarray] = []
+    on_ring = np.zeros_like(padded, dtype=bool)
+    ys, xs = np.nonzero(padded)
+    order = np.lexsort((xs, ys))  # row-major: sorted deterministic starts
+    for idx in order:
+        sy, sx = int(ys[idx]), int(xs[idx])
+        if padded[sy, sx - 1] or on_ring[sy, sx]:
+            continue  # not a left-boundary start, or already traced
+        ring = []
+        p = (sy, sx)
+        b = (sy, sx - 1)  # backtrack (empty), entered from the left
+        state0 = (p, b)
+        max_steps = 4 * int(padded.sum()) + 8
+        steps = 0
+        while True:
+            ring.append(p)
+            on_ring[p] = True
+            # clockwise Moore scan starting at the backtrack cell
+            bdir = _MOORE.index((b[0] - p[0], b[1] - p[1]))
+            nxt = None
+            for k in range(1, 9):
+                d = (bdir + k) % 8
+                ny, nx = p[0] + _MOORE[d][0], p[1] + _MOORE[d][1]
+                if padded[ny, nx]:
+                    nxt = (ny, nx)
+                    b = (p[0] + _MOORE[(bdir + k - 1) % 8][0], p[1] + _MOORE[(bdir + k - 1) % 8][1])
+                    break
+            if nxt is None:
+                break  # isolated single cell
+            p = nxt
+            steps += 1
+            if (p, b) == state0 or steps > max_steps:
+                break
+        rings.append(np.array(ring, dtype=np.int64) - 1)  # un-pad
+    return rings
+
+
+def _dp_simplify_ref(pts: np.ndarray, tol: float) -> np.ndarray:
+    """Iterative Douglas-Peucker on a closed ring (keeps first point)."""
+    n = len(pts)
+    if n <= 3:
+        return pts
+    keep = np.zeros(n, dtype=bool)
+    keep[0] = keep[n - 1] = True
+    stack = [(0, n - 1)]
+    while stack:
+        i, j = stack.pop()
+        if j <= i + 1:
+            continue
+        a, b = pts[i].astype(np.float64), pts[j].astype(np.float64)
+        ab = b - a
+        L = np.hypot(*ab)
+        seg = pts[i + 1 : j].astype(np.float64)
+        if L == 0:
+            d = np.hypot(seg[:, 0] - a[0], seg[:, 1] - a[1])
+        else:
+            d = np.abs(np.cross(ab, seg - a)) / L
+        m = int(np.argmax(d))
+        if d[m] > tol:
+            k = i + 1 + m
+            keep[k] = True
+            stack.append((i, k))
+            stack.append((k, j))
+    return pts[keep]
+
+
+def _assert_kernels_match_reference(grid: np.ndarray) -> int:
+    want = _trace_one_ref(grid)
+    got = raster._trace_one(grid)
+    assert len(got) == len(want)
+    for g, r in zip(got, want):
+        assert g.dtype == r.dtype and g.shape == r.shape and np.array_equal(g, r)
+        assert np.array_equal(raster._dp_simplify(g, 1.5), _dp_simplify_ref(r, 1.5))
+    return len(want)
+
+
+def _grid(text: str) -> np.ndarray:
+    return np.array([[c == "#" for c in row] for row in text.split()], dtype=bool)
+
+
+def test_trace_kernels_match_reference_on_fixture_grids(fix001):
+    """Every sf0.001 polygon, stamped and closed (2 rounds) the way the
+    contour_truth golden is built, traces to the reference's rings, and
+    each ring simplifies to the reference's kept vertices."""
+    edges = pd.read_parquet(f"{fix001}/polygon_pixel_edges.parquet")
+    n_rings = 0
+    for _, e in edges.groupby("region_id", sort=True):
+        cx, cy = raster._bresenham_cells(*(e[c].to_numpy(np.int64) for c in ("px1", "py1", "px2", "py2")))
+        pad = 2
+        grid = np.zeros((cy.max() - cy.min() + 1 + 2 * pad, cx.max() - cx.min() + 1 + 2 * pad), dtype=bool)
+        grid[cy - cy.min() + pad, cx - cx.min() + pad] = True
+        for _ in range(pad):
+            grid = raster._dilate3_np(grid)
+        for _ in range(pad):
+            grid = raster._erode3_np(grid)
+        n_rings += _assert_kernels_match_reference(grid)
+    assert n_rings > edges.region_id.nunique()  # some regions have holes or islands
+
+
+@pytest.mark.parametrize(
+    "grid",
+    [
+        np.zeros((0, 0), dtype=bool),
+        np.zeros((5, 7), dtype=bool),
+        _grid("#"),
+        _grid("... .#. ..."),
+        _grid("#.... .#... ..#.. ...#. ....#"),  # diagonal-only chain
+        _grid("....# ...#. ..#.. .#... #...."),  # the other diagonal
+        _grid("##### #...# #.#.# #...# #####"),  # ring with a hole and an island
+        _grid("###... ###... ###... ...### ...### ...###"),  # touching at a corner
+        _grid("##.## ##.## ....."),  # two components side by side
+        _grid("####### #.....# #.###.# #.#.#.# #.###.# #.....# #######"),  # nested rings
+        _grid("#.#.# ..... #.#.#"),  # isolated pixels
+        np.ones((4, 6), dtype=bool),  # every pixel on the grid border
+        _grid("..#.. .###. ##### .###. ..#.."),
+    ],
+)
+def test_trace_kernels_match_reference_on_edge_cases(grid):
+    _assert_kernels_match_reference(grid)

@@ -218,3 +218,19 @@ def test_shuffle_partitions_follow_the_cores(monkeypatch):
     for cpus, want in ((4, 32), (16, 32), (24, 48)):
         monkeypatch.setenv("SPARK_GRAFT_CPUS", str(cpus))
         assert session.default_shuffle_partitions() == want
+
+
+def test_cached_results_coalesce(spark):
+    """A persisted shuffle result is sized by AQE like any other stage:
+    its cached plan may change output partitioning, so a small
+    ``groupBy`` is cached in fewer partitions than the session's 8
+    shuffle partitions (each cached partition is a task when written and
+    again whenever it is read)."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(10_000).groupBy((F.col("id") % 100).alias("k")).count().persist()
+    try:
+        assert df.count() == 100
+        assert df.rdd.getNumPartitions() < 8
+    finally:
+        df.unpersist()

@@ -239,6 +239,26 @@ def test_pip_broadcast_gate_fallback_parity(spark, fix001, monkeypatch):
     assert got == want
 
 
+def test_pip_driver_cover_broadcasts_once(spark, fix001):
+    """The driver-cover path joins the cover once: its cached plan holds
+    one BroadcastExchange (splitting the candidate stream by coverage
+    broadcast the local cover twice), and it gives the oracle's pairs,
+    which the fallback test holds the distributed path to as well."""
+    import duckdb
+
+    from butterfly_osm_spark.operators import pip
+
+    points = spark.read.parquet(fix001 + "/image_geo.parquet")
+    polygons = spark.read.parquet(fix001 + "/polygons.parquet")
+    out = pip.pip_join(points, polygons)
+    cached = out._jdf.queryExecution().withCachedData()
+    assert cached.getClass().getSimpleName() == "InMemoryRelation"
+    assert cached.cachedPlan().executedPlan().toString().count("BroadcastExchange") == 1
+    got = sorted((r.point_id, r.polygon_id) for r in out.collect())
+    out.unpersist()
+    assert got == sorted(map(tuple, duckdb.sql(pip.pip_oracle_sql(fix001)).fetchall()))
+
+
 def test_pip_driver_cover_equals_distributed_cover(spark, fix001):
     """The cover pip_join builds on the driver under the gate holds exactly
     the rows of the distributed ``polygon_cover_cells``."""
