@@ -8,6 +8,12 @@ Usage:
   python bench_extra.py time <query> [<query> ...] [--passes N]
   python bench_extra.py explain <query> [...]   # writes plans/r06/<q>_<tag>.txt
   python bench_extra.py explain --tag after <query> [...]
+  python bench_extra.py jobs <query> [<query> ...]
+
+``jobs`` runs each query once (noop sink, one job group per query) and
+prints, from ``sc.statusTracker()``, the jobs it launched (its own driver
+actions included), the stages that ran (skipped stages not counted) and
+how many of those ran as a single task, per query and in total.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
 (default: the usable cores, session.default_cpus), SPARK_GRAFT_PLAN_TAG
@@ -67,6 +73,28 @@ def main() -> None:
             with open(path, "w") as f:
                 f.write(plan)
             print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)", file=sys.stderr)
+        spark.stop()
+        return
+
+    if mode == "jobs":
+        sc = spark.sparkContext
+        st = sc.statusTracker()
+        counts: dict[str, dict[str, int]] = {}
+        for name in names:
+            spark.catalog.clearCache()
+            sc.setJobGroup(f"jobs-{name}", f"jobs {name}")
+            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            jobs = st.getJobIdsForGroup(f"jobs-{name}")
+            stage_ids = {sid for j in jobs for sid in st.getJobInfo(j).stageIds}
+            ran = [i for i in map(st.getStageInfo, stage_ids) if i is not None and i.numCompletedTasks > 0]
+            counts[name] = {
+                "jobs": len(jobs),
+                "stages": len(ran),
+                "single_task_stages": sum(i.numTasks == 1 for i in ran),
+            }
+            print(f"  {name}: {counts[name]}", file=sys.stderr)
+        counts["total"] = {k: sum(c[k] for c in counts.values()) for k in ("jobs", "stages", "single_task_stages")}
+        print(json.dumps(counts))
         spark.stop()
         return
 

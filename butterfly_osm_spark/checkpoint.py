@@ -251,7 +251,6 @@ class Build:
             files = _footer_counts(tmp)
             _publish(tmp, out)
 
-        df.unpersist()  # the write has committed; no-op on an uncached frame
         meta = {
             "stage": stage.name,
             "fingerprint": fp,
@@ -444,7 +443,6 @@ class ResultCache:
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
         df.write.mode("overwrite").parquet(tmp)  # writes _SUCCESS on commit
-        df.unpersist()  # no-op if compute() returned an unpersisted frame
         if os.path.exists(path):
             shutil.rmtree(path)
         os.rename(tmp, path)

@@ -117,7 +117,6 @@ def incremental_pip(
         out = pairs.join(pt_cells, "point_id")
         shutil.rmtree(data_dir, ignore_errors=True)
         out.write.partitionBy("cell_p").mode("overwrite").parquet(data_dir)
-        pairs.unpersist()  # published to parquet; drop the cached copy
         info = {"full": True, "changed_cells": changed, "n_cells_total": len(new_fp)}
     else:
         changed = sorted(
@@ -141,7 +140,6 @@ def incremental_pip(
                 pairs = pip_join(pts_ch.drop("cell_p"), poly_ch, id_col=id_col)
                 out = pairs.join(pt_cells, "point_id")
                 out.write.partitionBy("cell_p").mode("append").parquet(data_dir)
-                pairs.unpersist()  # published to parquet; drop the cached copy
         info = {"full": False, "changed_cells": changed, "n_cells_total": len(new_fp)}
 
     tmp = fp_path + ".tmp"

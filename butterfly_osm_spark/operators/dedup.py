@@ -201,30 +201,44 @@ def lsh_band_index(documents: DataFrame) -> DataFrame:
     return _lsh_bands(_with_shingles(documents))
 
 
+def _bucket_pairs(bands: DataFrame, key: list[str], item) -> DataFrame:
+    """One row per (a, b) item pair, a.doc_id < b.doc_id, sharing a
+    bucket of ``bands`` keyed by ``key``: the items of each bucket are
+    collected once and paired inside it, so ``bands`` is evaluated once
+    (a self-join evaluates it once per side)."""
+    buckets = (
+        bands.groupBy(*key)
+        .agg(F.collect_set(item).alias("ids"))
+        .where(F.size("ids") > 1)
+    )
+    return buckets.select(
+        F.explode(
+            F.expr(
+                "filter(flatten(transform(ids, a -> transform(ids, b -> struct(a, b)))),"
+                " p -> p.a.doc_id < p.b.doc_id)"
+            )
+        ).alias("p")
+    )
+
+
 def minhash_lsh_pairs(documents: DataFrame, threshold: float = 0.5) -> DataFrame:
     """(doc_a, doc_b, jaccard) — LSH candidates verified by exact jaccard.
 
-    Scale shape: candidates come from an equi-join on (band_id, band_hash)
-    — no full cross product, no hot-shingle fan-out; bytes/text never
-    shuffle (only doc_id + 64 longs + shingle arrays of the candidates).
-
-    Caching contract: returns a PERSISTED frame (bounded: verified pairs
-    only). The corpus-sized shingle table is persisted for the duration of
-    the computation and RELEASED before returning (eager_release) — the
-    caller owns unpersisting the returned pair frame once consumed.
+    Scale shape: candidates are the doc pairs of each (band_id,
+    band_hash) bucket, formed in one ``groupBy`` over a single evaluation
+    of the bands (``minhash64`` runs once per document) — no full cross
+    product, no hot-shingle fan-out; text never shuffles. The exact
+    verify joins shingle each side again from the documents (JVM-only;
+    the Python kernel is not in those branches). Skew trade: a
+    hot bucket (n near-identical docs) is one group that emits n^2/2
+    pairs in one task, and AQE cannot split a ``groupBy`` the way it
+    splits a skewed join; banding keeps buckets small unless the corpus
+    is full of exact copies, which ``exact_dedup`` removes first.
     """
-    sh = _with_shingles(documents).persist()
-    bands = _lsh_bands(sh)
-    a = bands.alias("a")
-    b = bands.alias("b")
+    sh = _with_shingles(documents)
     cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        _bucket_pairs(_lsh_bands(sh), ["band_id", "band_hash"], F.struct("doc_id"))
+        .select(F.col("p.a.doc_id").alias("doc_a"), F.col("p.b.doc_id").alias("doc_b"))
         .distinct()
     )
     sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
@@ -232,14 +246,13 @@ def minhash_lsh_pairs(documents: DataFrame, threshold: float = 0.5) -> DataFrame
     j = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
         F.array_union("sh_a", "sh_b")
     ).cast("double")
-    out = (
+    return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn("jaccard", F.round(j, 6))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    return eager_release(out, [sh])
 
 
 # ---------------------------------------------------------------------------
@@ -272,13 +285,17 @@ def eager_release(result: DataFrame, holds: list[DataFrame]) -> DataFrame:
     """Materialize ``result`` into the block cache, then free every frame
     in ``holds`` — both plain ``persist``-ed frames (unpersist) and
     ``localCheckpoint``-ed label tables (release_checkpoint; the cache
-    manager never sees those blocks, see connected_components). This is
-    the knn_join caching contract generalized: an operator that persists
-    corpus-sized intermediates MUST NOT park them for the session — it
-    returns ONE bounded persisted frame, and the CALLER owns releasing
-    that frame (``.unpersist()`` once consumed, or clearCache as bench.py
-    does). Closes the minhash/simhash shingle-persist leak class
-    (VERDICT r4 "What's wrong #1")."""
+    manager never sees those blocks, see connected_components). The
+    CALLER owns releasing the returned frame (``.unpersist()`` once
+    consumed, or clearCache as bench.py does).
+
+    The rule: an operator whose plan is read once returns it lazy and
+    caches nothing. Only a result built from a frame that is costly to
+    rebuild and must be freed before returning comes through here: a
+    label-loop checkpoint, which ``clearCache`` cannot reach (connected
+    components and its callers, the graph loops, ``cell_compact``), or a
+    Python-kernel output the plan reads twice (``zonal_stats``'s decoded
+    samples)."""
     out = result.persist()
     out.count()
     for h in holds:
@@ -449,18 +466,17 @@ def dedup_clusters(documents: DataFrame, threshold: float = 0.5) -> DataFrame:
     decision per document, computed distributively (no driver-side
     union-find over collected pairs — the classic scale-killer).
 
-    Caching contract: returns ONE persisted O(|docs|) frame; the pair
-    frame (persisted by minhash_lsh_pairs) and the CC labels checkpoint
-    are both released before returning. Caller unpersists the result."""
-    pairs_full = minhash_lsh_pairs(documents, threshold)
-    pairs = pairs_full.select("doc_a", "doc_b")
+    Caching contract: returns ONE persisted O(|docs|) frame; the CC
+    labels checkpoint is released before returning. Caller unpersists
+    the result."""
+    pairs = minhash_lsh_pairs(documents, threshold).select("doc_a", "doc_b")
     labels, _ = connected_components(pairs, documents.select("doc_id"))
     out = labels.select(
         F.col("id").alias("doc_id"),
         F.col("lab").alias("cluster_id"),
         (F.col("id") == F.col("lab")).alias("is_keeper"),
     )
-    return eager_release(out, [pairs_full, labels])
+    return eager_release(out, [labels])
 
 
 def incremental_dedup(
@@ -827,14 +843,12 @@ def simhash64(word_hashes: pd.Series) -> pd.Series:
 
 def simhash_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
     """(doc_a, doc_b, hamming) pairs with simhash hamming <= max_hamming.
-    Band join on 4x16-bit chunks guarantees completeness for hamming <= 3.
-
-    Caching contract: returns a PERSISTED frame (bounded pair output);
-    the per-doc sketch table is released before returning (eager_release)
-    — the caller unpersists the returned frame once consumed."""
-    sh = documents.select(
-        "doc_id", simhash64(F.expr(_HASH_WORDS)).alias("sim")
-    ).persist()
+    Band buckets on 4x16-bit chunks guarantee completeness for hamming
+    <= 3. Each bucket collects its (doc_id, sim) structs, so
+    ``simhash64`` runs once per document and the hamming distance needs
+    no second read; a hot bucket is one task (the ``minhash_lsh_pairs``
+    skew trade)."""
+    sh = documents.select("doc_id", simhash64(F.expr(_HASH_WORDS)).alias("sim"))
     bands = sh.select(
         "doc_id",
         "sim",
@@ -850,24 +864,16 @@ def simhash_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
             )
         ).alias("bb"),
     ).select("doc_id", "sim", F.col("bb.band_id").alias("band_id"), F.col("bb.chunk").alias("chunk"))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    out = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+    return (
+        _bucket_pairs(bands, ["band_id", "chunk"], F.struct("doc_id", "sim"))
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a.sim").bitwiseXOR(F.col("b.sim"))).alias("hamming"),
+            F.col("p.a.doc_id").alias("doc_a"),
+            F.col("p.b.doc_id").alias("doc_b"),
+            F.bit_count(F.col("p.a.sim").bitwiseXOR(F.col("p.b.sim"))).alias("hamming"),
         )
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
-    return eager_release(out, [sh])
 
 
 def simhash_oracle_sql(max_hamming: int = 3) -> str:
@@ -909,17 +915,16 @@ def simhash_clusters(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
     materialization (pairs alone force the user into a driver-side
     union-find — the classic scale-killer).
 
-    Caching contract: dedup_clusters' — one persisted result, the pair
-    frame and the labels checkpoint released before returning."""
-    pairs_full = simhash_pairs(documents, max_hamming)
-    pairs = pairs_full.select("doc_a", "doc_b")
+    Caching contract: dedup_clusters' — one persisted result, the labels
+    checkpoint released before returning."""
+    pairs = simhash_pairs(documents, max_hamming).select("doc_a", "doc_b")
     labels, _ = connected_components(pairs, documents.select("doc_id"))
     out = labels.select(
         F.col("id").alias("doc_id"),
         F.col("lab").alias("cluster_id"),
         (F.col("id") == F.col("lab")).alias("is_keeper"),
     )
-    return eager_release(out, [pairs_full, labels])
+    return eager_release(out, [labels])
 
 
 def simhash_clusters_oracle_sql(max_hamming: int = 3) -> str:

@@ -430,9 +430,11 @@ def zonal_stats(raster_tiles: DataFrame, polygons: DataFrame) -> DataFrame:
     proven J8 path (cover-cell equi-join + salted raycast refinement);
     the final aggregate shuffles polygon-keyed SCALARS. min/max/sum are
     exact integer arithmetic (i16 samples), the single mean division is
-    rounded to 3 dp. Returns ONE persisted polygon-sized frame; the
-    sample frame is released before returning (caller unpersists the
-    result)."""
+    rounded to 3 dp. The decoded samples are persisted because the plan
+    reads them twice (pip's probe side and the value join) and decoding
+    is a Python kernel; the result is ONE persisted polygon-sized frame,
+    the sample frame is released before returning (caller unpersists
+    the result)."""
     from .dedup import eager_release
     from .pip import pip_join
 
@@ -457,7 +459,7 @@ def zonal_stats(raster_tiles: DataFrame, polygons: DataFrame) -> DataFrame:
             ).alias("mean_elev"),
         )
     )
-    return eager_release(out, [pts, hits])  # pip_join returns a persisted frame
+    return eager_release(out, [pts])
 
 
 def zonal_stats_oracle_sql(fix: str) -> str:

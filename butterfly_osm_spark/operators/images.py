@@ -437,12 +437,9 @@ def phash_knn(images: DataFrame, k: int = PHKNN_K, qmod: int = PHKNN_QMOD) -> Da
     256 at a time to bound the XOR matrix), emitting k rows per query
     per batch; ONE window exchange then merges the Q x k x n_batches
     partials. Only (id, phash) project out of the scan — image bytes are
-    never read (ReadSchema-pruned like phash_neardup).
-
-    Caching contract (as ``pip_join``): the result (Q x k rows) is
-    materialized and returned persisted, so the query broadcast leaves
-    the executors before the call returns; callers that loop for a
-    session lifetime unpersist the result when consumed.
+    never read (ReadSchema-pruned like phash_neardup). The query arrays
+    ride in the kernel's closure (as ``pip_join``'s edge arrays), so the
+    result is a lazy plan with nothing to release.
     """
     from pyspark.sql import Window
 
@@ -453,9 +450,8 @@ def phash_knn(images: DataFrame, k: int = PHKNN_K, qmod: int = PHKNN_QMOD) -> Da
     # the query batch is ~|corpus|/qmod rows of (string id + 8-byte hash)
     # — id strings dominate the footprint, not the hashes. Guard the
     # request-batch assumption before the batch reaches the driver: collect
-    # at most one row past the bound. The arrays then ship as ONE torrent
-    # broadcast instead of being re-serialized into every task closure
-    # (ADVICE r5).
+    # at most one row past the bound. PySpark ships the kernel's closure
+    # as a broadcast for the plan's lifetime once it passes 1 MB.
     queries = ph.filter(key % qmod == 0).limit(PHKNN_MAX_QUERIES + 1).collect()
     if len(queries) > PHKNN_MAX_QUERIES:
         raise ValueError(
@@ -463,14 +459,12 @@ def phash_knn(images: DataFrame, k: int = PHKNN_K, qmod: int = PHKNN_QMOD) -> Da
             f"({PHKNN_MAX_QUERIES} rows) — raise qmod so the batch stays "
             "request-sized, or shard the query set"
         )
-    q_ids_l = np.array([q.image_id for q in queries])
-    q_ph_l = np.array([q.phash for q in queries], dtype=np.int64).view(np.uint64)
-    bc = images.sparkSession.sparkContext.broadcast((q_ids_l, q_ph_l))
+    q_ids = np.array([q.image_id for q in queries])
+    q_ph = np.array([q.phash for q in queries], dtype=np.int64).view(np.uint64)
 
     schema = "query_id string, neighbor_id string, hamming int"
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids, q_ph = bc.value
         if len(q_ids) == 0:
             return
         for pdf in batches:
@@ -497,17 +491,11 @@ def phash_knn(images: DataFrame, k: int = PHKNN_K, qmod: int = PHKNN_QMOD) -> Da
 
     part = ph.mapInPandas(partials, schema)
     w = Window.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc("neighbor_id"))
-    out = (
+    return (
         part.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", F.col("rank").cast("int").alias("rank"), "neighbor_id", "hamming")
-        .persist()
     )
-    out.count()
-    # executors drop their copies of the query batch; the driver keeps it,
-    # so a recompute of ``out`` (lost block, caller unpersist) still works
-    bc.unpersist(blocking=False)
-    return out
 
 
 def phash_knn_oracle_sql(fix: str, k: int = PHKNN_K, qmod: int = PHKNN_QMOD) -> str:

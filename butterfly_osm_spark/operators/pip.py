@@ -25,17 +25,21 @@ picks one of two paths before anything is collected, against
   as Arrow; the cover is computed on the driver with the same numpy math
   and joined as a local broadcast relation (no repartition, no
   ``applyInPandas`` gather, no cover persist); the closed edge arrays
-  ship as one broadcast, and one vectorized numpy kernel in
-  ``mapInPandas`` over the single cover join passes ``full`` candidates
-  and ray-casts ``partial`` ones in place — no exchange;
+  ride in the refine kernel's closure (the knn grid arrays' way), and
+  one vectorized numpy kernel in ``mapInPandas`` over the single cover
+  join passes ``full`` candidates and ray-casts ``partial`` ones in
+  place — no exchange;
 - unbounded polygon sets (nothing may be collected to the driver): the
-  cover is computed per polygon in an ``applyInPandas`` gather, the
-  cover join shuffles on cell_id, the candidates shuffle-join
-  per-polygon edge arrays and the even-odd parity
+  cover is computed per polygon in an ``applyInPandas`` gather and read
+  once, by a cover join that shuffles on cell_id; the candidates
+  shuffle-join per-polygon edge arrays and the even-odd parity
   (``size(filter(edges, crossing)) % 2``) is a JVM higher-order
   expression — no Python boundary, but evaluated per element, so slower
   where both can run (OPTIMIZATION_r06: min 5.44 s vs 3.68 s for the
   numpy refine on pip_images).
+
+Both paths return a lazy plan: nothing is cached, broadcast by hand or
+left to release.
 
 The ray-cast uses the exact expression ``px < (x2-x1)*(py-y1)/(y2-y1)+x1``
 in float64 so the DuckDB oracle (same expression in SQL) matches
@@ -220,14 +224,15 @@ def pip_join(
     (request-sized polygon sets) the rings are collected once as Arrow,
     the cover is computed on the driver (``_driver_cover``) and joined as
     a local broadcast relation, and a shuffle-free ``mapInPandas`` refines
-    the candidate stream with the polygon edge arrays shipped once per
-    executor via ``sc.broadcast``. Past it (unbounded polygon sets,
+    the candidate stream with the polygon edge arrays in its closure.
+    Past it (unbounded polygon sets,
     nothing may be collected) the cover is computed distributed
     (``polygon_cover_cells``), the cover join shuffles on cell_id and the
     refine joins per-polygon edge arrays and evaluates the even-odd
     parity as a JVM higher-order expression. Both paths use the exact
     float64 op order of the SQL oracle (``(x2-x1)*(py-y1)/(y2-y1)+x1``),
-    so results stay bit-exact (parity pytest covers the fallback)."""
+    so results stay bit-exact (parity pytest covers the fallback). The
+    result is a lazy plan with nothing to release."""
     n_polygons, n_vertices = polygons.select(
         F.count(F.lit(1)), F.coalesce(F.sum(F.size("ring")), F.lit(0))
     ).first()
@@ -244,14 +249,14 @@ def pip_join(
     else:
         # unbounded polygon set: distributed cover, shuffle join on cell_id
         # (cover is bounded per polygon by MAX_COVER_CELLS but NOT in
-        # polygon count)
-        cover = polygon_cover_cells(polygons).persist()
-        res_list = sorted(r["res"] for r in cover.select("res").distinct().collect())
-        cov_sel = cover.select("cell_id", "polygon_id", "coverage")
+        # polygon count). Points probe every resolution the cover can
+        # use, so the cover is read once, by the join.
+        res_list = range(MIN_RES, MAX_RES + 1)
+        cov_sel = polygon_cover_cells(polygons).select("cell_id", "polygon_id", "coverage")
 
     # ONE point scan + ONE cover join: each point emits its cell id at
-    # every resolution present in the cover (res is packed inside the id,
-    # so distinct resolutions can never collide on the join key). Fan-out
+    # every resolution in res_list (res is packed inside the id, so
+    # distinct resolutions can never collide on the join key). Fan-out
     # is |res_list| <= 7, vs the previous per-res scan+join+union chain.
     pts = points.select(
         F.col(id_col).alias("point_id"),
@@ -266,9 +271,10 @@ def pip_join(
     )
 
     if local:
-        # request-sized polygon set: ship the closed edge arrays to every
-        # task as ONE torrent broadcast (not a per-task closure) and
-        # refine the candidate stream in-place — mapInPandas directly over
+        # request-sized polygon set: the closed edge arrays ride in the
+        # kernel's closure (PySpark ships a closure past 1 MB as a
+        # broadcast for the plan's lifetime) and the kernel refines the
+        # candidate stream in-place — mapInPandas directly over
         # the broadcast cover join output, so the refine path adds ZERO
         # exchanges and no per-polygon task skew (any task refines any
         # polygon's rows). ``full`` rows pass as they are and only
@@ -276,10 +282,7 @@ def pip_join(
         # stream by coverage in the plan instead makes the optimizer push
         # each filter into the local cover relation and broadcast it twice
         # (two jobs).
-        bc = points.sparkSession.sparkContext.broadcast(edge_map)
-
         def refine_stream(batches):
-            em = bc.value
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
@@ -294,7 +297,7 @@ def pip_join(
                 py = pdf["py"].to_numpy(np.float64)[rows]
                 for k, pid in enumerate(pids):
                     g = slice(bounds[k], bounds[k + 1])
-                    keep[rows[g]] = _raycast_np(px[g], py[g], *em[pid])
+                    keep[rows[g]] = _raycast_np(px[g], py[g], *edge_map[pid])
                 yield pdf.loc[keep, ["point_id", "polygon_id"]]
 
         pairs = cand.mapInPandas(refine_stream, schema="point_id string, polygon_id string")
@@ -302,14 +305,12 @@ def pip_join(
         # unbounded polygon set: no driver-side collect — shuffle-join the
         # candidates to per-polygon edge arrays (built by ``transform``
         # over the ring, zero shuffles) and evaluate the even-odd parity
-        # as a JVM higher-order expression. Same float64 op order as the
-        # numpy kernel/oracle; NaN/Inf from a horizontal edge (y2 == y1)
-        # is neutralized by the conjunction exactly as in numpy (cond is
-        # false whenever y1 == y2).
-        full_hits = cand.filter(F.col("coverage") == "full").select("point_id", "polygon_id")
-        partial = cand.filter(F.col("coverage") == "partial").select(
-            "point_id", "px", "py", "polygon_id"
-        )
+        # as a JVM higher-order expression for ``partial`` rows only
+        # (``full`` rows short-circuit the OR). One candidate stream: split
+        # by coverage, each branch would rerun the cover kernel. Same
+        # float64 op order as the numpy kernel/oracle; NaN/Inf from a
+        # horizontal edge (y2 == y1) is neutralized by the conjunction
+        # exactly as in numpy (cond is false whenever y1 == y2).
         n_ring = F.size("ring")
         nxt = lambda i: ((i + F.lit(1)) % n_ring) + F.lit(1)  # noqa: E731
         edges_arr = F.transform(
@@ -328,28 +329,12 @@ def pip_join(
             xint = (e["x2"] - e["x1"]) * (F.col("py") - e["y1"]) / (e["y2"] - e["y1"]) + e["x1"]
             return cond & (F.col("px") < xint)
 
-        refined = (
-            partial.join(poly_edges, "polygon_id")
-            .filter(F.size(F.filter("edges", _crossing)) % 2 == 1)
+        pairs = (
+            cand.join(poly_edges, "polygon_id")
+            .filter((F.col("coverage") == "full") | (F.size(F.filter("edges", _crossing)) % 2 == 1))
             .select("point_id", "polygon_id")
         )
-        pairs = full_hits.unionByName(refined)
-    # materialize the pair result once (cached), then release the edge-map
-    # broadcast or the distributed cover — repeated pip_join callers
-    # (warm-cache misses, incremental refreshes) previously pinned one
-    # cover RDD per call for the session lifetime, the same leak class the
-    # knn phase partials had. The returned frame stays cached (bounded:
-    # one row per (point, polygon) hit); callers that loop for a session
-    # lifetime should unpersist it when consumed.
-    out = pairs.withColumnRenamed("point_id", out_id).persist()
-    out.count()
-    if local:
-        # drop the executor copies of the edge map; the driver keeps it,
-        # so a recompute of ``out`` (lost block, caller unpersist) still works
-        bc.unpersist(blocking=False)
-    else:
-        cover.unpersist()
-    return out
+    return pairs.withColumnRenamed("point_id", out_id)
 
 
 def pip_oracle_sql(fix: str, point_table: str = "image_geo", id_col: str = "image_id", out_id: str = "point_id") -> str:

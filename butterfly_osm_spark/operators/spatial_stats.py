@@ -36,7 +36,10 @@ Scale shape (100 TB): both operators reduce the corpus to the occupied
 CELL VOCABULARY with one partial-aggregated groupBy (the tile_pyramid
 posture); all adjacency work — a bounded 8-offset explode + cell-equi
 self-join — runs on that vocabulary, never on raw rows. No UDFs, no
-driver traffic beyond the single result row.
+driver traffic beyond the single result row. Both return a lazy plan and
+cache nothing; the plan builds the vocabulary twice (two scans of the two
+coordinate columns), because the join sides carry an inferred not-null
+filter that keeps them from sharing one exchange with the count side.
 """
 
 from __future__ import annotations
@@ -78,7 +81,7 @@ def cell_triangles(nodes: DataFrame, res: int = STAT_RES) -> DataFrame:
     once; triangles close wedges with two more vocabulary-sized
     equi-joins. Max degree 8 bounds every fan-out.
     """
-    occ = _occ_xy(nodes, res).distinct().persist()
+    occ = _occ_xy(nodes, res).distinct()
     offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)]
     nbr = occ.select(
         "x",
@@ -96,7 +99,6 @@ def cell_triangles(nodes: DataFrame, res: int = STAT_RES) -> DataFrame:
         nbr.join(occ, (nbr.bx == occ.x) & (nbr.by == occ.y))
         .select("ax", "ay", "bx", "by")
         .filter((F.col("ax") < F.col("bx")) | ((F.col("ax") == F.col("bx")) & (F.col("ay") < F.col("by"))))
-        .persist()
     )
     deg = (
         edges.select(F.col("ax").alias("x"), F.col("ay").alias("y"))
@@ -129,7 +131,7 @@ def cell_triangles(nodes: DataFrame, res: int = STAT_RES) -> DataFrame:
     ).crossJoin(
         deg.agg(F.expr("sum(deg * (deg - 1) div 2)").alias("n_wedges"))
     ).crossJoin(tri)
-    out = counts.select(
+    return counts.select(
         "n_cells",
         "n_edges",
         "n_wedges",
@@ -138,9 +140,6 @@ def cell_triangles(nodes: DataFrame, res: int = STAT_RES) -> DataFrame:
             3.0 * F.col("n_triangles").cast("double") / F.col("n_wedges").cast("double"), 6
         ).alias("global_cc"),
     )
-    from .dedup import eager_release
-
-    return eager_release(out, [occ, edges])
 
 
 def cell_triangles_oracle_sql(fix: str, res: int = STAT_RES) -> str:
@@ -179,7 +178,7 @@ def morans_i(nodes: DataFrame, res: int = STAT_RES) -> DataFrame:
     """One row: (n_cells, w_sum, morans_i) — Moran's I of per-cell node
     counts under rook adjacency over occupied cells (see module doc for
     the exact-integer expansion)."""
-    cnt = _occ_xy(nodes, res).groupBy("x", "y").agg(F.count(F.lit(1)).alias("v")).persist()
+    cnt = _occ_xy(nodes, res).groupBy("x", "y").agg(F.count(F.lit(1)).alias("v"))
     rook = [(-1, 0), (1, 0), (0, -1), (0, 1)]
     nbr = cnt.select(
         "x",
@@ -207,7 +206,7 @@ def morans_i(nodes: DataFrame, res: int = STAT_RES) -> DataFrame:
         F.expr("sum(vi + vj)").alias("q"),
     )
     # one-row combine in DECIMAL(38,0): n^2 * P etc. exceed BIGINT at sf4
-    out = per_cell.crossJoin(per_pair).selectExpr(
+    return per_cell.crossJoin(per_pair).selectExpr(
         "n AS n_cells",
         "w AS w_sum",
         """round(
@@ -218,9 +217,6 @@ def morans_i(nodes: DataFrame, res: int = STAT_RES) -> DataFrame:
                 CAST(CAST(n AS DECIMAL(18,0)) * n * d2 - CAST(n AS DECIMAL(18,0)) * s * s AS DOUBLE)),
            6) AS morans_i""",
     )
-    from .dedup import eager_release
-
-    return eager_release(out, [cnt])
 
 
 def morans_i_oracle_sql(fix: str, res: int = STAT_RES) -> str:

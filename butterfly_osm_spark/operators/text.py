@@ -557,29 +557,24 @@ def unigram_logprob(documents: DataFrame, top_k: int = LM_TOP_K) -> DataFrame:
     a top-``top_k`` vocabulary (rank by count desc, word asc); words
     outside the vocabulary score the OOV floor ln(1/total_tokens).
 
-    Scale shape (100 TB): the corpus is touched by exactly TWO tokenize
-    passes — the vocabulary-count aggregate (partial aggs make the
-    exchange vocabulary-sized x partitions; the top-K cap bounds the
-    trained model regardless of the raw tail) and the scoring pass (the
-    per-doc sum shuffles doc_id-keyed SCALARS, text never moves). The
-    vocabulary aggregate is persisted once (vocabulary-sized) and feeds
-    the model rank window, the OOV floor, and the broadcast scoring side;
-    the only driver traffic is the 1-row total-token count (the
-    kmeans_train model-sized-collect discipline). Returns ONE persisted
-    O(|docs|) scalar frame; the vocab cache is released before returning
-    (``eager_release``); caller unpersists the result.
+    Scale shape (100 TB): the corpus is tokenized three times — the
+    1-row total-token count (a map-side count, no shuffle; the only
+    driver traffic, the kmeans_train model-sized-collect discipline),
+    then in the returned plan the vocabulary-count
+    aggregate (partial aggs make the exchange vocabulary-sized x
+    partitions; the top-K cap bounds the trained model regardless of the
+    raw tail) and the scoring pass (the per-doc sum shuffles
+    doc_id-keyed SCALARS, text never moves).
 
     Cross-engine float discipline: each word's log-prob is quantised ONCE
     to integer micro-nats (round(ln(p) * 1e6) — the P11 fixed-point
     pattern), so per-doc sums are exact BIGINT arithmetic, immune to
     float summation order across partitions/engines; the only doubles
     are one division at the end, rounded to 6 dp."""
-    from .dedup import eager_release
-
     toks = documents.select("doc_id", F.split(F.trim("text"), " ").alias("ws"))
     words = toks.select("doc_id", F.explode("ws").alias("w"))
-    vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt")).persist()
-    total = vocab.agg(F.sum("cnt")).collect()[0][0]  # ONE scalar
+    vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
+    total = words.count()  # ONE scalar: the token count, sum(cnt) of vocab
     oov_micro = int(round(math.log(1.0 / total) * 1e6))
     ranked = (
         vocab.withColumn(
@@ -596,14 +591,13 @@ def unigram_logprob(documents: DataFrame, top_k: int = LM_TOP_K) -> DataFrame:
     scored = words.join(F.broadcast(ranked), "w", "left").select(
         "doc_id", F.coalesce("lp_micro", F.lit(oov_micro)).alias("lp")
     )
-    out = scored.groupBy("doc_id").agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum("lp").alias("logprob_micro"),
         F.round(
             F.sum("lp").cast("double") / 1e6 / F.count(F.lit(1)).cast("double"), 6
         ).alias("avg_logprob"),
     )
-    return eager_release(out, [vocab])
 
 
 def unigram_logprob_oracle_sql(top_k: int = LM_TOP_K) -> str:
@@ -653,14 +647,9 @@ def perplexity_buckets(
     per-token mean >= cut, with zero floating point anywhere in the
     decision), else ``middle`` at the mid cut, else ``tail`` — so the
     boundary can never flip between engines. Scale shape: inherits
-    unigram_logprob's two corpus passes; the bucket projection is
-    map-side over the doc-keyed scalar frame. Returns ONE persisted
-    O(|docs|) frame (the inner LM-score frame is released before
-    returning); caller unpersists the result."""
-    from .dedup import eager_release
-
-    scores = unigram_logprob(documents)
-    out = scores.select(
+    unigram_logprob's corpus passes; the bucket projection is map-side
+    over the doc-keyed scalar frame."""
+    return unigram_logprob(documents).select(
         "doc_id",
         "n_tokens",
         "avg_logprob",
@@ -675,7 +664,6 @@ def perplexity_buckets(
         .otherwise(F.lit("tail"))
         .alias("bucket"),
     )
-    return eager_release(out, [scores])
 
 
 def perplexity_buckets_oracle_sql(
@@ -708,22 +696,19 @@ def tfidf_top_terms(documents: DataFrame, top_k: int = TFIDF_TOP_K) -> DataFrame
     Cross-engine exactness: idf = ln(N / df) is quantised ONCE to integer
     micro-nats (the unigram_logprob / P11 fixed-point pattern), so the
     ranking score tf x idf_micro is exact BIGINT arithmetic — no float in
-    any comparison. Scale shape: TWO corpus tokenize passes fused into
-    one aggregate — tf = count per (doc_id, term) is ONE corpus-sized
-    partial+final aggregate, and df derives from tf's output (distinct
-    docs per term = vocabulary-sized second-stage aggregate, corpus never
-    re-read); the idf model (vocabulary-sized) broadcasts onto tf; the
-    top-k window partitions by doc_id (doc-keyed, never global). The only
-    driver traffic is the 1-row corpus doc count."""
+    any comparison. Scale shape: tf = count per (doc_id, term) is a
+    corpus-sized partial+final aggregate, and df derives from its output
+    (distinct docs per term = vocabulary-sized second-stage aggregate);
+    the returned plan runs the tf aggregate twice, once per use, because
+    the df side prunes its count and so cannot share the exchange. The
+    idf model (vocabulary-sized) broadcasts onto tf; the top-k window
+    partitions by doc_id (doc-keyed, never global). The only driver
+    traffic is the 1-row corpus doc count."""
     n_docs = documents.count()  # ONE scalar
     words = documents.select(
         "doc_id", F.explode(F.split(F.trim("text"), " ")).alias("term")
     )
-    tf = (
-        words.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
-    )
+    tf = words.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     idf = tf.groupBy("term").agg(
         F.round(
             F.ln(F.lit(float(n_docs)) / F.count(F.lit(1)).cast("double")) * 1e6, 0
@@ -737,14 +722,11 @@ def tfidf_top_terms(documents: DataFrame, top_k: int = TFIDF_TOP_K) -> DataFrame
     w = Window.partitionBy("doc_id").orderBy(
         F.desc("score_micro"), F.asc("term")
     )
-    out = (
+    return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= top_k)
         .select("doc_id", F.col("rank").cast("int").alias("rank"), "term", "tf", "score_micro")
     )
-    from .dedup import eager_release
-
-    return eager_release(out, [tf])
 
 
 def tfidf_top_terms_oracle_sql(top_k: int = TFIDF_TOP_K) -> str:
@@ -802,7 +784,6 @@ def pmi_collocations(documents: DataFrame, min_pair: int = PMI_MIN_PAIR) -> Data
         toks.select(F.explode("ws").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
     )
     pairs_all = (
         toks.filter(F.size("ws") >= 2)
@@ -812,9 +793,12 @@ def pmi_collocations(documents: DataFrame, min_pair: int = PMI_MIN_PAIR) -> Data
             ).alias("b")
         )
         .select("b.w1", "b.w2")
+        # never null (in-bounds elements of a split); stated so that the
+        # join's inferred not-null filter leaves both uses of this
+        # aggregate identical and the plan shares its exchange
+        .where(F.col("w1").isNotNull() & F.col("w2").isNotNull())
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("pair_cnt"))
-        .persist()
     )
     pairs = pairs_all.filter(F.col("pair_cnt") >= min_pair)
     # b_total folds out of the unfiltered pair vocabulary — the corpus is
@@ -824,7 +808,7 @@ def pmi_collocations(documents: DataFrame, min_pair: int = PMI_MIN_PAIR) -> Data
     )
     ca = uni.select(F.col("w").alias("w1"), F.col("cnt").alias("ca_cnt"))
     cb = uni.select(F.col("w").alias("w2"), F.col("cnt").alias("cb_cnt"))
-    out = (
+    return (
         pairs.join(ca, "w1")
         .join(cb, "w2")
         .crossJoin(totals)
@@ -840,9 +824,6 @@ def pmi_collocations(documents: DataFrame, min_pair: int = PMI_MIN_PAIR) -> Data
             " AS DOUBLE) / 1000000, 6) AS pmi",
         )
     )
-    from .dedup import eager_release
-
-    return eager_release(out, [uni, pairs_all])
 
 
 def pmi_collocations_oracle_sql(min_pair: int = PMI_MIN_PAIR) -> str:

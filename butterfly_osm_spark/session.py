@@ -9,14 +9,18 @@ Cached plans coalesce too. Spark's default keeps a persisted plan's
 output partitioning (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
 is false), so AQE never coalesces the final shuffle of a ``persist``-ed
 result: every one of the shuffle partitions becomes a task when the
-cache is written and again each time it is read. Operators persist
-small intermediates all over (``dedup.eager_release`` and its callers,
-the graph and text loops), so the package lets AQE size them by bytes
-like any other stage. In a traced perfbench ``raster_dedup`` run
-(sf0.001, 4-core x86-64 VM, 32 shuffle partitions) ``minhash_lsh`` went
-from 105 tasks to 11 for its 25-row result and its scheduler wait from
-17.7 s to 0.2 s; ``snap_build``'s cached plans end in no shuffle, and
-its job and task counts outside pip did not move.
+cache is written and again each time it is read. Single-pass operators
+return lazy plans and cache nothing; what still persists is label-loop
+state and the results built on it (``dedup.connected_components`` and
+its callers: the dedup and embedding clusters, ``cell_regions``,
+``dbscan_hotspots``; the graph loops: ``bfs_hops``, ``isochrone_ms``,
+``pagerank``, ``kcore_peel``, ``time_matrix``, ``route_paths``;
+``tiles.cell_compact``), ``zonal_stats``'s decoded samples, the kNN ring
+loop, BPE merges and k-means. The package lets AQE size those by bytes
+like any other stage. When ``minhash_lsh`` still persisted its pairs,
+a traced perfbench ``raster_dedup`` run (sf0.001, 4-core x86-64 VM, 32
+shuffle partitions) went from 105 tasks to 11 for its 25-row result and
+its scheduler wait from 17.7 s to 0.2 s.
 
 Resources come from the host, not from constants: ``local[N]`` takes N
 from the cores this process may run on (``os.sched_getaffinity``) and
@@ -421,9 +425,13 @@ def get_spark(
         # zstd cold-section compression analog (route/src/formats/zstd_compress.rs).
         .config("spark.sql.parquet.compression.codec", "zstd")
         # scan-split size: at fixture scale the default 128 MB puts whole
-        # tables in one scan task; 4 MB exposes row-group parallelism. On a
-        # real 100 TB deployment this goes back to 128-256 MB (the R13
-        # cache-aware tile-size analog — sized to the data, not hardcoded).
+        # tables in one scan task; 4 MB splits files larger than 4 MB by
+        # row group. A smaller file is still one task whatever its row
+        # groups: spark.sql.files.openCostInBytes (default 4 MB) keeps the
+        # split size at or above 4 MB (sf0.1 image_geo.parquet, 3.6 MB in
+        # 13 row groups, scans in one task). On a real 100 TB deployment
+        # this goes back to 128-256 MB (the R13 cache-aware tile-size
+        # analog — sized to the data, not hardcoded).
         .config("spark.sql.files.maxPartitionBytes", os.environ.get("SPARK_GRAFT_MAX_PART", "4m"))
         # Deterministic timezone-free behavior.
         .config("spark.sql.session.timeZone", "UTC")

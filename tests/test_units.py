@@ -240,8 +240,8 @@ def test_pip_broadcast_gate_fallback_parity(spark, fix001, monkeypatch):
 
 
 def test_pip_driver_cover_broadcasts_once(spark, fix001):
-    """The driver-cover path joins the cover once: its cached plan holds
-    one BroadcastExchange (splitting the candidate stream by coverage
+    """The driver-cover path joins the cover once: its plan holds one
+    BroadcastExchange (splitting the candidate stream by coverage
     broadcast the local cover twice), and it gives the oracle's pairs,
     which the fallback test holds the distributed path to as well."""
     import duckdb
@@ -251,11 +251,8 @@ def test_pip_driver_cover_broadcasts_once(spark, fix001):
     points = spark.read.parquet(fix001 + "/image_geo.parquet")
     polygons = spark.read.parquet(fix001 + "/polygons.parquet")
     out = pip.pip_join(points, polygons)
-    cached = out._jdf.queryExecution().withCachedData()
-    assert cached.getClass().getSimpleName() == "InMemoryRelation"
-    assert cached.cachedPlan().executedPlan().toString().count("BroadcastExchange") == 1
+    assert out._jdf.queryExecution().executedPlan().toString().count("BroadcastExchange") == 1
     got = sorted((r.point_id, r.polygon_id) for r in out.collect())
-    out.unpersist()
     assert got == sorted(map(tuple, duckdb.sql(pip.pip_oracle_sql(fix001)).fetchall()))
 
 
@@ -327,40 +324,35 @@ def test_pip_huge_rings_take_the_fallback(spark, monkeypatch):
     assert len(want) > 100
 
 
-def test_repeated_calls_unpersist_their_broadcasts(spark, fix001, monkeypatch):
-    """pip_join (edge map) and phash_knn (query batch) unpersist the
-    broadcast they ship once their result is materialized, so three calls
-    pin no more executor copies than one, and a released result still
-    recomputes (the driver keeps its copy). Watched by spying: under
-    local[*] the driver's block manager is the only one, and unpersist
-    never drops the driver's copy, so block counts cannot show it here."""
-    from pyspark.core.broadcast import Broadcast
-
+def test_repeated_calls_ship_no_broadcast_and_cache_nothing(spark, fix001, monkeypatch):
+    """pip_join (edge map), phash_knn (query batch) and knn_join's grid
+    path (sorted target arrays) return lazy plans: their driver-built
+    arrays ride in the kernel closure, so three calls of each make no
+    ``sc.broadcast`` call, persist no RDD, and a result counted twice
+    gives the same count (each count re-runs the plan)."""
     from butterfly_osm_spark.operators.images import phash_knn
+    from butterfly_osm_spark.operators.knn import knn_join
     from butterfly_osm_spark.operators.pip import pip_join
 
     from .conftest import persistent_rdd_ids
 
     sc = spark.sparkContext
-    shipped, released = [], []
-    ship, unpersist = sc.broadcast, Broadcast.unpersist
-    monkeypatch.setattr(sc, "broadcast", lambda value: shipped.append(ship(value)) or shipped[-1])
-    monkeypatch.setattr(
-        Broadcast, "unpersist", lambda self, blocking=False: released.append(self) or unpersist(self, blocking)
-    )
+    shipped = []
+    ship = sc.broadcast
+    monkeypatch.setattr(sc, "broadcast", lambda value: shipped.append(1) or ship(value))
     points = spark.read.parquet(fix001 + "/image_geo.parquet")
     polygons = spark.read.parquet(fix001 + "/polygons.parquet")
     images = spark.read.parquet(fix001 + "/images.parquet")
+    queries = spark.read.parquet(fix001 + "/query_points.parquet")
+    nodes = spark.read.parquet(fix001 + "/osm_nodes.parquet")
     before = persistent_rdd_ids(spark)
     for _ in range(3):
-        for out in (pip_join(points, polygons), phash_knn(images)):
+        for out in (pip_join(points, polygons), phash_knn(images), knn_join(queries, nodes)):
             n = out.count()
             assert n > 0
-            out.unpersist()
             assert out.count() == n
-    assert len(shipped) == 6
-    assert {id(b) for b in shipped} <= {id(b) for b in released}
-    assert not (persistent_rdd_ids(spark) - before), "a released result stayed cached"
+    assert not shipped, f"{len(shipped)} sc.broadcast calls"
+    assert not (persistent_rdd_ids(spark) - before), "a lazy operator cached an RDD"
 
 
 def _knn_paths(knn, monkeypatch):
@@ -653,6 +645,7 @@ def test_dedup_pipeline_releases_all_caches(spark):
 
     pairs = simhash_pairs(docs)
     pairs.count()
+    assert sc.getPersistentRDDs().size() == before, "simhash_pairs cached a frame"
     assert sc.getPersistentRDDs().size() - before <= 1
     pairs.unpersist()
     assert sc.getPersistentRDDs().size() == before, "simhash_pairs leaked caches"
@@ -725,6 +718,7 @@ def test_round5_cluster_ops_invariants_and_release(spark, fix001):
     lrows = lm.collect()
     assert len(lrows) == docs.count()  # one row per doc, no short-doc drop
     assert all(r.n_tokens > 0 and r.logprob_micro < 0 and r.avg_logprob < 0 for r in lrows)
+    assert sc.getPersistentRDDs().size() == before, "unigram_logprob cached a frame"
     assert sc.getPersistentRDDs().size() - before <= 1
     lm.unpersist()
     assert sc.getPersistentRDDs().size() == before, "unigram_logprob leaked caches"
@@ -734,6 +728,7 @@ def test_round5_cluster_ops_invariants_and_release(spark, fix001):
     pb = perplexity_buckets(docs)
     prows = pb.collect()
     assert len(prows) == len(lrows) and {r.bucket for r in prows} == {"head", "middle", "tail"}
+    assert sc.getPersistentRDDs().size() == before, "perplexity_buckets cached a frame"
     assert sc.getPersistentRDDs().size() - before <= 1
     pb.unpersist()
     assert sc.getPersistentRDDs().size() == before, "perplexity_buckets leaked caches"
@@ -800,9 +795,44 @@ def test_tfidf_top_terms_invariants_and_release(spark):
         assert [r.rank for r in rs] == list(range(1, len(rs) + 1))
         keys = [(-r.score_micro, r.term) for r in rs]
         assert keys == sorted(keys)
+    assert sc.getPersistentRDDs().size() == before, "tfidf_top_terms cached a frame"
     assert sc.getPersistentRDDs().size() - before <= 1
     out.unpersist()
     assert sc.getPersistentRDDs().size() == before, "tfidf_top_terms leaked caches"
+
+
+def test_single_pass_operators_cache_nothing(spark, fix001):
+    """The spatial statistics and PMI return lazy plans: running each
+    leaves the session's persistent RDDs as they were."""
+    from butterfly_osm_spark.operators.spatial_stats import cell_triangles, morans_i
+    from butterfly_osm_spark.operators.text import pmi_collocations
+
+    nodes = spark.read.parquet(fix001 + "/osm_nodes.parquet")
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    sc = spark.sparkContext._jsc.sc()
+    spark.catalog.clearCache()
+    before = sc.getPersistentRDDs().size()
+    for name, op, src in (
+        ("cell_triangles", cell_triangles, nodes),
+        ("morans_i", morans_i, nodes),
+        ("pmi_collocations", pmi_collocations, docs),
+    ):
+        assert op(src).collect()
+        assert sc.getPersistentRDDs().size() == before, f"{name} cached a frame"
+
+
+def test_minhash_and_simhash_run_their_kernel_once(spark):
+    """MinHash and SimHash pair their candidates inside band buckets, so
+    each executed plan evaluates its Python kernel in one
+    ``ArrowEvalPython`` node (a band self-join evaluated it per side)."""
+    from butterfly_osm_spark.operators.dedup import minhash_lsh_pairs, simhash_pairs
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    for df in (minhash_lsh_pairs(docs), simhash_pairs(docs)):
+        df.collect()
+        # the final adaptive plan, without the initial plan AQE prints too
+        plan = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def test_asof_and_stay_points_single_exchange(spark):
