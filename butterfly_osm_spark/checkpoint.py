@@ -352,7 +352,7 @@ def reference_pipeline(fix: str) -> list[Stage]:
             "edges",
             edges,
             [f"raw:{fix}/osm_ways.parquet", "way_nodes_sorted", "nodes_sorted"],
-            version="2",
+            version="3",
         ),
         Stage("image_cells", image_cells, [f"raw:{fix}/image_geo.parquet"], version="2"),
         Stage("pip_pairs", pip_pairs, ["image_cells", f"raw:{fix}/polygons.parquet"]),

@@ -2,23 +2,28 @@
 
 Reproduces the semantics of:
 - included-way semi-join (J1): ways with access in >=1 mode
-  (route/src/nbg/mod.rs:315-361 ``collect_decision_nodes`` + ``has_any_access``)
-- node-usage count (J3/A1): nodes referenced >=2x by included ways, plus
-  way endpoints, become decision nodes (graph vertices)
-  (route/src/nbg/mod.rs:319-360)
+  (route/src/nbg/mod.rs:315-361, the decision-node collection, and
+  ``has_any_access``)
 - the big coordinate lookup join (J2): way node refs -> (lat, lon); the
   reference binary-searches a sorted array (nbg/mod.rs:260-313
   ``NodeCoords``); here it is a plain equi-join that Catalyst executes as
   sort-merge or broadcast depending on table sizes
+- node-usage count (J3/A1): nodes referenced >=2x by included ways become
+  decision nodes (graph vertices), together with way endpoints
+  (route/src/nbg/mod.rs:319-360). The reference counts in one walk over
+  sorted refs; here it is a ``count(1) OVER (PARTITION BY node_id)``
+  window over the J2 output
 - edge emission (nbg/mod.rs:397-498 ``emit_edges``): split each way at
   decision nodes into edges, haversine polyline length with the
   ``length_mm.max(1000)`` saturation (nbg/mod.rs:456-458)
 
 Scale notes: everything is window + equi-join + hash agg — no UDFs, no
-driver-side collection. The heavy join (way vertices x nodes) shuffles on
-node id; at planet scale both sides would be bucketed by id so the join
-is co-located (Iceberg sorted tables mirror the reference's sorted
-nodes.sa / binary-search access pattern).
+driver-side collection, and one exchange, on way id. The J2 join and the
+usage window need none when both inputs are bucketed by node id, as the
+checkpointed build's ``way_nodes_sorted``/``nodes_sorted`` stages are
+(Iceberg sorted tables mirror the reference's sorted nodes.sa /
+binary-search access pattern). Over unbucketed parquet the join shuffles
+on node id unless Catalyst broadcasts the nodes side.
 """
 
 from __future__ import annotations
@@ -28,52 +33,30 @@ from pyspark.sql import functions as F
 
 from .. import cells
 from ..geo import haversine_m_col, haversine_m_sql
-from ..functions.model import DEFAULT_MODEL, compile_way_attrs
+from ..functions.model import DEFAULT_MODEL
+
+
+def highway_classes(model=None) -> list[str]:
+    """The highway classes at least one mode of ``model`` grants access to."""
+    return sorted({c for m in (model or DEFAULT_MODEL).values() for c in m})
 
 
 def included_way_ids(ways: DataFrame, model=None) -> DataFrame:
-    """J1: ways with access in at least one mode -> (way_id)."""
-    attrs = compile_way_attrs(ways, model)
-    model = model or DEFAULT_MODEL
-    cond = None
-    for mode in model:
-        c = F.col(f"access_{mode}")
-        cond = c if cond is None else (cond | c)
-    return attrs.filter(cond).select("way_id")
+    """J1: ways with access in at least one mode -> (way_id).
+
+    A mode grants access exactly when its speed table lists the way's
+    highway class (``compile_way_attrs``: ``access_<mode>`` is
+    ``speed IS NOT NULL`` and every model speed is a literal), so this is
+    an ``IN`` over the union of the model's classes, as in the oracle."""
+    return ways.filter(F.col("tags").getItem("highway").isin(highway_classes(model))).select(
+        F.col("id").alias("way_id")
+    )
 
 
 def way_vertices(way_nodes: DataFrame, nodes: DataFrame) -> DataFrame:
     """J2: attach coordinates to each (way_id, seq, node_id) vertex."""
     return way_nodes.join(nodes, way_nodes.node_id == nodes.id, "inner").select(
         "way_id", "seq", "node_id", "lat_e7", "lon_e7"
-    )
-
-
-def decision_nodes(way_nodes: DataFrame, included: DataFrame) -> DataFrame:
-    """J3 + A1: usage>=2 among included ways, or endpoint of an included way.
-
-    Endpoints come from a ``groupBy(way_id).agg(min_by/max_by(node_id, seq))``
-    rather than a ``max(seq) OVER (PARTITION BY way_id)`` window: the agg gets
-    map-side partial combine and shuffles one row per way instead of
-    sort-shuffling the whole way_nodes table — at planet scale that is the
-    difference between a 60 M-row and a 6 B-row exchange (reference walks the
-    sorted refs array once, nbg/mod.rs:319-360; this is the agg analog).
-    """
-    wn = way_nodes.join(included, "way_id", "left_semi")
-    usage = wn.groupBy("node_id").agg(F.count(F.lit(1)).alias("n_uses"))
-    endpoints = (
-        wn.groupBy("way_id")
-        .agg(
-            F.min_by("node_id", "seq").alias("first_node"),
-            F.max_by("node_id", "seq").alias("last_node"),
-        )
-        .select(F.explode(F.array("first_node", "last_node")).alias("node_id"))
-    )
-    return (
-        usage.filter(F.col("n_uses") >= 2)
-        .select("node_id")
-        .unionByName(endpoints)
-        .distinct()
     )
 
 
@@ -85,12 +68,21 @@ def build_edges(ways: DataFrame, way_nodes: DataFrame, nodes: DataFrame, model=N
     - n_pts: vertex count of the edge polyline (>= 2)
     - length_mm: round(sum(haversine segment m) * 1000), saturated >= 1000
       (the reference's minimum-length clamp, nbg/mod.rs:456-458)
-    """
-    included = included_way_ids(ways, model)
-    dec = decision_nodes(way_nodes, included).withColumn("is_dec", F.lit(1))
 
-    wv = way_vertices(way_nodes.join(included, "way_id", "left_semi"), nodes)
-    wv = wv.join(dec, "node_id", "left").withColumn("is_dec", F.coalesce("is_dec", F.lit(0)))
+    A vertex is a decision vertex when its node is used >= 2 times by the
+    included ways (J3/A1). That count is a window partitioned by node_id,
+    which needs no exchange when the inputs are bucketed by node id (the
+    J2 join keeps that partitioning); every later window and the edge
+    aggregate share one exchange on way_id. Way endpoints need no term of
+    their own: an endpoint that another included way also uses is counted
+    >= 2 times, the first vertex's flag shifts every cut index of its way
+    by the same amount, and the last vertex starts no pair.
+    """
+    wn = way_nodes.join(included_way_ids(ways, model), "way_id", "left_semi")
+    wv = way_vertices(wn, nodes).withColumn(
+        "is_dec",
+        (F.count(F.lit(1)).over(Window.partitionBy("node_id")) >= 2).cast("int"),
+    )
 
     w_seq = Window.partitionBy("way_id").orderBy("seq")
     # consecutive vertex pairs: pair i spans (seq i, seq i+1)
@@ -100,7 +92,6 @@ def build_edges(ways: DataFrame, way_nodes: DataFrame, nodes: DataFrame, model=N
         "node_id",
         "lat_e7",
         "lon_e7",
-        "is_dec",
         F.lead("node_id").over(w_seq).alias("nxt_node"),
         F.lead("lat_e7").over(w_seq).alias("nxt_lat"),
         F.lead("lon_e7").over(w_seq).alias("nxt_lon"),
@@ -182,9 +173,7 @@ def border_matrix(
 
 def border_matrix_oracle_sql(fix: str, res: int = 7, model=None) -> str:
     """DuckDB replication of border_matrix (same CTE algebra as edges)."""
-    model = model or DEFAULT_MODEL
-    classes = sorted({c for m in model.values() for c in m})
-    cls_list = ", ".join(f"'{c}'" for c in classes)
+    cls_list = ", ".join(f"'{c}'" for c in highway_classes(model))
     src_cell = cells.cell_sql("lon_e7", "lat_e7", res)
     dst_cell = cells.cell_sql("nxt_lon", "nxt_lat", res)
     hav = haversine_m_sql("lon_e7", "lat_e7", "nxt_lon", "nxt_lat")
@@ -218,9 +207,7 @@ GROUP BY src_region, dst_region
 def edges_oracle_sql(fix: str, model=None) -> str:
     """DuckDB SQL computing the identical edges table from the normalized
     fixtures (way_nodes/way_tags/osm_nodes). Same window/group algebra."""
-    model = model or DEFAULT_MODEL
-    classes = sorted({c for m in model.values() for c in m})
-    cls_list = ", ".join(f"'{c}'" for c in classes)
+    cls_list = ", ".join(f"'{c}'" for c in highway_classes(model))
     hav = haversine_m_sql("lon_e7", "lat_e7", "nxt_lon", "nxt_lat")
     return f"""
 WITH included AS (
