@@ -703,9 +703,11 @@ def _contour_reference(pids, polys_xy):
     """Single-threaded reference run of the sparse-contour pipeline
     (stamp -> balanced close(2) -> Moore trace -> anchored flag -> DP
     simplify) producing the contour_truth + polygon_pixel_edges goldens.
-    Same kernels as operators/raster.py, executed without Spark — the
-    driver's oracle row then verifies the DISTRIBUTED run (mapInPandas
-    batching, bit_or word merges, cogrouped gather) reproduces it."""
+    Same kernels as operators/raster.py, executed without Spark and
+    assembled here independently of ``trace_contours`` (grid bounds,
+    padding, anchor, cell-centre emission) — the driver's oracle row then
+    verifies the DISTRIBUTED run (the per-region segment gather and its
+    kernel's assembly) reproduces it."""
     from ..geo import mercator_np
     from ..operators.raster import (
         T as _T,

@@ -1,31 +1,31 @@
-"""Sparse bit-tile raster pipeline (R1-R9): stamp -> morphology -> trace.
+"""Sparse raster contour pipeline (R1-R9): stamp -> closing -> trace.
 
 Re-expresses the reference's SparseTileMap contour machinery
 (route/src/range/sparse_contour.rs):
-- 64x64-bit tiles in a Web-Mercator cell grid (:17-110). Here a tile is
-  64 rows x 64 cols, one int64 word per row (bit j of word i = cell
-  (row i, col j)); a DataFrame row is (region_id, tile_x, tile_y,
-  word_idx, word) — the "exploded word" layout lets morphology and
-  stamping aggregate with plain ``bit_or``/``bit_and`` (JVM hash agg, no
-  UDF in the merge path).
+- 64x64-cell tiles in a Web-Mercator cell grid (:17-110). The stamp
+  alone (``stamp_segments``, the ``raster_stamp`` query) emits the
+  "exploded word" layout: one int64 word per tile row (bit j of word i =
+  cell (row i, col j)), a DataFrame row being (region_id, tile_x,
+  tile_y, word_idx, word), merged with a plain JVM ``bit_or`` so a
+  relational oracle can replicate it.
 - line stamp (:111-144 ``stamp_line``): closed-form integer Bresenham in
-  a vectorized numpy kernel (mapInPandas), emitting word rows merged by
-  ``groupBy(tile, word).agg(bit_or)``.
-- morphological dilate/erode (:179-432): 3x3 structuring element via the
-  halo-exchange pattern — each tile emits 9 shifted copies addressed to
-  itself and its neighbors; dilate = bit_or of contributions, erode =
-  bit_and with a contribution-count==9 guard (missing neighbor == zero).
-  Balanced closing = same number of dilate and erode rounds (#431,
-  :466-475).
-- Moore-neighbour boundary trace (:823-895, :934-1130): per-region walk
-  in applyInPandas (regions gather a small closed tile set; a per-group
-  size guard enforces it), deterministic sorted starts. The walk is
-  table-driven: numpy computes every boundary pixel's 8-neighbour mask
-  and, through a fixed 256x8 first-set-direction table, the next
-  (pixel, backtrack) state of every state, so the sequential part only
-  follows integers in a list instead of probing pixels one by one.
-- Douglas-Peucker simplify (:1131-1186): numpy, in the same UDF, with the
-  2-D cross product written out (``np.cross``'s per-call overhead
+  a vectorized numpy kernel; ``_segment_cells`` turns segments into
+  global cells for both the word stamp and the contour kernel.
+- One kernel per region (``trace_contours``): each region's segments are
+  gathered to one ``applyInPandas`` group, which stamps them into a dense
+  tile-aligned grid, applies the balanced closing (#431, :466-475: equal
+  rounds of 3x3 dilate and erode, separable numpy max/min filters with
+  zeros outside), traces, anchors and simplifies in memory, the way the
+  reference builds each contour in one worker. The per-region grid is
+  bounded by ``MAX_GRID``; a larger region fails with its id.
+- Moore-neighbour boundary trace (:823-895, :934-1130): deterministic
+  sorted starts. The walk is table-driven: numpy computes every boundary
+  pixel's 8-neighbour mask and, through a fixed 256x8
+  first-set-direction table, the next (pixel, backtrack) state of every
+  state, so the sequential part only follows integers in a list instead
+  of probing pixels one by one.
+- Douglas-Peucker simplify (:1131-1186): numpy, in the same kernel, with
+  the 2-D cross product written out (``np.cross``'s per-call overhead
   dominated on the many tiny slices).
 
 Over the 200 sf0.001 region grids of ``raster_contour`` (384 rings,
@@ -75,10 +75,9 @@ RING_SCHEMA = StructType(
         StructField("seq", IntegerType()),
         StructField("mx", DoubleType()),
         StructField("my", DoubleType()),
+        StructField("anchored", BooleanType()),
     ]
 )
-
-ANCHORED_RING_SCHEMA = StructType(RING_SCHEMA.fields + [StructField("anchored", BooleanType())])
 
 
 def _ring_contains(ring_yx: np.ndarray, ay: float, ax: float) -> bool:
@@ -122,6 +121,22 @@ def _bresenham_cells(x0, y0, x1, y1) -> tuple[np.ndarray, np.ndarray]:
     return cx, cy
 
 
+def _segment_cells(pdf: pd.DataFrame, cell_m: float) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Global cells stamped by segments (x1, y1, x2, y2 in fixed-point
+    e7): each endpoint's Mercator point floored to its ``cell_m`` cell,
+    the cells between drawn by ``_bresenham_cells``. Returns (cx, cy, n),
+    ``n`` being each segment's cell count (its cells are consecutive)."""
+    mx1, my1 = mercator_np(pdf["x1"].to_numpy(np.int64), pdf["y1"].to_numpy(np.int64))
+    mx2, my2 = mercator_np(pdf["x2"].to_numpy(np.int64), pdf["y2"].to_numpy(np.int64))
+    px1 = np.floor(mx1 / cell_m).astype(np.int64)
+    py1 = np.floor(my1 / cell_m).astype(np.int64)
+    px2 = np.floor(mx2 / cell_m).astype(np.int64)
+    py2 = np.floor(my2 / cell_m).astype(np.int64)
+    n = np.maximum(np.abs(px2 - px1), np.abs(py2 - py1)) + 1
+    cx, cy = _bresenham_cells(px1, py1, px2, py2)
+    return cx, cy, n
+
+
 def stamp_segments(
     segments: DataFrame, cell_m: float = 50.0, region_col: str = "region_id"
 ) -> DataFrame:
@@ -135,15 +150,8 @@ def stamp_segments(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mx1, my1 = mercator_np(pdf["x1"].to_numpy(np.int64), pdf["y1"].to_numpy(np.int64))
-            mx2, my2 = mercator_np(pdf["x2"].to_numpy(np.int64), pdf["y2"].to_numpy(np.int64))
-            px1 = np.floor(mx1 / cell_m).astype(np.int64)
-            py1 = np.floor(my1 / cell_m).astype(np.int64)
-            px2 = np.floor(mx2 / cell_m).astype(np.int64)
-            py2 = np.floor(my2 / cell_m).astype(np.int64)
-            n = np.maximum(np.abs(px2 - px1), np.abs(py2 - py1)) + 1
+            cx, cy, n = _segment_cells(pdf, cell_m)
             rid = np.repeat(pdf[region_col].to_numpy(), n)
-            cx, cy = _bresenham_cells(px1, py1, px2, py2)
             tile_x, in_x = cx >> 6, (cx & 63).astype(np.uint64)
             tile_y, in_y = cy >> 6, (cy & 63).astype(np.int64)
             word = (np.uint64(1) << in_x).astype(np.int64)
@@ -162,89 +170,6 @@ def stamp_segments(
     return words.groupBy("region_id", "tile_x", "tile_y", "word_idx").agg(
         F.bit_or("word").alias("word")
     )
-
-
-def _shift_contributions(pdf: pd.DataFrame, mode: str) -> pd.DataFrame:
-    """Emit the 9 shifted copies of each tile's words, addressed to the
-    target tile/word they land in. Horizontal shift = bit shift with the
-    carry bit crossing the tile_x boundary; vertical = word_idx shift
-    crossing the tile_y boundary."""
-    outs = []
-    w = pdf["word"].to_numpy(np.int64).view(np.uint64)
-    tx = pdf["tile_x"].to_numpy(np.int64)
-    ty = pdf["tile_y"].to_numpy(np.int64)
-    wi = pdf["word_idx"].to_numpy(np.int64)
-    rid = pdf["region_id"].to_numpy()
-    for dy in (-1, 0, 1):
-        nwi = wi + dy
-        t_ty = ty + (nwi >> 6)
-        t_wi = nwi & 63
-        for dx in (-1, 0, 1):
-            if dx == 0:
-                parts = [(w, tx)]
-            elif dx == 1:
-                parts = [((w << np.uint64(1)), tx), ((w >> np.uint64(63)), tx + 1)]
-            else:
-                parts = [((w >> np.uint64(1)), tx), ((w << np.uint64(63)), tx - 1)]
-            for sw, stx in parts:
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "region_id": rid,
-                            "tile_x": stx,
-                            "tile_y": t_ty,
-                            "word_idx": t_wi.astype(np.int32),
-                            "word": sw.astype(np.int64),
-                            "tag": f"{dx}{dy}",
-                        }
-                    )
-                )
-    return pd.concat(outs, ignore_index=True)
-
-
-_CONTRIB_SCHEMA = StructType(WORD_SCHEMA.fields + [StructField("tag", StringType())])
-
-
-def _morph(tiles: DataFrame, op: str) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield _shift_contributions(pdf, op)
-
-    contrib = tiles.mapInPandas(gen, schema=_CONTRIB_SCHEMA)
-    if op == "dilate":
-        # OR over all 9 shifted copies; absent contributions are zero anyway
-        return contrib.groupBy("region_id", "tile_x", "tile_y", "word_idx").agg(
-            F.bit_or("word").alias("word")
-        ).filter(F.col("word") != 0)
-    # erode: AND over the 9 shifts PER (dx,dy) tag — a word must receive a
-    # contribution from every one of the 9 directions (missing = zero word)
-    per_tag = contrib.groupBy("region_id", "tile_x", "tile_y", "word_idx", "tag").agg(
-        F.bit_or("word").alias("w")
-    )
-    return (
-        per_tag.groupBy("region_id", "tile_x", "tile_y", "word_idx")
-        .agg(F.bit_and("w").alias("word"), F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") == 9) & (F.col("word") != 0))
-        .select("region_id", "tile_x", "tile_y", "word_idx", "word")
-    )
-
-
-def dilate(tiles: DataFrame, rounds: int = 1) -> DataFrame:
-    for _ in range(rounds):
-        tiles = _morph(tiles, "dilate")
-    return tiles
-
-
-def erode(tiles: DataFrame, rounds: int = 1) -> DataFrame:
-    for _ in range(rounds):
-        tiles = _morph(tiles, "erode")
-    return tiles
-
-
-def close_regions(tiles: DataFrame, rounds: int = 2) -> DataFrame:
-    """Balanced morphological closing (#431): equal dilate/erode rounds."""
-    return erode(dilate(tiles, rounds), rounds)
 
 
 def stamp_oracle_sql(fix: str) -> str:
@@ -405,9 +330,8 @@ def _dilate3_np(g: np.ndarray) -> np.ndarray:
 
 
 def _erode3_np(g: np.ndarray) -> np.ndarray:
-    """3x3 binary erosion (separable min filter), zeros outside — the same
-    infinite-plane-of-zeros semantics as the distributed halo erode
-    (missing neighbor contribution == zero word)."""
+    """3x3 binary erosion (separable min filter), zeros outside: a pixel
+    on the grid border erodes away."""
     v = g.copy()
     v[:-1] &= g[1:]
     v[-1] = False
@@ -422,97 +346,77 @@ def _erode3_np(g: np.ndarray) -> np.ndarray:
 
 
 def trace_contours(
-    tiles: DataFrame,
+    segments: DataFrame,
     cell_m: float = 50.0,
     simplify_tol_cells: float = 1.5,
-    close_rounds: int = 0,
-    anchors: DataFrame | None = None,
+    close_rounds: int = 2,
 ) -> DataFrame:
-    """R4+R6+R9 (and optionally fused R2+R3): per-region boundary rings in
-    Mercator metres.
+    """R1-R6+R9: per-region anchored boundary rings in Mercator metres,
+    one ``applyInPandas`` kernel per region over its gathered segments.
 
-    ``close_rounds > 0`` applies the balanced morphological closing INSIDE
-    the per-region UDF on the gathered dense grid — mathematically
-    identical to ``close_regions`` (both compute the infinite-plane
-    closing; parity asserted in tests) but with zero extra shuffles. The
-    distributed ``close_regions`` remains the path for region rasters too
-    large to gather (the per-group guard enforces the boundary).
+    Input columns: region_id, seq, x1, y1, x2, y2 (fixed-point e7; segment
+    ``seq`` runs from vertex ``seq`` to the next, so the x1/y1 column is
+    the region's vertex list). The kernel sorts by ``seq``, stamps the
+    segments into a dense tile-aligned grid padded by ``close_rounds``
+    cells (dilation reaches that far past the stamps), applies the
+    balanced closing, traces every ring and simplifies it.
 
-    Output: (region_id, ring_id, seq, mx, my) — cell-centre emission
-    (sparse_contour.rs:782-797), DP-simplified, deterministic ring and
-    vertex order.
+    Output: RING_SCHEMA rows (region_id, ring_id, seq, mx, my, anchored) —
+    cell-centre emission (sparse_contour.rs:782-797), DP-simplified,
+    deterministic ring and vertex order. ``anchored`` is R5's
+    anchored-component flag (sparse_contour.rs:650-748): true for rings
+    whose pre-simplify boundary contains the region's anchor, the
+    Mercator point of its vertex mean (even-odd). All rings are kept (the
+    all_components parity contract); consumers that want the reference's
+    prefer-origin semantics filter on the flag.
 
-    ``anchors`` (region_id, ax_m, ay_m in Mercator metres) enables R5
-    anchored-component selection (sparse_contour.rs:650-748): the output
-    gains an ``anchored`` flag — true for rings whose pre-simplify
-    boundary contains the region's anchor (even-odd). ALL rings are kept
-    (the all_components parity contract); consumers that want the
-    reference's prefer-origin semantics filter on the flag.
+    A region whose grid is wider or taller than ``MAX_GRID`` cells raises
+    ``ValueError`` naming the region.
     """
-    pad = close_rounds  # dilation can extend this many cells beyond stamps
-    with_anchor = anchors is not None
-    cols = ["region_id", "ring_id", "seq", "mx", "my"] + (["anchored"] if with_anchor else [])
+    pad = close_rounds
+    cols = RING_SCHEMA.fieldNames()
 
-    def trace_grid(key: tuple, pdf: pd.DataFrame, anchor: tuple | None) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=cols)
-        tx = pdf["tile_x"].to_numpy(np.int64)
-        ty = pdf["tile_y"].to_numpy(np.int64)
-        wi = pdf["word_idx"].to_numpy(np.int64)
-        w = pdf["word"].to_numpy(np.int64).view(np.uint64)
-        x0t, x1t = tx.min(), tx.max()
-        y0t, y1t = ty.min(), ty.max()
-        W = int((x1t - x0t + 1) * T) + 2 * pad
-        H = int((y1t - y0t + 1) * T) + 2 * pad
+    def trace_region(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("seq")
+        cx, cy, _ = _segment_cells(pdf, cell_m)
+        x0t, y0t = int(cx.min()) >> 6, int(cy.min()) >> 6
+        x1t, y1t = int(cx.max()) >> 6, int(cy.max()) >> 6
+        W = (x1t - x0t + 1) * T + 2 * pad
+        H = (y1t - y0t + 1) * T + 2 * pad
         if W > MAX_GRID or H > MAX_GRID:
             raise ValueError(f"region {key[0]}: grid {W}x{H} exceeds guard {MAX_GRID}")
         grid = np.zeros((H, W), dtype=bool)
-        bits = ((w[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & np.uint64(1)).astype(bool)
-        word, col = np.nonzero(bits)
-        # setting only the set bits is an OR even if a word repeated
-        grid[(ty - y0t)[word] * T + wi[word] + pad, (tx - x0t)[word] * T + col + pad] = True
+        grid[cy - y0t * T + pad, cx - x0t * T + pad] = True
         for _ in range(close_rounds):
             grid = _dilate3_np(grid)
         for _ in range(close_rounds):
             grid = _erode3_np(grid)
-        rings = _trace_one(grid)
         # anchor in local grid (col, row) float coords: global cell
         # cx = x0t*T + rx - pad  =>  rx = ax_m/cell_m - x0t*T + pad
-        ax = ay = None
-        if anchor is not None:
-            ax = anchor[0] / cell_m - x0t * T + pad
-            ay = anchor[1] / cell_m - y0t * T + pad
+        amx, amy = mercator_np(
+            np.array([float(pdf["x1"].to_numpy(np.int64).mean())]),
+            np.array([float(pdf["y1"].to_numpy(np.int64).mean())]),
+        )
+        ax = float(amx[0]) / cell_m - x0t * T + pad
+        ay = float(amy[0]) / cell_m - y0t * T + pad
         out_rows = []
-        for ring_id, ring in enumerate(rings):
-            flag = _ring_contains(ring, ay, ax) if ax is not None else None
+        for ring_id, ring in enumerate(_trace_one(grid)):
+            flag = _ring_contains(ring, ay, ax)
             ring = _dp_simplify(ring, simplify_tol_cells)
             for seq, (ry, rx) in enumerate(ring):
                 mx = (x0t * T + rx - pad + 0.5) * cell_m
                 my = (y0t * T + ry - pad + 0.5) * cell_m
-                row = (key[0], ring_id, seq, mx, my)
-                out_rows.append(row + (flag,) if with_anchor else row)
+                out_rows.append((key[0], ring_id, seq, mx, my, flag))
         return pd.DataFrame(out_rows, columns=cols)
 
-    # the gather shuffle is tiny in bytes but the per-region walk is
+    # the gather shuffle is tiny in bytes but the per-region kernel is
     # Python compute — pin its parallelism so AQE's byte-based coalescing
     # cannot serialize the trace stage (see partitioning.py; measured
     # 2x at sf0.1/local[32])
     from ..partitioning import repartition_for_python_groups
 
-    tiles = repartition_for_python_groups(tiles, "region_id")
-    if not with_anchor:
-        return tiles.groupBy("region_id").applyInPandas(
-            lambda key, pdf: trace_grid(key, pdf, None), schema=RING_SCHEMA
-        )
-
-    def trace_cog(key: tuple, pdf: pd.DataFrame, a_pdf: pd.DataFrame) -> pd.DataFrame:
-        anchor = None
-        if len(a_pdf):
-            anchor = (float(a_pdf["ax_m"].iloc[0]), float(a_pdf["ay_m"].iloc[0]))
-        return trace_grid(key, pdf, anchor)
-
     return (
-        tiles.groupBy("region_id")
-        .cogroup(repartition_for_python_groups(anchors, "region_id").groupBy("region_id"))
-        .applyInPandas(trace_cog, schema=ANCHORED_RING_SCHEMA)
+        repartition_for_python_groups(segments, "region_id")
+        .groupBy("region_id")
+        .applyInPandas(trace_region, schema=RING_SCHEMA)
     )

@@ -26,8 +26,6 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from functools import partial
 
-import numpy as np
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -282,37 +280,17 @@ def q_osm_diff(spark, sf_dir):
 
 
 def q_raster_contour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stamp polygon boundaries into bit tiles, balanced-close, Moore-trace,
-    DP-simplify — the full sparse-contour pipeline per polygon. Closing is
-    fused into the per-region trace UDF (identical result to the
-    distributed close_regions — parity-tested — with zero extra shuffles;
-    regions here are bounded by the per-group grid guard)."""
-    from .operators.raster import stamp_segments, trace_contours
+    """Stamp polygon boundaries, balanced-close, Moore-trace, anchor and
+    DP-simplify — the full sparse-contour pipeline, one kernel per polygon
+    over its gathered segments. The R5 anchor is the polygon's vertex
+    mean in Mercator metres (the graft's "snapped origin"); all rings are
+    kept, flagged by containment."""
+    from .operators.raster import trace_contours
 
-    fix = _fix(sf_dir)
-    segs = _read(spark, fix, "polygon_edges").select(
-        F.col("polygon_id").alias("region_id"), "x1", "y1", "x2", "y2"
+    segs = _read(spark, _fix(sf_dir), "polygon_edges").select(
+        F.col("polygon_id").alias("region_id"), "seq", "x1", "y1", "x2", "y2"
     )
-    # R5 anchor = polygon centroid in Mercator metres (the graft's "snapped
-    # origin"); all rings are kept, flagged by containment.
-    cent = (
-        _read(spark, fix, "polygon_edges")
-        .groupBy(F.col("polygon_id").alias("region_id"))
-        .agg(F.avg("x1").alias("clon"), F.avg("y1").alias("clat"))
-    )
-    merc_r = 6_378_137.0
-    anchors = cent.select(
-        "region_id",
-        (F.lit(merc_r) * F.radians(F.col("clon") / F.lit(1e7))).alias("ax_m"),
-        (
-            F.lit(merc_r)
-            * F.log(F.tan(F.lit(float(np.pi) / 4) + F.radians(F.col("clat") / F.lit(1e7)) / 2))
-        ).alias("ay_m"),
-    )
-    rings = trace_contours(
-        stamp_segments(segs, cell_m=50.0), cell_m=50.0, close_rounds=2, anchors=anchors
-    )
-    return rings.select(
+    return trace_contours(segs, cell_m=50.0, close_rounds=2).select(
         "region_id",
         "ring_id",
         "seq",
@@ -787,10 +765,11 @@ FROM read_parquet('{fix}/image_truth.parquet')
     ),
     # plumbing-parity oracle: contour_truth is a single-threaded reference
     # run of the same stamp/close/trace/simplify kernels at generation time,
-    # so the row verifies that the DISTRIBUTED execution (mapInPandas
-    # batching, bit_or word merge across partitions, cogrouped gather)
-    # reproduces it exactly. Algorithm-level checks live in raster_stamp's
-    # relational oracle and tests/test_raster.py.
+    # so the row verifies that the DISTRIBUTED execution (the segment
+    # gather: every region's segments reach one kernel, whatever their
+    # row order and partitioning) reproduces it exactly. Algorithm-level
+    # checks live in raster_stamp's relational oracle and
+    # tests/test_raster.py.
     "raster_contour": Query(
         "operators.raster",
         q_raster_contour,

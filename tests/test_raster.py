@@ -1,28 +1,34 @@
 """Raster pipeline invariants (no SQL oracle — sequential-trace semantics):
-stamp/close/trace determinism, bbox consistency, origin containment."""
+contour determinism, order independence, origin containment, the grid
+guard, the plan shape, and the kernels against per-pixel references."""
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
+from pyspark.errors import PythonException
 
 from butterfly_osm_spark.geo import mercator_np
 from butterfly_osm_spark.operators import raster
-from butterfly_osm_spark.operators.raster import close_regions, stamp_segments, trace_contours
+from butterfly_osm_spark.operators.raster import trace_contours
+from butterfly_osm_spark.queries import q_raster_contour
+
+
+def _edges(spark, fix001):
+    return spark.read.parquet(f"{fix001}/polygon_edges.parquet").select(
+        F.col("polygon_id").alias("region_id"), "seq", "x1", "y1", "x2", "y2"
+    )
 
 
 def _segments(spark, fix001, n_poly=20):
-    segs = spark.read.parquet(f"{fix001}/polygon_edges.parquet").select(
-        F.col("polygon_id").alias("region_id"), "x1", "y1", "x2", "y2"
-    )
+    segs = _edges(spark, fix001)
     ids = [r.region_id for r in segs.select("region_id").distinct().orderBy("region_id").limit(n_poly).collect()]
     return segs.filter(F.col("region_id").isin(ids)), ids
 
 
 def test_raster_contour_invariants(spark, fix001):
     segs, ids = _segments(spark, fix001)
-    tiles = close_regions(stamp_segments(segs, cell_m=50.0), rounds=2)
-    rings = trace_contours(tiles, cell_m=50.0).toPandas()
+    rings = trace_contours(segs, cell_m=50.0).toPandas()
     assert set(rings.region_id) == set(ids), "every polygon must produce a contour"
     # every traced ring must enclose its polygon centroid (outer ring exists)
     edges = spark.read.parquet(f"{fix001}/polygon_edges.parquet").toPandas()
@@ -42,69 +48,70 @@ def test_raster_contour_invariants(spark, fix001):
         assert inside, f"{rid}: centroid not inside traced boundary"
 
 
-def test_fused_closing_matches_distributed(spark, fix001):
-    """Endpoint-consistency discipline (reference consistency_test.rs):
-    the same contour computed via the distributed halo close_regions and
-    via the in-UDF fused closing must match EXACTLY."""
-    segs, _ = _segments(spark, fix001, n_poly=12)
-    stamped = stamp_segments(segs, cell_m=50.0)
-    via_distributed = (
-        trace_contours(close_regions(stamped, rounds=2), cell_m=50.0)
-        .orderBy("region_id", "ring_id", "seq")
-        .collect()
-    )
-    via_fused = (
-        trace_contours(stamped, cell_m=50.0, close_rounds=2)
-        .orderBy("region_id", "ring_id", "seq")
-        .collect()
-    )
-    assert via_fused == via_distributed
-
-
 def test_raster_contour_deterministic(spark, fix001):
     segs, _ = _segments(spark, fix001, n_poly=8)
     def run():
-        t = close_regions(stamp_segments(segs, cell_m=50.0), rounds=2)
-        return trace_contours(t, cell_m=50.0).orderBy("region_id", "ring_id", "seq").collect()
+        return trace_contours(segs, cell_m=50.0).orderBy("region_id", "ring_id", "seq").collect()
     a, b = run(), run()
     assert a == b
 
 
+def test_contour_ignores_segment_order(spark, fix001):
+    """Shuffled rows over several partitions reach each region's kernel in
+    any order; the kernel's seq sort gives the golden rows exactly."""
+    segs = _edges(spark, fix001).orderBy(F.rand(7)).repartition(3)
+    got = (
+        trace_contours(segs, cell_m=50.0, close_rounds=2)
+        .select("region_id", "ring_id", "seq", F.round("mx", 3).alias("mx"), F.round("my", 3).alias("my"), "anchored")
+        .orderBy("region_id", "ring_id", "seq")
+        .collect()
+    )
+    want = pd.read_parquet(f"{fix001}/contour_truth.parquet").sort_values(["region_id", "ring_id", "seq"])
+    assert [tuple(r) for r in got] == list(want.itertuples(index=False, name=None))
+
+
+def test_oversized_region_fails_fast(spark):
+    """A region whose grid would pass MAX_GRID cells on a side raises,
+    naming the region, instead of allocating the grid."""
+    span_e7 = 20_000_000  # 2 degrees of longitude: ~4,450 cells of 50 m
+    segs = spark.createDataFrame(
+        [("small", 0, 0, 0, 10_000, 10_000), ("wide", 0, 0, 0, span_e7, 0), ("wide", 1, span_e7, 0, 0, 0)],
+        "region_id string, seq int, x1 int, y1 int, x2 int, y2 int",
+    )
+    with pytest.raises(PythonException, match=r"ValueError: region wide: grid \d+x\d+ exceeds guard 4096"):
+        trace_contours(segs, cell_m=50.0).collect()
+
+
+def test_raster_contour_plan_is_one_python_group_stage(spark, fix001):
+    """The query is a segment read and one per-region kernel: no stamp
+    stage, no bit_or word merge, no cogrouped anchor table."""
+    plan = q_raster_contour(spark, fix001)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert "MapInPandas" not in plan, plan
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
+    assert "bit_or" not in plan, plan
+
+
 def test_anchored_ring_contains_origin(spark, fix001):
     """R5 postdeploy-gate analog (reference bench/postdeploy_gate.py:703,
-    sparse_contour.rs:650-748): for every region, the anchor (polygon
-    centroid = the snapped origin) must lie inside at least one traced
-    ring, and that ring carries anchored=true; rings not containing the
-    origin are flagged false (spurious-island discrimination)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from butterfly_osm_spark.geo import mercator_np
-    from butterfly_osm_spark.operators.raster import stamp_segments, trace_contours
-
-    edges = spark.read.parquet(f"{fix001}/polygon_edges.parquet")
-    some = [r.polygon_id for r in edges.select("polygon_id").distinct().limit(12).collect()]
-    edges = edges.filter(F.col("polygon_id").isin(some))
-    segs = edges.select(F.col("polygon_id").alias("region_id"), "x1", "y1", "x2", "y2")
-    cent = edges.groupBy(F.col("polygon_id").alias("region_id")).agg(
-        F.avg("x1").alias("clon"), F.avg("y1").alias("clat")
-    )
-    cpdf = cent.toPandas()
-    ax, ay = mercator_np(cpdf["clon"].to_numpy(), cpdf["clat"].to_numpy())
-    anchors = spark.createDataFrame(
-        pd.DataFrame({"region_id": cpdf["region_id"], "ax_m": ax, "ay_m": ay})
-    )
-    rings = trace_contours(
-        stamp_segments(segs, cell_m=50.0), cell_m=50.0, close_rounds=2, anchors=anchors
-    ).toPandas()
+    sparse_contour.rs:650-748): for every region, the anchor (the
+    polygon's vertex mean = the snapped origin) must lie inside at least
+    one traced ring, and that ring carries anchored=true; rings not
+    containing the origin are flagged false (spurious-island
+    discrimination)."""
+    edges = _edges(spark, fix001)
+    some = [r.region_id for r in edges.select("region_id").distinct().limit(12).collect()]
+    segs = edges.filter(F.col("region_id").isin(some))
+    rings = trace_contours(segs, cell_m=50.0, close_rounds=2).toPandas()
     assert set(rings.region_id) == set(some)
+    # each segment starts at one vertex, so the x1/y1 mean is the vertex mean
+    cent = segs.toPandas().groupby("region_id")[["x1", "y1"]].mean()
     for rid, g in rings.groupby("region_id"):
         flags = g.groupby("ring_id")["anchored"].first()
         assert flags.any(), f"{rid}: no ring contains its origin"
         # the anchored ring really contains the anchor (re-checked here
         # with an independent even-odd test over the emitted vertices)
-        arow = cpdf[cpdf.region_id == rid].iloc[0]
-        amx, amy = mercator_np(np.array([arow.clon]), np.array([arow.clat]))
+        amx, amy = mercator_np(np.array([cent.x1[rid]]), np.array([cent.y1[rid]]))
         anch = g[g.anchored]
         ring0 = anch[anch.ring_id == anch.ring_id.iloc[0]].sort_values("seq")
         x = ring0["mx"].to_numpy()
@@ -277,3 +284,42 @@ def test_trace_kernels_match_reference_on_fixture_grids(fix001):
 )
 def test_trace_kernels_match_reference_on_edge_cases(grid):
     _assert_kernels_match_reference(grid)
+
+
+def _morph_ref(g: np.ndarray, op) -> np.ndarray:
+    """Per-pixel 3x3 max (``np.any``) or min (``np.all``), zeros outside."""
+    h, w = g.shape
+    p = np.zeros((h + 2, w + 2), dtype=bool)
+    p[1:-1, 1:-1] = g
+    out = np.zeros_like(g)
+    for y in range(h):
+        for x in range(w):
+            out[y, x] = op(p[y : y + 3, x : x + 3])
+    return out
+
+
+_RNG = np.random.default_rng(431)
+
+
+@pytest.mark.parametrize("rounds", [1, 2])
+@pytest.mark.parametrize(
+    "grid",
+    [
+        *(_RNG.random((h, w)) < p for h, w, p in [(17, 23, 0.2), (30, 30, 0.45), (9, 40, 0.7), (25, 12, 0.05)]),
+        _grid("#"),
+        _grid("..... ..#.. ....."),  # one pixel
+        _grid("##... ##... ....."),  # blob touching the pad
+        np.ones((6, 5), dtype=bool),
+        np.indices((8, 9)).sum(axis=0) % 2 == 0,  # checkerboard
+        np.zeros((4, 4), dtype=bool),
+    ],
+)
+def test_closing_matches_naive_reference(grid, rounds):
+    """The fused closing (``rounds`` dilations, then as many erosions)
+    equals the per-pixel 3x3 max/min closing on the same bounded grid."""
+    got, want = grid, grid
+    for _ in range(rounds):
+        got, want = raster._dilate3_np(got), _morph_ref(want, np.any)
+    for _ in range(rounds):
+        got, want = raster._erode3_np(got), _morph_ref(want, np.all)
+    assert got.dtype == bool and np.array_equal(got, want)
