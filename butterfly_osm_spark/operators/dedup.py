@@ -335,10 +335,10 @@ def connected_components(
     executor churn, swap in a reliable ``checkpoint()`` dir — same
     protocol, durable blocks.)
 
-    Cache hygiene (same discipline as knn_join's phase release): each
-    iteration's checkpoint blocks are freed as soon as the NEXT round's
-    checkpoint is eagerly materialized and the convergence count consumed
-    the old table — ``catalog.clearCache()`` does NOT reach RDD-level
+    Cache hygiene: each iteration's checkpoint blocks are freed as soon
+    as the NEXT round's checkpoint is eagerly materialized and the
+    convergence count consumed the old table — ``catalog.clearCache()``
+    does NOT reach RDD-level
     localCheckpoint blocks, so without this a long-lived session running
     many dedup jobs accumulates O(iterations) label tables. Only the
     RETURNED labels frame stays cached (bounded: one O(|V|) table); call

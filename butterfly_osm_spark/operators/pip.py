@@ -67,10 +67,10 @@ from .. import cells
 # under this cell count.
 MAX_COVER_CELLS = 256
 MIN_RES, MAX_RES = 7, 13
-# broadcast the polygon cover set only below this row count (same gate
-# rationale as operators.knn.BROADCAST_MAX_ROWS: the "request-sized
-# polygon set" assumption is an input property, not an invariant — a
-# million-polygon overlay must shuffle-join on cell_id instead)
+# broadcast the polygon cover set only below this row count: the
+# "request-sized polygon set" assumption is an input property, not an
+# invariant — a million-polygon overlay must shuffle-join on cell_id
+# instead
 BROADCAST_MAX_ROWS = 4_000_000
 
 _COVER_SCHEMA = StructType(

@@ -325,11 +325,13 @@ def test_pip_huge_rings_take_the_fallback(spark, monkeypatch):
 
 
 def test_repeated_calls_ship_no_broadcast_and_cache_nothing(spark, fix001, monkeypatch):
-    """pip_join (edge map), phash_knn (query batch) and knn_join's grid
+    """pip_join (edge map), phash_knn (query batch) and knn_join's driver
     path (sorted target arrays) return lazy plans: their driver-built
     arrays ride in the kernel closure, so three calls of each make no
     ``sc.broadcast`` call, persist no RDD, and a result counted twice
-    gives the same count (each count re-runs the plan)."""
+    gives the same count (each count re-runs the plan). knn_join's tiled
+    path (gate forced shut) is lazy too and ships no closure array."""
+    from butterfly_osm_spark.operators import knn
     from butterfly_osm_spark.operators.images import phash_knn
     from butterfly_osm_spark.operators.knn import knn_join
     from butterfly_osm_spark.operators.pip import pip_join
@@ -345,43 +347,50 @@ def test_repeated_calls_ship_no_broadcast_and_cache_nothing(spark, fix001, monke
     images = spark.read.parquet(fix001 + "/images.parquet")
     queries = spark.read.parquet(fix001 + "/query_points.parquet")
     nodes = spark.read.parquet(fix001 + "/osm_nodes.parquet")
+    paths = _knn_paths(knn, monkeypatch)
+
+    def knn_tiled(q, n):
+        with monkeypatch.context() as m:
+            m.setattr(knn, "BROADCAST_MAX_ROWS", 0)
+            return knn_join(q, n)
+
     before = persistent_rdd_ids(spark)
     for _ in range(3):
-        for out in (pip_join(points, polygons), phash_knn(images), knn_join(queries, nodes)):
+        for out in (
+            pip_join(points, polygons),
+            phash_knn(images),
+            knn_join(queries, nodes),
+            knn_tiled(queries, nodes),
+        ):
             n = out.count()
             assert n > 0
             assert out.count() == n
+    assert paths == ["grid", "tiled"] * 3, paths
     assert not shipped, f"{len(shipped)} sc.broadcast calls"
     assert not (persistent_rdd_ids(spark) - before), "a lazy operator cached an RDD"
 
 
 def _knn_paths(knn, monkeypatch):
-    """Spy on knn_join's two paths: the returned list gets ``("grid",
-    res)`` for every grid built and the working res of every ring-loop
-    phase."""
+    """Spy on knn_join's two paths: the returned list gets ``"grid"`` for
+    every driver-path plan and ``"tiled"`` for every tiled one."""
     paths = []
-    grid, candidates = knn._grid, knn._candidates
 
-    def grid_spy(*a, **kw):
-        g = grid(*a, **kw)
-        paths.append(("grid", g.res))
-        return g
+    def spy(name, join):
+        def run(*a, **kw):
+            paths.append(name)
+            return join(*a, **kw)
 
-    def candidates_spy(*a, **kw):
-        paths.append(a[2])
-        return candidates(*a, **kw)
+        return run
 
-    monkeypatch.setattr(knn, "_grid", grid_spy)
-    monkeypatch.setattr(knn, "_candidates", candidates_spy)
+    monkeypatch.setattr(knn, "_grid_join", spy("grid", knn._grid_join))
+    monkeypatch.setattr(knn, "_tiled_join", spy("tiled", knn._tiled_join))
     return paths
 
 
 def test_knn_releases_phase_caches(spark, fix001, monkeypatch):
-    """knn_join must not leak per-phase persisted partials into the session:
-    the grid path caches nothing, and after the ring loop at most the
-    (bounded) result frame itself is newly cached. Measured as a set
-    DELTA because earlier tests in the shared session may legitimately
-    hold their own bounded result frames (e.g. a CC query's final label
+    """knn_join's driver path caches nothing. Measured as a set DELTA
+    because earlier tests in the shared session may legitimately hold
+    their own bounded result frames (e.g. a CC query's final label
     checkpoint), which clearCache() does not reach."""
     from butterfly_osm_spark.operators import knn
 
@@ -393,21 +402,18 @@ def test_knn_releases_phase_caches(spark, fix001, monkeypatch):
     spark.catalog.clearCache()
     before = persistent_rdd_ids(spark)
     knn.knn_join(q, n).count()
-    assert paths == [("grid", 11)], "expected the grid path"
-    assert not (persistent_rdd_ids(spark) - before), "the grid path cached an RDD"
-    knn.knn_join(q, n, res=11).count()
-    assert len(paths) >= 3, "expected the ring loop"
-    new = persistent_rdd_ids(spark) - before
-    assert len(new) <= 1, f"{len(new)} new RDDs cached after the ring loop"
-    spark.catalog.clearCache()
+    assert paths == ["grid"], "expected the driver path"
+    assert not (persistent_rdd_ids(spark) - before), "the driver path cached an RDD"
 
 
 @pytest.mark.parametrize("sf", ["0.001", "0.01"])
-def test_knn_grid_matches_ring_loop_and_oracle(spark, sf, monkeypatch):
-    """Without ``res`` a request-sized target table is answered by the
-    grid kernel; an explicit res takes the ring loop. At the same res both
-    plans give identical rows, and both match the DuckDB oracle, on a
-    fixture with k in {1, 8, 64} and queries beyond the cutoff."""
+def test_knn_grid_matches_tiled_and_oracle(spark, sf, monkeypatch):
+    """A request-sized target table is answered on the driver path; with
+    the gate forced shut (``BROADCAST_MAX_ROWS = 0``) the same table takes
+    the tiled path. The gate is a plan choice, never a semantics choice:
+    both plans give identical rows, ties included, and both match the
+    DuckDB oracle, on a fixture with k in {1, 8, 64} and queries beyond
+    the cutoff."""
     import duckdb
 
     from butterfly_osm_spark.fixtures.generate import ensure_fixtures
@@ -419,34 +425,57 @@ def test_knn_grid_matches_ring_loop_and_oracle(spark, sf, monkeypatch):
     assert {r.k for r in q.select("k").distinct().collect()} >= {1, 8, 64}
     paths = _knn_paths(knn, monkeypatch)
     grid = sorted(map(tuple, knn.knn_join(q, n).collect()))
-    assert len(paths) == 1 and paths[0][0] == "grid", "expected the grid path"
-    res = paths.pop()[1]
-    ring_df = knn.knn_join(q, n, res=res)
-    ring = sorted(map(tuple, ring_df.collect()))
-    ring_df.unpersist()
-    assert len(paths) >= 2 and set(paths) == {res}, "expected the ring loop at the same res"
+    monkeypatch.setattr(knn, "BROADCAST_MAX_ROWS", 0)
+    tiled = sorted(map(tuple, knn.knn_join(q, n).collect()))
+    assert paths == ["grid", "tiled"], paths
     want = sorted(map(tuple, duckdb.sql(knn.knn_oracle_sql(fix)).fetchall()))
-    assert grid == ring == want
+    assert grid == tiled == want
     assert len({r[0] for r in want}) < q.count(), "no query lies beyond the cutoff"
 
 
+
+def test_knn_join_mode_gate_parity(spark, fix001, monkeypatch):
+    """The gate sits exactly at ``BROADCAST_MAX_ROWS`` target rows: a
+    table of that many rows takes the driver path, one row more than the
+    bound takes the tiled path. Either side of the edge gives the
+    identical ranked result set, ties included."""
+    from butterfly_osm_spark.operators import knn
+
+    q = spark.read.parquet(fix001 + "/query_points.parquet")
+    n = spark.read.parquet(fix001 + "/osm_nodes.parquet")
+    rows = n.count()
+    paths = _knn_paths(knn, monkeypatch)
+    monkeypatch.setattr(knn, "BROADCAST_MAX_ROWS", rows)
+    at_bound = sorted(map(tuple, knn.knn_join(q, n).collect()))
+    monkeypatch.setattr(knn, "BROADCAST_MAX_ROWS", rows - 1)
+    past_bound = sorted(map(tuple, knn.knn_join(q, n).collect()))
+    assert paths == ["grid", "tiled"], paths
+    assert at_bound == past_bound
+    assert at_bound, "the fixture answered no query"
+
 def _knn_both_paths(knn, q, n):
-    """Sorted rows of the grid path and of the ring loop at res 11."""
+    """Sorted rows of the driver path and of the tiled path. The tiled
+    path is called directly, so an empty target table reaches it too."""
+    from pyspark.sql import functions as F
+
     grid = sorted(map(tuple, knn.knn_join(q, n).collect()))
-    ring_df = knn.knn_join(q, n, res=11)
-    ring = sorted(map(tuple, ring_df.collect()))
-    ring_df.unpersist()
-    return grid, ring
+    nodes = n.select(F.col("id").alias("node_id"), "lon_e7", "lat_e7")
+    tiled = knn._tiled_join(q, nodes, n.schema["id"].dataType, knn.CUTOFF_M)
+    return grid, sorted(map(tuple, tiled.collect()))
 
 
 def test_knn_edge_cases_agree_on_both_paths(spark):
     """Hand-checked answers on a tiny table, identical on both paths:
     equal-d2 ties between duplicate-coordinate nodes rank by node_id, k
     larger than the reachable nodes returns every node inside the cutoff,
-    and queries beyond the cutoff or with k = 0 return no rows."""
+    and queries beyond the cutoff or with k = 0 return no rows. The
+    queries sit on the south-west corner of their res-7 tile, so the
+    tiled path finds the nodes west, south and south-west of them only
+    through the halo of the neighbouring tiles."""
     from butterfly_osm_spark.operators import knn
 
-    lon, lat = 130_000_000, 450_000_000  # 13.0 E, 45.0 N
+    lon, lat = 130_000_000, 450_000_000  # 13.0 E, 45.0 N: a res-7 tile corner
+    assert knn._tile_res(knn.CUTOFF_M) == 7
     n = spark.createDataFrame(
         [
             (30, lon, lat),
@@ -455,6 +484,11 @@ def test_knn_edge_cases_agree_on_both_paths(spark):
             (7, lon + 100_000, lat),  # 714 m east
             (8, lon, lat + 100_000),  # 1110 m north
             (9, lon + 800_000, lat),  # 5712 m east: beyond the cutoff
+            (11, lon - 50_000, lat),  # 357 m west, in the tile to the west
+            (12, lon, lat - 50_000),  # 555 m south, in the tile to the south
+            (13, lon - 30_000, lat - 30_000),  # 395.943 m south-west, diagonal tile
+            (15, lon - 700_000, lat),  # 4998 m west: inside the cutoff
+            (14, lon - 701_000, lat),  # 5005.14 m west: beyond the cutoff
         ],
         "id long, lon_e7 int, lat_e7 int",
     )
@@ -467,7 +501,7 @@ def test_knn_edge_cases_agree_on_both_paths(spark):
         ],
         "query_id string, lon_e7 int, lat_e7 int, k int",
     )
-    grid, ring = _knn_both_paths(knn, q, n)
+    grid, tiled = _knn_both_paths(knn, q, n)
     want = sorted(
         [
             ("tie", 1, 10, 0.0),
@@ -475,11 +509,16 @@ def test_knn_edge_cases_agree_on_both_paths(spark):
             ("all", 1, 10, 0.0),
             ("all", 2, 20, 0.0),
             ("all", 3, 30, 0.0),
-            ("all", 4, 7, 714.0),
-            ("all", 5, 8, 1110.0),
+            ("all", 4, 11, 357.0),
+            ("all", 5, 13, 395.943),
+            ("all", 6, 12, 555.0),
+            ("all", 7, 7, 714.0),
+            ("all", 8, 8, 1110.0),
+            ("all", 9, 15, 4998.0),
         ]
     )
-    assert grid == ring == want
+    assert grid == want
+    assert tiled == want
 
 
 def test_knn_empty_tables(spark, fix001):
@@ -491,6 +530,65 @@ def test_knn_empty_tables(spark, fix001):
     n = spark.read.parquet(fix001 + "/osm_nodes.parquet")
     assert _knn_both_paths(knn, q.limit(0), n) == ([], [])
     assert _knn_both_paths(knn, q, n.limit(0)) == ([], [])
+
+
+def test_knn_plans_pinned(spark, fix001, monkeypatch):
+    """The driver path is one ``mapInArrow`` over the query scan, with no
+    exchange. The tiled path runs its kernel in exactly one cogroup, with
+    no rank window and no cached frame."""
+    from butterfly_osm_spark.operators import knn
+
+    q = spark.read.parquet(fix001 + "/query_points.parquet")
+    n = spark.read.parquet(fix001 + "/osm_nodes.parquet")
+    grid = knn.knn_join(q, n)
+    grid.collect()
+    plan = grid._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1 and "Exchange" not in plan, plan
+    monkeypatch.setattr(knn, "BROADCAST_MAX_ROWS", 0)
+    tiled = knn.knn_join(q, n)
+    tiled.collect()
+    # the final adaptive plan, without the initial plan AQE prints too
+    plan = tiled._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert plan.count("FlatMapCoGroupsInArrow") == 1, plan
+    assert "Window" not in plan and "InMemoryTableScan" not in plan, plan
+
+
+def test_knn_tiled_oracle_at_session_defaults(fix001):
+    """The tiled path matches the DuckDB oracle under the session's default
+    shuffle partitions and AQE, where a cogroup key typed differently on
+    its two sides would split a tile. Runs in a subprocess because the
+    pytest session fixture already owns a JVM with 8 shuffle partitions."""
+    import os
+    import subprocess
+    import sys
+
+    script = f"""
+import duckdb
+from butterfly_osm_spark.session import get_spark
+from butterfly_osm_spark.operators import knn
+
+spark = get_spark(app_name="knn-tiled-defaults")
+knn.BROADCAST_MAX_ROWS = 0
+fix = {fix001!r}
+got = sorted(
+    map(
+        tuple,
+        knn.knn_join(
+            spark.read.parquet(fix + "/query_points.parquet"),
+            spark.read.parquet(fix + "/osm_nodes.parquet"),
+        ).collect(),
+    )
+)
+want = sorted(map(tuple, duckdb.sql(knn.knn_oracle_sql(fix)).fetchall()))
+assert got == want, f"tiled kNN mismatch: spark={{len(got)}} oracle={{len(want)}}"
+print("KNN_TILED_DEFAULTS_OK", spark.conf.get("spark.sql.shuffle.partitions"), len(got))
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, cwd=root, timeout=600
+    )
+    assert proc.returncode == 0, f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-3000:]}"
+    assert "KNN_TILED_DEFAULTS_OK" in proc.stdout
 
 
 def test_connected_components_releases_iteration_checkpoints(spark):
@@ -552,17 +650,25 @@ def test_connected_components_epoch_dirs_unique_per_run(spark, tmp_path, monkeyp
     assert not list(tmp_path.iterdir()), "epoch dirs left behind"
 
 
-def test_knn_res_invariance_fine_res_offsets(spark, fix001):
-    """Results must be identical at any working resolution; res 13 forces
-    |dy| >= 8 ring offsets, the int32-overflow regression zone (the step
-    multiply must be long — ANSI mode fails the task otherwise)."""
-    from butterfly_osm_spark.operators.knn import knn_join
+def test_knn_res_invariance_fine_res_offsets(fix001):
+    """The grid kernel's answers are identical at any grid res: at res 13
+    the walk spans |dy| >= 8 rectangle rows and more than one step."""
+    import pyarrow.parquet as pq
 
-    q = spark.read.parquet(f"{fix001}/query_points.parquet")
-    n = spark.read.parquet(f"{fix001}/osm_nodes.parquet")
-    a = sorted(map(tuple, knn_join(q, n, res=10).collect()))
-    b = sorted(map(tuple, knn_join(q, n, res=13).collect()))
-    assert a == b
+    from butterfly_osm_spark.operators import knn
+
+    nodes = pq.read_table(f"{fix001}/osm_nodes.parquet", columns=["id", "lon_e7", "lat_e7"])
+    nodes = nodes.rename_columns(["node_id", "lon_e7", "lat_e7"])
+    queries = pq.read_table(f"{fix001}/query_points.parquet")
+    qcols = [queries.column(c).to_numpy() for c in ("lon_e7", "lat_e7", "k")]
+
+    def answers(res):
+        g = knn._grid(nodes, res)
+        q, rank, gi, d2 = knn._grid_topk(g, *qcols, knn.CUTOFF_M)
+        return sorted(zip(q.tolist(), rank.tolist(), g.ids.take(gi).to_pylist(), d2.tolist()))
+
+    a = answers(10)
+    assert a and a == answers(13)
 
 
 def test_registry_contract_consistency():
@@ -602,25 +708,6 @@ print(json.dumps({
     assert proc.returncode == 0, proc.stderr[-3000:]
     got = json.loads(proc.stdout.strip().splitlines()[-1])
     assert got == {"operators": ["butterfly_osm_spark.operators.extract"], "jvm": False}
-
-
-def test_knn_join_mode_gate_parity(spark, fix001, monkeypatch):
-    """The gate (grid under BROADCAST_MAX_ROWS target rows; per ring
-    phase, broadcast under 4M exploded rows and a shuffle_merge pin over
-    it) is a plan choice, never a semantics choice: forcing the gate shut
-    (ring loop at the adaptive res, every phase pinned) must produce the
-    identical ranked result set."""
-    from butterfly_osm_spark.operators import knn
-
-    q = spark.read.parquet(fix001 + "/query_points.parquet")
-    n = spark.read.parquet(fix001 + "/osm_nodes.parquet")
-    want = sorted(map(tuple, knn.knn_join(q, n).collect()))
-    monkeypatch.setattr(knn, "BROADCAST_MAX_ROWS", 0)
-    paths = _knn_paths(knn, monkeypatch)
-    got = sorted(map(tuple, knn.knn_join(q, n).collect()))
-    assert len(paths) >= 2 and all(isinstance(p, int) for p in paths), "expected the ring loop"
-    assert got == want
-    spark.catalog.clearCache()
 
 
 def test_dedup_pipeline_releases_all_caches(spark):
