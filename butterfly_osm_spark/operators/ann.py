@@ -506,23 +506,18 @@ def embedding_clusters(embeddings: DataFrame, tau: float = 0.9) -> DataFrame:
 
     Spark shape: pairs come from the SUB-QUADRATIC banded path
     (``embedding_neardup_lsh``, full-recall-gated against the exact
-    oracle on the frozen near-dup fixture), then the shared distributed
-    min-label + pointer-jumping CC kernel (``dedup.connected_components``
-    — O(log d) rounds, per-round localCheckpoint lineage cuts, no
-    driver-side union-find). Caching contract: returns ONE persisted
-    O(|vecs|) frame; the CC labels checkpoint is released before
-    returning (``eager_release`` — the knn/dedup discipline). Caller
-    unpersists the result."""
-    from .dedup import connected_components, eager_release
+    oracle on the frozen near-dup fixture), then the shared driver-side
+    union-find (``dedup.connected_components``). Returns a lazy plan with
+    nothing cached."""
+    from .dedup import connected_components
 
     pairs = embedding_neardup_lsh(embeddings, tau).select("vec_id", "neighbor_id")
-    labels, _ = connected_components(pairs, embeddings.select("vec_id"))
-    out = labels.select(
+    labels = connected_components(pairs, embeddings.select("vec_id"))
+    return labels.select(
         F.col("id").alias("vec_id"),
         F.col("lab").alias("cluster_id"),
         (F.col("id") == F.col("lab")).alias("is_keeper"),
     )
-    return eager_release(out, [labels])
 
 
 def embedding_clusters_oracle_sql(tau: float = 0.9, src: str = "embeddings") -> str:

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
@@ -268,8 +269,8 @@ def release_checkpoint(df: DataFrame) -> None:
     table): the analyzed plan is walked and every ``LogicalRDD`` leaf's
     RDD is unpersisted, so callers holding only a downstream view can
     still release the checkpoint. Safe ONLY once nothing will recompute
-    from it (a localCheckpoint cannot be rebuilt); the CC loop calls it
-    on round N's labels after round N+1 is eagerly materialized.
+    from it (a localCheckpoint cannot be rebuilt); the graph loops call
+    it on round N's table after round N+1 is eagerly materialized.
     Best-effort: if Spark internals moved, leak rather than crash."""
     try:
         leaves = df._jdf.queryExecution().analyzed().collectLeaves()
@@ -284,18 +285,18 @@ def release_checkpoint(df: DataFrame) -> None:
 def eager_release(result: DataFrame, holds: list[DataFrame]) -> DataFrame:
     """Materialize ``result`` into the block cache, then free every frame
     in ``holds`` — both plain ``persist``-ed frames (unpersist) and
-    ``localCheckpoint``-ed label tables (release_checkpoint; the cache
-    manager never sees those blocks, see connected_components). The
-    CALLER owns releasing the returned frame (``.unpersist()`` once
-    consumed, or clearCache as bench.py does).
+    ``localCheckpoint``-ed tables (release_checkpoint; the cache manager
+    never sees those blocks). The CALLER owns releasing the returned
+    frame (``.unpersist()`` once consumed, or clearCache as bench.py
+    does).
 
     The rule: an operator whose plan is read once returns it lazy and
     caches nothing. Only a result built from a frame that is costly to
     rebuild and must be freed before returning comes through here: a
-    label-loop checkpoint, which ``clearCache`` cannot reach (connected
-    components and its callers, the graph loops, ``cell_compact``), or a
-    Python-kernel output the plan reads twice (``zonal_stats``'s decoded
-    samples)."""
+    loop checkpoint, which ``clearCache`` cannot reach (the graph loops,
+    ``cell_compact``), or a frame the plan reads more than once
+    (``zonal_stats``'s decoded samples, ``incremental_dedup``'s verified
+    pairs)."""
     out = result.persist()
     out.count()
     for h in holds:
@@ -307,153 +308,71 @@ def eager_release(result: DataFrame, holds: list[DataFrame]) -> DataFrame:
     return out
 
 
-def connected_components(
-    edges: DataFrame,
-    nodes: DataFrame,
-    max_iters: int = 50,
-    reset_dir: str | None = None,
-    reset_every: int = 8,
-) -> tuple[DataFrame, int]:
-    """Distributed connected components by iterative min-label propagation
-    with pointer jumping. ``edges`` = (src, dst) undirected pairs (either
-    direction suffices), ``nodes`` = one ``id`` column (ids must be
-    orderable; labels are node ids). Returns (labels (id, lab) with lab =
-    the component's minimum id, iterations used).
+def _component_labels(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, labels) for every vertex of an undirected edge list, labels
+    being the minimum id of the vertex's component.
 
-    Scale shape: every iteration is one O(|E|) edge-relax shuffle
-    (join labels on src, groupBy dst min) plus one O(|V|) pointer-jump
-    self-join (lab := lab(lab)) — the doubling step that turns
-    diameter-many rounds into O(log d), the same round bound as
-    large-star/small-star. Nothing is ever collected to the driver: the
-    loop's only action is the scalar changed-row count that decides
-    convergence. Each iteration's label table is cut over via
-    ``localCheckpoint`` — persist alone is NOT enough here: the jump is a
-    self-join, so the LOGICAL plan doubles per iteration and Catalyst
-    analysis goes exponential around ~8 rounds even though the cached
-    data is bounded; checkpointing truncates the lineage so every
-    iteration re-plans from a one-level-deep scan. (On a cluster with
-    executor churn, swap in a reliable ``checkpoint()`` dir — same
-    protocol, durable blocks.)
+    ``np.unique`` sorts, so the dense index order is the id order (for
+    strings too) and the minimum index of a component is its minimum id.
+    Each round hooks the larger label of every edge whose endpoints still
+    disagree onto the smaller one (``np.minimum.at`` keeps the smallest
+    of several hooks), then jumps pointers (``lab = lab[lab]``) until
+    every vertex points at its root. Labels only decrease, so the label
+    forest has no cycles and each root is its component's minimum."""
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    a, b = inv[: len(src)], inv[len(src) :]
+    lab = np.arange(len(ids))
+    while True:
+        la, lb = lab[a], lab[b]
+        split = la != lb
+        if not split.any():
+            return ids, ids[lab]
+        la, lb = la[split], lb[split]
+        np.minimum.at(lab, np.maximum(la, lb), np.minimum(la, lb))
+        while not np.array_equal(jumped := lab[lab], lab):
+            lab = jumped
 
-    Cache hygiene: each iteration's checkpoint blocks are freed as soon
-    as the NEXT round's checkpoint is eagerly materialized and the
-    convergence count consumed the old table — ``catalog.clearCache()``
-    does NOT reach RDD-level
-    localCheckpoint blocks, so without this a long-lived session running
-    many dedup jobs accumulates O(iterations) label tables. Only the
-    RETURNED labels frame stays cached (bounded: one O(|V|) table); call
-    ``release_checkpoint(labels)`` when done with it.
 
-    Lineage-EPOCH reset (round-5e scale-killer, PLANS.md): Spark
-    degrades ~2.5x PER ROUND once an unbroken Dataset-checkpoint chain
-    passes ~17 links — flavor-independent (localCheckpoint AND reliable
-    checkpoint), config-independent (AQE / constraint propagation /
-    codegen), invisible to every driver metric probed (plan size,
-    lineage depth, partition count, GC time, persistent-RDD count all
-    flat; reproduced on a 25-round synthetic loop, 0.6 s -> 133 s by
-    round 23). Every ``reset_every`` rounds the labels table therefore
-    round-trips through columnar storage (write + re-read + eager
-    re-checkpoint; the parquet is deleted immediately — the blocks
-    live in the block manager), which starts a fresh epoch and pins
-    every round at O(1) cost (30-round synthetic replay: all rounds
-    <= 1.3 s). ``reset_dir`` is where the epoch round-trip parquet goes:
-    on a non-local master it MUST be shared storage visible to every
-    executor (a driver-local tempdir would let each executor commit task
-    files to its own filesystem and the re-read silently drop rows) — it
-    defaults to the context's checkpoint dir when one is set and
-    otherwise FAILS FAST on non-local masters; only local[*] falls back
-    to a process-local tempdir. Grid-shaped graphs (cell_regions) are
-    the consumers that actually reach such depths."""
-    import shutil
-    import tempfile
-    import uuid
+def connected_components(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """``nodes`` with its first column renamed ``id`` and a ``lab`` column
+    appended: the minimum id of the node's connected component. ``edges``
+    = (src, dst) undirected pairs in its first two columns (either
+    direction suffices; duplicates and self-loops are harmless),
+    ``nodes`` = the ids in its first column (orderable; labels are node
+    ids), any other columns passed through. Every edge endpoint must be
+    a node: the labels of the nodes are computed over the whole edge
+    list, so an endpoint outside ``nodes`` still connects its neighbours.
 
-    e = (
-        edges.selectExpr(f"{edges.columns[0]} AS src", f"{edges.columns[1]} AS dst")
-        .unionByName(edges.selectExpr(f"{edges.columns[1]} AS src", f"{edges.columns[0]} AS dst"))
-        .persist()
+    The edge list is collected once as Arrow and labelled on the driver
+    by one numpy kernel (``_component_labels``). The result is a lazy
+    plan: ``nodes`` left-joined to the (id, lab) pairs of the vertices
+    whose label is not their own id, nothing cached. The collect is
+    guarded by ``limit(cap + 1)``, cap being
+    ``session.collect_budget_bytes`` over the edge row width from the
+    schema; a larger edge list raises before any result exists."""
+    from ..session import collect_budget_bytes
+
+    src, dst = edges.columns[:2]
+    # an edge with a null endpoint connects nothing, as in an equi-join
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).dropna()
+    spark = e.sparkSession
+    budget = collect_budget_bytes(spark)
+    cap = budget // e._jdf.schema().defaultSize()
+    tbl = e.limit(cap + 1).toArrow()
+    if tbl.num_rows > cap:
+        raise RuntimeError(
+            f"connected_components: at least {tbl.num_rows} edges, over the driver budget of "
+            f"{budget} bytes ({cap} edges; session.collect_budget_bytes)"
+        )
+    ids, lab = _component_labels(tbl.column("src").to_numpy(), tbl.column("dst").to_numpy())
+    moved = ids != lab
+    rel = spark.createDataFrame(pa.table({"id": ids[moved], "lab": lab[moved]}))
+    id_type = nodes.schema[0].dataType
+    return (
+        nodes.withColumnRenamed(nodes.columns[0], "id")
+        .join(rel.select(F.col("id").cast(id_type), F.col("lab").cast(id_type)), "id", "left")
+        .withColumn("lab", F.coalesce("lab", "id"))
     )
-    labels = nodes.select(
-        F.col(nodes.columns[0]).alias("id"), F.col(nodes.columns[0]).alias("lab")
-    ).localCheckpoint(eager=True)
-    spark = labels.sparkSession
-    local_tmp = reset_dir is None
-    if local_tmp:
-        master = spark.sparkContext.master
-        ckpt = spark.sparkContext._jsc.sc().getCheckpointDir()
-        if ckpt.isDefined():
-            reset_dir, local_tmp = ckpt.get(), False
-        elif not master.startswith("local"):
-            raise RuntimeError(
-                "connected_components: on a non-local master pass "
-                "reset_dir=<shared storage path> (or setCheckpointDir) — "
-                "the epoch-reset parquet must be visible to every executor"
-            )
-    iters = 0
-    converged = False
-    while iters < max_iters:
-        iters += 1
-        nmin = (
-            e.join(labels.select(F.col("id").alias("src"), "lab"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("lab").alias("nlab"))
-        )
-        relaxed = labels.join(nmin, "id", "left").select(
-            "id", F.least("lab", "nlab").alias("lab")  # least() skips NULL
-        )
-        parent = relaxed.select(F.col("id").alias("p_id"), F.col("lab").alias("p_lab"))
-        jumped = relaxed.join(parent, F.col("lab") == F.col("p_id"), "left").select(
-            "id", F.least("lab", "p_lab").alias("lab")
-        )
-        # second jump: one more vocabulary-sized self-join compresses the
-        # label forest twice per round — grid/chain graphs (cell_regions)
-        # converge in noticeably fewer rounds for one cheap exchange.
-        parent2 = jumped.select(F.col("id").alias("p_id"), F.col("lab").alias("p_lab"))
-        jumped = (
-            jumped.join(parent2, F.col("lab") == F.col("p_id"), "left")
-            .select("id", F.least("lab", "p_lab").alias("lab"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            jumped.select("id", F.col("lab").alias("new_lab"))
-            .join(labels, "id")
-            .where(F.col("new_lab") != F.col("lab"))
-            .count()
-        )
-        release_checkpoint(labels)  # next round is materialized; prev safe to free
-        labels = jumped
-        if changed == 0:
-            converged = True
-            break
-        if iters % reset_every == 0:
-            if local_tmp:
-                base = tempfile.mkdtemp(prefix="cc_epoch_")
-            else:
-                # unique across driver processes sharing reset_dir: a
-                # collision would let another job overwrite this epoch
-                # between its write and its re-read
-                run = f"{spark.sparkContext.applicationId}_{uuid.uuid4().hex}"
-                base = f"{reset_dir.rstrip('/')}/cc_epoch_{run}_{iters}"
-            path = f"{base}/labels"
-            labels.write.mode("overwrite").parquet(path)
-            # not session.read_parquet: path may be on shared non-local
-            # storage, where the driver cannot open a footer itself
-            fresh = spark.read.parquet(path).localCheckpoint(eager=True)
-            release_checkpoint(labels)
-            labels = fresh
-            if local_tmp:
-                shutil.rmtree(base, ignore_errors=True)
-            else:  # shared storage: delete through the Hadoop FS API
-                try:
-                    jvm = spark._jvm
-                    p = jvm.org.apache.hadoop.fs.Path(base)
-                    p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
-                except Exception:  # noqa: BLE001 — leak the tmp dir, don't crash
-                    pass
-    e.unpersist()
-    if not converged:
-        raise RuntimeError(f"connected_components did not converge in {max_iters} iterations")
-    return labels, iters
 
 
 def dedup_clusters(documents: DataFrame, threshold: float = 0.5) -> DataFrame:
@@ -463,20 +382,16 @@ def dedup_clusters(documents: DataFrame, threshold: float = 0.5) -> DataFrame:
     their own cluster) and exactly one canonical keeper per cluster
     (keeper = min id). This is the stage that turns pair output into the
     thing a training-data pipeline actually consumes: a keep/drop
-    decision per document, computed distributively (no driver-side
-    union-find over collected pairs — the classic scale-killer).
-
-    Caching contract: returns ONE persisted O(|docs|) frame; the CC
-    labels checkpoint is released before returning. Caller unpersists
-    the result."""
+    decision per document. The pairs are labelled by
+    ``connected_components``'s driver-side union-find; the result is a
+    lazy plan with nothing cached."""
     pairs = minhash_lsh_pairs(documents, threshold).select("doc_a", "doc_b")
-    labels, _ = connected_components(pairs, documents.select("doc_id"))
-    out = labels.select(
+    labels = connected_components(pairs, documents.select("doc_id"))
+    return labels.select(
         F.col("id").alias("doc_id"),
         F.col("lab").alias("cluster_id"),
         (F.col("id") == F.col("lab")).alias("is_keeper"),
     )
-    return eager_release(out, [labels])
 
 
 def incremental_dedup(
@@ -511,7 +426,11 @@ def incremental_dedup(
     Equal to dedup_clusters(base ∪ new) by construction: banding is
     content-deterministic (shard-built index == corpus-built index), old
     pairs cannot change, and the star preserves each old component's
-    node set (pytest-pinned)."""
+    node set (pytest-pinned).
+
+    Returns one persisted frame: the verified pairs are persisted because
+    the plan reads them three times, and are released before returning
+    (``eager_release``). Caller unpersists the result."""
     new_bands = lsh_band_index(new_docs)
     full_index = band_index.unionByName(new_bands)
     nb = new_bands.alias("nb")
@@ -564,7 +483,7 @@ def incremental_dedup(
     if stats is not None:
         stats["n_cc_nodes"] = nodes.count()
         stats["n_new_pairs"] = pairs.count()
-    labels, _ = connected_components(pairs.unionByName(star), nodes)
+    labels = connected_components(pairs.unionByName(star), nodes)
     recomputed = labels.select(
         F.col("id").alias("doc_id"),
         F.col("lab").alias("cluster_id"),
@@ -573,7 +492,7 @@ def incremental_dedup(
     untouched = base_labels.join(
         affected_clusters, "cluster_id", "left_anti"
     ).select("doc_id", "cluster_id", "is_keeper")
-    return eager_release(untouched.unionByName(recomputed), [pairs, labels])
+    return eager_release(untouched.unionByName(recomputed), [pairs])
 
 
 def dedup_clusters_oracle_sql(threshold: float = 0.5) -> str:
@@ -910,21 +829,17 @@ def simhash_clusters(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
     """(doc_id, cluster_id, is_keeper): transitive closure over the
     SimHash near-dup pairs — the third cluster-resolution twin beside
     ``dedup_clusters`` (MinHash) and ``phash_clusters`` (image side),
-    on the same distributed CC kernel. Completes the rule that EVERY
-    pair-emitting near-dup path in the engine also ships its cluster
-    materialization (pairs alone force the user into a driver-side
-    union-find — the classic scale-killer).
-
-    Caching contract: dedup_clusters' — one persisted result, the labels
-    checkpoint released before returning."""
+    on the same ``connected_components`` kernel. Completes the rule that
+    EVERY pair-emitting near-dup path in the engine also ships its
+    cluster materialization. A lazy plan with nothing cached, as
+    ``dedup_clusters``."""
     pairs = simhash_pairs(documents, max_hamming).select("doc_a", "doc_b")
-    labels, _ = connected_components(pairs, documents.select("doc_id"))
-    out = labels.select(
+    labels = connected_components(pairs, documents.select("doc_id"))
+    return labels.select(
         F.col("id").alias("doc_id"),
         F.col("lab").alias("cluster_id"),
         (F.col("id") == F.col("lab")).alias("is_keeper"),
     )
-    return eager_release(out, [labels])
 
 
 def simhash_clusters_oracle_sql(max_hamming: int = 3) -> str:
@@ -970,20 +885,17 @@ def corpus_filter(
 
     Plan shape: TWO doc_id-keyed subplans joined on doc_id — the fused
     quality+repetition leg (one tokenization pass over the corpus text,
-    text.quality_repetition) and the CC loop (whose per-round state is
-    O(|V|+|E|)). The executed plan scans the corpus text exactly twice
-    (was three before round 5 — VERDICT r4 "Next round #6"); each leg
-    shuffles only (doc_id, small-fixed-width) rows, text never shuffles.
-
-    Caching contract: returns ONE persisted O(|docs|) frame; the
-    dedup_clusters intermediate is released before returning. Caller
-    unpersists the result once consumed."""
+    text.quality_repetition) and ``dedup_clusters``' labels (the pairs are
+    collected and labelled on the driver when the plan is built). The
+    executed plan scans the corpus text exactly twice (was three before
+    round 5 — VERDICT r4 "Next round #6"); each leg shuffles only
+    (doc_id, small-fixed-width) rows, text never shuffles. A lazy plan
+    with nothing cached."""
     from .text import quality_repetition
 
     qr = quality_repetition(documents).select("doc_id", "quality", "is_repetitive")
-    k_full = dedup_clusters(documents, jaccard_t)
-    k = k_full.select("doc_id", "is_keeper")
-    out = (
+    k = dedup_clusters(documents, jaccard_t).select("doc_id", "is_keeper")
+    return (
         qr.join(k, "doc_id")
         .select(
             "doc_id",
@@ -997,7 +909,6 @@ def corpus_filter(
             ).alias("keep"),
         )
     )
-    return eager_release(out, [k_full])
 
 
 def corpus_filter_oracle_sql(

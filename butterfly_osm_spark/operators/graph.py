@@ -6,8 +6,7 @@ distance queries — docs/architecture.md matrix/isochrone sections).
 Full CCH is out of graft scope (SURVEY §2.3), but the distributed
 building block every fleet/logistics pipeline needs — "hop distance to
 the nearest depot" over the road graph — is expressible Spark-first as
-iterative frontier expansion, the same loop discipline as
-``connected_components`` (dedup.py): each round is one O(frontier x
+iterative frontier expansion: each round is one O(frontier x
 avg-degree) equi-join shuffle plus an anti-join against the settled
 set; the only driver traffic is the scalar frontier count that decides
 termination. Label tables are ``localCheckpoint``-ed per round (the

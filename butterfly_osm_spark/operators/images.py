@@ -313,14 +313,14 @@ SELECT img_a, img_b, hamming, jaccard FROM (
 def phash_clusters(images: DataFrame, max_hamming: int = MAX_HAMMING) -> DataFrame:
     """(image_id, cluster_id, is_keeper): transitive closure over the
     phash near-dup pairs — the image-side twin of the text pipeline's
-    ``dedup_clusters`` (same distributed min-label + pointer-jumping
-    kernel, ``dedup.connected_components``; no driver-side union-find).
-    cluster_id = lexicographic-min image_id of the component; singletons
-    keep themselves."""
+    ``dedup_clusters`` (the same driver-side union-find,
+    ``dedup.connected_components``). cluster_id = lexicographic-min
+    image_id of the component; singletons keep themselves. A lazy plan
+    with nothing cached."""
     from .dedup import connected_components
 
     pairs = phash_neardup_pairs(images, max_hamming).select("img_a", "img_b")
-    labels, _ = connected_components(pairs, images.select("image_id"))
+    labels = connected_components(pairs, images.select("image_id"))
     return labels.select(
         F.col("id").alias("image_id"),
         F.col("lab").alias("cluster_id"),

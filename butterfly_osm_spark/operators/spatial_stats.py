@@ -257,52 +257,56 @@ def cell_regions(nodes: DataFrame, res: int = STAT_RES) -> DataFrame:
     region_id is the component's minimum packed cell id (deterministic
     under any plan); region_size the component's cell count.
 
-    Scale shape: corpus reduces to the occupied-cell vocabulary once
-    (the cell_triangles construction — max queen degree 8 bounds the
-    edge fan-out); components resolve with the SAME distributed CC
-    kernel as dedup_clusters (min-label + pointer jumping, O(log d)
-    rounds, per-round localCheckpoint lineage cuts, scalar-only driver
-    traffic — dedup.py:293). Cell ids pack as x * 2^31 + y (both
-    grid-offset non-negative, well inside BIGINT). The DuckDB oracle
-    replays reachability as the recursive min-label CTE over the same
-    queen edges.
+    Scale shape: one exchange builds the edges. Every node names its own
+    cell and that cell's four queen neighbours in the +x / +y half;
+    grouped by the named cell, a cell that names itself is occupied and
+    the other namers are its occupied neighbours, so each adjacent pair
+    is one edge (at most 4 per cell). Components resolve with
+    ``dedup.connected_components``, the numpy union-find that labels the
+    collected edge list on the driver. The per-node labels are gathered
+    once by region, which dedups the cells and counts them; a region's
+    cells become one array, which the collect budget already bounds (a
+    region of n cells brings at least n - 1 edges to the driver). Cell ids
+    pack as x * 2^31 + y (both grid-offset non-negative, well inside
+    BIGINT). The DuckDB oracle replays reachability as the recursive
+    min-label CTE over the same queen edges.
 
-    Returns one persisted vocabulary-sized frame; caller releases it.
+    Returns a lazy vocabulary-sized plan with nothing cached.
     """
-    from .dedup import connected_components, eager_release
+    from .dedup import connected_components
 
-    occ = _occ_xy(nodes, res).distinct().persist()
+    occ = _occ_xy(nodes, res)
     pack = (F.col("x") * F.lit(2_147_483_648) + F.col("y")).alias("id")
-    ids = occ.select(pack)
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)]
-    nbr = occ.select(
-        "x",
-        "y",
+    offs = [(0, 0), (1, -1), (1, 0), (1, 1), (0, 1)]
+    named = occ.select(
+        pack.alias("by"),
         F.explode(
             F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in offs])
         ).alias("o"),
+        "x",
+        "y",
     ).select(
-        (F.col("x") * F.lit(2_147_483_648) + F.col("y")).alias("src"),
         ((F.col("x") + F.col("o.dx")) * F.lit(2_147_483_648) + (F.col("y") + F.col("o.dy"))).alias(
-            "dst"
+            "cell"
         ),
+        "by",
     )
-    edges = nbr.join(ids.withColumnRenamed("id", "dst"), "dst", "left_semi").filter(
-        F.col("src") < F.col("dst")
+    namers = named.groupBy("cell").agg(F.collect_set("by").alias("by"))
+    edges = (
+        namers.where(F.array_contains("by", F.col("cell")))
+        .select("cell", F.explode("by").alias("nbr"))
+        .where(F.col("nbr") != F.col("cell"))
     )
-    labels, _ = connected_components(edges, ids)
-    sizes = labels.groupBy("lab").agg(F.count(F.lit(1)).alias("region_size"))
-    out = labels.join(sizes, "lab").select(
+    labels = connected_components(edges, occ.select(pack))
+    regions = labels.groupBy("lab").agg(F.collect_set("id").alias("ids"))
+    return regions.select(
+        F.explode("ids").alias("id"), "lab", F.size("ids").cast("long").alias("region_size")
+    ).select(
         F.expr("id div 2147483648").alias("x"),
         (F.col("id") % 2_147_483_648).alias("y"),
         F.col("lab").alias("region_id"),
         "region_size",
     )
-    res_df = eager_release(out, [occ])
-    from .dedup import release_checkpoint
-
-    release_checkpoint(labels)
-    return res_df
 
 
 def cell_regions_oracle_sql(fix: str, res: int = STAT_RES) -> str:

@@ -338,25 +338,22 @@ def dbscan_hotspots(
     partitions); the adjacency is an EQUI-join — each dense cell explodes
     its 4 positive-direction neighbour ids (pure packed-id arithmetic,
     cells.neighbor_col) and joins back against the dense-cell set
-    (broadcastable under AQE) — never a range/theta join; the CC kernel
-    (dedup.connected_components) runs on the dense-cell graph: O(log d)
-    rounds of vocabulary-sized shuffles, per-round localCheckpoint
-    lineage cuts. Caching contract: returns ONE persisted
-    vocabulary-sized frame; intermediates are released before returning
-    (``eager_release``); caller unpersists the result.
+    (broadcastable under AQE) — never a range/theta join; the
+    dense-cell edge list (at most 4 per dense cell) is labelled by
+    ``dedup.connected_components``'s driver-side union-find. Returns a
+    lazy vocabulary-sized plan with nothing cached.
 
     Domain-edge caveat: neighbour-id arithmetic wraps at the +/-180 deg
     antimeridian column (the packed-id x overflow borrows into y); the
     fixture extract — like any single-region OSM extract — never touches
     it, and a global run would pre-split the seam column."""
-    from .dedup import connected_components, eager_release
+    from .dedup import connected_components
 
     dense = (
         nodes.select(cells.cell_col("lon_e7", "lat_e7", res).alias("cell_id"))
         .groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("n_points"))
         .where(F.col("n_points") >= minpts)
-        .persist()
     )
     offs = F.array(
         *[F.lit(dy * (1 << cells.Y_SHIFT) + dx) for dx, dy in _DBSCAN_HALF_OFFSETS]
@@ -367,12 +364,9 @@ def dbscan_hotspots(
     edges = nbr.join(
         dense.select(F.col("cell_id").alias("nbr_id")), "nbr_id"
     ).select("cell_id", "nbr_id")
-    labels, _ = connected_components(edges, dense.select("cell_id"))
-    out = dense.join(
-        labels.select(F.col("id").alias("cell_id"), F.col("lab").alias("cluster_id")),
-        "cell_id",
-    ).select("cell_id", "cluster_id", "n_points")
-    return eager_release(out, [dense, labels])
+    return connected_components(edges, dense).select(
+        F.col("id").alias("cell_id"), F.col("lab").alias("cluster_id"), "n_points"
+    )
 
 
 def dbscan_hotspots_oracle_sql(
@@ -547,8 +541,8 @@ def cell_compact(
         # Each level references w three times (cur, rest, tagged->full/kept):
         # without a lineage cut the logical plan grows 3^levels and the
         # base distinct scan is re-executed exponentially often (measured
-        # 133 s -> ~2 s at sf0.1). Same discipline as the CC loop: cut via
-        # localCheckpoint per level, free the superseded level's blocks.
+        # 133 s -> ~2 s at sf0.1). Same discipline as the graph loops: cut
+        # via localCheckpoint per level, free the superseded level's blocks.
         nxt = (
             rest.unionByName(kept)
             .unionByName(full.select(F.col("pcell").alias("cell_id")))

@@ -10,22 +10,23 @@ output partitioning (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
 is false), so AQE never coalesces the final shuffle of a ``persist``-ed
 result: every one of the shuffle partitions becomes a task when the
 cache is written and again each time it is read. Single-pass operators
-return lazy plans and cache nothing; what still persists is label-loop
-state and the results built on it (``dedup.connected_components`` and
-its callers: the dedup and embedding clusters, ``cell_regions``,
-``dbscan_hotspots``; the graph loops: ``bfs_hops``, ``isochrone_ms``,
-``pagerank``, ``kcore_peel``, ``time_matrix``, ``route_paths``;
-``tiles.cell_compact``), ``zonal_stats``'s decoded samples, the kNN ring
-loop, BPE merges and k-means. The package lets AQE size those by bytes
-like any other stage. When ``minhash_lsh`` still persisted its pairs,
-a traced perfbench ``raster_dedup`` run (sf0.001, 4-core x86-64 VM, 32
-shuffle partitions) went from 105 tasks to 11 for its 25-row result and
-its scheduler wait from 17.7 s to 0.2 s.
+return lazy plans and cache nothing; what still persists is loop state
+and the results built on it (the graph loops: ``bfs_hops``,
+``isochrone_ms``, ``pagerank``, ``kcore_peel``, ``time_matrix``,
+``route_paths``; ``tiles.cell_compact``), ``zonal_stats``'s decoded
+samples, ``incremental_dedup``'s verified pairs, BPE merges and k-means.
+The package lets AQE size those by bytes like any other stage. When
+``minhash_lsh`` still persisted its pairs, a traced perfbench
+``raster_dedup`` run (sf0.001, 4-core x86-64 VM, 32 shuffle partitions)
+went from 105 tasks to 11 for its 25-row result and its scheduler wait
+from 17.7 s to 0.2 s.
 
 Resources come from the host, not from constants: ``local[N]`` takes N
 from the cores this process may run on (``os.sched_getaffinity``) and
 the driver heap is half the physical RAM, at most 48 GB.
-``$SPARK_GRAFT_CPUS`` and ``$SPARK_GRAFT_DRIVER_MEM`` override them.
+``$SPARK_GRAFT_CPUS`` and ``$SPARK_GRAFT_DRIVER_MEM`` override them. A
+collect to the driver may take ``COLLECT_FRACTION`` of that heap
+(``collect_budget_bytes``).
 
 JIT thresholds. Every build and benchmark pass is a cold driver JVM,
 and HotSpot's C2 compiler spent about half of such a job's CPU
@@ -141,6 +142,21 @@ def default_driver_memory() -> str:
         return mem
     ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
     return f"{min(48 << 10, ram_mb // 2)}m"
+
+
+# share of the driver heap one collect to the driver may take. The bytes
+# are estimated from the schema's row width, and the numpy kernels that
+# read the rows (connected components: ``dedup._component_labels``) hold
+# several arrays of the same length at once.
+COLLECT_FRACTION = 1 / 16
+
+
+def collect_budget_bytes(spark: SparkSession) -> int:
+    """Bytes one collect to the driver may take: ``COLLECT_FRACTION`` of
+    the session's ``spark.driver.memory`` (``default_driver_memory()``
+    when the session does not set it)."""
+    mem = spark.sparkContext.getConf().get("spark.driver.memory") or default_driver_memory()
+    return int(_heap_bytes(mem) * COLLECT_FRACTION)
 
 
 def default_shuffle_partitions() -> int:

@@ -39,3 +39,21 @@ def persistent_rdd_ids(spark):
     while it.hasNext():
         out.add(it.next())
     return out
+
+
+def union_find(edges, nodes):
+    """Reference labels: {node: min node of its component}, by a
+    pure-Python union-find over ``edges`` (pairs) and ``nodes``."""
+    parent = {v: v for v in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in nodes}

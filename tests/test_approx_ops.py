@@ -261,49 +261,21 @@ def test_kmeans_reproduces_gentime_codebook(spark, fix001):
     assert all(b >= a - 1e-9 for a, b in zip(obj, obj[1:]))
 
 
-def test_connected_components_log_rounds_and_bounded_state(spark):
-    """Pointer jumping must converge in O(log diameter) rounds — a
-    200-node path graph (diameter 199) must NOT take ~199 min-label
-    rounds — and the label table stays exactly |V| rows (per-iteration
-    work is one O(|E|) relax + one O(|V|) jump; nothing collected)."""
-    from butterfly_osm_spark.operators.dedup import connected_components
-
-    n = 200
-    edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src LONG, dst LONG")
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "id LONG")
-    labels, iters = connected_components(edges, nodes)
-    assert iters <= 12, f"path graph took {iters} rounds — doubling is broken"
-    rows = labels.collect()
-    assert len(rows) == n
-    assert all(r.lab == 0 for r in rows)
-    labels.unpersist()
-
-
 def test_dedup_clusters_matches_union_find(spark):
-    """Cluster labels == driver-side union-find over the exact pair set
-    (tiny corpus only — the distributed path exists precisely so this
-    collect-based check never runs at scale)."""
+    """Cluster labels == a pure-Python union-find over the exact pair set,
+    collected from the same MinHash-LSH pairs that dedup_clusters labels
+    with its numpy kernel."""
     from butterfly_osm_spark.operators.dedup import (
         dedup_clusters,
         minhash_lsh_pairs,
     )
 
+    from .conftest import union_find
+
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     pairs = minhash_lsh_pairs(docs, 0.5).collect()
     ids = [r.doc_id for r in docs.select("doc_id").collect()]
-    parent = {i: i for i in ids}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in pairs:
-        a, b = find(r.doc_a), find(r.doc_b)
-        if a != b:
-            parent[max(a, b)] = min(a, b)
-    want = {i: find(i) for i in ids}
+    want = union_find([(r.doc_a, r.doc_b) for r in pairs], ids)
 
     got = {r.doc_id: (r.cluster_id, r.is_keeper) for r in dedup_clusters(docs, 0.5).collect()}
     assert set(got) == set(want)
@@ -456,4 +428,4 @@ def test_incremental_dedup_equals_from_scratch_and_touches_only_affected(spark, 
     # members only, far below the corpus
     assert stats["n_cc_nodes"] < n_total
     assert stats["n_cc_nodes"] >= n_new
-    inc.unpersist(); full.unpersist(); base_labels.unpersist()
+    inc.unpersist()

@@ -220,6 +220,23 @@ def test_shuffle_partitions_follow_the_cores(monkeypatch):
         assert session.default_shuffle_partitions() == want
 
 
+def test_collect_budget_parses_driver_memory(monkeypatch):
+    """The collect budget is COLLECT_FRACTION of the session's
+    spark.driver.memory (a bare number or an m/g suffix), and of
+    default_driver_memory() when the session does not set it."""
+    from types import SimpleNamespace
+
+    def fake(conf):
+        return SimpleNamespace(sparkContext=SimpleNamespace(getConf=lambda: conf))
+
+    frac = session.COLLECT_FRACTION
+    budget = session.collect_budget_bytes
+    assert budget(fake({"spark.driver.memory": "7680m"})) == int((7680 << 20) * frac)
+    assert budget(fake({"spark.driver.memory": "8g"})) == int((8 << 30) * frac)
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert budget(fake({})) == int((2 << 30) * frac)
+
+
 def test_cached_results_coalesce(spark):
     """A persisted shuffle result is sized by AQE like any other stage:
     its cached plan may change output partitioning, so a small

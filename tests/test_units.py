@@ -591,63 +591,101 @@ print("KNN_TILED_DEFAULTS_OK", spark.conf.get("spark.sql.shuffle.partitions"), l
     assert "KNN_TILED_DEFAULTS_OK" in proc.stdout
 
 
-def test_connected_components_releases_iteration_checkpoints(spark):
-    """The CC loop must free every intermediate round's localCheckpoint —
-    only the returned labels frame may stay cached (clearCache cannot
-    reach RDD-level checkpoint blocks, so leaks here outlive everything)."""
-    from butterfly_osm_spark.operators.dedup import (
-        connected_components,
-        release_checkpoint,
-    )
-
-    def persistent_ids():
-        m = spark.sparkContext._jsc.sc().getPersistentRDDs()
-        it = m.keysIterator()
-        out = set()
-        while it.hasNext():
-            out.add(it.next())
-        return out
-
-    # identity-based accounting: a PREVIOUS test's async unpersist may
-    # complete mid-test, so counts can legally DROP — only NEW survivors
-    # constitute a leak.
-    before = persistent_ids()
-    # a 64-node path graph forces multiple pointer-jumping rounds
-    edges = spark.createDataFrame([(i, i + 1) for i in range(63)], "a long, b long")
-    nodes = spark.range(64).withColumnRenamed("id", "node_id")
-    labels, iters = connected_components(edges, nodes)
-    assert iters >= 3  # the path graph actually exercised multiple rounds
-    assert labels.where("lab != 0").count() == 0  # single component, min id 0
-    new_cached = persistent_ids() - before
-    assert len(new_cached) <= 1, f"{new_cached} cached after CC (expected only the result)"
-    release_checkpoint(labels)
-    assert not (persistent_ids() - before), "CC leaked iteration checkpoints"
+CC_CALLERS = (
+    "dedup_clusters",
+    "simhash_clusters",
+    "phash_clusters",
+    "embedding_clusters",
+    "dbscan_hotspots",
+    "cell_regions",
+)
 
 
-def test_connected_components_epoch_dirs_unique_per_run(spark, tmp_path, monkeypatch):
-    """Epoch resets into a shared reset_dir are named by application id
-    plus a fresh uuid, so two drivers sharing the dir never overwrite each
-    other's epoch, and each epoch dir is deleted after its re-read."""
-    import re
+def test_cc_callers_leave_no_persisted_rdds(spark, fix001):
+    """Every registered connected-components caller returns a lazy plan:
+    building and collecting its result leaves no new persisted RDD (the
+    labels are a local relation, nothing is cached or checkpointed)."""
+    from butterfly_osm_spark.queries import QUERIES
 
-    from pyspark.sql.readwriter import DataFrameWriter
+    from .conftest import persistent_rdd_ids
 
-    from butterfly_osm_spark.operators.dedup import connected_components, release_checkpoint
+    for name in CC_CALLERS:
+        # identity-based accounting: a previous test's async unpersist may
+        # complete mid-test, so counts can legally drop
+        before = persistent_rdd_ids(spark)
+        assert QUERIES[name](spark, "/root/testdata/sf0.001").collect(), name
+        assert not (persistent_rdd_ids(spark) - before), f"{name} left a persisted RDD"
 
-    written = []
-    parquet = DataFrameWriter.parquet
-    monkeypatch.setattr(
-        DataFrameWriter, "parquet", lambda self, path, *a, **k: written.append(path) or parquet(self, path, *a, **k)
-    )
-    edges = spark.createDataFrame([(i, i + 1) for i in range(63)], "a long, b long")
-    nodes = spark.range(64).withColumnRenamed("id", "node_id")
-    labels, iters = connected_components(edges, nodes, reset_dir=str(tmp_path), reset_every=1)
-    assert labels.where("lab != 0").count() == 0
-    release_checkpoint(labels)
-    assert len(written) == iters - 1 >= 2  # a reset after every round but the converged one
-    name = rf"{re.escape(str(tmp_path))}/cc_epoch_{re.escape(spark.sparkContext.applicationId)}_[0-9a-f]{{32}}_\d+/labels"
-    assert all(re.fullmatch(name, p) for p in written), written
-    assert not list(tmp_path.iterdir()), "epoch dirs left behind"
+
+def _cc_case(name):
+    """(edges, nodes) of one connected-components kernel case."""
+    import random
+
+    rng = random.Random(7)
+    if name == "chain":  # diameter 10,000 over shuffled ids
+        ids = list(range(10_001))
+        rng.shuffle(ids)
+        return list(zip(ids, ids[1:])), list(range(10_001))
+    if name == "two_cliques":  # {10..19} and {0..9} joined by one edge
+        a, b = range(10, 20), range(10)
+        edges = [(u, v) for c in (a, b) for u in c for v in c if u < v]
+        return edges + [(15, 3)], list(range(20))
+    if name == "strings":  # label = lexicographic-min id, as phash_clusters documents
+        edges = [("img_9", "img_10"), ("img_10", "img_2"), ("b", "a"), ("zz", "za")]
+        return edges, sorted({v for e in edges for v in e} | {"img_1"})
+    if name == "duplicates_both_directions_self_loops":
+        edges = [(5, 7), (7, 5), (5, 7), (7, 7), (9, 9), (8, 6), (6, 8), (6, 5)]
+        return edges, list(range(5, 11))
+    if name == "empty_edges":
+        return [], list(range(5))
+    if name == "isolated_nodes":  # nodes 0, 4 and 99 appear in no edge
+        return [(1, 2), (3, 2)], [0, 1, 2, 3, 4, 99]
+    raise ValueError(name)
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "chain",
+        "two_cliques",
+        "strings",
+        "duplicates_both_directions_self_loops",
+        "empty_edges",
+        "isolated_nodes",
+    ],
+)
+def test_connected_components_matches_union_find(spark, case):
+    """connected_components' numpy kernel labels every node with its
+    component's minimum id, equal to a pure-Python union-find."""
+    from butterfly_osm_spark.operators.dedup import connected_components
+
+    from .conftest import union_find
+
+    edges, nodes = _cc_case(case)
+    t = "string" if case == "strings" else "bigint"
+    e = spark.createDataFrame(edges, f"a {t}, b {t}")
+    n = spark.createDataFrame([(v,) for v in nodes], f"node_id {t}")
+    labels = connected_components(e, n)
+    assert labels.schema.simpleString() == f"struct<id:{t},lab:{t}>"
+    got = dict(labels.collect())
+    assert got == union_find(edges, nodes)
+
+
+def test_connected_components_over_budget_raises(spark, monkeypatch):
+    """With the collect budget below the sf0.001 pair count,
+    dedup_clusters raises before any result exists, naming the edge count
+    and the budget."""
+    from butterfly_osm_spark import session
+    from butterfly_osm_spark.operators.dedup import dedup_clusters, minhash_lsh_pairs
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    n_pairs = minhash_lsh_pairs(docs, 0.5).count()
+    assert n_pairs > 1
+    budget = (n_pairs - 1) * 16  # two BIGINT columns: cap = n_pairs - 1 edges
+    monkeypatch.setattr(session, "collect_budget_bytes", lambda spark: budget)
+    named = rf"at least {n_pairs} edges.* {budget} bytes \({n_pairs - 1} edges"
+    with pytest.raises(RuntimeError, match=named):
+        dedup_clusters(docs, 0.5)
 
 
 def test_knn_res_invariance_fine_res_offsets(fix001):
@@ -713,10 +751,9 @@ print(json.dumps({
 def test_dedup_pipeline_releases_all_caches(spark):
     """The round-5 leak-class gate (VERDICT r4 "Next round #1"): after a
     full corpus_filter run — which internally runs minhash shingles,
-    the CC loop, and the fused quality/repetition leg — and the caller
-    releasing the ONE returned frame, the session holds exactly the
-    persistent RDDs it held before: no shingle persist, no simhash
-    sketch, no pair frame, no label checkpoint survives."""
+    connected components and the fused quality/repetition leg — the
+    session holds exactly the persistent RDDs it held before: no shingle
+    persist, no simhash sketch, no pair frame, no labels, no result."""
     from butterfly_osm_spark.operators.dedup import corpus_filter, simhash_pairs
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -726,9 +763,7 @@ def test_dedup_pipeline_releases_all_caches(spark):
 
     out = corpus_filter(docs)
     assert out.count() == docs.count()  # one auditable row per doc
-    assert sc.getPersistentRDDs().size() - before <= 1  # only the result
-    out.unpersist()
-    assert sc.getPersistentRDDs().size() == before, "corpus_filter leaked caches"
+    assert sc.getPersistentRDDs().size() == before, "corpus_filter cached a frame"
 
     pairs = simhash_pairs(docs)
     pairs.count()
@@ -771,9 +806,10 @@ def test_quality_repetition_single_scan_no_exchange(spark):
 
 
 def test_round5_cluster_ops_invariants_and_release(spark, fix001):
-    """Round-5 additions share the caching contract (ONE persisted result,
-    zero survivors after the caller releases it) and their cluster
-    semantics invariants: cluster_id = component-min member id."""
+    """Round-5 additions: the cluster semantics invariants (cluster_id =
+    component-min member id; the cluster operators cache nothing, see
+    test_cc_callers_leave_no_persisted_rdds) and the caching contract of
+    the LM operators (zero survivors after the caller releases)."""
     from butterfly_osm_spark.operators.ann import embedding_clusters
     from butterfly_osm_spark.operators.text import unigram_logprob
     from butterfly_osm_spark.operators.tiles import dbscan_hotspots
@@ -787,18 +823,12 @@ def test_round5_cluster_ops_invariants_and_release(spark, fix001):
     assert rows and all(r.n_points >= 20 for r in rows)
     ids = {r.cell_id for r in rows}
     assert all(r.cluster_id <= r.cell_id and r.cluster_id in ids for r in rows)
-    assert sc.getPersistentRDDs().size() - before <= 1
-    hot.unpersist()
-    assert sc.getPersistentRDDs().size() == before, "dbscan_hotspots leaked caches"
 
     emb = embedding_clusters(spark.read.parquet(fix001 + "/embeddings_nd.parquet"))
     erows = emb.collect()
     eids = {r.vec_id for r in erows}
     assert erows and all(r.cluster_id <= r.vec_id and r.cluster_id in eids for r in erows)
     assert all(r.is_keeper == (r.vec_id == r.cluster_id) for r in erows)
-    assert sc.getPersistentRDDs().size() - before <= 1
-    emb.unpersist()
-    assert sc.getPersistentRDDs().size() == before, "embedding_clusters leaked caches"
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     lm = unigram_logprob(docs)
@@ -1297,13 +1327,8 @@ def test_cell_regions_partition(spark, fix001):
     labeled exactly once, region_size sums to n_cells, every region_id
     is the min packed id of its members, and two queen-adjacent cells
     always share a region."""
-    from butterfly_osm_spark.operators.dedup import release_checkpoint
     from butterfly_osm_spark.operators.spatial_stats import cell_regions
 
-    from .conftest import persistent_rdd_ids
-
-    spark.catalog.clearCache()
-    before = persistent_rdd_ids(spark)
     nodes = spark.read.parquet(fix001 + "/osm_nodes.parquet")
     out = cell_regions(nodes)
     rows = out.collect()
@@ -1320,10 +1345,6 @@ def test_cell_regions_partition(spark, fix001):
             for dy in (-1, 0, 1):
                 if (dx, dy) != (0, 0) and (x + dx, y + dy) in cellset:
                     assert cellset[(x + dx, y + dy)] == rid
-    assert len(persistent_rdd_ids(spark) - before) <= 1
-    out.unpersist()
-    release_checkpoint(out)
-    assert not (persistent_rdd_ids(spark) - before), "cell_regions leaked caches"
 
 
 def test_car_arc_weights_positive_from_edge_length_floor(spark, fix001):
