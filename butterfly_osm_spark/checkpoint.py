@@ -67,9 +67,10 @@ class Stage:
     version: str = "1"  # bump when stage logic changes
     # (n_buckets, key): publish as a bucketBy+sortBy table (catalog-backed,
     # Iceberg bucket-partitioning stand-in) — downstream equi-joins between
-    # stages bucketed on the same key plan with ZERO exchange (PLANS.md
-    # round-2 evidence; reference sorted nodes.sa access,
-    # route/src/nbg/mod.rs:260-313)
+    # stages bucketed on the same key AND count plan with ZERO exchange
+    # (PLANS.md round-2 evidence; reference sorted nodes.sa access,
+    # route/src/nbg/mod.rs:260-313). Part of the stage fingerprint: a new
+    # count or key recomputes the stage and everything downstream of it
     bucket: tuple[int, str] | None = None
 
 
@@ -81,18 +82,21 @@ def _ckpt_path(build_dir: str, stage: str) -> str:
     return os.path.join(_ckpt_dir(build_dir), f"{stage}.json")
 
 
+def _raw_files(path: str) -> list[str]:
+    """The files of an external input path: the path itself, or the
+    entries of a directory in name order."""
+    if os.path.isdir(path):
+        return [os.path.join(path, f) for f in sorted(os.listdir(path))]
+    return [path]
+
+
 def _raw_fingerprint(path: str) -> str:
     """Fingerprint an external input path by file names + sizes (content
     hash would re-read TBs; size+name catches regeneration, and upstream
     stages chain their own fingerprints)."""
     h = hashlib.sha256()
-    if os.path.isdir(path):
-        for f in sorted(os.listdir(path)):
-            st = os.stat(os.path.join(path, f))
-            h.update(f"{f}:{st.st_size}".encode())
-    else:
-        st = os.stat(path)
-        h.update(f"{os.path.basename(path)}:{st.st_size}".encode())
+    for f in _raw_files(path):
+        h.update(f"{os.path.basename(f)}:{os.path.getsize(f)}".encode())
     return h.hexdigest()
 
 
@@ -137,6 +141,8 @@ class Build:
         h.update(ENGINE_VERSION.encode())
         h.update(stage.name.encode())
         h.update(stage.version.encode())
+        if stage.bucket:
+            h.update(json.dumps(list(stage.bucket)).encode())
         for inp in stage.inputs:
             if inp.startswith("raw:"):
                 h.update(_raw_fingerprint(inp[4:]).encode())
@@ -288,7 +294,17 @@ def reference_pipeline(fix: str) -> list[Stage]:
 
     # id-ordered layout (ingest/mod.rs:201-207): published bucketed by id
     # + sorted within buckets (run_stage), so the J2 coordinate join
-    # against the co-bucketed way_nodes stage plans with zero exchange
+    # against the co-bucketed way_nodes stage, and the node-usage window
+    # over its output, plan with zero exchange. The pair shares ONE bucket
+    # count, sized like a scan of the larger raw input: its bytes over the
+    # session's split size (spark.sql.files.maxPartitionBytes), rounded
+    # up, at least 1 — one bucket (one write task, one-task reads) at
+    # fixture scale instead of a cluster-sized constant
+    node_inputs = [f"{fix}/osm_nodes.parquet", f"{fix}/way_nodes.parquet"]
+    split = SparkSession.active()._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    input_bytes = max(sum(map(os.path.getsize, _raw_files(p))) for p in node_inputs)
+    n_buckets = max(1, -(-input_bytes // split))
+
     def nodes_sorted(spark, ins):
         return ins["osm_nodes"]
 
@@ -336,16 +352,16 @@ def reference_pipeline(fix: str) -> list[Stage]:
         Stage(
             "nodes_sorted",
             nodes_sorted,
-            [f"raw:{fix}/osm_nodes.parquet"],
+            [f"raw:{node_inputs[0]}"],
             version="3",
-            bucket=(8, "id"),
+            bucket=(n_buckets, "id"),
         ),
         Stage(
             "way_nodes_sorted",
             way_nodes_sorted,
-            [f"raw:{fix}/way_nodes.parquet"],
+            [f"raw:{node_inputs[1]}"],
             version="3",
-            bucket=(8, "node_id"),
+            bucket=(n_buckets, "node_id"),
         ),
         Stage("way_attrs", way_attrs, [f"raw:{fix}/osm_ways.parquet"]),
         Stage(

@@ -6,9 +6,11 @@ Ship:  scripts/submit.sh  (zips the package, runs spark-submit --py-files)
         butterfly_osm_spark/main.py --sf 0.01 --build-dir /tmp/butterfly_build
 
 Runs the step-1..3-analog resumable build (checkpoint.reference_pipeline)
-over the deterministic fixtures, then the flagship PIP + kNN query, and
-prints one JSON line of per-stage lineage + result counts. Re-running
-resumes from the checkpoint (fingerprint-chained skip).
+over the deterministic fixtures, whose last stages are the flagship PIP
+join of every image (``pip_pairs``) and the turn-restriction arcs, and
+prints one JSON line of per-stage lineage and the PIP pair count, both
+read from the stage metadata (no Spark job). Re-running resumes from the
+checkpoint (fingerprint-chained skip).
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ def main() -> None:
     fix = ensure_fixtures(args.sf)
     build = Build(spark, args.build_dir)
     stats = build.run(reference_pipeline(fix))
-    pip_rows = build.output("pip_pairs").count()
+    pip_rows = next(m["row_count"] for m in stats if m["stage"] == "pip_pairs")
     print(
         json.dumps(
             {

@@ -19,11 +19,15 @@ Reproduces the semantics of:
 
 Scale notes: everything is window + equi-join + hash agg — no UDFs, no
 driver-side collection, and one exchange, on way id. The J2 join and the
-usage window need none when both inputs are bucketed by node id, as the
-checkpointed build's ``way_nodes_sorted``/``nodes_sorted`` stages are
-(Iceberg sorted tables mirror the reference's sorted nodes.sa /
-binary-search access pattern). Over unbucketed parquet the join shuffles
-on node id unless Catalyst broadcasts the nodes side.
+usage window need none when both inputs are bucketed by node id into the
+same number of buckets, as the checkpointed build's
+``way_nodes_sorted``/``nodes_sorted`` stages are (Iceberg sorted tables
+mirror the reference's sorted nodes.sa / binary-search access pattern).
+The build sizes that shared count to its input (``reference_pipeline``:
+one bucket per scan split of the larger raw table, one at fixture
+scale), so a small build reads each bucketed input in one task. Over
+unbucketed parquet the join shuffles on node id unless Catalyst
+broadcasts the nodes side.
 """
 
 from __future__ import annotations

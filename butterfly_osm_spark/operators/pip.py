@@ -14,21 +14,22 @@ Spark-first design (SURVEY.md §7.1 step 4):
    or ``partial``. The classifier is conservative — anything not provably
    full is partial, so correctness never depends on it, only the amount
    of ray-casting work.
-2. points join cover cells on cell_id (res is packed inside the id).
+2. points meet cover cells on cell_id (res is packed inside the id).
 3. ``full``-cell candidates pass with ZERO per-point work (the big win at
    scale); ``partial``-cell candidates are ray-cast.
 
-One aggregate over the polygons (row count and ``sum(size(ring))``)
-picks one of two paths before anything is collected, against
+One bounded collect of ring sizes (at most one polygon past the count
+bound) picks one of two paths before any ring is collected, against
 ``BROADCAST_MAX_ROWS``:
 - request-sized polygon sets (the default): the rings are collected once
-  as Arrow; the cover is computed on the driver with the same numpy math
-  and joined as a local broadcast relation (no repartition, no
-  ``applyInPandas`` gather, no cover persist); the closed edge arrays
-  ride in the refine kernel's closure (the knn grid arrays' way), and
-  one vectorized numpy kernel in ``mapInPandas`` over the single cover
-  join passes ``full`` candidates and ray-casts ``partial`` ones in
-  place — no exchange;
+  as Arrow and the cover is computed on the driver with the same numpy
+  math, sorted by cell. The points stream through ONE ``mapInArrow``
+  kernel (``_cover_join``, the knn grid kernel's shape) with the sorted
+  cover and the closed edge arrays in its closure: it computes each
+  point's cell at every cover res, probes the cover with
+  ``np.searchsorted`` (several polygons may share a cell), passes
+  ``full`` candidates and ray-casts ``partial`` ones. No join, no
+  explode, no exchange;
 - unbounded polygon sets (nothing may be collected to the driver): the
   cover is computed per polygon in an ``applyInPandas`` gather and read
   once, by a cover join that shuffles on cell_id; the candidates
@@ -51,6 +52,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -67,10 +69,10 @@ from .. import cells
 # under this cell count.
 MAX_COVER_CELLS = 256
 MIN_RES, MAX_RES = 7, 13
-# broadcast the polygon cover set only below this row count: the
-# "request-sized polygon set" assumption is an input property, not an
-# invariant — a million-polygon overlay must shuffle-join on cell_id
-# instead
+# hold the polygon cover and edges on the driver (and in the kernel's
+# closure) only below this row count: the "request-sized polygon set"
+# assumption is an input property, not an invariant — a million-polygon
+# overlay must shuffle-join on cell_id instead
 BROADCAST_MAX_ROWS = 4_000_000
 
 _COVER_SCHEMA = StructType(
@@ -208,6 +210,62 @@ def polygon_edges_df(polygons: DataFrame) -> DataFrame:
     )
 
 
+def _probe(lon: np.ndarray, lat: np.ndarray, cell: np.ndarray, res_list) -> tuple[np.ndarray, np.ndarray]:
+    """(point row, cover row) of every cover cell holding a point, probed
+    at each cover res: ``cell`` is the sorted packed cover ids, and one
+    ``searchsorted`` key range per point and res holds every polygon
+    sharing the point's cell."""
+    q, ci = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    for res in res_list:
+        c = cells.cell_np(lon, lat, res)
+        lo = np.searchsorted(cell, c)
+        n = np.searchsorted(cell, c, side="right") - lo
+        q.append(np.repeat(np.arange(len(c)), n))
+        ci.append(np.repeat(lo - (np.cumsum(n) - n), n) + np.arange(n.sum()))
+    return np.concatenate(q), np.concatenate(ci)
+
+
+def _cover_join(points: DataFrame, rings: pa.Table) -> DataFrame:
+    """The driver path: one ``mapInArrow`` over ``(point_id, lon_e7,
+    lat_e7)`` points, no join. The cover of the collected ``(polygon_id,
+    ring)`` rows is sorted by cell and rides in the kernel's closure with
+    the polygons' closed edge arrays; the kernel probes it at each cover
+    res, passes ``full`` candidates and ray-casts ``partial`` ones."""
+    cover, edge_map = _driver_cover(rings)
+    order = np.argsort(cover.column("cell_id").to_numpy(), kind="stable")
+    cover = cover.take(order)
+    cell = cover.column("cell_id").to_numpy()
+    partial = cover.column("coverage").to_numpy(zero_copy_only=False) == "partial"
+    poly = cover.column("polygon_id").combine_chunks().dictionary_encode()
+    owner = poly.indices.to_numpy()
+    pids = poly.dictionary
+    edges = [edge_map[pid] for pid in pids.to_pylist()]
+    res_list = sorted(set(cover.column("res").to_pylist()))
+    schema = pa.schema([("point_id", pa.string()), ("polygon_id", pa.string())])
+
+    def answer(batches):
+        for b in batches:
+            lon = b.column(1).to_numpy(zero_copy_only=False)
+            lat = b.column(2).to_numpy(zero_copy_only=False)
+            q, ci = _probe(lon, lat, cell, res_list)
+            keep = ~partial[ci]
+            # partial candidates grouped by polygon with index slices
+            part = np.flatnonzero(~keep)
+            o = owner[ci[part]]
+            grp = np.argsort(o, kind="stable")
+            rows, o = part[grp], o[grp]
+            bounds = np.searchsorted(o, np.arange(len(pids) + 1))
+            px, py = lon.astype(np.float64)[q[rows]], lat.astype(np.float64)[q[rows]]
+            for k in np.flatnonzero(np.diff(bounds)):
+                g = slice(bounds[k], bounds[k + 1])
+                keep[rows[g]] = _raycast_np(px[g], py[g], *edges[k])
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0).take(q[keep]), pids.take(owner[ci[keep]])], schema=schema
+            )
+
+    return points.mapInArrow(answer, "point_id string, polygon_id string")
+
+
 def pip_join(
     points: DataFrame,
     polygons: DataFrame,
@@ -218,122 +276,86 @@ def pip_join(
 ) -> DataFrame:
     """(out_id, polygon_id) pairs where the point is inside the polygon
     (even-odd). Points exactly on edges follow the raycast convention.
+    Both columns are strings: the point id is cast.
 
-    One aggregate over the polygons (row count and ring vertices) picks
-    the path before anything is collected. Under ``BROADCAST_MAX_ROWS``
-    (request-sized polygon sets) the rings are collected once as Arrow,
-    the cover is computed on the driver (``_driver_cover``) and joined as
-    a local broadcast relation, and a shuffle-free ``mapInPandas`` refines
-    the candidate stream with the polygon edge arrays in its closure.
-    Past it (unbounded polygon sets,
-    nothing may be collected) the cover is computed distributed
-    (``polygon_cover_cells``), the cover join shuffles on cell_id and the
-    refine joins per-polygon edge arrays and evaluates the even-odd
-    parity as a JVM higher-order expression. Both paths use the exact
-    float64 op order of the SQL oracle (``(x2-x1)*(py-y1)/(y2-y1)+x1``),
-    so results stay bit-exact (parity pytest covers the fallback). The
-    result is a lazy plan with nothing to release."""
-    n_polygons, n_vertices = polygons.select(
-        F.count(F.lit(1)), F.coalesce(F.sum(F.size("ring")), F.lit(0))
-    ).first()
+    One bounded collect of ring sizes picks the path: at most
+    ``BROADCAST_MAX_ROWS // MAX_COVER_CELLS`` polygons holding at most
+    ``BROADCAST_MAX_ROWS`` ring vertices in total (request-sized polygon
+    sets) take the driver path. Their rings are collected once as Arrow,
+    the cover is computed on the driver (``_driver_cover``) and one
+    ``mapInArrow`` kernel over the points probes it and refines the
+    candidates (``_cover_join``): no join and no exchange. Past the gate
+    (unbounded polygon sets, nothing may be collected) the cover is
+    computed distributed (``polygon_cover_cells``), the cover join
+    shuffles on cell_id and the refine joins per-polygon edge arrays and
+    evaluates the even-odd parity as a JVM higher-order expression. Both
+    paths use the exact float64 op order of the SQL oracle
+    (``(x2-x1)*(py-y1)/(y2-y1)+x1``), so results stay bit-exact (parity
+    pytest covers the fallback). The result is a lazy plan with nothing
+    to release."""
+    pts = points.where(F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull()).select(
+        F.col(id_col).cast("string").alias("point_id"),
+        F.col(lon_col).alias("lon_e7"),
+        F.col(lat_col).alias("lat_e7"),
+    )
     # what the driver would hold: cover rows (at most MAX_COVER_CELLS per
     # polygon above the res-7 floor) and one edge per ring vertex — a few
-    # polygons with huge rings must not pass on their polygon count
-    local = max(n_polygons * MAX_COVER_CELLS, n_vertices) <= BROADCAST_MAX_ROWS
-    if local:
-        cover_tbl, edge_map = _driver_cover(polygons.select("polygon_id", "ring").toArrow())
-        res_list = sorted(set(cover_tbl.column("res").to_pylist()))
-        cov_sel = F.broadcast(
-            points.sparkSession.createDataFrame(cover_tbl.select(["cell_id", "polygon_id", "coverage"]))
-        )
-    else:
-        # unbounded polygon set: distributed cover, shuffle join on cell_id
-        # (cover is bounded per polygon by MAX_COVER_CELLS but NOT in
-        # polygon count). Points probe every resolution the cover can
-        # use, so the cover is read once, by the join.
-        res_list = range(MIN_RES, MAX_RES + 1)
-        cov_sel = polygon_cover_cells(polygons).select("cell_id", "polygon_id", "coverage")
+    # polygons with huge rings must not pass on their polygon count. At
+    # most one polygon past the count bound reaches the driver.
+    cap = BROADCAST_MAX_ROWS // MAX_COVER_CELLS
+    sizes = polygons.select(F.size("ring").alias("n")).limit(max(cap + 1, 0)).toArrow()
+    n_vertices = pc.sum(sizes.column("n")).as_py() or 0
+    if sizes.num_rows <= cap and n_vertices <= BROADCAST_MAX_ROWS:
+        rings = polygons.select(F.col("polygon_id").cast("string").alias("polygon_id"), "ring")
+        return _cover_join(pts, rings.toArrow()).withColumnRenamed("point_id", out_id)
 
-    # ONE point scan + ONE cover join: each point emits its cell id at
-    # every resolution in res_list (res is packed inside the id, so
-    # distinct resolutions can never collide on the join key). Fan-out
-    # is |res_list| <= 7, vs the previous per-res scan+join+union chain.
-    pts = points.select(
-        F.col(id_col).alias("point_id"),
-        F.col(lon_col).cast("double").alias("px"),
-        F.col(lat_col).cast("double").alias("py"),
+    # unbounded polygon set: distributed cover, shuffle join on cell_id
+    # (cover is bounded per polygon by MAX_COVER_CELLS but NOT in polygon
+    # count). ONE point scan + ONE cover join: each point emits its cell
+    # id at every resolution the cover can use (res is packed inside the
+    # id, so distinct resolutions can never collide on the join key), so
+    # the cover is read once, by the join.
+    cov_sel = polygon_cover_cells(polygons).select("cell_id", "polygon_id", "coverage")
+    cand = pts.select(
+        "point_id",
+        F.col("lon_e7").cast("double").alias("px"),
+        F.col("lat_e7").cast("double").alias("py"),
         F.explode(
-            F.array(*[cells.cell_col(lon_col, lat_col, res) for res in res_list])
+            F.array(*[cells.cell_col("lon_e7", "lat_e7", res) for res in range(MIN_RES, MAX_RES + 1)])
         ).alias("cell_id"),
+    ).join(cov_sel, "cell_id", "inner")
+
+    # no driver-side collect — shuffle-join the candidates to per-polygon
+    # edge arrays (built by ``transform`` over the ring, zero shuffles)
+    # and evaluate the even-odd parity as a JVM higher-order expression
+    # for ``partial`` rows only (``full`` rows short-circuit the OR). One
+    # candidate stream: split by coverage, each branch would rerun the
+    # cover kernel. Same float64 op order as the numpy kernel/oracle;
+    # NaN/Inf from a horizontal edge (y2 == y1) is neutralized by the
+    # conjunction exactly as in numpy (cond is false whenever y1 == y2).
+    n_ring = F.size("ring")
+    nxt = lambda i: ((i + F.lit(1)) % n_ring) + F.lit(1)  # noqa: E731
+    edges_arr = F.transform(
+        "ring",
+        lambda v, i: F.struct(
+            v["lon_e7"].cast("double").alias("x1"),
+            v["lat_e7"].cast("double").alias("y1"),
+            F.element_at(F.col("ring"), nxt(i))["lon_e7"].cast("double").alias("x2"),
+            F.element_at(F.col("ring"), nxt(i))["lat_e7"].cast("double").alias("y2"),
+        ),
     )
-    cand = pts.join(cov_sel, "cell_id", "inner").select(
-        "point_id", "px", "py", "polygon_id", "coverage"
+    poly_edges = polygons.select("polygon_id", edges_arr.alias("edges"))
+
+    def _crossing(e):
+        cond = (e["y1"] > F.col("py")) != (e["y2"] > F.col("py"))
+        xint = (e["x2"] - e["x1"]) * (F.col("py") - e["y1"]) / (e["y2"] - e["y1"]) + e["x1"]
+        return cond & (F.col("px") < xint)
+
+    pairs = (
+        cand.join(poly_edges, "polygon_id")
+        .filter((F.col("coverage") == "full") | (F.size(F.filter("edges", _crossing)) % 2 == 1))
+        .select("point_id", "polygon_id")
     )
-
-    if local:
-        # request-sized polygon set: the closed edge arrays ride in the
-        # kernel's closure (PySpark ships a closure past 1 MB as a
-        # broadcast for the plan's lifetime) and the kernel refines the
-        # candidate stream in-place — mapInPandas directly over
-        # the broadcast cover join output, so the refine path adds ZERO
-        # exchanges and no per-polygon task skew (any task refines any
-        # polygon's rows). ``full`` rows pass as they are and only
-        # ``partial`` rows are ray-cast, in the same kernel: splitting the
-        # stream by coverage in the plan instead makes the optimizer push
-        # each filter into the local cover relation and broadcast it twice
-        # (two jobs).
-        def refine_stream(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                keep = (pdf["coverage"] == "full").to_numpy()
-                part = np.flatnonzero(~keep)
-                # partial rows grouped by polygon with numpy index slices:
-                # a pandas groupby per batch cost more than the ray-casts
-                codes, pids = pd.factorize(pdf["polygon_id"].to_numpy()[part])
-                rows = part[np.argsort(codes, kind="stable")]
-                bounds = np.searchsorted(np.sort(codes), np.arange(len(pids) + 1))
-                px = pdf["px"].to_numpy(np.float64)[rows]
-                py = pdf["py"].to_numpy(np.float64)[rows]
-                for k, pid in enumerate(pids):
-                    g = slice(bounds[k], bounds[k + 1])
-                    keep[rows[g]] = _raycast_np(px[g], py[g], *edge_map[pid])
-                yield pdf.loc[keep, ["point_id", "polygon_id"]]
-
-        pairs = cand.mapInPandas(refine_stream, schema="point_id string, polygon_id string")
-    else:
-        # unbounded polygon set: no driver-side collect — shuffle-join the
-        # candidates to per-polygon edge arrays (built by ``transform``
-        # over the ring, zero shuffles) and evaluate the even-odd parity
-        # as a JVM higher-order expression for ``partial`` rows only
-        # (``full`` rows short-circuit the OR). One candidate stream: split
-        # by coverage, each branch would rerun the cover kernel. Same
-        # float64 op order as the numpy kernel/oracle; NaN/Inf from a
-        # horizontal edge (y2 == y1) is neutralized by the conjunction
-        # exactly as in numpy (cond is false whenever y1 == y2).
-        n_ring = F.size("ring")
-        nxt = lambda i: ((i + F.lit(1)) % n_ring) + F.lit(1)  # noqa: E731
-        edges_arr = F.transform(
-            "ring",
-            lambda v, i: F.struct(
-                v["lon_e7"].cast("double").alias("x1"),
-                v["lat_e7"].cast("double").alias("y1"),
-                F.element_at(F.col("ring"), nxt(i))["lon_e7"].cast("double").alias("x2"),
-                F.element_at(F.col("ring"), nxt(i))["lat_e7"].cast("double").alias("y2"),
-            ),
-        )
-        poly_edges = polygons.select("polygon_id", edges_arr.alias("edges"))
-
-        def _crossing(e):
-            cond = (e["y1"] > F.col("py")) != (e["y2"] > F.col("py"))
-            xint = (e["x2"] - e["x1"]) * (F.col("py") - e["y1"]) / (e["y2"] - e["y1"]) + e["x1"]
-            return cond & (F.col("px") < xint)
-
-        pairs = (
-            cand.join(poly_edges, "polygon_id")
-            .filter((F.col("coverage") == "full") | (F.size(F.filter("edges", _crossing)) % 2 == 1))
-            .select("point_id", "polygon_id")
-        )
     return pairs.withColumnRenamed("point_id", out_id)
 
 

@@ -1,5 +1,6 @@
 import os
 import sys
+import time
 
 import pytest
 
@@ -39,6 +40,20 @@ def persistent_rdd_ids(spark):
     while it.hasNext():
         out.add(it.next())
     return out
+
+
+def group_job_ids(sc, group, timeout_s=30.0):
+    """Job ids of a job group, once the listener bus has caught up: a
+    one-job fence in a second group is seen only after every job started
+    before it."""
+    fence = f"{group}-fence"
+    sc.setJobGroup(fence, "fence")
+    sc.parallelize([0], 1).count()
+    deadline = time.time() + timeout_s
+    while not sc.statusTracker().getJobIdsForGroup(fence):
+        assert time.time() < deadline, "fence job never reached the status tracker"
+        time.sleep(0.05)
+    return sc.statusTracker().getJobIdsForGroup(group)
 
 
 def union_find(edges, nodes):

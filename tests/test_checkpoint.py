@@ -17,6 +17,8 @@ import butterfly_osm_spark
 from butterfly_osm_spark.checkpoint import Build, reference_pipeline
 from butterfly_osm_spark.session import part_files, read_parquet
 
+from .conftest import group_job_ids
+
 
 def _run(spark, fix, build_dir):
     b = Build(spark, build_dir)
@@ -41,20 +43,6 @@ def _copy(built, tmp_path):
     return bd
 
 
-def _group_job_ids(sc, group, timeout_s=30.0):
-    """Job ids of a job group, once the listener bus has caught up: a
-    one-job fence in a second group is seen only after every job started
-    before it."""
-    fence = f"{group}-fence"
-    sc.setJobGroup(fence, "fence")
-    sc.parallelize([0], 1).count()
-    deadline = time.time() + timeout_s
-    while not sc.statusTracker().getJobIdsForGroup(fence):
-        assert time.time() < deadline, "fence job never reached the status tracker"
-        time.sleep(0.05)
-    return sc.statusTracker().getJobIdsForGroup(group)
-
-
 def test_resume_skips_everything(spark, fix001, built, tmp_path):
     """A resume over a finished build skips every stage with identical
     counts and launches no Spark job: counts and schemas come from the
@@ -67,7 +55,7 @@ def test_resume_skips_everything(spark, fix001, built, tmp_path):
     sc.setJobGroup(group, "resume pass")
     try:
         _, s2 = _run(spark, fix001, bd)
-        jobs = _group_job_ids(sc, group)
+        jobs = group_job_ids(sc, group)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -145,6 +133,26 @@ def test_version_bump_invalidates_downstream(spark, fix001, built, tmp_path):
     assert not by["nodes_sorted"]["resumed"]
     assert not by["edges"]["resumed"], "downstream of changed stage must recompute"
     assert by["way_attrs"]["resumed"] and by["image_cells"]["resumed"]
+
+
+def test_bucket_change_invalidates_downstream(spark, fix001, built, tmp_path):
+    """The bucket count is part of a stage's fingerprint: a resume after
+    ``nodes_sorted``'s count changes (its input grew, the split size
+    changed) recomputes it and ``edges`` instead of joining two layouts,
+    and the stages off its lineage resume."""
+    bd = _copy(built, tmp_path)
+    stages = reference_pipeline(fix001)
+    for s in stages:
+        if s.name == "nodes_sorted":
+            n, key = s.bucket
+            s.bucket = (n + 1, key)
+    b = Build(spark, bd)
+    by = {m["stage"]: m for m in b.run(stages)}
+    assert not by["nodes_sorted"]["resumed"] and len(by["nodes_sorted"]["files"]) == n + 1
+    assert not by["edges"]["resumed"], "downstream of a re-bucketed stage must recompute"
+    assert by["way_attrs"]["resumed"] and by["image_cells"]["resumed"]
+    assert by["way_nodes_sorted"]["resumed"]
+    assert sorted(map(tuple, b.output("pip_pairs").collect())) == built[2]
 
 
 def test_per_partition_lineage_recorded(spark, built):

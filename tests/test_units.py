@@ -239,21 +239,120 @@ def test_pip_broadcast_gate_fallback_parity(spark, fix001, monkeypatch):
     assert got == want
 
 
-def test_pip_driver_cover_broadcasts_once(spark, fix001):
-    """The driver-cover path joins the cover once: its plan holds one
-    BroadcastExchange (splitting the candidate stream by coverage
-    broadcast the local cover twice), and it gives the oracle's pairs,
-    which the fallback test holds the distributed path to as well."""
+def test_pip_driver_cover_is_one_arrow_kernel(spark, fix001):
+    """The driver-cover path answers with one ``mapInArrow`` kernel over
+    the points: its plan holds no BroadcastExchange, Generate or join;
+    building it runs two jobs, the ring-size collect and the ring
+    collect; and it gives the oracle's pairs, which the fallback test
+    holds the distributed path to as well."""
+    import os
+    import time
+
     import duckdb
 
     from butterfly_osm_spark.operators import pip
 
+    from .conftest import group_job_ids
+
     points = spark.read.parquet(fix001 + "/image_geo.parquet")
     polygons = spark.read.parquet(fix001 + "/polygons.parquet")
-    out = pip.pip_join(points, polygons)
-    assert out._jdf.queryExecution().executedPlan().toString().count("BroadcastExchange") == 1
+    sc = spark.sparkContext
+    group = f"pip-plan-{os.getpid()}-{time.time_ns()}"
+    sc.setJobGroup(group, "pip_join plan")
+    try:
+        out = pip.pip_join(points, polygons)
+        jobs = group_job_ids(sc, group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) == 2, f"jobs {list(jobs)}"
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for op in ("BroadcastExchange", "Generate", "Join", "CartesianProduct"):
+        assert op not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
     got = sorted((r.point_id, r.polygon_id) for r in out.collect())
     assert got == sorted(map(tuple, duckdb.sql(pip.pip_oracle_sql(fix001)).fetchall()))
+
+
+def _ring(cx, cy, rx, ry, n=12):
+    """A closed ``n``-gon ring around ``(cx, cy)`` as int e7 vertices."""
+    a = 2 * np.pi * np.arange(n) / n
+    return list(zip((cx + rx * np.cos(a)).astype(int).tolist(), (cy + ry * np.sin(a)).astype(int).tolist()))
+
+
+@pytest.mark.parametrize("gate", ["driver", "distributed"])
+@pytest.mark.parametrize("case", ["mixed", "no-polygons", "no-points"])
+def test_pip_kernel_edge_cases_match_brute_force(spark, monkeypatch, gate, case):
+    """Both paths against brute-force ``_raycast_np`` over every
+    (point, polygon): overlapping polygons whose covers share cells, covers
+    at res 8 and res 13 in one call, a concave ring, points with no
+    candidate, an empty polygon set and an empty point set. The point id
+    is a bigint (zonal_stats passes a cast id) and the output stays
+    ``(out_id string, polygon_id string)``."""
+    from butterfly_osm_spark.operators import pip
+
+    rings = {
+        # two overlapping 0.6-degree polygons: res-8 covers sharing cells
+        "big_a": _ring(130_000_000, 450_000_000, 3_000_000, 3_000_000),
+        "big_b": _ring(132_000_000, 451_000_000, 3_000_000, 2_500_000),
+        # a ~200 m triangle inside both: a res-13 cover
+        "tiny": [(131_000_000, 450_500_000), (131_020_000, 450_500_000), (131_010_000, 450_518_000)],
+        # a concave L inside big_a
+        "ell": [
+            (128_000_000, 448_000_000), (129_000_000, 448_000_000), (129_000_000, 448_400_000),
+            (128_400_000, 448_400_000), (128_400_000, 449_000_000), (128_000_000, 449_000_000),
+        ],
+    }
+    if case == "no-polygons":
+        rings = {}
+    polygons = spark.createDataFrame(
+        [(pid, [{"lon_e7": x, "lat_e7": y} for x, y in ring]) for pid, ring in rings.items()],
+        "polygon_id string, ring array<struct<lon_e7:int, lat_e7:int>>",
+    )
+    xs = np.arange(126_500_000, 135_500_000, 170_000)
+    ys = np.arange(446_500_000, 454_000_000, 170_000)
+    pts = [(int(x), int(y)) for x in xs for y in ys]
+    pts += [(131_000_000 + d, 450_500_000 + d) for d in range(1_000, 20_000, 1_500)]  # in tiny's cells
+    pts += [(-700_000_000, -300_000_000), (1_700_000_000, 800_000_000)]  # no candidate
+    if case == "no-points":
+        pts = []
+    points = spark.createDataFrame(
+        [(i, x, y) for i, (x, y) in enumerate(pts)], "sid bigint, lon_e7 int, lat_e7 int"
+    )
+    px = np.array([p[0] for p in pts], dtype=np.float64)
+    py = np.array([p[1] for p in pts], dtype=np.float64)
+    want = set()
+    for pid, ring in rings.items():
+        vx, vy = (np.array(c, dtype=np.float64) for c in zip(*ring))
+        inside = pip._raycast_np(px, py, vx, vy, np.roll(vx, -1), np.roll(vy, -1))
+        want |= {(str(i), pid) for i in np.flatnonzero(inside)}
+
+    distributed = []
+    cover_cells = pip.polygon_cover_cells
+    monkeypatch.setattr(
+        pip, "polygon_cover_cells", lambda df: distributed.append(1) or cover_cells(df)
+    )
+    if gate == "distributed":
+        # below zero, so even an empty polygon set is past the gate
+        monkeypatch.setattr(pip, "BROADCAST_MAX_ROWS", -1)
+    out = pip.pip_join(points, polygons, id_col="sid", out_id="sample")
+    assert bool(distributed) == (gate == "distributed")
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("sample", "string"),
+        ("polygon_id", "string"),
+    ]
+    got = [tuple(r) for r in out.collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+    if case == "mixed":
+        cover, _ = pip._driver_cover(polygons.select("polygon_id", "ring").toArrow())
+        by = {}
+        for pid, res, cell in zip(*(cover.column(c).to_pylist() for c in ("polygon_id", "res", "cell_id"))):
+            by.setdefault(pid, (res, set()))[1].add(cell)
+        assert by["big_a"][0] == by["big_b"][0] == 8 and by["tiny"][0] == 13 and by["ell"][0] == 10
+        assert by["big_a"][1] & by["big_b"][1], "expected covers sharing cells"
+        assert {pid for _, pid in want} == set(rings)
+        assert not {str(len(pts) - 1), str(len(pts) - 2)} & {i for i, _ in got}
 
 
 def test_pip_driver_cover_equals_distributed_cover(spark, fix001):
