@@ -25,7 +25,8 @@ on demand, atomic tmp->rename commit, ``_SUCCESS`` marker):
 - polygons(polygon_id, ring ARRAY<STRUCT<lon_e7,lat_e7>>, wkb)
   star polygons, 3-64 vertices, radii 100 m - 20 km (log-uniform)
 - polygon_edges(polygon_id, seq, x1, y1, x2, y2)  closed edge list
-  (seq n-1 wraps to vertex 0 — matches operators.pip.polygon_edges_df)
+  (seq n-1 wraps to vertex 0 — the wrap-around edge operators.pip's
+  _driver_cover closes with np.roll)
 - query_points(query_id, lon_e7, lat_e7, k)  k in {1,8,64}; 80% within
   ~100 m of a way, 15% 1-5 km away, 5% beyond the 5 km snap cutoff
 - raster_tiles(tile_lat, tile_lon, samples_per_side, data)  SRTM-shaped

@@ -1,4 +1,4 @@
-"""Point-in-polygon join (J8): cover-cell equi-join + ray-casting refine.
+"""Point-in-polygon join (J8): cover-cell probe + ray-casting refine.
 
 Reference semantics: bbox/grid envelope prefilter (J7,
 route/src/server/snap_index.rs:767-812 ``samples_in_envelope``) then
@@ -14,33 +14,30 @@ Spark-first design (SURVEY.md §7.1 step 4):
    or ``partial``. The classifier is conservative — anything not provably
    full is partial, so correctness never depends on it, only the amount
    of ray-casting work.
-2. points meet cover cells on cell_id (res is packed inside the id).
+2. points probe the cover on cell_id (res is packed inside the id).
 3. ``full``-cell candidates pass with ZERO per-point work (the big win at
    scale); ``partial``-cell candidates are ray-cast.
 
-One bounded collect of ring sizes (at most one polygon past the count
-bound) picks one of two paths before any ring is collected, against
+ONE probe-and-refine kernel answers every call (``_cover_probe``, the
+knn grid kernel's shape): built from ``(polygon_id, ring)`` rows, it
+holds their cover sorted by cell and their closed edge arrays, computes
+each point's cell at every cover res, probes the cover with
+``np.searchsorted`` (several polygons may share a cell), passes ``full``
+candidates and ray-casts ``partial`` ones. One bounded collect of ring
+sizes (at most one polygon past the count bound) places it, against
 ``BROADCAST_MAX_ROWS``:
 - request-sized polygon sets (the default): the rings are collected once
-  as Arrow and the cover is computed on the driver with the same numpy
-  math, sorted by cell. The points stream through ONE ``mapInArrow``
-  kernel (``_cover_join``, the knn grid kernel's shape) with the sorted
-  cover and the closed edge arrays in its closure: it computes each
-  point's cell at every cover res, probes the cover with
-  ``np.searchsorted`` (several polygons may share a cell), passes
-  ``full`` candidates and ray-casts ``partial`` ones. No join, no
-  explode, no exchange;
+  as Arrow and the kernel runs in ONE ``mapInArrow`` over the points
+  (``_cover_join``). No join, no explode, no exchange;
 - unbounded polygon sets (nothing may be collected to the driver): the
-  cover is computed per polygon in an ``applyInPandas`` gather and read
-  once, by a cover join that shuffles on cell_id; the candidates
-  shuffle-join per-polygon edge arrays and the even-odd parity
-  (``size(filter(edges, crossing)) % 2``) is a JVM higher-order
-  expression — no Python boundary, but evaluated per element, so slower
-  where both can run (OPTIMIZATION_r06: min 5.44 s vs 3.68 s for the
-  numpy refine on pip_images).
+  kernel runs once per res-7 (0.1 degree) tile, in one
+  ``cogroup(...).applyInArrow`` (``_tiled_join``), over the tile's points
+  and the rings whose bbox overlaps the tile. Every cover cell is at res
+  ``MIN_RES`` or finer, so it nests in exactly one tile, and each point
+  meets every cover cell that can hold it in its own tile.
 
-Both paths return a lazy plan: nothing is cached, broadcast by hand or
-left to release.
+Both placements return a lazy plan: nothing is cached, broadcast by hand
+or left to release.
 
 The ray-cast uses the exact expression ``px < (x2-x1)*(py-y1)/(y2-y1)+x1``
 in float64 so the DuckDB oracle (same expression in SQL) matches
@@ -50,10 +47,9 @@ bit-for-bit.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -72,7 +68,7 @@ MIN_RES, MAX_RES = 7, 13
 # hold the polygon cover and edges on the driver (and in the kernel's
 # closure) only below this row count: the "request-sized polygon set"
 # assumption is an input property, not an invariant — a million-polygon
-# overlay must shuffle-join on cell_id instead
+# overlay must run the kernel per tile instead
 BROADCAST_MAX_ROWS = 4_000_000
 
 _COVER_SCHEMA = StructType(
@@ -83,6 +79,9 @@ _COVER_SCHEMA = StructType(
         StructField("coverage", StringType()),  # 'full' | 'partial'
     ]
 )
+_PAIRS = pa.schema([("point_id", pa.string()), ("polygon_id", pa.string())])
+_PAIRS_DDL = "point_id string, polygon_id string"
+
 
 def _raycast_np(px: np.ndarray, py: np.ndarray, x1, y1, x2, y2) -> np.ndarray:
     """Even-odd crossing parity for points (px,py) vs an edge set —
@@ -135,24 +134,10 @@ def _cover_ring(vx: np.ndarray, vy: np.ndarray) -> tuple[int, np.ndarray, np.nda
     return res, cells.pack_np(gx, gy, res)[keep], touch[keep]
 
 
-def _cover_one(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("seq")
-    res, cell_id, partial = _cover_ring(pdf["x"].to_numpy(np.int64), pdf["y"].to_numpy(np.int64))
-    return pd.DataFrame(
-        {
-            "polygon_id": pdf["polygon_id"].iloc[0],
-            "res": np.full(len(cell_id), res, dtype=np.int32),
-            "cell_id": cell_id,
-            "coverage": np.where(partial, "partial", "full"),
-        }
-    )
-
-
 def _driver_cover(rings: pa.Table) -> tuple[pa.Table, dict]:
-    """``polygon_cover_cells`` rows of collected ``(polygon_id, ring)``
-    rows, computed on the driver with the same numpy math, and each
-    polygon's closed float64 edge arrays ``(x1, y1, x2, y2)`` for the
-    refine kernel."""
+    """``polygon_cover_cells`` rows of Arrow ``(polygon_id, ring)`` rows,
+    and each polygon's closed float64 edge arrays ``(x1, y1, x2, y2)``
+    for the refine kernel."""
     ring = rings.column("ring").combine_chunks()
     offs = ring.offsets.to_numpy()
     xs = ring.values.field("lon_e7").to_numpy().astype(np.int64)
@@ -181,33 +166,16 @@ def _driver_cover(rings: pa.Table) -> tuple[pa.Table, dict]:
 
 
 def polygon_cover_cells(polygons: DataFrame) -> DataFrame:
-    """(polygon_id, res, cell_id, coverage) — distributed, one group per
-    polygon, pure numpy per group. The gather keeps explicit parallelism
-    (tiny bytes, real per-group compute — see partitioning.py)."""
-    from ..partitioning import repartition_for_python_groups
+    """(polygon_id, res, cell_id, coverage) — ``_driver_cover`` over each
+    Arrow batch of the polygons, in one ``mapInArrow``. A polygon's cover
+    depends on its own ring alone, so any batching gives the same rows."""
 
-    exploded = polygons.select("polygon_id", F.posexplode("ring").alias("seq", "v")).select(
-        "polygon_id", "seq", F.col("v.lon_e7").alias("x"), F.col("v.lat_e7").alias("y")
-    )
-    exploded = repartition_for_python_groups(exploded, "polygon_id")
-    return exploded.groupBy("polygon_id").applyInPandas(_cover_one, schema=_COVER_SCHEMA)
+    def cover(batches):
+        for b in batches:
+            yield from _driver_cover(pa.Table.from_batches([b]))[0].to_batches()
 
-
-def polygon_edges_df(polygons: DataFrame) -> DataFrame:
-    """Closed edge list from the nested ring column (wrap-around edge via
-    lead + first over the ring window)."""
-    w = Window.partitionBy("polygon_id").orderBy("seq")
-    v = polygons.select("polygon_id", F.posexplode("ring").alias("seq", "v")).select(
-        "polygon_id", "seq", F.col("v.lon_e7").alias("x1"), F.col("v.lat_e7").alias("y1")
-    )
-    return v.select(
-        "polygon_id",
-        "seq",
-        "x1",
-        "y1",
-        F.coalesce(F.lead("x1").over(w), F.first("x1").over(w)).alias("x2"),
-        F.coalesce(F.lead("y1").over(w), F.first("y1").over(w)).alias("y2"),
-    )
+    rings = polygons.select(F.col("polygon_id").cast("string").alias("polygon_id"), "ring")
+    return rings.mapInArrow(cover, _COVER_SCHEMA)
 
 
 def _probe(lon: np.ndarray, lat: np.ndarray, cell: np.ndarray, res_list) -> tuple[np.ndarray, np.ndarray]:
@@ -225,12 +193,13 @@ def _probe(lon: np.ndarray, lat: np.ndarray, cell: np.ndarray, res_list) -> tupl
     return np.concatenate(q), np.concatenate(ci)
 
 
-def _cover_join(points: DataFrame, rings: pa.Table) -> DataFrame:
-    """The driver path: one ``mapInArrow`` over ``(point_id, lon_e7,
-    lat_e7)`` points, no join. The cover of the collected ``(polygon_id,
-    ring)`` rows is sorted by cell and rides in the kernel's closure with
-    the polygons' closed edge arrays; the kernel probes it at each cover
-    res, passes ``full`` candidates and ray-casts ``partial`` ones."""
+def _cover_probe(rings: pa.Table):
+    """The probe-and-refine kernel over ``(polygon_id, ring)`` rows: the
+    returned ``answer(points)`` maps an Arrow batch or table of
+    ``(point_id, lon_e7, lat_e7)`` points to its ``(point_id,
+    polygon_id)`` pairs. The rings' cover is sorted by cell and rides in
+    its closure with their closed edge arrays; it probes the cover at each
+    cover res, passes ``full`` candidates and ray-casts ``partial`` ones."""
     cover, edge_map = _driver_cover(rings)
     order = np.argsort(cover.column("cell_id").to_numpy(), kind="stable")
     cover = cover.take(order)
@@ -241,29 +210,70 @@ def _cover_join(points: DataFrame, rings: pa.Table) -> DataFrame:
     pids = poly.dictionary
     edges = [edge_map[pid] for pid in pids.to_pylist()]
     res_list = sorted(set(cover.column("res").to_pylist()))
-    schema = pa.schema([("point_id", pa.string()), ("polygon_id", pa.string())])
 
-    def answer(batches):
+    def answer(points) -> pa.Table:
+        lon = np.asarray(points.column("lon_e7"))
+        lat = np.asarray(points.column("lat_e7"))
+        q, ci = _probe(lon, lat, cell, res_list)
+        keep = ~partial[ci]
+        # partial candidates grouped by polygon with index slices
+        part = np.flatnonzero(~keep)
+        o = owner[ci[part]]
+        grp = np.argsort(o, kind="stable")
+        rows, o = part[grp], o[grp]
+        bounds = np.searchsorted(o, np.arange(len(pids) + 1))
+        px, py = lon.astype(np.float64)[q[rows]], lat.astype(np.float64)[q[rows]]
+        for k in np.flatnonzero(np.diff(bounds)):
+            g = slice(bounds[k], bounds[k + 1])
+            keep[rows[g]] = _raycast_np(px[g], py[g], *edges[k])
+        return pa.Table.from_arrays(
+            [points.column("point_id").take(q[keep]), pids.take(owner[ci[keep]])], schema=_PAIRS
+        )
+
+    return answer
+
+
+def _cover_join(points: DataFrame, rings: pa.Table) -> DataFrame:
+    """The driver path: ``_cover_probe`` over the collected rings, in one
+    ``mapInArrow`` over ``(point_id, lon_e7, lat_e7)`` points, no join."""
+    answer = _cover_probe(rings)
+
+    def run(batches):
         for b in batches:
-            lon = b.column(1).to_numpy(zero_copy_only=False)
-            lat = b.column(2).to_numpy(zero_copy_only=False)
-            q, ci = _probe(lon, lat, cell, res_list)
-            keep = ~partial[ci]
-            # partial candidates grouped by polygon with index slices
-            part = np.flatnonzero(~keep)
-            o = owner[ci[part]]
-            grp = np.argsort(o, kind="stable")
-            rows, o = part[grp], o[grp]
-            bounds = np.searchsorted(o, np.arange(len(pids) + 1))
-            px, py = lon.astype(np.float64)[q[rows]], lat.astype(np.float64)[q[rows]]
-            for k in np.flatnonzero(np.diff(bounds)):
-                g = slice(bounds[k], bounds[k + 1])
-                keep[rows[g]] = _raycast_np(px[g], py[g], *edges[k])
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0).take(q[keep]), pids.take(owner[ci[keep]])], schema=schema
-            )
+            yield from answer(b).to_batches()
 
-    return points.mapInArrow(answer, "point_id string, polygon_id string")
+    return points.mapInArrow(run, _PAIRS_DDL)
+
+
+def _tiled_join(points: DataFrame, rings: DataFrame) -> DataFrame:
+    """The tiled path: ``_cover_probe`` once per ``MIN_RES`` tile, over
+    the ``(polygon_id, ring)`` rows whose ring bbox overlaps the tile, in
+    one cogroup with the tile's ``(point_id, lon_e7, lat_e7)`` points."""
+    from ..partitioning import repartition_for_python_groups
+
+    # the ring bbox's tiles, row by row: its west-edge tiles from south
+    # to north, each widened east by the bbox's tile width
+    lon, lat = F.col("ring.lon_e7"), F.col("ring.lat_e7")
+    sw = cells.cell_col(F.array_min(lon), F.array_min(lat), MIN_RES)
+    nw = cells.cell_col(F.array_min(lon), F.array_max(lat), MIN_RES)
+    se = cells.cell_col(F.array_max(lon), F.array_min(lat), MIN_RES)
+    west = F.explode(F.sequence(sw, nw, F.lit(1 << cells.Y_SHIFT).cast("long")))
+    r = rings.select("*", west.alias("west"), (se - sw).alias("width")).select(
+        F.explode(F.sequence("west", F.col("west") + F.col("width"))).alias("tile"), "polygon_id", "ring"
+    )
+    p = points.select(cells.cell_col("lon_e7", "lat_e7", MIN_RES).alias("tile"), "*")
+
+    def answer(tile_points: pa.Table, tile_rings: pa.Table) -> pa.Table:
+        if tile_points.num_rows == 0:
+            return _PAIRS.empty_table()
+        return _cover_probe(tile_rings.select(["polygon_id", "ring"]))(tile_points)
+
+    return (
+        repartition_for_python_groups(p, "tile")
+        .groupBy("tile")
+        .cogroup(repartition_for_python_groups(r, "tile").groupBy("tile"))
+        .applyInArrow(answer, _PAIRS_DDL)
+    )
 
 
 def pip_join(
@@ -278,21 +288,17 @@ def pip_join(
     (even-odd). Points exactly on edges follow the raycast convention.
     Both columns are strings: the point id is cast.
 
-    One bounded collect of ring sizes picks the path: at most
-    ``BROADCAST_MAX_ROWS // MAX_COVER_CELLS`` polygons holding at most
-    ``BROADCAST_MAX_ROWS`` ring vertices in total (request-sized polygon
-    sets) take the driver path. Their rings are collected once as Arrow,
-    the cover is computed on the driver (``_driver_cover``) and one
-    ``mapInArrow`` kernel over the points probes it and refines the
-    candidates (``_cover_join``): no join and no exchange. Past the gate
-    (unbounded polygon sets, nothing may be collected) the cover is
-    computed distributed (``polygon_cover_cells``), the cover join
-    shuffles on cell_id and the refine joins per-polygon edge arrays and
-    evaluates the even-odd parity as a JVM higher-order expression. Both
-    paths use the exact float64 op order of the SQL oracle
-    (``(x2-x1)*(py-y1)/(y2-y1)+x1``), so results stay bit-exact (parity
-    pytest covers the fallback). The result is a lazy plan with nothing
-    to release."""
+    One bounded collect of ring sizes places the probe-and-refine kernel
+    (``_cover_probe``): at most ``BROADCAST_MAX_ROWS // MAX_COVER_CELLS``
+    polygons holding at most ``BROADCAST_MAX_ROWS`` ring vertices in total
+    (request-sized polygon sets) take the driver path, where their rings
+    are collected once as Arrow and the kernel runs in one ``mapInArrow``
+    over the points (``_cover_join``): no join and no exchange. Past the
+    gate (unbounded polygon sets, nothing may be collected) the same
+    kernel runs once per res-7 tile in one cogroup (``_tiled_join``).
+    The kernel uses the exact float64 op order of the SQL oracle
+    (``(x2-x1)*(py-y1)/(y2-y1)+x1``), so results stay bit-exact. The
+    result is a lazy plan with nothing to release."""
     pts = points.where(F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull()).select(
         F.col(id_col).cast("string").alias("point_id"),
         F.col(lon_col).alias("lon_e7"),
@@ -305,57 +311,11 @@ def pip_join(
     cap = BROADCAST_MAX_ROWS // MAX_COVER_CELLS
     sizes = polygons.select(F.size("ring").alias("n")).limit(max(cap + 1, 0)).toArrow()
     n_vertices = pc.sum(sizes.column("n")).as_py() or 0
+    rings = polygons.select(F.col("polygon_id").cast("string").alias("polygon_id"), "ring")
     if sizes.num_rows <= cap and n_vertices <= BROADCAST_MAX_ROWS:
-        rings = polygons.select(F.col("polygon_id").cast("string").alias("polygon_id"), "ring")
-        return _cover_join(pts, rings.toArrow()).withColumnRenamed("point_id", out_id)
-
-    # unbounded polygon set: distributed cover, shuffle join on cell_id
-    # (cover is bounded per polygon by MAX_COVER_CELLS but NOT in polygon
-    # count). ONE point scan + ONE cover join: each point emits its cell
-    # id at every resolution the cover can use (res is packed inside the
-    # id, so distinct resolutions can never collide on the join key), so
-    # the cover is read once, by the join.
-    cov_sel = polygon_cover_cells(polygons).select("cell_id", "polygon_id", "coverage")
-    cand = pts.select(
-        "point_id",
-        F.col("lon_e7").cast("double").alias("px"),
-        F.col("lat_e7").cast("double").alias("py"),
-        F.explode(
-            F.array(*[cells.cell_col("lon_e7", "lat_e7", res) for res in range(MIN_RES, MAX_RES + 1)])
-        ).alias("cell_id"),
-    ).join(cov_sel, "cell_id", "inner")
-
-    # no driver-side collect — shuffle-join the candidates to per-polygon
-    # edge arrays (built by ``transform`` over the ring, zero shuffles)
-    # and evaluate the even-odd parity as a JVM higher-order expression
-    # for ``partial`` rows only (``full`` rows short-circuit the OR). One
-    # candidate stream: split by coverage, each branch would rerun the
-    # cover kernel. Same float64 op order as the numpy kernel/oracle;
-    # NaN/Inf from a horizontal edge (y2 == y1) is neutralized by the
-    # conjunction exactly as in numpy (cond is false whenever y1 == y2).
-    n_ring = F.size("ring")
-    nxt = lambda i: ((i + F.lit(1)) % n_ring) + F.lit(1)  # noqa: E731
-    edges_arr = F.transform(
-        "ring",
-        lambda v, i: F.struct(
-            v["lon_e7"].cast("double").alias("x1"),
-            v["lat_e7"].cast("double").alias("y1"),
-            F.element_at(F.col("ring"), nxt(i))["lon_e7"].cast("double").alias("x2"),
-            F.element_at(F.col("ring"), nxt(i))["lat_e7"].cast("double").alias("y2"),
-        ),
-    )
-    poly_edges = polygons.select("polygon_id", edges_arr.alias("edges"))
-
-    def _crossing(e):
-        cond = (e["y1"] > F.col("py")) != (e["y2"] > F.col("py"))
-        xint = (e["x2"] - e["x1"]) * (F.col("py") - e["y1"]) / (e["y2"] - e["y1"]) + e["x1"]
-        return cond & (F.col("px") < xint)
-
-    pairs = (
-        cand.join(poly_edges, "polygon_id")
-        .filter((F.col("coverage") == "full") | (F.size(F.filter("edges", _crossing)) % 2 == 1))
-        .select("point_id", "polygon_id")
-    )
+        pairs = _cover_join(pts, rings.toArrow())
+    else:
+        pairs = _tiled_join(pts, rings)
     return pairs.withColumnRenamed("point_id", out_id)
 
 

@@ -189,27 +189,31 @@ def test_pip_oracle_at_session_defaults(fix001):
     the DuckDB oracle under the SHIPPED session defaults (local[32],
     32 shuffle partitions, AQE on) — the exact config where the Long/Int
     cogroup-salt mismatch silently dropped ~half the ray-cast rows while
-    local[8]/8 happened to pass. Runs in a subprocess because the pytest
-    session fixture already owns a local[8] JVM."""
+    local[8]/8 happened to pass. Both paths run: the driver path and,
+    with the gate forced shut, the tiled path, whose cogroup keys a
+    differently typed tile would split the same way. Runs in a subprocess
+    because the pytest session fixture already owns a local[8] JVM."""
     import subprocess
     import sys
 
     script = f"""
 import duckdb
 from butterfly_osm_spark.session import get_spark
-from butterfly_osm_spark.operators.pip import pip_join, pip_oracle_sql
+from butterfly_osm_spark.operators import pip
 
 spark = get_spark(app_name="pip-regression", master="local[32]", shuffle_partitions="32")
 fix = {fix001!r}
-got = sorted(
-    (r.point_id, r.polygon_id)
-    for r in pip_join(
-        spark.read.parquet(fix + "/image_geo.parquet"),
-        spark.read.parquet(fix + "/polygons.parquet"),
-    ).collect()
-)
-want = sorted(map(tuple, duckdb.sql(pip_oracle_sql(fix)).fetchall()))
-assert got == want, f"pip mismatch at local[32]: spark={{len(got)}} oracle={{len(want)}}"
+want = sorted(map(tuple, duckdb.sql(pip.pip_oracle_sql(fix)).fetchall()))
+for gate in (pip.BROADCAST_MAX_ROWS, -1):
+    pip.BROADCAST_MAX_ROWS = gate
+    got = sorted(
+        (r.point_id, r.polygon_id)
+        for r in pip.pip_join(
+            spark.read.parquet(fix + "/image_geo.parquet"),
+            spark.read.parquet(fix + "/polygons.parquet"),
+        ).collect()
+    )
+    assert got == want, f"pip mismatch at local[32], gate {{gate}}: spark={{len(got)}} oracle={{len(want)}}"
 print("PIP_LOCAL32_OK", len(got))
 """
     proc = subprocess.run(
@@ -224,19 +228,67 @@ print("PIP_LOCAL32_OK", len(got))
 
 
 def test_pip_broadcast_gate_fallback_parity(spark, fix001, monkeypatch):
-    """With the cover-broadcast gate forced shut (BROADCAST_MAX_ROWS=0) the
-    shuffle-join fallback must produce the identical (point, polygon) set —
-    the gate is a plan choice, never a semantics choice."""
+    """With the driver gate forced shut (BROADCAST_MAX_ROWS=0) the tiled
+    path must produce the identical (point, polygon) set — the gate is a
+    plan choice, never a semantics choice. Planning it runs one job, the
+    ring-size collect, and its final adaptive plan runs the kernel in
+    exactly one cogroup, with no pandas gather, join or cached frame."""
+    import os
+    import time
+
     import duckdb
 
     from butterfly_osm_spark.operators import pip
 
+    from .conftest import group_job_ids
+
     points = spark.read.parquet(fix001 + "/image_geo.parquet")
     polygons = spark.read.parquet(fix001 + "/polygons.parquet")
     monkeypatch.setattr(pip, "BROADCAST_MAX_ROWS", 0)
-    got = sorted((r.point_id, r.polygon_id) for r in pip.pip_join(points, polygons).collect())
+    paths = _pip_paths(pip, monkeypatch)
+    sc = spark.sparkContext
+    group = f"pip-tiled-plan-{os.getpid()}-{time.time_ns()}"
+    sc.setJobGroup(group, "pip_join tiled plan")
+    try:
+        out = pip.pip_join(points, polygons)
+        jobs = group_job_ids(sc, group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert paths == ["tiled"], paths
+    assert len(jobs) == 1, f"jobs {list(jobs)}"
+    got = sorted((r.point_id, r.polygon_id) for r in out.collect())
     want = sorted(map(tuple, duckdb.sql(pip.pip_oracle_sql(fix001)).fetchall()))
     assert got == want
+    # the final adaptive plan, without the initial plan AQE prints too
+    plan = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert plan.count("FlatMapCoGroupsInArrow") == 1, plan
+    for op in ("FlatMapGroupsInPandas", "Join", "InMemoryTableScan"):
+        assert op not in plan, plan
+
+
+def _pip_paths(pip, monkeypatch):
+    """Spy on pip_join's two placements of its kernel: the returned list
+    gets ``"driver"`` for every driver-path plan and ``"tiled"`` for
+    every tiled one."""
+    return _path_spy(monkeypatch, pip, _cover_join="driver", _tiled_join="tiled")
+
+
+def _path_spy(monkeypatch, module, **labels):
+    """Wrap each ``module`` function named in ``labels``: the returned list
+    gets the function's label for every call."""
+    paths = []
+
+    def spy(label, join):
+        def run(*a, **kw):
+            paths.append(label)
+            return join(*a, **kw)
+
+        return run
+
+    for name, label in labels.items():
+        monkeypatch.setattr(module, name, spy(label, getattr(module, name)))
+    return paths
 
 
 def test_pip_driver_cover_is_one_arrow_kernel(spark, fix001):
@@ -244,7 +296,7 @@ def test_pip_driver_cover_is_one_arrow_kernel(spark, fix001):
     the points: its plan holds no BroadcastExchange, Generate or join;
     building it runs two jobs, the ring-size collect and the ring
     collect; and it gives the oracle's pairs, which the fallback test
-    holds the distributed path to as well."""
+    holds the tiled path to as well."""
     import os
     import time
 
@@ -280,15 +332,18 @@ def _ring(cx, cy, rx, ry, n=12):
     return list(zip((cx + rx * np.cos(a)).astype(int).tolist(), (cy + ry * np.sin(a)).astype(int).tolist()))
 
 
-@pytest.mark.parametrize("gate", ["driver", "distributed"])
-@pytest.mark.parametrize("case", ["mixed", "no-polygons", "no-points"])
+@pytest.mark.parametrize("gate", ["driver", "tiled"])
+@pytest.mark.parametrize("case", ["mixed", "no-polygons", "no-points", "tile-edge"])
 def test_pip_kernel_edge_cases_match_brute_force(spark, monkeypatch, gate, case):
     """Both paths against brute-force ``_raycast_np`` over every
     (point, polygon): overlapping polygons whose covers share cells, covers
     at res 8 and res 13 in one call, a concave ring, points with no
-    candidate, an empty polygon set and an empty point set. The point id
-    is a bigint (zonal_stats passes a cast id) and the output stays
-    ``(out_id string, polygon_id string)``."""
+    candidate, an empty polygon set and an empty point set; and a polygon
+    whose bbox edges lie exactly on res-7 tile boundaries and one over a
+    tile corner, with points on those boundaries and on both sides of
+    them. The point id is a bigint
+    (zonal_stats passes a cast id) and the output stays ``(out_id string,
+    polygon_id string)``."""
     from butterfly_osm_spark.operators import pip
 
     rings = {
@@ -305,6 +360,18 @@ def test_pip_kernel_edge_cases_match_brute_force(spark, monkeypatch, gate, case)
     }
     if case == "no-polygons":
         rings = {}
+    if case == "tile-edge":
+        rings = {
+            # bbox from the west/south edge of one res-7 tile to the
+            # east/north edge of another (13.0-13.3 E, 45.0-45.2 N; a tile
+            # is 1_000_000 e7 units)
+            "edge": [(130_000_000, 450_000_000), (133_000_000, 450_000_000), (130_000_000, 452_000_000)],
+            # a square over the tile corner at 13.1 E, 45.1 N
+            "corner": [
+                (130_500_000, 450_500_000), (131_500_000, 450_500_000),
+                (131_500_000, 451_500_000), (130_500_000, 451_500_000),
+            ],
+        }
     polygons = spark.createDataFrame(
         [(pid, [{"lon_e7": x, "lat_e7": y} for x, y in ring]) for pid, ring in rings.items()],
         "polygon_id string, ring array<struct<lon_e7:int, lat_e7:int>>",
@@ -316,6 +383,14 @@ def test_pip_kernel_edge_cases_match_brute_force(spark, monkeypatch, gate, case)
     pts += [(-700_000_000, -300_000_000), (1_700_000_000, 800_000_000)]  # no candidate
     if case == "no-points":
         pts = []
+    if case == "tile-edge":
+        # on each tile boundary line the bbox touches, and one e7 unit to
+        # either side of it
+        lines = [130_000_000, 131_000_000, 133_000_000, 450_000_000, 451_000_000, 452_000_000]
+        near = sorted({v + d for v in lines for d in (-1, 0, 1)})
+        xs = [v for v in near if v < 200_000_000] + [130_500_000, 131_500_000]
+        ys = [v for v in near if v > 200_000_000] + [450_500_000]
+        pts = [(x, y) for x in xs for y in ys]
     points = spark.createDataFrame(
         [(i, x, y) for i, (x, y) in enumerate(pts)], "sid bigint, lon_e7 int, lat_e7 int"
     )
@@ -327,16 +402,12 @@ def test_pip_kernel_edge_cases_match_brute_force(spark, monkeypatch, gate, case)
         inside = pip._raycast_np(px, py, vx, vy, np.roll(vx, -1), np.roll(vy, -1))
         want |= {(str(i), pid) for i in np.flatnonzero(inside)}
 
-    distributed = []
-    cover_cells = pip.polygon_cover_cells
-    monkeypatch.setattr(
-        pip, "polygon_cover_cells", lambda df: distributed.append(1) or cover_cells(df)
-    )
-    if gate == "distributed":
+    paths = _pip_paths(pip, monkeypatch)
+    if gate == "tiled":
         # below zero, so even an empty polygon set is past the gate
         monkeypatch.setattr(pip, "BROADCAST_MAX_ROWS", -1)
     out = pip.pip_join(points, polygons, id_col="sid", out_id="sample")
-    assert bool(distributed) == (gate == "distributed")
+    assert paths == [gate], paths
     assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
         ("sample", "string"),
         ("polygon_id", "string"),
@@ -353,18 +424,27 @@ def test_pip_kernel_edge_cases_match_brute_force(spark, monkeypatch, gate, case)
         assert by["big_a"][1] & by["big_b"][1], "expected covers sharing cells"
         assert {pid for _, pid in want} == set(rings)
         assert not {str(len(pts) - 1), str(len(pts) - 2)} & {i for i, _ in got}
+    if case == "tile-edge":
+        on_line = {str(i) for i, (x, y) in enumerate(pts) if x == 131_000_000 or y == 451_000_000}
+        for pid in rings:
+            assert on_line & {i for i, p in want if p == pid}, f"no boundary point inside {pid}"
+        assert len({i for i, _ in want}) < len(pts), "no point outside"
 
 
 def test_pip_driver_cover_equals_distributed_cover(spark, fix001):
-    """The cover pip_join builds on the driver under the gate holds exactly
-    the rows of the distributed ``polygon_cover_cells``."""
+    """A polygon's cover does not depend on which polygons share its
+    batch, which the tiled path relies on: ``_driver_cover`` over the
+    whole table holds exactly the rows of ``polygon_cover_cells`` over the
+    polygons spread across three partitions."""
     from butterfly_osm_spark.operators import pip
 
     polygons = spark.read.parquet(fix001 + "/polygons.parquet")
     cover, edge_map = pip._driver_cover(polygons.select("polygon_id", "ring").toArrow())
     cols = ["polygon_id", "res", "cell_id", "coverage"]
     got = sorted(zip(*(cover.column(c).to_pylist() for c in cols)))
-    want = sorted(map(tuple, pip.polygon_cover_cells(polygons).select(*cols).collect()))
+    spread = polygons.repartition(3)
+    assert spread.rdd.getNumPartitions() == 3
+    want = sorted(map(tuple, pip.polygon_cover_cells(spread).select(*cols).collect()))
     assert got == want
     assert {r[3] for r in got} == {"full", "partial"}
     assert set(edge_map) == {r.polygon_id for r in polygons.select("polygon_id").collect()}
@@ -372,8 +452,8 @@ def test_pip_driver_cover_equals_distributed_cover(spark, fix001):
 
 def test_pip_huge_rings_take_the_fallback(spark, monkeypatch):
     """A few polygons whose rings hold more vertices than the gate allows
-    take the distributed path even though their cover rows would fit, and
-    both paths give the brute-force even-odd pairs."""
+    take the tiled path even though their cover rows would fit, and both
+    paths give the brute-force even-odd pairs."""
     from butterfly_osm_spark.operators import pip
 
     n_vertices = 3000
@@ -404,20 +484,16 @@ def test_pip_huge_rings_take_the_fallback(spark, monkeypatch):
         inside = pip._raycast_np(px, py, vx, vy, np.roll(vx, -1), np.roll(vy, -1))
         want |= {(pts[i][0], pid) for i in np.flatnonzero(inside)}
 
-    distributed = []
-    cover_cells = pip.polygon_cover_cells
-    monkeypatch.setattr(
-        pip, "polygon_cover_cells", lambda df: distributed.append(1) or cover_cells(df)
-    )
+    paths = _pip_paths(pip, monkeypatch)
     driver = pip.pip_join(points, polygons)
-    assert not distributed, "expected the driver path under the default gate"
+    assert paths == ["driver"], "expected the driver path under the default gate"
     assert {tuple(r) for r in driver.collect()} == want
     driver.unpersist()
     # the cover-row term (3 polygons x MAX_COVER_CELLS) fits, the ring
     # vertices do not
     monkeypatch.setattr(pip, "BROADCAST_MAX_ROWS", 4 * pip.MAX_COVER_CELLS)
     fallback = pip.pip_join(points, polygons)
-    assert distributed, "expected the distributed path"
+    assert paths == ["driver", "tiled"], "expected the tiled path"
     assert {tuple(r) for r in fallback.collect()} == want
     fallback.unpersist()
     assert len(want) > 100
@@ -428,9 +504,10 @@ def test_repeated_calls_ship_no_broadcast_and_cache_nothing(spark, fix001, monke
     path (sorted target arrays) return lazy plans: their driver-built
     arrays ride in the kernel closure, so three calls of each make no
     ``sc.broadcast`` call, persist no RDD, and a result counted twice
-    gives the same count (each count re-runs the plan). knn_join's tiled
-    path (gate forced shut) is lazy too and ships no closure array."""
-    from butterfly_osm_spark.operators import knn
+    gives the same count (each count re-runs the plan). The tiled paths
+    of knn_join and pip_join (gate forced shut) are lazy too and ship no
+    closure array."""
+    from butterfly_osm_spark.operators import knn, pip
     from butterfly_osm_spark.operators.images import phash_knn
     from butterfly_osm_spark.operators.knn import knn_join
     from butterfly_osm_spark.operators.pip import pip_join
@@ -447,11 +524,17 @@ def test_repeated_calls_ship_no_broadcast_and_cache_nothing(spark, fix001, monke
     queries = spark.read.parquet(fix001 + "/query_points.parquet")
     nodes = spark.read.parquet(fix001 + "/osm_nodes.parquet")
     paths = _knn_paths(knn, monkeypatch)
+    pip_paths = _pip_paths(pip, monkeypatch)
 
     def knn_tiled(q, n):
         with monkeypatch.context() as m:
             m.setattr(knn, "BROADCAST_MAX_ROWS", 0)
             return knn_join(q, n)
+
+    def pip_tiled(p, g):
+        with monkeypatch.context() as m:
+            m.setattr(pip, "BROADCAST_MAX_ROWS", 0)
+            return pip_join(p, g)
 
     before = persistent_rdd_ids(spark)
     for _ in range(3):
@@ -460,11 +543,13 @@ def test_repeated_calls_ship_no_broadcast_and_cache_nothing(spark, fix001, monke
             phash_knn(images),
             knn_join(queries, nodes),
             knn_tiled(queries, nodes),
+            pip_tiled(points, polygons),
         ):
             n = out.count()
             assert n > 0
             assert out.count() == n
     assert paths == ["grid", "tiled"] * 3, paths
+    assert pip_paths == ["driver", "tiled"] * 3, pip_paths
     assert not shipped, f"{len(shipped)} sc.broadcast calls"
     assert not (persistent_rdd_ids(spark) - before), "a lazy operator cached an RDD"
 
@@ -472,18 +557,7 @@ def test_repeated_calls_ship_no_broadcast_and_cache_nothing(spark, fix001, monke
 def _knn_paths(knn, monkeypatch):
     """Spy on knn_join's two paths: the returned list gets ``"grid"`` for
     every driver-path plan and ``"tiled"`` for every tiled one."""
-    paths = []
-
-    def spy(name, join):
-        def run(*a, **kw):
-            paths.append(name)
-            return join(*a, **kw)
-
-        return run
-
-    monkeypatch.setattr(knn, "_grid_join", spy("grid", knn._grid_join))
-    monkeypatch.setattr(knn, "_tiled_join", spy("tiled", knn._tiled_join))
-    return paths
+    return _path_spy(monkeypatch, knn, _grid_join="grid", _tiled_join="tiled")
 
 
 def test_knn_releases_phase_caches(spark, fix001, monkeypatch):
